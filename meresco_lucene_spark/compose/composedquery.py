@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from meresco_lucene_spark.columns import qcol
 from meresco_lucene_spark.query.executor import (
     LuceneResponse,
-    facet_counts,
+    drilldown_data,
     hits,
     search,
 )
@@ -559,8 +559,7 @@ def execute_composed(
             fh = restricted
             for fq in extra_filters:
                 fh = fh.join(hits(other_idx, fq).select("doc_id"), "doc_id", "left_semi")
-            for fc in facet_list:
-                response.drilldownData.append(facet_counts(other_idx, fh, fc))
+            response.drilldownData.extend(drilldown_data(other_idx, fh, facet_list))
         if export_key is not None:
             keys = (
                 result_idx.forward.join(all_hits.select("doc_id"), "doc_id", "left_semi")

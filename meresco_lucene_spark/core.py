@@ -66,7 +66,9 @@ from meresco_lucene_spark.index.incremental import (
     MultiGenIndex,
 )
 from meresco_lucene_spark.query.executor import (
+    Hit,
     LuceneResponse,
+    collect_page,
     mlt_seed_doc,
     search,
     similar_documents_df,
@@ -338,23 +340,22 @@ class LuceneCore:
             return LuceneResponse(total=0, hits=[])
         # k=None: the candidate frame is UNLIMITED so total counts every
         # candidate and paging works past row 10 (ADVICE r5); the page
-        # itself stays a TakeOrderedAndProject below.
+        # is a TakeOrderedAndProject (never a full sort) whose collect
+        # also counts the candidates — every candidate is a live doc,
+        # so the forward join keeps each exactly once.
         sim = similar_documents_df(
             reader, doc_id, field, max_freq=max_freq, k=None
         )
-        total = sim.count()  # candidate-bounded aggregate, no row movement
-        rows = (
-            sim.join(reader.forward.select("doc_id", ID_FIELD), "doc_id")
-            .orderBy(F.col("shared_terms").desc(), F.col("doc_id").asc())
-            .limit(max(stop, 0))  # TakeOrderedAndProject, never a full sort
-            .collect()[start:]
+        totals, rows = collect_page(
+            sim.join(reader.forward.select("doc_id", ID_FIELD), "doc_id"),
+            [F.col("shared_terms").desc(), F.col("doc_id").asc()],
+            start,
+            stop,
         )
-        from meresco_lucene_spark.query.executor import Hit
-
         hits_out = [
             Hit(id=r[ID_FIELD], score=float(r["shared_terms"])) for r in rows
         ]
-        return LuceneResponse(total=total, hits=hits_out)
+        return LuceneResponse(total=totals["n"], hits=hits_out)
 
     def numDocs(self) -> int:
         """LIVE doc count (the reference's IndexWriter.numDocs excludes
@@ -605,7 +606,7 @@ class LuceneCore:
             ClusterStrategy,
             cluster_top_docs_strategies,
         )
-        from meresco_lucene_spark.query.executor import Hit, scored_hits_df
+        from meresco_lucene_spark.query.executor import scored_hits_df
 
         if clusterConfig is None:
             field = next(

@@ -37,6 +37,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -328,6 +329,10 @@ class InvertedIndex:
     # by fixture coreC in MultiLuceneTest.java:72)
     similarity: str = "BM25"
     quantized: bool = False
+    # background postings cache warm-up started by build(cache=True)
+    _warmer: _PostingsWarmer | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     # ------------------------------------------------------------------ build
     @staticmethod
@@ -389,19 +394,12 @@ class InvertedIndex:
         # aggregate only touches field_lengths). Build latency becomes
         # max(stats job, postings job) instead of their sum; Spark's
         # per-partition cache locks make a consumer racing this thread
-        # compute-or-wait, never double-compute. Failures surface in the
-        # first real consumer action (same computation), so the warmer
-        # swallows its own exception.
+        # compute-or-wait, never double-compute. The index keeps the
+        # thread and joins it on unpersist(), which passes its failure on.
+        warmer = None
         if cache:
-            import threading
-
-            def _warm(p=postings):
-                try:
-                    p.count()
-                except Exception:
-                    pass
-
-            threading.Thread(target=_warm, daemon=True).start()
+            warmer = _PostingsWarmer(postings)
+            warmer.start()
 
         stats: dict[str, FieldStats] = {}
         stat_rows = (
@@ -428,7 +426,7 @@ class InvertedIndex:
         ]
         n_docs = stats[full_fields[0]].n_docs if full_fields else df.count()
 
-        return InvertedIndex(
+        idx = InvertedIndex(
             spark=spark,
             id_col="doc_id",
             forward=forward,
@@ -444,6 +442,8 @@ class InvertedIndex:
             similarity=similarity,
             quantized=quantized,
         )
+        idx._warmer = warmer
+        return idx
 
     # --------------------------------------------------------------- helpers
     def field_stats(self, fld: str) -> FieldStats:
@@ -472,8 +472,42 @@ class InvertedIndex:
         return [r["field"] for r in self.postings.select("field").distinct().collect()]
 
     def unpersist(self) -> None:
+        """Release the cached tables, after joining the postings warm-up
+        thread; its failure is raised here unless it was the Spark
+        session stopping under it."""
+        warmer, self._warmer = self._warmer, None
+        if warmer is not None:
+            warmer.join()
         for d in (self.postings, self.field_lengths, self.term_stats):
             try:
                 d.unpersist()
             except Exception:
                 pass
+        if warmer is not None and warmer.error is not None:
+            if not _session_stopped(self.spark):
+                raise warmer.error
+
+
+class _PostingsWarmer(threading.Thread):
+    """Fills a cached frame in the background (one ``count()``) and keeps
+    its failure for whoever joins it."""
+
+    def __init__(self, frame: DataFrame):
+        super().__init__(name="postings-warmup", daemon=True)
+        self.frame = frame
+        self.error: Exception | None = None
+
+    def run(self) -> None:
+        try:
+            self.frame.count()
+        except Exception as e:
+            self.error = e
+
+
+def _session_stopped(spark: SparkSession) -> bool:
+    """True once the session's SparkContext is stopped (or its JVM gone)."""
+    sc = spark.sparkContext
+    try:
+        return sc._jsc is None or sc._jsc.sc().isStopped()
+    except Exception:
+        return True

@@ -32,6 +32,10 @@ _DELETED = object()
 
 
 class KeyValueStore:
+    # most committed rows the point-lookup dict collects into Python;
+    # a larger table serves each lookup through a filtered Spark read
+    DICT_CACHE_ROWS = 100_000
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -42,11 +46,14 @@ class KeyValueStore:
         # persisted frame instead of re-scanning every epoch per lookup.
         self._cache_key: tuple[int, ...] | None = None
         self._cache_df = None
-        # point-lookup dict: the committed table is tiny by design (the
+        # point-lookup dict: the committed table is small by design (the
         # reference keeps it in one in-heap Lucene index), so the
         # many-small-gets pattern is served from ONE collect per epoch
-        # set instead of one Spark job per key (VERDICT r5 #7)
+        # set instead of one Spark job per key (VERDICT r5 #7). The
+        # collect stops at DICT_CACHE_ROWS; past it the table is
+        # marked oversized and each lookup filters it instead.
         self._dict_cache: dict[str, str | None] | None = None
+        self._dict_oversized = False
 
     # ------------------------------------------------------------- dict API
     def __setitem__(self, key, value) -> None:
@@ -59,14 +66,26 @@ class KeyValueStore:
             if v is _DELETED:
                 raise KeyError(key)
             return v
-        if self._dict_cache is None:
-            self._dict_cache = {
-                r["key"]: r["value"] for r in self._committed().collect()
-            }
-        v = self._dict_cache.get(key)
+        v = self._committed_value(key)
         if v is None:
             raise KeyError(key)
         return v
+
+    def _committed_value(self, key: str) -> str | None:
+        """The committed value of ``key`` (None: absent or deleted)."""
+        if self._dict_cache is None and not self._dict_oversized:
+            cap = self.DICT_CACHE_ROWS
+            rows = self._committed().limit(cap + 1).collect()
+            if len(rows) > cap:
+                self._dict_oversized = True
+            else:
+                self._dict_cache = {r["key"]: r["value"] for r in rows}
+        if self._dict_cache is not None:
+            return self._dict_cache.get(key)
+        rows = (
+            self._committed().filter(F.col("key") == key).select("value").collect()
+        )
+        return rows[0]["value"] if rows else None
 
     def get(self, key, default=None):
         try:
@@ -144,6 +163,7 @@ class KeyValueStore:
         self._cache_key = None
         self._cache_df = None
         self._dict_cache = None
+        self._dict_oversized = False
 
     def _committed(self):
         """Newest committed row per key (None value = deleted). The

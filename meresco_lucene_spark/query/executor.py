@@ -14,16 +14,22 @@ each recast as DataFrame ops:
   RangeQuery    -> plain column predicate on the forward table
   dedup         -> Window.partitionBy(key) + row_number / count
                    (DeDupFilterSuperCollector.java:43-109)
-  facets        -> hits ⋈ forward groupBy counts
-                   (FacetSuperCollector.java:43-99)
+  facets        -> hits ⋉ forward, every requested dim in ONE
+                   groupBy(dim, term) count, maxTerms cut by a per-dim
+                   row_number (FacetSuperCollector.java:43-99)
   top-k         -> orderBy(score desc, doc_id asc).limit  — Spark's
                    TakeOrderedAndProject is the partial/final merge the
-                   reference builds by hand in TopScoreDocSuperCollector
+                   reference builds by hand in TopScoreDocSuperCollector;
+                   the total (and the pre-dedup total) ride that same
+                   collect as an Observation, since TakeOrderedAndProject
+                   consumes every hit row anyway
 
 The per-slice SubCollector / complete() merge of the reference's
 SuperCollector framework (SuperCollector.java:38-53) is exactly Spark's
 partial aggregation; nothing imperative remains here — every function
 returns a lazy DataFrame and Catalyst does pushdown/broadcast/AQE.
+``search()`` runs one action for total + page, plus one for all facet
+dims when facets are requested.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from typing import Any, Sequence
 
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
@@ -681,6 +687,12 @@ def search(
     match count; the returned page is hits[start:stop]. start defaults 0,
     stop 10 (_lucene.py:98-99).
 
+    One Spark action computes the total, the dedup totals and the page
+    (see ``collect_page``); requested facets add one more action for all
+    their dims together (``drilldown_data``). Nothing is persisted; the
+    totals run as a job of their own only for an empty page
+    (stop <= start).
+
     score_adjust: optional fn(hits_df)->hits_df applied before ranking —
     the composed-query rank-blend hook (AggregateScoreSuperCollector)."""
     h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters, quantized)
@@ -702,21 +714,19 @@ def search(
             "left",
         )
 
-    drilldown = [
-        facet_counts(index, h, f) for f in facets
-    ]  # facets see all (pre-dedup) hits, like FacetSuperCollector
+    # facets see all (pre-dedup) hits, like FacetSuperCollector
+    drilldown = drilldown_data(index, h, facets)
 
-    total_with_dupes = None
-    persisted = None
     if dedup_field:
         # DeDupFilterSuperCollector (search/DeDupFilterSuperCollector.java:43-109):
         # group by the dedup key doc-value, keep the best doc per group
         # (by dedup sort fields, else highest score), report per-group
         # counts and the pre-dedup total. Docs without a key value are
-        # their own group. The pre-dedup frame is persisted so the two
-        # totals + page collect share one computation of the hit set.
-        h = persisted = h.persist()
-        total_with_dupes = h.count()
+        # their own group. Every hit is in exactly one group, so the
+        # pre-dedup total is the sum of the kept rows' duplicateCount,
+        # taken with the total on the page collect. (An observation
+        # below the window would not fire when the hits are empty: the
+        # empty shuffle stage never runs.)
         group = F.coalesce(
             qcol(dedup_field).cast("string"),
             F.concat(F.lit("__doc__"), F.col("doc_id").cast("string")),
@@ -737,16 +747,8 @@ def search(
             .drop("_rn")
         )
 
-    # the persist must not outlive this call even when the sort/collect
-    # raises — an un-released cached frame leaks executor memory for the
-    # session lifetime
-    try:
-        total = h.count()
-        ordered = h.orderBy(*sort_exprs(sort_keys))
-        rows = ordered.limit(stop).collect()[start:stop]
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
+    dupes = ["duplicateCount"] if dedup_field else []
+    totals, rows = collect_page(h, sort_exprs(sort_keys), start, stop, dupes)
     hits_out = []
     for r in rows:
         d = r.asDict()
@@ -759,11 +761,54 @@ def search(
             )
         )
     return LuceneResponse(
-        total=total,
+        total=totals["n"],
         hits=hits_out,
-        totalWithDuplicates=total_with_dupes,
+        totalWithDuplicates=totals["duplicateCount"] if dedup_field else None,
         drilldownData=drilldown,
     )
+
+
+def collect_page(
+    df: DataFrame,
+    order: Sequence[Column],
+    start: int,
+    stop: int,
+    sums: Sequence[str] = (),
+) -> tuple[dict[str, int], list[Row]]:
+    """({"n": row count of ``df``, column: its sum over ``df`` for each of
+    ``sums``}, rows [start:stop) of ``df`` in ``order``) in ONE Spark
+    action: the totals are observed on the frame that feeds
+    ``orderBy(...).limit(stop)`` — a TakeOrderedAndProject, which reads
+    every row of every partition once — so they are exact.
+
+    Two plans lose that guarantee, and both are handled here:
+      - an empty page runs only the totals, since ``limit(0)`` folds the
+        plan to an empty relation and an observation would never fire;
+      - adaptive execution drops the limit once it knows ``df`` has at
+        most ``stop`` rows, and the global sort it plans instead samples
+        the observed rows before sorting them, counting them twice. Then
+        every row was collected, so the totals come from the rows."""
+    aggs = [F.count(F.lit(1)).alias("n"), *[F.sum(c).alias(c) for c in sums]]
+    if stop <= start:
+        row = df.agg(*aggs).collect()[0]
+        return {k: int(v or 0) for k, v in row.asDict().items()}, []
+    obs = Observation()
+    page = df.observe(obs, *aggs).orderBy(*order).limit(stop)
+    rows = page.collect()
+    if len(rows) < stop or not _kept_top_k(page):
+        totals = {"n": len(rows), **{c: sum(r[c] for r in rows) for c in sums}}
+    else:
+        totals = {k: int(v or 0) for k, v in obs.get.items()}
+    return totals, rows[start:stop]
+
+
+def _kept_top_k(page: DataFrame) -> bool:
+    """Whether the plan ``page``'s action ran (the final adaptive plan)
+    still holds its TakeOrderedAndProject."""
+    plan = page._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return "TakeOrderedAndProject" in plan.toString()
 
 
 def similar_documents_df(
@@ -829,47 +874,97 @@ def mlt_seed_doc(
     return None if row[0] is None else int(row[0])
 
 
-def facet_counts(index: InvertedIndex, hits_df: DataFrame, facet: dict) -> dict:
-    """One facet dim's counts (FacetSuperCollector.java:43-99 merged form).
+def drilldown_data(
+    index: InvertedIndex, hits_df: DataFrame, facets: Sequence[dict]
+) -> list[dict]:
+    """Counts of every requested facet dim (FacetSuperCollector.java:43-99
+    merged form) in ONE Spark action, in request order.
 
     facet: {"fieldname": dim, "maxTerms": n (0 = unlimited), "path": [...]}.
     Hierarchical dims follow index.facet_fields[dim]; counts at path
-    depth len(path) (Lucene.java:611-627 recursion, flattened)."""
-    dim = facet["fieldname"]
-    max_terms = int(facet.get("maxTerms", 10))
-    path = list(facet.get("path", ()))
-    df = facet_counts_df(index, hits_df, dim, path)
-    if max_terms:
-        df = df.limit(max_terms)
-    terms = [{"term": r["term"], "count": r["count"]} for r in df.collect()]
-    out = {"fieldname": dim, "terms": terms}
-    if path:
-        out["path"] = path
+    depth len(path) (Lucene.java:611-627 recursion, flattened). All dims
+    share one semi-join of the forward table with the hits and one
+    groupBy; each dim's maxTerms cut is a row_number over its counts, so
+    the collect returns at most maxTerms rows per capped dim."""
+    if not facets:
+        return []
+    paths = [list(f.get("path", ())) for f in facets]
+    counts = _facet_groups(
+        index, hits_df, [(f["fieldname"], p) for f, p in zip(facets, paths)]
+    )
+    keep = F.lit(False)
+    for i, f in enumerate(facets):
+        cap = int(f.get("maxTerms", 10))
+        this = F.col("_dim") == i
+        keep = keep | ((this & (F.col("_rn") <= cap)) if cap else this)
+    rank = Window.partitionBy("_dim").orderBy(
+        F.col("count").desc(), F.col("term").asc()
+    )
+    rows = (
+        counts.withColumn("_rn", F.row_number().over(rank)).filter(keep).collect()
+    )
+    out = []
+    for i, (f, path) in enumerate(zip(facets, paths)):
+        mine = sorted((r for r in rows if r["_dim"] == i), key=lambda r: r["_rn"])
+        d = {
+            "fieldname": f["fieldname"],
+            "terms": [{"term": r["term"], "count": r["count"]} for r in mine],
+        }
+        if path:
+            d["path"] = path
+        out.append(d)
     return out
+
+
+def facet_counts(index: InvertedIndex, hits_df: DataFrame, facet: dict) -> dict:
+    """One facet dim's counts: ``drilldown_data`` for a single dim."""
+    return drilldown_data(index, hits_df, [facet])[0]
 
 
 def facet_counts_df(
     index: InvertedIndex, hits_df: DataFrame, dim: str, path: Sequence[str] = ()
 ) -> DataFrame:
-    """DataFrame form of facet counts: (term, count) ordered by count
-    desc, term asc."""
-    cols = index.facet_fields.get(dim, [dim])
-    depth = len(path)
-    if depth >= len(cols):
-        raise ValueError(f"facet path {path} deeper than dim {dim}")
-    fwd = index.forward
-    pred = F.lit(True)
-    for c, v in zip(cols, path):
-        pred = pred & (qcol(c) == v)
-    level_col = cols[depth]
-    joined = (
-        fwd.filter(pred)
-        .filter(qcol(level_col).isNotNull())
-        .select("doc_id", qcol(level_col).cast("string").alias("term"))
-        .join(hits_df.select("doc_id"), "doc_id", "left_semi")
-    )
+    """DataFrame form of one dim's facet counts: (term, count) ordered by
+    count desc, term asc."""
     return (
-        joined.groupBy("term")
-        .agg(F.count("*").cast("long").alias("count"))
+        _facet_groups(index, hits_df, [(dim, path)])
+        .select("term", "count")
         .orderBy(F.col("count").desc(), F.col("term").asc())
+    )
+
+
+def _facet_groups(
+    index: InvertedIndex,
+    hits_df: DataFrame,
+    dims: Sequence[tuple[str, Sequence[str]]],
+) -> DataFrame:
+    """(_dim, term, count) for every (dim, path) of ``dims``, ``_dim``
+    being its position there: each hit's forward row yields one
+    (position, value at path depth) label per dim whose path it lies
+    under, and one groupBy counts them all."""
+    fwd = index.forward
+    labels = []
+    present = F.lit(False)
+    for i, (dim, path) in enumerate(dims):
+        cols = index.facet_fields.get(dim, [dim])
+        depth = len(path)
+        if depth >= len(cols):
+            raise ValueError(f"facet path {list(path)} deeper than dim {dim}")
+        pred = qcol(cols[depth]).isNotNull()
+        for c, v in zip(cols, path):
+            pred = pred & (qcol(c) == v)
+        labels.append(
+            F.struct(
+                F.lit(i).alias("_dim"),
+                F.when(pred, qcol(cols[depth]).cast("string")).alias("term"),
+            )
+        )
+        present = present | pred
+    return (
+        fwd.filter(present)
+        .join(hits_df.select("doc_id"), "doc_id", "left_semi")
+        .select(F.inline(F.array(*labels)))
+        .filter(F.col("term").isNotNull())
+        .groupBy("_dim", "term")
+        .agg(F.count("*").cast("long").alias("count"))
     )

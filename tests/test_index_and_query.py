@@ -357,3 +357,36 @@ def test_dedup(idx):
     by_id = {h.id: h for h in r.hits}
     py_hit = [h for h in r.hits if h.duplicateCount == 3]
     assert len(py_hit) == 1
+
+
+class _FailingFrame:
+    def count(self):
+        raise RuntimeError("warm-up scan failed")
+
+
+def test_unpersist_joins_postings_warmup_and_passes_failure(spark, monkeypatch):
+    """build(cache=True) warms the postings cache on a thread the index
+    keeps: unpersist() joins it and re-raises its failure, except when
+    the failure was the session stopping under it."""
+    from meresco_lucene_spark.index import builder
+
+    df = spark.createDataFrame(
+        pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"])
+    )
+    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
+    warmer = ix._warmer
+    ix.unpersist()
+    assert not warmer.is_alive() and warmer.error is None
+    assert ix._warmer is None
+
+    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
+    ix.unpersist()
+    ix._warmer = builder._PostingsWarmer(_FailingFrame())
+    ix._warmer.start()
+    with pytest.raises(RuntimeError, match="warm-up scan failed"):
+        ix.unpersist()
+
+    ix._warmer = builder._PostingsWarmer(_FailingFrame())
+    ix._warmer.start()
+    monkeypatch.setattr(builder, "_session_stopped", lambda spark: True)
+    ix.unpersist()  # session teardown: nothing to pass on

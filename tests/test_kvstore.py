@@ -101,3 +101,27 @@ def test_point_reads_reuse_cached_frame(spark, tmp_path):
     kv.commit()  # epoch set changed -> cache invalidated
     assert kv._committed() is not first
     assert kv["c"] == "3"
+
+
+def test_oversized_table_serves_filtered_lookups(spark, tmp_path):
+    """Past DICT_CACHE_ROWS committed rows the point-lookup dict is not
+    collected; each key is read through a filtered lookup instead."""
+    path = str(tmp_path / "kv")
+    kv = KeyValueStore(spark, path)
+    for i in range(10):
+        kv[f"k{i}"] = f"v{i}"
+    kv.commit()
+    del kv["k3"]
+    kv["k4"] = "v4b"
+    kv.commit()
+    kv.DICT_CACHE_ROWS = 4
+    assert kv["k0"] == "v0" and kv["k4"] == "v4b" and kv["k9"] == "v9"
+    assert kv.get("k3") is None and kv.get("missing") is None
+    assert kv._dict_cache is None and kv._dict_oversized
+    kv["k0"] = "buffered"  # uncommitted writes still win
+    assert kv["k0"] == "buffered"
+
+    small = KeyValueStore(spark, path)
+    small.DICT_CACHE_ROWS = 10
+    assert small["k9"] == "v9" and small.get("k3") is None
+    assert small._dict_cache is not None and not small._dict_oversized
