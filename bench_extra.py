@@ -54,7 +54,7 @@ def profile_segments(spark):
     for rep in range(2):
         d = tempfile.mkdtemp(prefix="mls_prof_seg_")
         t0 = time.time()
-        build_segments(corpus, d, n_shards=32, salt_buckets=8, verbose=True)
+        build_segments(corpus, d, n_shards=32, salt_buckets=8)
         print(f"build_segments rep{rep}: {time.time() - t0:.3f}s", flush=True)
         shutil.rmtree(d, ignore_errors=True)
     corpus.unpersist()

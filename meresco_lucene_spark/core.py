@@ -185,8 +185,16 @@ class LuceneCore:
         # a transient write failure leaves every op re-committable).
         store = self._ensure_store(samples=list(adds.values()) if adds else None)
         adds_df = self._frame(adds) if adds else None
-        del_ids = self._hash_ids(dels) if dels else None
-        gen = store.commit_batch(adds_df, delete_ids=del_ids)
+        # deleted identifiers are hashed inside the tombstone write: no
+        # separate hash job
+        dels_df = (
+            self.spark.createDataFrame(
+                [(i,) for i in dels], f"{ID_FIELD} string"
+            ).select(F.xxhash64(F.col(ID_FIELD)).alias("doc_id"))
+            if dels
+            else None
+        )
+        gen = store.commit_batch(adds_df, delete_frame=dels_df)
         self._buffer.clear()
         store.maybe_merge(segments_per_tier=self.segments_per_tier)
         self._reader = None

@@ -1,4 +1,3 @@
 from meresco_lucene_spark.index.builder import InvertedIndex
-from meresco_lucene_spark.index import codec
 
-__all__ = ["InvertedIndex", "codec"]
+__all__ = ["InvertedIndex"]

@@ -84,17 +84,23 @@ _TOMB_CACHE: dict[tuple, DataFrame] = {}
 _TOMB_CACHE_CAP = 256
 
 
+def _read_tombstones(spark: SparkSession, tdir: str) -> DataFrame:
+    """Tombstones have the fixed schema ``doc_id long``: reading them
+    with it runs no schema-inference job."""
+    return spark.read.schema("doc_id long").parquet(tdir)
+
+
 def _tombstone_frame(spark: SparkSession, tdir: str) -> DataFrame:
     try:
         st = os.stat(tdir)
     except OSError:
-        return spark.read.parquet(tdir).select("doc_id")
+        return _read_tombstones(spark, tdir)
     key = (id(spark), tdir, st.st_ino, st.st_mtime_ns)
     t = _TOMB_CACHE.get(key)
     if t is None:
         while len(_TOMB_CACHE) >= _TOMB_CACHE_CAP:
             _TOMB_CACHE.pop(next(iter(_TOMB_CACHE)))
-        _TOMB_CACHE[key] = t = spark.read.parquet(tdir).select("doc_id")
+        _TOMB_CACHE[key] = t = _read_tombstones(spark, tdir)
     return t
 
 
@@ -401,7 +407,7 @@ class IncrementalIndexStore:
         for g in gens:
             tdir = os.path.join(self.root, _gen_name(g), "tombstones")
             if os.path.isdir(tdir):
-                t = self.spark.read.parquet(tdir).select("doc_id")
+                t = _read_tombstones(self.spark, tdir)
                 tomb = t if tomb is None else tomb.unionByName(t)
         if tomb is None:
             shutil.rmtree(gen_dir, ignore_errors=True)
@@ -470,9 +476,7 @@ class IncrementalIndexStore:
         for g in gens:
             tdir = os.path.join(self.root, _gen_name(g), "tombstones")
             if os.path.isdir(tdir):
-                tomb = tomb.unionByName(
-                    self.spark.read.parquet(tdir).select("doc_id")
-                )
+                tomb = tomb.unionByName(_read_tombstones(self.spark, tdir))
         tomb.distinct().write.mode("overwrite").parquet(
             os.path.join(gen_dir, "tombstones")
         )
@@ -666,24 +670,15 @@ class MultiGenIndex:
 
     def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
         # Union the RAW block frames (field/term filters still push into
-        # every generation's parquet scan) and decode ONCE: one Python
-        # eval stage per query instead of one per generation (guide §4);
-        # the per-branch _gen literal rides through the decode for the
-        # liveness anti-join.
+        # every generation's parquet scan) and decode once above the
+        # union: the liveness anti-join then reads the generated doc_id
+        # and stays one broadcast join, instead of being pushed into
+        # every union branch with a tombstone broadcast each. The
+        # per-branch _gen literal rides through the decode.
         from meresco_lucene_spark.index.store import decode_block_frame
 
-        parts = [
-            s.blocks.filter(F.col("field") == fld).withColumn(
-                "_gen", F.lit(g)
-            )
-            for g, s in self.stores.items()
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return self._live(
-            decode_block_frame(u, fld, with_dl, passthrough=("_gen",))
-        )
+        u = self._union(lambda s: s.blocks.filter(F.col("field") == fld))
+        return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
 
     def lengths_for(self, fld: str) -> DataFrame:
         # MUST be liveness-filtered: the executor joins postings to

@@ -1,21 +1,32 @@
 """Compressed, term-sharded on-disk segment store with lineage + resume.
 
 This is the scale path of the engine (BASELINE.json north rule): the
-DataFrame index (builder.py) materialized as delta+varint-compressed
-posting blocks, partitioned by a salted term shard, with per-partition
-lineage rows so a killed build resumes mid-merge and produces
-byte-identical output.
+DataFrame index (builder.py) materialized as posting blocks stored in
+native Parquet columns, partitioned by a salted term shard, with
+per-partition lineage rows so a killed build resumes mid-merge and
+produces byte-identical output.
 
 Layout under ``out_dir``:
   docs/        (doc_id, dl, norm_dl)                       parquet
   term_stats/  (term, df, cf, base_shard, n_salts, max_score)
   postings/    partitioned by shard:
                (term, block_id, doc_count, min_doc, max_doc,
-                block_max_score, doc_bytes, tf_bytes, dl_bytes)
+                block_max_score, doc_ids array<bigint>, tfs array<int>,
+                dls array<int>)
   lineage/     (shard, n_terms, term_min, term_max, n_blocks, n_postings, bytes,
                 content_xxh64_sum, run_id)
   meta.json    {n_docs, sum_dl, avgdl, n_shards, salt_buckets, k1, b,
-                block_size, hot_df_fraction, quantized}
+                block_size, hot_df_fraction, quantized, schemas}
+
+Block format (shared with store.py): up to ``block_size`` postings of one
+term per row, as parallel Parquet list columns. The postings tables are
+written with the Parquet v2 writer: doc ids that repeat within a page
+stay dictionary-encoded, others are stored DELTA_BINARY_PACKED (delta +
+bit-packed miniblocks) — the north rule's delta+varint, done by the file
+format (see PARQUET_V2). Readers decode with a JVM
+``posexplode`` (store.decode_block_frame, wand.decode_blocks), so no
+Python runs on the query-side decode. ``schemas`` in meta.json records
+each table's schema, so opening a store infers none.
 
 Sharding & skew (SURVEY.md §7.3): ``base_shard = xxhash64(term) %
 n_shards`` (JVM-side, codegen'd, deterministic across sessions for
@@ -27,11 +38,11 @@ source file). Queries fan back in by reading the n_salts shards recorded
 in term_stats — the query side never recomputes the hash.
 
 Resume: each fully-written shard appends a lineage row whose
-content_xxh64_sum covers the shard's decoded logical content. On resume,
+content_xxh64_sum covers the shard's block content. On resume,
 shards present in lineage are skipped; shard partition dirs without a
 lineage row (crash mid-write) are deleted and rebuilt. Blocks are a pure
 function of the (term-sorted, doc-sorted) postings, so a resumed build
-is byte-identical to an uninterrupted one.
+is identical to an uninterrupted one.
 
 Reference parity note: this plays the role of Lucene's segment files +
 TieredMergePolicy commits (Lucene.java:920-945, LuceneSettings.java:157-160);
@@ -45,16 +56,14 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
 from meresco_lucene_spark.index import wand
-from meresco_lucene_spark.index.codec import (
-    varint_encode,
-    varint_sizes,
-)
 from meresco_lucene_spark.index.wand import WandParams
 from meresco_lucene_spark.query.bm25 import (
     B_DEFAULT,
@@ -81,9 +90,98 @@ def term_base_shard(spark: SparkSession, term: str, n_shards: int) -> int:
 
 POSTINGS_SCHEMA = (
     "shard int, term string, block_id int, doc_count int, min_doc long, "
-    "max_doc long, block_max_score double, doc_bytes binary, tf_bytes binary, "
-    "dl_bytes binary"
+    "max_doc long, block_max_score double, doc_ids array<bigint>, "
+    "tfs array<int>, dls array<int>"
 )
+
+# Postings writes use the Parquet v2 writer. A column whose values repeat
+# within a page (doc ids shared by many terms' blocks, tfs, dls) stays
+# dictionary-encoded; otherwise the writer falls back to v2's
+# DELTA_BINARY_PACKED, which for the sorted doc-id lists of a large
+# corpus is the block format's delta coding. (Disabling dictionaries
+# grew the stores of both benchmark workloads: hashed 64-bit doc ids
+# delta-encode worse than they dictionary-encode.)
+PARQUET_V2 = {"parquet.writer.version": "v2"}
+
+
+# ------------------------------------------------------ block format
+
+
+def value_changes(values: pa.Array) -> np.ndarray:
+    """Boolean mask over positions 1.. of a sorted Arrow array: True
+    where the value differs from its predecessor."""
+    return pc.not_equal(values[1:], values[:-1]).to_numpy(zero_copy_only=False)
+
+
+def block_layout(
+    run_start: np.ndarray, hot_df: np.ndarray, block_size: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Cut term-sorted, doc-sorted postings into blocks.
+
+    ``run_start`` marks the first posting of each term run; ``hot_df``
+    is the broadcast df of salted hot terms (NaN elsewhere). A
+    non-salted term's postings all sit in one shard, so its df IS its
+    run length. Returns (block start indices, block_id per block, df per
+    posting)."""
+    n = len(run_start)
+    run_ids = np.cumsum(run_start) - 1
+    run_starts_idx = np.flatnonzero(run_start)
+    run_sizes = np.diff(np.append(run_starts_idx, n)).astype(np.float64)
+    hot_run = hot_df[run_starts_idx]
+    dfs = np.where(np.isnan(hot_run), run_sizes, hot_run)[run_ids]
+    pos_in_run = np.arange(n) - run_starts_idx[run_ids]
+    starts = np.flatnonzero(run_start | (pos_in_run % block_size == 0))
+    return starts, (pos_in_run // block_size)[starts].astype(np.int32), dfs
+
+
+def block_columns(
+    starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    scores: np.ndarray,
+    positions: pa.Array | None = None,
+) -> dict:
+    """Per-block columns of the shared block format, the list columns
+    built from offsets over the posting arrays (no per-posting Python).
+    ``positions`` (one position list per posting) adds the store's
+    ``positions array<array<int>>`` column."""
+    n = len(doc_ids)
+    ends = np.append(starts[1:], n)
+    offsets = pa.array(np.append(starts, n).astype(np.int32))
+
+    def lists(values):
+        return pa.ListArray.from_arrays(offsets, values)
+
+    cols = {
+        "doc_count": (ends - starts).astype(np.int32),
+        "min_doc": doc_ids[starts],
+        "max_doc": doc_ids[ends - 1],
+        "block_max_score": np.maximum.reduceat(scores, starts),
+        "doc_ids": lists(pa.array(doc_ids, pa.int64())),
+        "tfs": lists(pa.array(tfs, pa.int32())),
+        "dls": lists(pa.array(dls, pa.int32())),
+    }
+    if positions is not None:
+        cols["positions"] = lists(positions)
+    return cols
+
+
+def schema_json(schema: StructType) -> dict:
+    """A table schema as recorded in meta.json ``schemas``."""
+    return json.loads(schema.json())
+
+
+def block_payload_bytes():
+    """Lineage ``bytes`` of a block: its doc-id and tf payload (8 + 4
+    bytes per posting) before Parquet encoding."""
+    return (F.col("doc_count") * 12).cast("long")
+
+
+def read_table(spark: SparkSession, path: str, schema: dict) -> DataFrame:
+    """Read a store table with its recorded schema: no footer-inference
+    job on open."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
 
 class SegmentIndex:
@@ -94,9 +192,11 @@ class SegmentIndex:
         self.out_dir = out_dir
         with open(os.path.join(out_dir, "meta.json")) as f:
             self.meta = json.load(f)
-        self.docs = spark.read.parquet(os.path.join(out_dir, "docs"))
-        self.term_stats = spark.read.parquet(os.path.join(out_dir, "term_stats"))
-        self.postings = spark.read.parquet(os.path.join(out_dir, "postings"))
+        schemas = self.meta["schemas"]
+        self.docs, self.term_stats, self.postings = (
+            read_table(spark, os.path.join(out_dir, name), schemas[name])
+            for name in ("docs", "term_stats", "postings")
+        )
         # reader-held term dictionary (metadata ONLY — df/shards, the
         # analog of Lucene's in-heap FST term dict on an open reader):
         # repeated queries on one handle skip the per-query metadata
@@ -109,7 +209,8 @@ class SegmentIndex:
         values — term/OR/AND top-k used to run two separate metadata
         collects per query (df lookup + shard lookup); this is the fused
         single small job, memoized per term on the (immutable-snapshot)
-        reader handle."""
+        reader handle. Duplicate terms yield one row each."""
+        terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if t not in self._meta_cache]
         if missing:
             rows = (
@@ -434,7 +535,6 @@ def build_segments(
     quantized: bool = False,
     resume: bool = False,
     run_id: str = "run0",
-    verbose: bool = False,
 ) -> SegmentIndex:
     """Build (or resume) the compressed segment store.
 
@@ -442,18 +542,8 @@ def build_segments(
       1. docs:       tokenize -> per-doc lengths (+ SmallFloat norms)
       2. term_stats: df/cf + hot-term salting decision
       3. postings:   shuffle by salted shard -> per-shard term-sorted
-                     delta+varint blocks + block-max scores + lineage
+                     posting blocks + block-max scores + lineage
     """
-    import time as _time
-
-    _t = _time.time()
-
-    def _mark(stage: str) -> None:
-        nonlocal _t
-        if verbose:
-            print(f"[build_segments] {stage}: {_time.time() - _t:.1f}s", flush=True)
-        _t = _time.time()
-
     spark = corpus.sparkSession
     os.makedirs(out_dir, exist_ok=True)
     docs_dir = os.path.join(out_dir, "docs")
@@ -499,14 +589,14 @@ def build_segments(
     pool = ThreadPoolExecutor(max_workers=2)
     tstats_writer = tstats_base = None
     stage1_fut = None
+    docs_frame = toks.select("doc_id", dl_raw.cast("long").alias("dl")).withColumn(
+        "norm_dl", quantize_dl_expr(F.col("dl"))
+    )
     if not docs_done:
         from pyspark.sql import Observation
 
         obs = Observation()
-        lengths = toks.select("doc_id", dl_raw.cast("long").alias("dl"))
-        docs_frame = lengths.withColumn(
-            "norm_dl", quantize_dl_expr(F.col("dl"))
-        ).observe(
+        docs_write = docs_frame.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
@@ -514,7 +604,7 @@ def build_segments(
         )
 
         def _write_docs():
-            docs_frame.write.mode("overwrite").parquet(docs_dir)
+            docs_write.write.mode("overwrite").parquet(docs_dir)
             vals = obs.get
             return int(vals["n"]), int(vals["s"]), int(vals["m"])
 
@@ -537,7 +627,6 @@ def build_segments(
         ).collect()[0]
         n_docs, sum_dl, min_dl = int(agg["n"]), int(agg["s"]), int(agg["m"])
     avgdl = sum_dl / n_docs if n_docs else 1.0
-    _mark("stage1-docs")
 
     # Auto-shard from the occurrence count (sum of doc lengths), floored
     # at the session's parallelism — then PINNED to disk so a resume on
@@ -581,7 +670,6 @@ def build_segments(
         tstats_writer = pool.submit(
             lambda: tstats_df.write.mode("overwrite").parquet(stats_dir)
         )
-    _mark("stage2-term-stats")
 
     # ---- stage 3: sharded compressed postings + lineage -----------------
     done_shards: set[int] = set()
@@ -641,86 +729,37 @@ def build_segments(
         flat = flat.filter(F.col("shard").isin(remaining))
         # dl already rides each postings_flat row (_dl) — no docs join
 
-        def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # (key, pyarrow.Table) -> pyarrow.Table, left unannotated:
+        # applyInArrow picks its calling mode from type hints
+        def _encode(key, tbl):
             # Fully vectorized: with millions of unique rare terms a
-            # per-term pandas groupby loop is the build's bottleneck, so
-            # block boundaries, delta gaps, scores and the three varint
-            # streams are all computed in whole-shard numpy passes; the
-            # only per-block Python is the final byte-slice.
-            shard = int(key[0])
-            # factorize(sort=True) ranks terms by the same string order
-            # as a direct object-array sort at half the cost (measured
-            # r6) — the int-code lexsort is order-identical
-            t_codes = pd.factorize(pdf["term"], sort=True)[0]
-            order = np.lexsort((pdf["doc_id"].to_numpy(), t_codes))
-            terms = pdf["term"].to_numpy(dtype=object)[order]
-            doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)[order]
-            tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
-            dls = pdf["_dl"].to_numpy(dtype=np.int64)[order]
-            hot_dfs = pdf["_hot_df"].to_numpy(dtype=np.float64)[order]
-            n = len(terms)
-            if n == 0:
-                return pd.DataFrame(
-                    columns=["shard", "term", "block_id", "doc_count", "min_doc",
-                             "max_doc", "block_max_score", "doc_bytes",
-                             "tf_bytes", "dl_bytes"]
-                )
-            run_start = np.empty(n, dtype=bool)
-            run_start[0] = True
-            run_start[1:] = terms[1:] != terms[:-1]
-            run_ids = np.cumsum(run_start) - 1
-            run_starts_idx = np.flatnonzero(run_start)
-            pos_in_run = np.arange(n) - run_starts_idx[run_ids]
-            block_start = run_start | (pos_in_run % block_size == 0)
-            block_starts = np.flatnonzero(block_start)
-            block_ends = np.append(block_starts[1:], n)
-            block_in_run = (pos_in_run // block_size)[block_starts]
-
-            # Block-local delta gaps: first doc of a block absolute.
-            gaps = np.empty(n, dtype=np.int64)
-            gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-            gaps[block_starts] = doc_ids[block_starts]
-
-            # df per posting: a non-salted term's postings all sit in
-            # this shard, so its df IS the run length; salted hot terms
-            # carry their true df in _hot_df (broadcast-joined).
-            run_sizes = np.diff(np.append(run_starts_idx, n)).astype(np.float64)
-            hot_run = hot_dfs[run_starts_idx]
-            df_runs = np.where(np.isnan(hot_run), run_sizes, hot_run)
-            dfs = df_runs[run_ids]
-
+            # per-term loop is the build's bottleneck, so the sort, block
+            # boundaries and scores are whole-shard Arrow/numpy passes and
+            # the list columns are built from offsets.
+            tbl = tbl.take(
+                pc.sort_indices(tbl, [("term", "ascending"), ("doc_id", "ascending")])
+            )
+            terms = tbl.column("term").combine_chunks()
+            run_start = np.ones(tbl.num_rows, dtype=bool)
+            run_start[1:] = value_changes(terms)
+            doc_ids = tbl.column("doc_id").to_numpy()
+            tfs = tbl.column("tf").to_numpy()
+            dls = tbl.column("_dl").to_numpy()
+            hot_df = pc.fill_null(tbl.column("_hot_df"), np.nan).to_numpy()
+            starts, block_ids, dfs = block_layout(run_start, hot_df, block_size)
             scores = bm25_score_numpy(
                 tfs.astype(float), dfs, dls.astype(float), n_docs, avgdl, k1, b
             )
-            block_max = np.maximum.reduceat(scores, block_starts)
-
-            streams = {}
-            for name, vals in (("doc", gaps), ("tf", tfs), ("dl", dls)):
-                buf = memoryview(varint_encode(vals))
-                offs = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(varint_sizes(vals), out=offs[1:])
-                starts_b = offs[block_starts]
-                ends_b = offs[block_ends]
-                streams[name] = [
-                    bytes(buf[a:e]) for a, e in zip(starts_b, ends_b)
-                ]
-
-            return pd.DataFrame(
+            return pa.table(
                 {
-                    "shard": np.full(len(block_starts), shard, dtype=np.int32),
-                    "term": terms[block_starts],
-                    "block_id": block_in_run.astype(np.int32),
-                    "doc_count": (block_ends - block_starts).astype(np.int32),
-                    "min_doc": doc_ids[block_starts],
-                    "max_doc": doc_ids[block_ends - 1],
-                    "block_max_score": block_max,
-                    "doc_bytes": streams["doc"],
-                    "tf_bytes": streams["tf"],
-                    "dl_bytes": streams["dl"],
+                    "shard": np.full(len(starts), key[0].as_py(), dtype=np.int32),
+                    "term": terms.take(starts),
+                    "block_id": block_ids,
+                    **block_columns(starts, doc_ids, tfs, dls, scores),
                 }
             )
 
-        # groupBy(shard).applyInPandas shuffles by shard itself — one
+        # groupBy(shard).applyInArrow shuffles by shard itself — one
         # shuffle (the explicit repartition pre-establishes the same
         # clustering over a DISPERSED partition count, so no second
         # exchange appears and shard-hash collisions stop idling cores;
@@ -735,8 +774,7 @@ def build_segments(
             # tf and dl fit 32 bits by construction (token counts of one
             # document): shipping them as ints instead of longs cuts 8
             # bytes/row off the build's biggest exchange (guide §2.3
-            # narrower types); the encode reads them back as int64
-            # numpy arrays, so the written streams are byte-identical.
+            # narrower types), and the blocks store them as int lists.
             flat.select(
                 "shard",
                 "term",
@@ -752,30 +790,30 @@ def build_segments(
                 "shard",
             )
             .groupBy("shard")
-            .applyInPandas(_encode, schema=POSTINGS_SCHEMA)
+            .applyInArrow(_encode, schema=POSTINGS_SCHEMA)
         )
         encoded = encoded.withColumn(
             "_h",
             F.xxhash64(
                 F.col("term"),
                 F.col("block_id"),
-                F.col("doc_bytes"),
-                F.col("tf_bytes"),
-                F.col("dl_bytes"),
+                F.col("doc_ids"),
+                F.col("tfs"),
+                F.col("dls"),
             ),
-        ).withColumn(
-            "_nbytes",
-            (F.length("doc_bytes") + F.length("tf_bytes")).cast("long"),
-        )
+        ).withColumn("_nbytes", block_payload_bytes())
         # lineage rides the write as Observations for bounded shard
         # counts (see lineage_observation); the content hash stays the
         # order-independent modular SUM of per-block xxhash64 values.
         use_obs = len(remaining) <= LINEAGE_OBS_MAX_SHARDS
         if use_obs:
             lin_obs, lin_aggs = lineage_observation(remaining)
-            encoded = encoded.observe(lin_obs, *lin_aggs)
-        encoded.write.mode("append").partitionBy("shard").parquet(post_dir)
-        _mark("stage3-encode-write")
+            # the helpers feed the observation only; no read-back needs
+            # them on disk
+            encoded = encoded.observe(lin_obs, *lin_aggs).drop("_h", "_nbytes")
+        encoded.write.options(**PARQUET_V2).mode("append").partitionBy(
+            "shard"
+        ).parquet(post_dir)
 
         if use_obs:
             write_lineage_rows(
@@ -808,7 +846,6 @@ def build_segments(
                 )
             )
             lineage.write.mode("append").parquet(lin_dir)
-        _mark("stage4-lineage")
 
     if tstats_writer is not None:
         tstats_writer.result()  # re-raise a failed term_stats write
@@ -827,6 +864,11 @@ def build_segments(
         "k1": k1,
         "b": b,
         "quantized": quantized,
+        "schemas": {
+            "docs": schema_json(docs_frame.schema),
+            "term_stats": schema_json(tstats_df.schema),
+            "postings": schema_json(StructType.fromDDL(POSTINGS_SCHEMA)),
+        },
     }
     with open(meta_path, "w") as f:
         json.dump(meta, f)

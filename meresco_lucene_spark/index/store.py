@@ -14,27 +14,26 @@ Layout under ``out_dir``:
   term_stats/     (field, term, df, cf, base_shard, n_salts)
   postings/       partitioned by shard:
                   (field, term, block_id, doc_count, min_doc, max_doc,
-                   block_max_score, doc_bytes, tf_bytes, dl_bytes,
-                   pos_bytes)
+                   block_max_score, doc_ids array<bigint>, tfs array<int>,
+                   dls array<int>, positions array<array<int>>)
   meta.json       {n_docs, field_stats, facet_fields, k1, b, similarity,
-                   quantized, has_positions, n_shards, ...}
+                   quantized, has_positions, n_shards, ..., schemas}
 
-Block format = segments.py's delta+varint blocks (codec.py) extended
-with a POSITIONS stream: per posting, the sorted position list is
-delta-encoded (first absolute per posting); posting lengths come from
-the tf stream, so no extra length stream is needed.
+Block format = segments.py's blocks (native Parquet list columns written
+by the v2 writer, see segments.PARQUET_V2) plus a ``positions`` column:
+one sorted position list per posting. ``schemas`` records each table's
+schema, so opening a store runs no schema-inference job.
 
 The decisive design point is how :class:`PersistentIndex` exposes the
 blocks: ``postings_for(field)`` returns a LAZILY-DECODED DataFrame where
-the block decode is a *projection* (Arrow-batched pandas UDF in a
-select) followed by a JVM-side ``arrays_zip``+``explode`` — NOT an
-opaque mapInPandas. Catalyst pushes filters that reference only
-pass-through columns (``term``, ``field``) below the projection and the
-Generate, all the way into the parquet scan (PushedFilters on term —
-verified in tests). A TermQuery therefore reads only the blocks of its
-term (row-group pruned; blocks are term-sorted within each shard file),
-decodes those, and nothing else — while query/executor.py runs
-completely unchanged on top.
+the block decode is a plain JVM projection (``posexplode`` of the doc
+ids, then ``tfs[i]``, ``dls[i]``, ``positions[i]``). Catalyst pushes
+filters on ``term``/``field`` below it into the parquet scan
+(PushedFilters on term — verified in tests) and prunes the columns a
+query never reads: a term or boolean query does not scan ``positions``.
+A TermQuery therefore reads only the blocks of its term (row-group
+pruned; blocks are term-sorted within each shard file) — while
+query/executor.py runs completely unchanged on top.
 
 Sharding & skew: identical story to segments.py — ``base_shard =
 xxhash64(field, term) % n_shards`` with hot terms (df >= hot_df_fraction
@@ -49,64 +48,30 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from meresco_lucene_spark.index.builder import FieldStats
-from meresco_lucene_spark.index.codec import (
-    decode_doc_block,
-    varint_decode,
-    varint_encode,
-    varint_sizes,
+from meresco_lucene_spark.index.segments import (
+    PARQUET_V2,
+    block_columns,
+    block_layout,
+    block_payload_bytes,
+    read_table,
+    schema_json,
+    value_changes,
 )
 from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, bm25_score_numpy
 
 STORE_POSTINGS_SCHEMA = (
     "shard int, field string, term string, block_id int, doc_count int, "
-    "min_doc long, max_doc long, block_max_score double, doc_bytes binary, "
-    "tf_bytes binary, dl_bytes binary, pos_bytes binary"
+    "min_doc long, max_doc long, block_max_score double, "
+    "doc_ids array<bigint>, tfs array<int>, dls array<int>, "
+    "positions array<array<int>>"
 )
-
-
-# ------------------------------------------------------------ positions codec
-
-
-def encode_positions(pos_lists: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Delta-encode concatenated position lists (first position of each
-    posting absolute, rest in-posting deltas) -> (varint bytes, per-value
-    byte sizes). pos_lists: object array of int sequences."""
-    n = len(pos_lists)
-    if n == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    lens = np.fromiter((len(p) for p in pos_lists), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    if total == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_lists])
-    starts = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    deltas = np.empty(total, dtype=np.int64)
-    deltas[1:] = flat[1:] - flat[:-1]
-    nz_starts = starts[:-1][lens > 0]
-    deltas[nz_starts] = flat[nz_starts]
-    return varint_encode(deltas), varint_sizes(deltas)
-
-
-def decode_positions(pos_bytes: bytes, lens: np.ndarray) -> list:
-    """Inverse of encode_positions: split the delta stream by per-posting
-    lengths (the tf values) and rebuild absolute positions with one
-    segmented cumsum."""
-    n = len(lens)
-    if n == 0 or pos_bytes is None:
-        return []
-    deltas = varint_decode(pos_bytes).astype(np.int64)
-    starts = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(np.asarray(lens, dtype=np.int64), out=starts[1:])
-    c = np.cumsum(deltas)
-    row_off = np.where(starts[:-1] > 0, c[np.maximum(starts[:-1] - 1, 0)], 0)
-    abs_pos = c - np.repeat(row_off, np.asarray(lens, dtype=np.int64))
-    return [a.astype(np.int32).tolist() for a in np.split(abs_pos, starts[1:-1])]
 
 
 # -------------------------------------------------------------------- build
@@ -163,18 +128,8 @@ def build_index_store(
     whole job of fixed overhead per commit; a later resume=True of such
     a store simply re-encodes from scratch."""
     import shutil
-    import time as _time
 
     from meresco_lucene_spark.index.builder import occurrence_frames
-
-    _verbose = bool(os.environ.get("MLS_STORE_VERBOSE"))
-    _t0 = _time.time()
-
-    def _mark(stage: str) -> None:
-        nonlocal _t0
-        if _verbose:
-            print(f"[build_index_store] {stage}: {_time.time() - _t0:.2f}s", flush=True)
-        _t0 = _time.time()
 
     spark = df.sparkSession
     os.makedirs(out_dir, exist_ok=True)
@@ -294,8 +249,7 @@ def build_index_store(
                     fut.result()  # re-raises the first stage failure
         elif stage_writes:
             stage_writes[0]()
-        _mark("stage1-writes")
-        flat_postings = spark.read.parquet(flat_dir)
+        flat_postings = spark.read.schema(occurrences_lazy.schema).parquet(flat_dir)
         n_docs = (
             int(fwd_obs.get["n"])
             if fwd_obs is not None
@@ -372,7 +326,9 @@ def build_index_store(
         from pyspark import StorageLevel
 
         if _stage_done(os.path.join(out_dir, "term_stats")):
-            tstats_src = spark.read.parquet(os.path.join(out_dir, "term_stats"))
+            tstats_src = spark.read.schema(tstats.schema).parquet(
+                os.path.join(out_dir, "term_stats")
+            )
         else:
             tstats_cached = tstats.persist(StorageLevel.MEMORY_AND_DISK)
             # Large builds materialize the cache once up front so the two
@@ -394,7 +350,6 @@ def build_index_store(
                 )
             )
             tstats_src = tstats_cached
-        _mark("stage2-tstats-setup")
 
         # The encode needs per-term facts (base_shard, n_salts, df) but
         # joining the full term_stats frame for them shuffled every
@@ -433,7 +388,7 @@ def build_index_store(
             # precomputed-occurrence feeds (merge path) have no _dl on
             # the rows; attach it from the lengths table as before
             dl_col = "norm_dl" if quantized else "dl"
-            lengths_df = spark.read.parquet(
+            lengths_df = spark.read.schema(lengths_lazy.schema).parquet(
                 os.path.join(out_dir, "field_lengths")
             )
             flat = flat.join(
@@ -496,131 +451,65 @@ def build_index_store(
             for f, d in field_stats_meta.items()
         }
 
-        def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            # Whole-shard numpy passes: the input is RAW OCCURRENCE rows
-            # (field, term, doc_id, pos); postings (tf + sorted position
-            # lists) are derived here by one lexsort + run-length pass,
-            # then block boundaries, delta gaps, scores and the FOUR
-            # varint streams (doc/tf/dl/pos) exactly as before. Per-block
-            # Python is only the final byte-slice.
-            shard = int(key[0])
-            cols = [
-                "shard", "field", "term", "block_id", "doc_count", "min_doc",
-                "max_doc", "block_max_score", "doc_bytes", "tf_bytes",
-                "dl_bytes", "pos_bytes",
-            ]
-            n_occ = len(pdf)
-            if n_occ == 0:
-                return pd.DataFrame(columns=cols)
-            # factorize(sort=True) ranks field/term by the same string
-            # order as the object-array sort at half the cost (measured
-            # r6) — the int-code lexsort is order-identical
-            order = np.lexsort(
-                (
-                    pdf["pos"].to_numpy(),
-                    pdf["doc_id"].to_numpy(),
-                    pd.factorize(pdf["term"], sort=True)[0],
-                    pd.factorize(pdf["field"], sort=True)[0],
+        # (key, pyarrow.Table) -> pyarrow.Table, left unannotated:
+        # applyInArrow picks its calling mode from type hints
+        def _encode(key, tbl):
+            # Whole-shard Arrow/numpy passes: the input is RAW OCCURRENCE
+            # rows (field, term, doc_id, pos); one sort and run-length
+            # pass derive the postings (tf = occurrences per doc, the
+            # sorted position list = the run's positions), then block
+            # boundaries and scores, and the list columns are built from
+            # offsets — no per-posting or per-block Python.
+            tbl = tbl.take(
+                pc.sort_indices(
+                    tbl,
+                    [
+                        ("field", "ascending"),
+                        ("term", "ascending"),
+                        ("doc_id", "ascending"),
+                        ("pos", "ascending"),
+                    ],
                 )
             )
-            fields_o = pdf["field"].to_numpy(dtype=object)[order]
-            terms_o = pdf["term"].to_numpy(dtype=object)[order]
-            docs_o = pdf["doc_id"].to_numpy(dtype=np.int64)[order]
-            pos_o = pdf["pos"].to_numpy(dtype=np.int64)[order]
-            dls_o = pdf["_dl"].to_numpy(dtype=np.int64)[order]
-            hot_o = pdf["_hot_df"].to_numpy(dtype=np.float64)[order]
-
-            # posting boundaries: change of (field, term, doc)
-            p_start = np.empty(n_occ, dtype=bool)
-            p_start[0] = True
-            p_start[1:] = (
-                (terms_o[1:] != terms_o[:-1])
-                | (fields_o[1:] != fields_o[:-1])
-                | (docs_o[1:] != docs_o[:-1])
-            )
+            n_occ = tbl.num_rows
+            fields_o = tbl.column("field").combine_chunks()
+            terms_o = tbl.column("term").combine_chunks()
+            docs_o = tbl.column("doc_id").to_numpy()
+            # a (field, term) run starts a posting; so does a doc change
+            new_run = np.ones(n_occ, dtype=bool)
+            new_run[1:] = value_changes(fields_o) | value_changes(terms_o)
+            p_start = new_run.copy()
+            p_start[1:] |= docs_o[1:] != docs_o[:-1]
             p_idx = np.flatnonzero(p_start)
-            p_end = np.append(p_idx[1:], n_occ)
-            n = len(p_idx)
-            fields = fields_o[p_idx]
-            terms = terms_o[p_idx]
+            p_bounds = np.append(p_idx, n_occ)
             doc_ids = docs_o[p_idx]
-            tfs = (p_end - p_idx).astype(np.int64)
-            dls = dls_o[p_idx]
-            hot_p = hot_o[p_idx]
-            pos_lists = np.split(pos_o, p_idx[1:])
-
-            run_start = np.empty(n, dtype=bool)
-            run_start[0] = True
-            run_start[1:] = (terms[1:] != terms[:-1]) | (fields[1:] != fields[:-1])
-            run_ids = np.cumsum(run_start) - 1
-            run_starts_idx = np.flatnonzero(run_start)
-            # df per posting: a non-salted (field, term)'s postings all
-            # sit in this shard, so df IS its posting-run length; salted
-            # hot terms carry their true df in _hot_df.
-            run_sizes = np.diff(np.append(run_starts_idx, n)).astype(np.float64)
-            hot_run = hot_p[run_starts_idx]
-            dfs = np.where(np.isnan(hot_run), run_sizes, hot_run)[run_ids]
-            pos_in_run = np.arange(n) - run_starts_idx[run_ids]
-            block_start = run_start | (pos_in_run % block_size == 0)
-            block_starts = np.flatnonzero(block_start)
-            block_ends = np.append(block_starts[1:], n)
-            block_in_run = (pos_in_run // block_size)[block_starts]
-
-            gaps = np.empty(n, dtype=np.int64)
-            gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-            gaps[block_starts] = doc_ids[block_starts]
+            tfs = np.diff(p_bounds)
+            dls = tbl.column("_dl").to_numpy()[p_idx]
+            hot_df = pc.fill_null(tbl.column("_hot_df"), np.nan).to_numpy()[p_idx]
+            starts, block_ids, dfs = block_layout(new_run[p_idx], hot_df, block_size)
 
             # per-field BM25 bound per posting -> block max (used only by
             # WAND-style pruning; harmless for TermFrequency similarity)
-            scores = np.zeros(n, dtype=np.float64)
+            fields = fields_o.take(p_idx)
+            scores = np.zeros(len(p_idx), dtype=np.float64)
             for f, (f_n, f_avgdl) in field_params.items():
-                m = fields == f
+                m = pc.equal(fields, f).to_numpy(zero_copy_only=False)
                 if m.any():
                     scores[m] = bm25_score_numpy(
                         tfs[m].astype(float), dfs[m], dls[m].astype(float),
                         f_n, f_avgdl, k1, b,
                     )
-            block_max = np.maximum.reduceat(scores, block_starts)
-
-            streams = {}
-            for name, vals in (("doc", gaps), ("tf", tfs), ("dl", dls)):
-                buf = memoryview(varint_encode(vals))
-                offs = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(varint_sizes(vals), out=offs[1:])
-                streams[name] = [
-                    bytes(buf[a:e])
-                    for a, e in zip(offs[block_starts], offs[block_ends])
-                ]
-            # positions: per-value sizes -> per-posting spans -> block spans
-            # (posting i's positions occupy occurrence slots [p_idx[i],
-            # p_end[i]) of the sorted stream, so val_starts = p_idx)
-            pos_buf, pos_sizes = encode_positions(pos_lists)
-            val_starts = np.append(p_idx, n_occ)
-            byte_offs = np.zeros(len(pos_sizes) + 1, dtype=np.int64)
-            np.cumsum(pos_sizes, out=byte_offs[1:])
-            posting_byte_offs = byte_offs[val_starts]
-            pmv = memoryview(pos_buf)
-            streams["pos"] = [
-                bytes(pmv[a:e])
-                for a, e in zip(
-                    posting_byte_offs[block_starts], posting_byte_offs[block_ends]
-                )
-            ]
-
-            return pd.DataFrame(
+            positions = pa.ListArray.from_arrays(
+                pa.array(p_bounds.astype(np.int32)),
+                pa.array(tbl.column("pos").to_numpy(), pa.int32()),
+            )
+            return pa.table(
                 {
-                    "shard": np.full(len(block_starts), shard, dtype=np.int32),
-                    "field": fields[block_starts],
-                    "term": terms[block_starts],
-                    "block_id": block_in_run.astype(np.int32),
-                    "doc_count": (block_ends - block_starts).astype(np.int32),
-                    "min_doc": doc_ids[block_starts],
-                    "max_doc": doc_ids[block_ends - 1],
-                    "block_max_score": block_max,
-                    "doc_bytes": streams["doc"],
-                    "tf_bytes": streams["tf"],
-                    "dl_bytes": streams["dl"],
-                    "pos_bytes": streams["pos"],
+                    "shard": np.full(len(starts), key[0].as_py(), dtype=np.int32),
+                    "field": fields.take(starts),
+                    "term": terms_o.take(p_idx[starts]),
+                    "block_id": block_ids,
+                    **block_columns(starts, doc_ids, tfs, dls, scores, positions),
                 }
             )
 
@@ -633,8 +522,7 @@ def build_index_store(
 
             encoded = (
                 # _dl fits 32 bits (one document's token count): int not
-                # long across the exchange (guide §2.3 narrower types);
-                # read back as int64 numpy, streams byte-identical.
+                # long across the exchange (narrower types)
                 flat.select(
                     "shard",
                     "field",
@@ -651,30 +539,27 @@ def build_index_store(
                     "shard",
                 )
                 .groupBy("shard")
-                .applyInPandas(_encode, schema=STORE_POSTINGS_SCHEMA)
+                .applyInArrow(_encode, schema=STORE_POSTINGS_SCHEMA)
             )
             if lineage:
                 # per-block lineage helpers computed ONCE at write time
                 # (JVM expressions over the encode output): the lineage
                 # pass then reads back only small int/string columns —
-                # parquet column pruning skips the posting payload bytes
+                # parquet column pruning skips the posting payload
                 # entirely instead of re-reading + re-hashing every
-                # encoded stream (guide §6 column pruning)
+                # block (column pruning)
                 encoded = encoded.withColumn(
                     "_h",
                     F.xxhash64(
                         F.col("field"),
                         F.col("term"),
                         F.col("block_id"),
-                        F.col("doc_bytes"),
-                        F.col("tf_bytes"),
-                        F.col("dl_bytes"),
-                        F.col("pos_bytes"),
+                        F.col("doc_ids"),
+                        F.col("tfs"),
+                        F.col("dls"),
+                        F.col("positions"),
                     ),
-                ).withColumn(
-                    "_nbytes",
-                    (F.length("doc_bytes") + F.length("tf_bytes")).cast("long"),
-                )
+                ).withColumn("_nbytes", block_payload_bytes())
             # lineage rides the write as Observations for bounded shard
             # counts (segments.lineage_observation — one job saved; the
             # per-(field,term) run starts with exactly one block_id==0
@@ -691,8 +576,12 @@ def build_index_store(
             use_obs = lineage and len(remaining) <= LINEAGE_OBS_MAX_SHARDS
             if use_obs:
                 lin_obs, lin_aggs = lineage_observation(remaining)
-                encoded = encoded.observe(lin_obs, *lin_aggs)
-            encoded.write.mode("append").partitionBy("shard").parquet(post_dir)
+                # the helpers feed the observation only; no read-back
+                # needs them on disk
+                encoded = encoded.observe(lin_obs, *lin_aggs).drop("_h", "_nbytes")
+            encoded.write.options(**PARQUET_V2).mode("append").partitionBy(
+                "shard"
+            ).parquet(post_dir)
             if use_obs:
                 write_lineage_rows(
                     lineage_rows_from_observation(
@@ -700,7 +589,6 @@ def build_index_store(
                     ),
                     lin_dir,
                 )
-        _mark("stage3-encode-write")
         if remaining and lineage and not use_obs:
             # lineage read-back: one row per completed shard; content
             # hash is an order-independent modular SUM of per-block
@@ -741,10 +629,15 @@ def build_index_store(
             "salt_buckets": salt_buckets,
             "block_size": block_size,
             "hot_df_fraction": hot_df_fraction,
+            "schemas": {
+                "forward": schema_json(forward.schema),
+                "field_lengths": schema_json(lengths_lazy.schema),
+                "term_stats": schema_json(tstats.schema),
+                "postings": schema_json(StructType.fromDDL(STORE_POSTINGS_SCHEMA)),
+            },
         }
         if tstats_writer is not None:
             tstats_writer.result()  # re-raise a failed term_stats write
-        _mark("stage4-lineage+tstats-wait")
         with open(os.path.join(out_dir, "meta.json"), "w") as f:
             json.dump(meta, f)
         ok = True
@@ -768,121 +661,37 @@ def decode_block_frame(
     with_dl: bool = False,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Posting-block frame -> decoded (field, term, doc_id, tf,
-    positions[, _bdl][, passthrough...]) rows.
+    """Posting-block frame -> decoded (field, term, [passthrough...,]
+    doc_id, tf[, _bdl], positions) rows.
 
-    The decode is a PROJECTION (Arrow-batched pandas UDF in a select)
-    followed by a JVM arrays_zip+explode — never an opaque mapInPandas —
-    so caller filters on pass-through columns (term above all) push
-    below it into the parquet scan. ``passthrough`` names extra columns
-    (e.g. the union reader's ``_gen`` tag) carried alongside each
-    decoded posting. Shared by PersistentIndex (one store) and
-    MultiGenIndex (a UNION of stores' block frames decoded ONCE —
-    one Python eval stage per query instead of one per generation)."""
+    A plain JVM projection: ``posexplode`` the doc ids, then index the
+    parallel ``tfs``/``dls``/``positions`` lists at the same offset.
+    Caller filters on ``term`` push below it into the parquet scan, and
+    Catalyst drops every list column the query never reads (a term or
+    boolean query scans no positions). ``passthrough`` names extra
+    block columns carried onto each posting (the union reader's ``_gen``
+    tag)."""
     pt = list(passthrough)
-    if with_dl:
-        @F.pandas_udf(
-            "struct<doc_ids:array<bigint>,tfs:array<bigint>,"
-            "dls:array<bigint>,positions:array<array<int>>>"
-        )
-        def _decode_dl(
-            doc_b: pd.Series, tf_b: pd.Series, dl_b: pd.Series,
-            pos_b: pd.Series,
-        ) -> pd.DataFrame:
-            docs_out, tfs_out, dls_out, pos_out = [], [], [], []
-            for db, tb, lb, pb in zip(doc_b, tf_b, dl_b, pos_b):
-                doc_ids, tfs = decode_doc_block(db, tb)
-                docs_out.append(doc_ids.astype(np.int64).tolist())
-                tfs_out.append(tfs.astype(np.int64).tolist())
-                dls_out.append(varint_decode(lb).astype(np.int64).tolist())
-                pos_out.append(decode_positions(pb, tfs))
-            return pd.DataFrame(
-                {
-                    "doc_ids": docs_out,
-                    "tfs": tfs_out,
-                    "dls": dls_out,
-                    "positions": pos_out,
-                }
-            )
-
-        decoded = blocks.select(
-            "term",
-            *pt,
-            _decode_dl(
-                F.col("doc_bytes"), F.col("tf_bytes"), F.col("dl_bytes"),
-                F.col("pos_bytes"),
-            ).alias("_d"),
-        )
-        return decoded.select(
-            F.lit(fld).alias("field"),
-            "term",
-            *pt,
-            F.explode(
-                F.arrays_zip(
-                    F.col("_d.doc_ids").alias("doc_id"),
-                    F.col("_d.tfs").alias("tf"),
-                    F.col("_d.dls").alias("_bdl"),
-                    F.col("_d.positions").alias("positions"),
-                )
-            ).alias("_p"),
-        ).select(
-            "field",
-            "term",
-            *pt,
-            F.col("_p.doc_id").alias("doc_id"),
-            F.col("_p.tf").alias("tf"),
-            F.col("_p._bdl").alias("_bdl"),
-            F.col("_p.positions").alias("positions"),
-        )
-
-    @F.pandas_udf(
-        "struct<doc_ids:array<bigint>,tfs:array<bigint>,"
-        "positions:array<array<int>>>"
-    )
-    def _decode(
-        doc_b: pd.Series, tf_b: pd.Series, pos_b: pd.Series
-    ) -> pd.DataFrame:
-        docs_out, tfs_out, pos_out = [], [], []
-        for db, tb, pb in zip(doc_b, tf_b, pos_b):
-            doc_ids, tfs = decode_doc_block(db, tb)
-            docs_out.append(doc_ids.astype(np.int64).tolist())
-            tfs_out.append(tfs.astype(np.int64).tolist())
-            pos_out.append(decode_positions(pb, tfs))
-        return pd.DataFrame(
-            {"doc_ids": docs_out, "tfs": tfs_out, "positions": pos_out}
-        )
-
-    decoded = blocks.select(
-        "term",
-        *pt,
-        _decode(
-            F.col("doc_bytes"), F.col("tf_bytes"), F.col("pos_bytes")
-        ).alias("_d"),
-    )
-    return decoded.select(
+    i = F.col("_i")
+    cols = [
         F.lit(fld).alias("field"),
         "term",
         *pt,
-        F.explode(
-            F.arrays_zip(
-                F.col("_d.doc_ids").alias("doc_id"),
-                F.col("_d.tfs").alias("tf"),
-                F.col("_d.positions").alias("positions"),
-            )
-        ).alias("_p"),
-    ).select(
-        "field",
-        "term",
-        *pt,
-        F.col("_p.doc_id").alias("doc_id"),
-        F.col("_p.tf").alias("tf"),
-        F.col("_p.positions").alias("positions"),
-    )
+        "doc_id",
+        F.col("tfs")[i].cast("long").alias("tf"),
+    ]
+    if with_dl:
+        cols.append(F.col("dls")[i].cast("long").alias("_bdl"))
+    cols.append(F.col("positions")[i].alias("positions"))
+    return blocks.select(
+        "term", *pt, "tfs", "dls", "positions",
+        F.posexplode("doc_ids").alias("_i", "doc_id"),
+    ).select(*cols)
 
 
 # Session-scoped HANDLE cache (not a result cache): opening a store costs
-# driver-side parquet directory listings + footer schema reads for every
-# table the query touches, and callers like the per-query entry functions
+# a parquet directory listing for every table the query touches, and
+# callers like the per-query entry functions
 # and the multi-generation union reader re-open the same immutable store
 # once per query (× generations). The key includes the meta.json inode +
 # mtime, so a store REBUILT at the same path (meta.json rewritten) misses
@@ -933,18 +742,20 @@ class PersistentIndex:
         self.stats = {
             f: FieldStats(**d) for f, d in meta["field_stats"].items()
         }
-        # table handles are LAZY: spark.read.parquet does driver-side
-        # file listing + footer schema reads at call time, so opening
-        # all four tables eagerly costs ~4 driver round-trips per store
-        # even for a query that touches one table — multiplied by the
+        # table handles are LAZY: spark.read.parquet lists files at call
+        # time (schemas come from meta.json, so no inference job), so
+        # opening all four tables eagerly costs ~4 listing round-trips
+        # per store even for a query that touches one table — multiplied by the
         # generation count on a MultiGenIndex open (guide §5: the driver
         # should do almost no work it can avoid)
         self._tables: dict[str, DataFrame] = {}
 
     def _table(self, name: str) -> DataFrame:
         if name not in self._tables:
-            self._tables[name] = self.spark.read.parquet(
-                os.path.join(self.out_dir, name)
+            self._tables[name] = read_table(
+                self.spark,
+                os.path.join(self.out_dir, name),
+                self.meta["schemas"][name],
             )
         return self._tables[name]
 
@@ -979,11 +790,11 @@ class PersistentIndex:
         """Lazily-decoded (field, term, doc_id, tf, positions[, _bdl])
         frame.
 
-        Decode is a projection + JVM explode: term/field filters applied
-        by callers push below it into the parquet scan (PushedFilters),
-        so only the filtered terms' blocks are ever decoded.
+        Decode is a JVM projection: term/field filters applied by callers
+        push below it into the parquet scan (PushedFilters), so only the
+        filtered terms' blocks are ever read.
 
-        ``with_dl=True`` additionally decodes the blocks' dl stream into
+        ``with_dl=True`` additionally exposes the blocks' dl list as
         a ``_bdl`` column (the document length AS BUILT — norm_dl when the
         store was built quantized, raw dl otherwise): scoring reads the
         length straight off the posting instead of joining the

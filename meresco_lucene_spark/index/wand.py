@@ -1,12 +1,15 @@
-"""Block-max WAND top-k over compressed posting blocks — shared by the
+"""Block-max WAND top-k over posting blocks — shared by the
 single-field segment store (segments.py) and the multi-field persistent
 store (store.py).
 
 All functions operate on a BLOCK FRAME: a DataFrame with at least
-(term, shard, min_doc, max_doc, block_max_score, doc_bytes, tf_bytes,
-dl_bytes) — the delta+varint block format of codec.py, where each block
-carries its own dl stream so scoring needs no side lookup (no docs-table
-broadcast at any scale).
+(term, shard, min_doc, max_doc, block_max_score, doc_ids, tfs, dls) —
+the block format of segments.py (native Parquet list columns), where
+each block carries its own dl list so scoring needs no side lookup (no
+docs-table broadcast at any scale). Exhaustive decode and scoring are
+JVM expressions (``posexplode`` + ``bm25_score_expr``); only the pruning
+passes (per-(term, shard) WAND pools, the candidate rescore) run in
+pandas, reading the block arrays directly.
 
 The distributed block-max WAND adaptation (docstrings on or_topk):
 postings of different terms live in different partitions, so Lucene's
@@ -37,8 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.index.codec import decode_doc_block, varint_decode
-from meresco_lucene_spark.query.bm25 import bm25_score_numpy
+from meresco_lucene_spark.query.bm25 import bm25_score_expr, bm25_score_numpy
 
 TOPK_SCHEMA = "doc_id long, score double"
 
@@ -85,32 +87,16 @@ def _topk_compress(
     return scores[order], docs[order]
 
 
+def _exploded(blocks: DataFrame, *cols: str) -> DataFrame:
+    """One row per posting: ``posexplode`` of the doc ids, carrying the
+    block columns ``cols`` (index them at ``_i``)."""
+    return blocks.select(*cols, F.posexplode("doc_ids").alias("_i", "doc_id"))
+
+
 def decode_blocks(blocks: DataFrame) -> DataFrame:
-    """Blocks -> (doc_id, tf) rows (Arrow-batched numpy decode).
-
-    Only the two byte streams actually decoded cross the Python boundary
-    (guide §4.1: select just what the function needs — store blocks also
-    carry position streams that would otherwise ship for nothing), and
-    each input Arrow batch yields ONE output frame instead of one tiny
-    frame per block."""
-
-    def _decode(it):
-        for pdf in it:
-            docs_out, tfs_out = [], []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
-                docs_out.append(doc_ids.astype(np.int64))
-                tfs_out.append(tfs.astype(np.int64))
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_out),
-                        "tf": np.concatenate(tfs_out),
-                    }
-                )
-
-    return blocks.select("doc_bytes", "tf_bytes").mapInPandas(
-        _decode, schema="doc_id long, tf long"
+    """Blocks -> (doc_id, tf) rows, a JVM projection."""
+    return _exploded(blocks, "tfs").select(
+        "doc_id", F.col("tfs")[F.col("_i")].cast("long").alias("tf")
     )
 
 
@@ -118,30 +104,23 @@ def scores_for_blocks(
     blocks: DataFrame, dfs: dict[str, int], params: WandParams
 ) -> DataFrame:
     """Exact (doc_id, score) for every posting in the block frame; the
-    per-term df comes from the (broadcast-small) dfs dict."""
-    n, avgdl, k1, b = params.n_docs, params.avgdl, params.k1, params.b
-
-    def _score(it):
-        for pdf in it:
-            docs_out, score_out = [], []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
-                dls = varint_decode(row.dl_bytes).astype(float)
-                scores = bm25_score_numpy(
-                    tfs.astype(float), float(dfs[row.term]), dls, n, avgdl, k1, b
-                )
-                docs_out.append(doc_ids.astype(np.int64))
-                score_out.append(scores)
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_out),
-                        "score": np.concatenate(score_out),
-                    }
-                )
-
-    return blocks.select("term", "doc_bytes", "tf_bytes", "dl_bytes").mapInPandas(
-        _score, schema=TOPK_SCHEMA
+    per-term df comes from the (broadcast-small) dfs dict, inlined as a
+    literal map."""
+    i = F.col("_i")
+    df_of = F.create_map(
+        *[c for t, d in dfs.items() for c in (F.lit(t), F.lit(float(d)))]
+    )
+    return _exploded(blocks, "term", "tfs", "dls").select(
+        "doc_id",
+        bm25_score_expr(
+            F.col("tfs")[i],
+            df_of[F.col("term")],
+            F.col("dls")[i],
+            params.n_docs,
+            params.avgdl,
+            params.k1,
+            params.b,
+        ).alias("score"),
     )
 
 
@@ -167,24 +146,23 @@ def _candidate_scores(
                 hi = np.searchsorted(cands, row.max_doc, side="right")
                 if lo >= hi:
                     continue
-                doc_ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
+                doc_ids = row.doc_ids
                 sub = cands[lo:hi]
                 idx = np.searchsorted(sub, doc_ids)
                 idx[idx >= len(sub)] = len(sub) - 1
                 mask = sub[idx] == doc_ids
                 if not mask.any():
                     continue
-                dls = varint_decode(row.dl_bytes).astype(float)
                 scores = bm25_score_numpy(
-                    tfs[mask].astype(float),
+                    row.tfs[mask].astype(float),
                     float(dfs[row.term]),
-                    dls[mask],
+                    row.dls[mask].astype(float),
                     n,
                     avgdl,
                     k1,
                     b,
                 )
-                docs_out.append(doc_ids[mask].astype(np.int64))
+                docs_out.append(doc_ids[mask])
                 score_out.append(scores)
             if docs_out:
                 yield pd.DataFrame(
@@ -195,7 +173,7 @@ def _candidate_scores(
                 )
 
     return blocks.select(
-        "term", "min_doc", "max_doc", "doc_bytes", "tf_bytes", "dl_bytes"
+        "term", "min_doc", "max_doc", "doc_ids", "tfs", "dls"
     ).mapInPandas(_score, schema=TOPK_SCHEMA)
 
 
@@ -225,11 +203,11 @@ def _wand_pool_fn(dfs: dict[str, int], params: WandParams, k: int):
         for row in pdf.itertuples(index=False):
             if have_k and row.block_max_score < threshold:
                 break
-            doc_ids, tfs = decode_doc_block(row.doc_bytes, row.tf_bytes)
-            dls = varint_decode(row.dl_bytes).astype(float)
-            scores = bm25_score_numpy(tfs.astype(float), df_t, dls, n, avgdl, k1, b)
+            scores = bm25_score_numpy(
+                row.tfs.astype(float), df_t, row.dls.astype(float), n, avgdl, k1, b
+            )
             acc_s.append(scores)
-            acc_d.append(doc_ids.astype(np.int64))
+            acc_d.append(row.doc_ids)
             pending += len(scores)
             if pending >= k:
                 s, d = _topk_compress(np.concatenate(acc_s), np.concatenate(acc_d), k)
@@ -270,7 +248,7 @@ def term_topk(
         return out[["doc_id", "score"]]
 
     grouped = blocks.select(
-        "term", "shard", "block_max_score", "doc_bytes", "tf_bytes", "dl_bytes"
+        "term", "shard", "block_max_score", "doc_ids", "tfs", "dls"
     ).groupBy("term", "shard").applyInPandas(_one, schema=TOPK_SCHEMA)
     return grouped.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
@@ -318,7 +296,7 @@ def or_topk(
             .limit(k)
         )
     pooled = blocks.select(
-        "term", "shard", "block_max_score", "doc_bytes", "tf_bytes", "dl_bytes"
+        "term", "shard", "block_max_score", "doc_ids", "tfs", "dls"
     ).groupBy("term", "shard").applyInPandas(
         _wand_pool_fn(dfs, params, k),
         schema="term string, doc_id long, score double, term_max double",

@@ -186,6 +186,12 @@ def test_rare_term_single_shard(spark, seg):
     assert len(seg.term_shards(t)) == 1
 
 
+def test_term_meta_dedupes_terms(seg):
+    """A term listed twice yields one metadata row (and one block scan)."""
+    rows = seg._term_meta(["import", "def", "import", "def"])
+    assert [r["term"] for r in rows] == ["import", "def"]
+
+
 def test_fan_in_counts(spark, seg):
     """Decoded postings across salted shards == df (no loss, no dupes)."""
     for term in ["import", "def"]:
@@ -207,11 +213,14 @@ def test_lineage_complete(spark, seg):
 
 def _logical_content(spark, out_dir):
     df = spark.read.parquet(os.path.join(out_dir, "postings"))
+    def digest(c):
+        return F.sha2(F.array_join(F.col(c).cast("array<string>"), ","), 256)
+
     rows = df.select(
         "shard", "term", "block_id",
-        F.sha2("doc_bytes", 256).alias("dh"),
-        F.sha2("tf_bytes", 256).alias("th"),
-        F.sha2("dl_bytes", 256).alias("lh"),
+        digest("doc_ids").alias("dh"),
+        digest("tfs").alias("th"),
+        digest("dls").alias("lh"),
     ).collect()
     return sorted(tuple(r) for r in rows)
 

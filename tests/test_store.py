@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 from meresco_lucene_spark.index import store as store_mod
 from meresco_lucene_spark.index.builder import InvertedIndex
-from meresco_lucene_spark.index.store import (
-    PersistentIndex,
-    build_index_store,
-    decode_positions,
-    encode_positions,
-)
+from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
 from meresco_lucene_spark.query.executor import facet_counts_df, hits, search
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 
@@ -54,16 +49,6 @@ def stores(spark, tmp_path_factory):
 
 def _hits(ix, q):
     return {r["doc_id"]: round(r["score"], 9) for r in hits(ix, q).collect()}
-
-
-def test_positions_codec_roundtrip():
-    import numpy as np
-
-    lists = [[0, 2, 5], [7], [], [1, 1000, 1001], [3]]
-    buf, sizes = encode_positions(np.array(lists, dtype=object))
-    lens = np.array([len(p) for p in lists])
-    got = decode_positions(buf, lens)
-    assert got == [list(p) for p in lists]
 
 
 def test_postings_identical_to_dataframe_index(stores):
