@@ -74,6 +74,7 @@ from meresco_lucene_spark.query.executor import (
     similar_documents_df,
 )
 from meresco_lucene_spark.query.ir import Q
+from meresco_lucene_spark.session import local_frame
 
 _DELETED = object()
 
@@ -188,9 +189,9 @@ class LuceneCore:
         # deleted identifiers are hashed inside the tombstone write: no
         # separate hash job
         dels_df = (
-            self.spark.createDataFrame(
-                [(i,) for i in dels], f"{ID_FIELD} string"
-            ).select(F.xxhash64(F.col(ID_FIELD)).alias("doc_id"))
+            self._id_frame(dels).select(
+                F.xxhash64(F.col(ID_FIELD)).alias("doc_id")
+            )
             if dels
             else None
         )
@@ -583,16 +584,20 @@ class LuceneCore:
             tuple([ident] + [cell(flds, src) for _, _, src in cols])
             for ident, flds in adds.items()
         ]
-        return self.spark.createDataFrame(rows, schema).withColumn(
+        return local_frame(self.spark, rows, schema).withColumn(
             "doc_id", F.xxhash64(F.col(f"`{ID_FIELD}`"))
         )
 
+    def _id_frame(self, identifiers: list[str]):
+        return local_frame(
+            self.spark, [(i,) for i in identifiers], f"{ID_FIELD} string"
+        )
+
     def _hash_ids(self, identifiers: list[str]) -> list[int]:
+        """Catalyst folds the hash into the local relation: no job."""
         if not identifiers:
             return []
-        df = self.spark.createDataFrame(
-            [(i,) for i in identifiers], f"{ID_FIELD} string"
-        )
+        df = self._id_frame(identifiers)
         return [
             r[0] for r in df.select(F.xxhash64(F.col(ID_FIELD))).collect()
         ]

@@ -6,18 +6,21 @@ plus doc-values and norms (reference Lucene.java:160-171, 920-945).
 
 Spark-first restatement:
 
-    corpus DF --tokenize (Arrow UDF)--> tokens
-        --posexplode--> (doc_id, pos, term)
-        --groupBy(term, doc_id)--> tf + sorted positions   [partial agg, 1 shuffle]
-        --groupBy(term)--> df/cf term stats                [partial agg, 1 shuffle]
+    corpus DF --one projection--> per row: array of (field, tokens) structs
+        --explode--> (field, doc_id, tokens, dl)        [= field_lengths]
+        --posexplode--> (field, term, doc_id, pos)       [= occurrences]
+        --groupBy(field, term, doc_id)--> tf + sorted positions  [1 shuffle]
+        --groupBy(field, term)--> df/cf term stats               [1 shuffle]
 
-Everything stays in whole-stage-codegen'd built-ins except the tokenizer
-(vectorized pandas UDF, Arrow-batched).  The per-doc "norm" (Lucene's
-quantized document length, SmallFloat int4 round-trip) is precomputed at
-build time into ``field_lengths.norm_dl`` so query-time scoring is pure
-column arithmetic.
+Every indexed column is tokenized in the same projection, so each table
+reads the input once, not once per field. Everything stays in
+whole-stage-codegen'd built-ins (the tokenizer is a regexp projection);
+only Dutch stemming fields call a pandas UDF. The per-doc "norm"
+(Lucene's quantized document length, SmallFloat int4 round-trip) is
+precomputed at build time into ``field_lengths.norm_dl`` so query-time
+scoring is pure column arithmetic.
 
-The compressed, shard-partitioned on-disk segment format (delta+varint
+The shard-partitioned on-disk segment format (Parquet list-column
 blocks, block-max scores for WAND, lineage rows for resume) lives in
 ``index/segments.py``; this module is the in-memory/DataFrame form that
 all query operators consume.
@@ -40,12 +43,10 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from meresco_lucene_spark.analysis.tokenizer import tokenize_expr, tokenize_udf
+from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
 from meresco_lucene_spark.columns import qcol
 from meresco_lucene_spark.query.bm25 import (
     K1_DEFAULT,
@@ -101,86 +102,23 @@ def posting_frames(
     positions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """LAZY (postings, field_lengths) frames for a column spec — the
-    shared front half of the session index (InvertedIndex.build) and the
-    persistent store build (store.build_index_store), which materialize
-    them differently (heap cache vs parquet intermediates).
+    session index's front half (InvertedIndex.build): the occurrences of
+    :func:`occurrence_frames` grouped per (field, term, doc_id).
 
     postings:      (field, term, doc_id, tf, positions array<int>)
     field_lengths: (field, doc_id, dl, norm_dl)
     """
-    text_cols = list(text_cols or [])
-    keyword_cols = list(keyword_cols or [])
-    array_cols = list(array_cols or [])
-    dutch_cols = list(dutch_cols or [])
-    df = _spread_for_tokenize(df)
-    doc = F.col(id_col).alias("doc_id")
-
-    posting_parts: list[DataFrame] = []
-    length_parts: list[DataFrame] = []
-    col_plans = (
-        [(c, "text") for c in text_cols]
-        + [(c, "array") for c in array_cols]
-        + [(c, "dutch") for c in dutch_cols]
+    occurrences, field_lengths = occurrence_frames(
+        df, id_col, text_cols, keyword_cols, array_cols, dutch_cols
     )
-    for col, kind in col_plans:
-        # JVM tokenizer (codegen) — the pandas-UDF twin exists for
-        # exotic folds; contracts are identical (tokenizer.py).
-        if kind == "array":
-            tok_expr = qcol(col)
-        elif kind == "dutch":
-            from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
-
-            tok_expr = tokenize_dutch_udf(qcol(col))
-        else:
-            tok_expr = tokenize_expr(qcol(col))
-        toks = df.select(doc, tok_expr.alias("tokens"))
-        exploded = toks.select(
-            "doc_id", F.posexplode_outer("tokens").alias("pos", "term")
-        ).filter(F.col("term").isNotNull())
-        agg_cols = [F.count("*").cast("long").alias("tf")]
-        if positions:
-            agg_cols.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-        p = (
-            exploded.groupBy("term", "doc_id")
-            .agg(*agg_cols)
-            .withColumn("field", F.lit(col))
-        )
-        if not positions:
-            p = p.withColumn("positions", F.lit(None).cast("array<int>"))
-        posting_parts.append(p.select("field", "term", "doc_id", "tf", "positions"))
-        length_parts.append(
-            toks.select(
-                F.lit(col).alias("field"),
-                "doc_id",
-                F.coalesce(F.size("tokens"), F.lit(0)).cast("long").alias("dl"),
-            )
-        )
-    for col in keyword_cols:
-        kw = df.filter(qcol(col).isNotNull()).select(
-            F.lit(col).alias("field"),
-            qcol(col).cast("string").alias("term"),
-            doc,
-            F.lit(1).cast("long").alias("tf"),
-            F.array(F.lit(0)).alias("positions"),
-        )
-        posting_parts.append(kw)
-        # Keyword fields omit norms: dl recorded as 1 for completeness.
-        length_parts.append(
-            df.filter(qcol(col).isNotNull()).select(
-                F.lit(col).alias("field"), doc, F.lit(1).cast("long").alias("dl")
-            )
-        )
-
-    if not posting_parts:
-        raise ValueError("at least one text or keyword column required")
-
-    postings = posting_parts[0]
-    for p in posting_parts[1:]:
-        postings = postings.unionByName(p)
-    field_lengths = length_parts[0]
-    for p in length_parts[1:]:
-        field_lengths = field_lengths.unionByName(p)
-    field_lengths = field_lengths.withColumn("norm_dl", quantize_dl_expr(F.col("dl")))
+    pos = (
+        F.sort_array(F.collect_list("pos"))
+        if positions
+        else F.lit(None).cast("array<int>")
+    )
+    postings = occurrences.groupBy("field", "term", "doc_id").agg(
+        F.count("*").cast("long").alias("tf"), pos.alias("positions")
+    )
     return postings, field_lengths
 
 
@@ -194,13 +132,24 @@ def occurrence_frames(
     inline_dl: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LAZY (occurrences, field_lengths) frames — the store build's
-    front half. Unlike :func:`posting_frames`, occurrences stay one row
-    per token position (field, term, doc_id, pos) with NO aggregation:
-    the only heavy operator between tokenize and the shard encode is a
-    plain shuffle. This avoids the collect_list ObjectHashAggregate
-    (whose sort-fallback/spill was the store build's highest-variance
-    stage); tf and position lists are derived vectorized inside the
-    whole-shard numpy encode, which sorts everything anyway.
+    front half. Occurrences stay one row per token position (field,
+    term, doc_id, pos) with NO aggregation: the only heavy operator
+    between tokenize and the shard encode is a plain shuffle, and tf and
+    position lists are derived inside the whole-shard encode, which
+    sorts everything anyway.
+
+    Every indexed column is tokenized in ONE projection: each input row
+    becomes an array of (field, tokens) structs, which is exploded to
+    one row per field and then posexploded to one row per token. So each
+    of the two frames reads the input once, not once per field. Per
+    field kind:
+      text    : the JVM tokenizer; null text gives an empty token array
+      array   : the array column as it is
+      dutch   : the Dutch stemming tokenizer
+      keyword : a one-element array, and no entry when the value is null
+    A field row with no tokens (null or empty text) still gives a
+    lengths row with dl 0; a null array element counts in dl but yields
+    no term.
 
     ``inline_dl`` ("dl" or "norm_dl"): additionally carry the document
     length as a ``_dl`` column on every occurrence row, computed from
@@ -209,83 +158,57 @@ def occurrence_frames(
     — one whole shuffle join removed from the build (guide §2.4); the
     extra column is a run-length-friendly int that parquet compresses
     to almost nothing."""
-    text_cols = list(text_cols or [])
-    keyword_cols = list(keyword_cols or [])
-    array_cols = list(array_cols or [])
-    dutch_cols = list(dutch_cols or [])
-    df = _spread_for_tokenize(df)
-    doc = F.col(id_col).alias("doc_id")
 
-    def _dl_of(raw: Column) -> Column:
-        return (
-            quantize_dl_expr(raw) if inline_dl == "norm_dl" else raw
-        ).cast("long").alias("_dl")
+    # (field, tokens, whether a null tokens value drops the entry)
+    fields = [
+        (c, F.coalesce(tokenize_expr(qcol(c)), F.array().cast("array<string>")), False)
+        for c in text_cols or []
+    ]
+    fields += [(c, qcol(c), False) for c in array_cols or []]
+    if dutch_cols:
+        from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
 
-    occ_parts: list[DataFrame] = []
-    length_parts: list[DataFrame] = []
-    col_plans = (
-        [(c, "text") for c in text_cols]
-        + [(c, "array") for c in array_cols]
-        + [(c, "dutch") for c in dutch_cols]
-    )
-    for col, kind in col_plans:
-        if kind == "array":
-            tok_expr = qcol(col)
-        elif kind == "dutch":
-            from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
-
-            tok_expr = tokenize_dutch_udf(qcol(col))
-        else:
-            tok_expr = tokenize_expr(qcol(col))
-        toks = df.select(doc, tok_expr.alias("tokens"))
-        occ_cols = [
-            F.lit(col).alias("field"), "term", "doc_id",
-            F.col("pos").cast("int").alias("pos"),
-        ]
-        if inline_dl:
-            occ_cols.append(
-                _dl_of(F.coalesce(F.size("tokens"), F.lit(0)))
-            )
-        occ_parts.append(
-            toks.select(
-                "doc_id",
-                F.col("tokens"),
-                F.posexplode_outer("tokens").alias("pos", "term"),
-            )
-            .filter(F.col("term").isNotNull())
-            .select(*occ_cols)
-        )
-        length_parts.append(
-            toks.select(
-                F.lit(col).alias("field"),
-                "doc_id",
-                F.coalesce(F.size("tokens"), F.lit(0)).cast("long").alias("dl"),
-            )
-        )
-    for col in keyword_cols:
-        kw_cols = [
-            F.lit(col).alias("field"),
-            qcol(col).cast("string").alias("term"),
-            doc,
-            F.lit(0).cast("int").alias("pos"),
-        ]
-        if inline_dl:
-            kw_cols.append(_dl_of(F.lit(1)))
-        occ_parts.append(df.filter(qcol(col).isNotNull()).select(*kw_cols))
-        length_parts.append(
-            df.filter(qcol(col).isNotNull()).select(
-                F.lit(col).alias("field"), doc, F.lit(1).cast("long").alias("dl")
-            )
-        )
-    if not occ_parts:
+        fields += [(c, tokenize_dutch_udf(qcol(c)), False) for c in dutch_cols]
+    fields += [
+        (c, F.when(qcol(c).isNotNull(), F.array(qcol(c).cast("string"))), True)
+        for c in keyword_cols or []
+    ]
+    if not fields:
         raise ValueError("at least one text or keyword column required")
-    occurrences = occ_parts[0]
-    for p in occ_parts[1:]:
-        occurrences = occurrences.unionByName(p)
-    field_lengths = length_parts[0]
-    for p in length_parts[1:]:
-        field_lengths = field_lengths.unionByName(p)
-    field_lengths = field_lengths.withColumn("norm_dl", quantize_dl_expr(F.col("dl")))
+    # The tokenizers run in a projection below the explode, not inside
+    # it: the optimizer folds a projection over a local relation (a
+    # commit's batch, a small in-memory input) into the relation, as it
+    # did the per-field projections before. Inside the generator they
+    # ran on the executors instead, and a 3000-doc build from memory
+    # took 7% longer on 2 cores.
+    tokens = _spread_for_tokenize(df).select(
+        F.col(id_col).alias("doc_id"),
+        *(t.alias(f"_t{i}") for i, (_, t, _) in enumerate(fields)),
+    )
+    entries = []
+    for i, (c, _, optional) in enumerate(fields):
+        e = F.struct(F.lit(c).alias("field"), F.col(f"_t{i}").alias("tokens"))
+        entries.append(F.when(F.col(f"_t{i}").isNotNull(), e) if optional else e)
+    per_field = (
+        tokens.select("doc_id", F.explode(F.array(*entries)).alias("e"))
+        .filter(F.col("e").isNotNull())
+        .select(
+            "e.field", "doc_id", "e.tokens",
+            F.coalesce(F.size("e.tokens"), F.lit(0)).cast("long").alias("dl"),
+        )
+    )
+    occ_cols = ["field", "term", "doc_id", F.col("pos").cast("int").alias("pos")]
+    if inline_dl:
+        dl = quantize_dl_expr(F.col("dl")) if inline_dl == "norm_dl" else F.col("dl")
+        occ_cols.append(dl.cast("long").alias("_dl"))
+    occurrences = (
+        per_field.select("*", F.posexplode("tokens").alias("pos", "term"))
+        .filter(F.col("term").isNotNull())
+        .select(*occ_cols)
+    )
+    field_lengths = per_field.select(
+        "field", "doc_id", "dl", quantize_dl_expr(F.col("dl")).alias("norm_dl")
+    )
     return occurrences, field_lengths
 
 
@@ -414,7 +337,7 @@ class InvertedIndex:
             )
         # n_docs without a separate count job: an analyzed (text/array/
         # dutch) field emits exactly one lengths row per input row
-        # (posexplode_outer keeps null/empty docs), so its nd IS the doc
+        # (null or empty values give a dl 0 row), so its nd IS the doc
         # count; keyword-only specs fall back to counting (keyword
         # lengths are null-filtered).
         full_fields = [

@@ -72,6 +72,7 @@ from meresco_lucene_spark.index.store import (
     build_index_store,
     open_persistent_index,
 )
+from meresco_lucene_spark.session import local_frame
 
 _GEN_PREFIX = "gen-"
 
@@ -216,8 +217,8 @@ class IncrementalIndexStore:
         if df is not None:
             tomb_ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
         if delete_ids:
-            extra = self.spark.createDataFrame(
-                [(int(i),) for i in delete_ids], "doc_id long"
+            extra = local_frame(
+                self.spark, [(int(i),) for i in delete_ids], "doc_id long"
             )
             tomb_ids = extra if tomb_ids is None else tomb_ids.unionByName(extra)
         if delete_frame is not None:

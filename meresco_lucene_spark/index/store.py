@@ -174,12 +174,13 @@ def build_index_store(
         # the existing parquet.
         from pyspark.sql import Observation
 
-        # field lengths: second codegen tokenize pass, shuffle-free —
-        # cheaper than joining against the postings shuffle. When the
-        # field list is known (tokenize path), the per-field corpus
-        # stats (n_docs, sum_dl) ride this write as conditional-sum
-        # Observations — one fewer job on the per-commit refresh path;
-        # the precomputed-frames merge path keeps the groupBy collect.
+        # field lengths: the per-field rows of the same one-pass
+        # tokenize, shuffle-free — cheaper than joining against the
+        # postings shuffle. When the field list is known (tokenize
+        # path), the per-field corpus stats (n_docs, sum_dl) ride this
+        # write as conditional-sum Observations — one fewer job on the
+        # per-commit refresh path; the precomputed-frames merge path
+        # keeps the groupBy collect.
         known_fields = (
             list(
                 dict.fromkeys(

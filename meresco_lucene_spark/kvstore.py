@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from meresco_lucene_spark.session import local_frame
+
 _DELETED = object()
 
 
@@ -109,7 +111,7 @@ class KeyValueStore:
         rows = [
             (k, None if v is _DELETED else v) for k, v in self._buffer.items()
         ]
-        df = self.spark.createDataFrame(rows, "key string, value string")
+        df = local_frame(self.spark, rows, "key string, value string")
         tmp = os.path.join(self.path, f"_tmp_epoch_{epoch}")
         df.write.mode("overwrite").parquet(tmp)
         os.rename(tmp, os.path.join(self.path, f"epoch={epoch}"))
@@ -200,7 +202,7 @@ class KeyValueStore:
         rows = [
             (k, None if v is _DELETED else v) for k, v in self._buffer.items()
         ]
-        buf = self.spark.createDataFrame(rows, "key string, value string")
+        buf = local_frame(self.spark, rows, "key string, value string")
         return (
             committed.join(buf.select("key"), "key", "left_anti")
             .unionByName(buf.filter(F.col("value").isNotNull()))

@@ -9,8 +9,9 @@ comparisons are stable.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -59,3 +60,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """Driver-held rows as a DataFrame that plans as a ``LocalRelation``.
+
+    ``createDataFrame`` of a Python list plans as a scan of a pickled
+    Python RDD, so every scan of it unpickles the rows in Python workers.
+    An Arrow table goes to the JVM once. Its columns take the DDL
+    schema's Arrow types up front, so a null in a ``long`` column stays
+    null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
