@@ -7,10 +7,14 @@ Default mode (driver contract): run at $SPARK_GRAFT_SF_DIR (default
    "queries": {name: sec, ...}, "sf": <float>,
    "index_docs_per_sec": ..., "segment_docs_per_sec": ...}
 
-Scaling mode (BASELINE.md evidence): ``python3 bench.py --scaling`` runs
-the identical segment-index build at two parallelism levels (local[8]
-vs local[32]) in fresh JVMs and reports throughput + efficiency
-(= (thr_4N / thr_N) / 4), appending a row to BENCH/BASELINE.md.
+``segment_build_corpus`` and the ``wand_*`` heads build and query a
+single-field store (``build_index_store(text_cols=["content"])``) of
+the synthesized source-code corpus.
+
+Scaling mode (BASELINE.md evidence): ``python3 bench.py --scaling [n]``
+runs the identical single-field store build at two parallelism levels
+(local[2] vs local[8]) in fresh JVMs and prints throughput + efficiency
+(= (thr_4N / thr_N) / 4) as one JSON line.
 """
 
 from __future__ import annotations
@@ -64,7 +68,6 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
     from meresco_lucene_spark import entry_queries
     from meresco_lucene_spark.corpus import synthesize_corpus
     from meresco_lucene_spark.index.builder import InvertedIndex
-    from meresco_lucene_spark.index.segments import build_segments
     from meresco_lucene_spark.index.store import build_index_store
 
     q_rep = int(os.environ.get("MLS_BENCH_REPEATS", "3"))
@@ -102,7 +105,9 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
 
         shutil.rmtree(seg_dir, ignore_errors=True)
         t, seg = timed(
-            lambda: build_segments(corpus, seg_dir, n_shards=32, salt_buckets=8)
+            lambda: build_index_store(
+                corpus, seg_dir, text_cols=["content"], n_shards=32, salt_buckets=8
+            )
         )
         rec("segment_build_corpus", t)
 
@@ -193,13 +198,13 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
             fn = entry_queries.QUERIES[name]
             t, _ = timed(lambda fn=fn: fn(spark, sf_dir).collect())
             rec(name, t)
-        t, _ = timed(lambda: seg.term_topk("import", 10).collect())
+        t, _ = timed(lambda: seg.term_topk("content", "import", 10).collect())
         rec("wand_term_top10", t)
-        t, _ = timed(lambda: seg.term_topk("struct", 10).collect())
+        t, _ = timed(lambda: seg.term_topk("content", "struct", 10).collect())
         rec("wand_term_top10_mid", t)
-        t, _ = timed(lambda: seg.or_topk(["import", "struct"], 10).collect())
+        t, _ = timed(lambda: seg.or_topk("content", ["import", "struct"], 10).collect())
         rec("wand_or_top10", t)
-        t, _ = timed(lambda: seg.and_topk(["import", "return"], 10).collect())
+        t, _ = timed(lambda: seg.and_topk("content", ["import", "return"], 10).collect())
         rec("wand_and_top10", t)
         for name in store_heads:
             fn = entry_queries.QUERIES[name]
@@ -240,40 +245,9 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def scaling_child(cores: int, n_corpus: int, target: str = "segments") -> None:
-    """One measurement at a given parallelism (see below); target='calib'
-    runs ONLY the pure-JVM hardware-calibration microbench (the cheap
-    window probe used by --scaling-gated)."""
-    if target == "calib":
-        _calib_child(cores)
-        return
-    _scaling_child_full(cores, n_corpus, target)
-
-
-def _calib_child(cores: int) -> None:
-    from pyspark.sql import functions as F
-
-    from meresco_lucene_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="mls-bench-calib",
-        cores=cores,
-        shuffle_partitions=32,
-        driver_memory=os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.range(10**7).agg(F.expr("bit_xor(xxhash64(id))")).collect()
-    t0 = time.time()
-    spark.range(10**10, numPartitions=cores * 4).agg(
-        F.expr("bit_xor(xxhash64(id))")
-    ).collect()
-    calib = time.time() - t0
-    print(json.dumps({"cores": cores, "calib_secs": round(calib, 2)}))
-
-
-def _scaling_child_full(cores: int, n_corpus: int, target: str = "segments") -> None:
-    """One measurement at a given parallelism: the segment index build
-    (docs/sec) plus a pure-JVM hardware-calibration microbench (an
+def scaling_child(cores: int, n_corpus: int) -> None:
+    """One measurement at a given parallelism: the single-field store
+    build (docs/sec) plus a pure-JVM hardware-calibration microbench (an
     embarrassingly parallel xxhash aggregation) run in the same JVM —
     the calibration measures what THIS host actually delivers at that
     thread count (vCPU oversubscription / turbo effects), so job scaling
@@ -301,7 +275,7 @@ def _scaling_child_full(cores: int, n_corpus: int, target: str = "segments") -> 
     from pyspark.sql import functions as F
 
     from meresco_lucene_spark.corpus import synthesize_corpus
-    from meresco_lucene_spark.index.segments import build_segments
+    from meresco_lucene_spark.index.store import build_index_store
 
     # calibration (warmup + measure)
     spark.range(10**7).agg(F.expr("bit_xor(xxhash64(id))")).collect()
@@ -316,15 +290,9 @@ def _scaling_child_full(cores: int, n_corpus: int, target: str = "segments") -> 
     corpus = synthesize_corpus(spark, n_corpus, seed=42, partitions=32).persist()
     corpus.count()
     t0 = time.time()
-    if target == "store":
-        from meresco_lucene_spark.index.store import build_index_store
-
-        build_index_store(
-            corpus, seg_dir, id_col="doc_id", text_cols=["content"],
-            n_shards=32, salt_buckets=8,
-        )
-    else:
-        build_segments(corpus, seg_dir, n_shards=32, salt_buckets=8)
+    build_index_store(
+        corpus, seg_dir, text_cols=["content"], n_shards=32, salt_buckets=8
+    )
     dt = time.time() - t0
     shutil.rmtree(seg_dir, ignore_errors=True)
     print(
@@ -339,7 +307,7 @@ def _scaling_child_full(cores: int, n_corpus: int, target: str = "segments") -> 
     )
 
 
-def _run_child(cores: int, n_corpus: int, target: str) -> dict:
+def _run_child(cores: int, n_corpus: int) -> dict:
     p = subprocess.run(
         [
             sys.executable,
@@ -347,7 +315,6 @@ def _run_child(cores: int, n_corpus: int, target: str) -> dict:
             "--scaling-child",
             str(cores),
             str(n_corpus),
-            target,
         ],
         capture_output=True,
         text=True,
@@ -363,17 +330,14 @@ def _run_child(cores: int, n_corpus: int, target: str) -> dict:
     return r
 
 
-def scaling_main(
-    n_corpus: int, lo: int = 2, hi: int = 8, repeats: int = 3,
-    target: str = "segments",
-) -> dict:
+def scaling_main(n_corpus: int, lo: int = 2, hi: int = 8, repeats: int = 3) -> dict:
     """Interleaved lo/hi repeats (this sandbox's CPU delivery is bursty;
     best-of-N per level filters noisy-neighbor slowdowns), then report
     raw + hardware-normalized efficiency."""
     runs: dict[int, list[dict]] = {lo: [], hi: []}
     for _ in range(repeats):
         for cores in (lo, hi):
-            runs[cores].append(_run_child(cores, n_corpus, target))
+            runs[cores].append(_run_child(cores, n_corpus))
     best = {c: max(rs, key=lambda r: r["docs_per_sec"]) for c, rs in runs.items()}
     thr_n, thr_4n = best[lo]["docs_per_sec"], best[hi]["docs_per_sec"]
     job_speedup = thr_4n / thr_n
@@ -387,7 +351,7 @@ def scaling_main(
         for i in range(len(runs[lo]))
     ]
     out = {
-        "target": target,
+        "target": "store",
         "n_corpus": n_corpus,
         f"docs_per_sec_local{lo}": thr_n,
         f"docs_per_sec_local{hi}": thr_4n,
@@ -402,114 +366,10 @@ def scaling_main(
     return out
 
 
-# Historical clean-window 2-core baselines (docs/s at 100k docs) — rounds
-# 1-3, BENCH/BASELINE.md. Round 4 proved the failure signature on this
-# host is NOT a degraded calibration (all six failed windows had calib
-# speedup 3.05-3.70x) but a 2-core baseline running 25-60% ABOVE its
-# historical value: the host caps AGGREGATE job throughput, the 2-core
-# run fits under the cap and looks "too good", and the measured ratio is
-# then meaningless. A measurement window is therefore accepted only when
-# BOTH (a) the same-JVM calibration probe scales >=3.0x 2->8 (the
-# clean-window signature per rounds 1-3) and (b) the 2-core job baseline
-# lands inside its historical clean band.
-_HIST_2CORE_100K = {"store": 724.3, "segments": 1082.8}
-
-
-def scaling_gated(
-    n_corpus: int, lo: int = 2, hi: int = 8, repeats: int = 3,
-    target: str = "store", log_path: str | None = None,
-) -> int:
-    """Window-aware scaling measurement (VERDICT r4 next-round #1).
-
-    Phase 1 (probe): pure-JVM calibration microbench at lo and hi cores;
-    reject the window outright if the calibration speedup < 3.0x.
-    Phase 2: full interleaved measurement via scaling_main.
-    Verdict: exit 0 iff raw efficiency >= 0.8 AND the 2-core baseline is
-    within the historical clean band; exit 3 for a rejected/capped window
-    (retry later); every attempt is appended to the JSONL log so the
-    all-windows table stays honest.
-    """
-    min_probe = float(os.environ.get("MLS_SCALING_MIN_PROBE", "3.0"))
-    repeats = int(os.environ.get("MLS_SCALING_REPEATS", str(repeats)))
-    attempt: dict = {"phase": "probe", "target": target, "n_corpus": n_corpus}
-    try:
-        calib = {c: _run_child(c, 0, "calib")["calib_secs"] for c in (lo, hi)}
-        probe_speedup = calib[lo] / calib[hi]
-        attempt["calib_probe"] = {str(c): calib[c] for c in calib}
-        attempt["calib_probe_speedup"] = round(probe_speedup, 3)
-        if probe_speedup < min_probe:
-            attempt["verdict"] = (
-                f"window-rejected: calibration probe < {min_probe}x"
-            )
-            return _finish_attempt(attempt, log_path, 3)
-        attempt["phase"] = "measure"
-        out = scaling_main(n_corpus, lo, hi, repeats, target)
-        attempt.update(out)
-        hist = _HIST_2CORE_100K.get(target, 0.0)
-        best2 = out[f"docs_per_sec_local{lo}"]
-        raw = out["scaling_efficiency_raw"]
-        best_pair = max(out["same_rep_pair_efficiency"])
-        band_ok = (n_corpus != 100_000) or (hist == 0.0) or (best2 <= hist * 1.15)
-        if raw >= 0.8 and band_ok:
-            attempt["verdict"] = f"PASS: raw efficiency {raw} >= 0.8 in a clean window"
-            return _finish_attempt(attempt, log_path, 0)
-        if raw >= 0.8 and not band_ok:
-            attempt["verdict"] = (
-                f"PASS-with-caveat: raw {raw} >= 0.8 but 2-core baseline "
-                f"{best2} above historical band ({hist}) — report both"
-            )
-            return _finish_attempt(attempt, log_path, 0)
-        if best_pair >= 0.8:
-            # the same-window back-to-back pair is the honest unit on this
-            # bursty host (BENCH/BASELINE.md rounds 2-3 precedent): both
-            # levels of a rep run inside one measurement window
-            attempt["verdict"] = (
-                f"PASS: same-window pair efficiency {best_pair} >= 0.8 "
-                f"(best-of raw {raw} diluted by cross-rep turbo variance)"
-            )
-            return _finish_attempt(attempt, log_path, 0)
-        if not band_ok:
-            attempt["verdict"] = (
-                f"window-capped: raw {raw} < 0.8 and 2-core baseline {best2} "
-                f"runs {best2 / hist:.2f}x its historical clean value {hist} "
-                "(aggregate-throughput-cap signature)"
-            )
-        else:
-            attempt["verdict"] = f"window-noise: raw {raw} < 0.8, unclassified"
-        return _finish_attempt(attempt, log_path, 3)
-    except Exception as exc:  # noqa: BLE001 — log and signal retry
-        attempt["verdict"] = f"error: {exc}"
-        return _finish_attempt(attempt, log_path, 1)
-
-
-def _finish_attempt(attempt: dict, log_path: str | None, code: int) -> int:
-    attempt["unix_time"] = int(time.time())
-    print(json.dumps(attempt))
-    if log_path:
-        with open(log_path, "a") as f:
-            f.write(json.dumps(attempt) + "\n")
-    return code
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 40_000
-        tgt = sys.argv[3] if len(sys.argv) > 3 else "segments"
-        scaling_main(n, target=tgt)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-gated":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
-        tgt = sys.argv[3] if len(sys.argv) > 3 else "store"
-        log = sys.argv[4] if len(sys.argv) > 4 else os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH",
-            "scaling_attempts_r05.jsonl",
-        )
-        sys.exit(scaling_gated(n, target=tgt, log_path=log))
+        scaling_main(int(sys.argv[2]) if len(sys.argv) > 2 else 40_000)
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-child":
-        scaling_child(
-            int(sys.argv[2]),
-            int(sys.argv[3]),
-            sys.argv[4] if len(sys.argv) > 4 else "segments",
-        )
+        scaling_child(int(sys.argv[2]), int(sys.argv[3]))
     else:
         main()

@@ -9,7 +9,7 @@ the per-row sha256(content) invariant is checkable against a manifest
 
 Content mixes hot terms ('import', 'return', 'def', ...) at Zipfian
 frequency with unique identifiers sym_{i}_{j}, guaranteeing the skewed
-hot-term posting lists the salted sharding in index/segments.py exists
+hot-term posting lists the salted sharding in index/store.py exists
 for (SURVEY.md §7.3).
 
 Generation is distributed: spark.range(n) -> mapInPandas with

@@ -20,17 +20,18 @@ only Dutch stemming fields call a pandas UDF. The per-doc "norm"
 precomputed at build time into ``field_lengths.norm_dl`` so query-time
 scoring is pure column arithmetic.
 
-The shard-partitioned on-disk segment format (Parquet list-column
-blocks, block-max scores for WAND, lineage rows for resume) lives in
-``index/segments.py``; this module is the in-memory/DataFrame form that
-all query operators consume.
+The shard-partitioned on-disk format (Parquet list-column blocks,
+block-max scores for WAND, lineage rows for resume) lives in
+``index/store.py``, which builds from :func:`occurrence_frames`; this
+module is also the in-memory/DataFrame form that all query operators
+consume.
 
 Scale notes (100 TB design):
 - the two groupBys are the only shuffles; both are partial-aggregated
   map-side first (Spark HashAggregate partial/final), exactly the
   reference's SubCollector/complete() pattern (SuperCollector.java:38-53);
 - postings are hash-partitioned by term at the shuffle — skewed hot
-  terms ("import", "return") are handled in segments.py via salted
+  terms ("import", "return") are handled in store.py via salted
   sharding; the DataFrame form relies on AQE skew handling;
 - doc ids must be *stable* (a pure function of the input, never of
   partitioning) so checkpoint resume keeps rank-identity — callers
@@ -54,6 +55,9 @@ from meresco_lucene_spark.query.bm25 import (
     quantize_dl_expr,
 )
 
+# Smallest optimizer size estimate of an input for which the tokenize
+# passes are spread over the session's parallelism (_spread_for_tokenize).
+TOKENIZE_SPREAD_MIN_BYTES = 3 << 20
 
 
 def _spread_for_tokenize(df: DataFrame) -> DataFrame:
@@ -74,10 +78,7 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
     input sizes, hence the 3 MB default), and a large input already
     has >= parallelism partitions and is left untouched (guide §2.2:
     scale-adaptive partitioning, no constant tuned to either local
-    mode or the cluster). Threshold override:
-    MLS_TOKENIZE_SPREAD_MIN_BYTES."""
-    import os
-
+    mode or the cluster)."""
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
         nparts = df.rdd.getNumPartitions()
@@ -86,10 +87,7 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return df
-    min_bytes = int(
-        os.environ.get("MLS_TOKENIZE_SPREAD_MIN_BYTES", str(3 << 20))
-    )
-    return df.repartition(par) if est >= min_bytes else df
+    return df.repartition(par) if est >= TOKENIZE_SPREAD_MIN_BYTES else df
 
 
 def posting_frames(

@@ -1,12 +1,11 @@
 """Persistent multi-field index store: the FULL query surface from disk.
 
-Round-1's segment store (segments.py) served only single/OR/AND term
-top-k; phrase, boolean NOT/FILTER, facets, sort, dedup and composed
-queries ran on the session-cached DataFrame index, rebuilt from raw text
-every session. At 100 TB you cannot re-tokenize per session — this
-module makes the on-disk store the one queried, reproducing the
-reference's durable commit -> search contract (Lucene.java:920-945,
-refresh :899-907): build once, reopen in any session, query everything.
+The engine's one durable index: build once from the input rows, reopen
+in any session, query everything — term, boolean, phrase, prefix,
+facets, sort, dedup, composed queries and the block-max WAND top-k —
+with no re-tokenization. This reproduces the reference's durable
+commit -> search contract (Lucene.java:920-945, refresh :899-907): one
+build = one commit = one queryable snapshot.
 
 Layout under ``out_dir``:
   forward/        the input rows (doc_id + stored/sortable/facet columns)
@@ -16,13 +15,34 @@ Layout under ``out_dir``:
                   (field, term, block_id, doc_count, min_doc, max_doc,
                    block_max_score, doc_ids array<bigint>, tfs array<int>,
                    dls array<int>, positions array<array<int>>)
+  lineage/        (shard, n_terms, term_min, term_max, n_blocks,
+                   n_postings, bytes, content_xxh64_sum, run_id)
   meta.json       {n_docs, field_stats, facet_fields, k1, b, similarity,
                    quantized, has_positions, n_shards, ..., schemas}
 
-Block format = segments.py's blocks (native Parquet list columns written
-by the v2 writer, see segments.PARQUET_V2) plus a ``positions`` column:
-one sorted position list per posting. ``schemas`` records each table's
-schema, so opening a store runs no schema-inference job.
+Block format: up to ``block_size`` postings of one (field, term) per
+row, as parallel Parquet list columns, plus one sorted position list
+per posting. The postings tables are written with the Parquet v2
+writer: doc ids that repeat within a page stay dictionary-encoded,
+others are stored DELTA_BINARY_PACKED (see PARQUET_V2). ``schemas``
+records each table's schema, so opening a store runs no
+schema-inference job.
+
+Sharding & skew: ``base_shard = xxhash64(field, term) % n_shards``
+(JVM-side, deterministic across sessions, so resume is safe). A term
+whose df reaches ``hot_df_fraction * N`` is *salted*: its postings
+spread over ``salt_buckets`` consecutive shards (``(base_shard + doc_id
+% n_salts) % n_shards``), so no single encode task or WAND pool
+swallows a whole hot posting list. term_stats records base_shard and
+n_salts, so the WAND reader prunes to a term's shards without
+recomputing the hash.
+
+Resume: each fully-written shard appends a lineage row whose
+content_xxh64_sum covers the shard's block content. On resume, shards
+present in lineage are kept; shard directories without a lineage row
+(crash mid-write) are deleted and re-encoded. Blocks are a pure
+function of the (field, term, doc)-sorted postings, so a resumed build
+is identical to an uninterrupted one.
 
 The decisive design point is how :class:`PersistentIndex` exposes the
 blocks: ``postings_for(field)`` returns a LAZILY-DECODED DataFrame where
@@ -34,36 +54,25 @@ query never reads: a term or boolean query does not scan ``positions``.
 A TermQuery therefore reads only the blocks of its term (row-group
 pruned; blocks are term-sorted within each shard file) — while
 query/executor.py runs completely unchanged on top.
-
-Sharding & skew: identical story to segments.py — ``base_shard =
-xxhash64(field, term) % n_shards`` with hot terms (df >= hot_df_fraction
-* N) salted across ``salt_buckets`` consecutive shards so no single
-encode task swallows a hot posting list. The query side never needs the
-shard: term filters prune via parquet statistics.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import uuid
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from meresco_lucene_spark.index import wand
 from meresco_lucene_spark.index.builder import FieldStats
-from meresco_lucene_spark.index.segments import (
-    PARQUET_V2,
-    block_columns,
-    block_layout,
-    block_payload_bytes,
-    read_table,
-    schema_json,
-    value_changes,
-)
 from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, bm25_score_numpy
 
 STORE_POSTINGS_SCHEMA = (
@@ -72,6 +81,280 @@ STORE_POSTINGS_SCHEMA = (
     "doc_ids array<bigint>, tfs array<int>, dls array<int>, "
     "positions array<array<int>>"
 )
+
+# Postings writes use the Parquet v2 writer. A column whose values repeat
+# within a page (doc ids shared by many terms' blocks, tfs, dls) stays
+# dictionary-encoded; otherwise the writer falls back to v2's
+# DELTA_BINARY_PACKED, which for the sorted doc-id lists of a large
+# corpus is the block format's delta coding. (Disabling dictionaries
+# grew the stores of both benchmark workloads: hashed 64-bit doc ids
+# delta-encode worse than they dictionary-encode.)
+PARQUET_V2 = {"parquet.writer.version": "v2"}
+
+# A build whose occurrence count is at most this is SMALL (a batch
+# generation commit above all): salt_buckets=None disables hot-term
+# salting for it, and its term_stats cache is not materialized up front.
+SMALL_BUILD_OCC = 2_000_000
+
+
+# ------------------------------------------------------ block format
+
+
+def value_changes(values: pa.Array) -> np.ndarray:
+    """Boolean mask over positions 1.. of a sorted Arrow array: True
+    where the value differs from its predecessor."""
+    return pc.not_equal(values[1:], values[:-1]).to_numpy(zero_copy_only=False)
+
+
+def block_layout(
+    run_start: np.ndarray, hot_df: np.ndarray, block_size: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Cut term-sorted, doc-sorted postings into blocks.
+
+    ``run_start`` marks the first posting of each term run; ``hot_df``
+    is the broadcast df of salted hot terms (NaN elsewhere). A
+    non-salted term's postings all sit in one shard, so its df IS its
+    run length. Returns (block start indices, block_id per block, df per
+    posting)."""
+    n = len(run_start)
+    run_ids = np.cumsum(run_start) - 1
+    run_starts_idx = np.flatnonzero(run_start)
+    run_sizes = np.diff(np.append(run_starts_idx, n)).astype(np.float64)
+    hot_run = hot_df[run_starts_idx]
+    dfs = np.where(np.isnan(hot_run), run_sizes, hot_run)[run_ids]
+    pos_in_run = np.arange(n) - run_starts_idx[run_ids]
+    starts = np.flatnonzero(run_start | (pos_in_run % block_size == 0))
+    return starts, (pos_in_run // block_size)[starts].astype(np.int32), dfs
+
+
+def block_columns(
+    starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    scores: np.ndarray,
+    positions: pa.Array,
+) -> dict:
+    """Per-block columns of the block format, the list columns built
+    from offsets over the posting arrays (no per-posting Python);
+    ``positions`` holds one position list per posting."""
+    n = len(doc_ids)
+    ends = np.append(starts[1:], n)
+    offsets = pa.array(np.append(starts, n).astype(np.int32))
+
+    def lists(values):
+        return pa.ListArray.from_arrays(offsets, values)
+
+    return {
+        "doc_count": (ends - starts).astype(np.int32),
+        "min_doc": doc_ids[starts],
+        "max_doc": doc_ids[ends - 1],
+        "block_max_score": np.maximum.reduceat(scores, starts),
+        "doc_ids": lists(pa.array(doc_ids, pa.int64())),
+        "tfs": lists(pa.array(tfs, pa.int32())),
+        "dls": lists(pa.array(dls, pa.int32())),
+        "positions": lists(positions),
+    }
+
+
+def schema_json(schema: StructType) -> dict:
+    """A table schema as recorded in meta.json ``schemas``."""
+    return json.loads(schema.json())
+
+
+def block_payload_bytes():
+    """Lineage ``bytes`` of a block: its doc-id and tf payload (8 + 4
+    bytes per posting) before Parquet encoding."""
+    return (F.col("doc_count") * 12).cast("long")
+
+
+def read_table(spark: SparkSession, path: str, schema: dict) -> DataFrame:
+    """Read a store table with its recorded schema: no footer-inference
+    job on open."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
+
+
+# ------------------------------------------------------------- sharding
+
+# Whole-shard encode memory budget: each encode task materializes one
+# shard's raw occurrence rows as a pandas frame. Sizing n_shards so that
+# occurrences/n_shards * OCC_ROW_BYTES <= ENCODE_TARGET_BYTES bounds the
+# per-task frame at ~ENCODE_TARGET_BYTES regardless of corpus size
+# (VERDICT r2 'What's wrong' #4 — a fixed 32 put ~3% of the corpus in one
+# task at 100x scale).
+ENCODE_TARGET_BYTES = 256 << 20
+OCC_ROW_BYTES = 64  # conservative pandas-frame bytes per occurrence row
+# Fewest occurrences worth a shard of their own (see auto_n_shards).
+MIN_OCC_PER_SHARD = 65536
+
+
+def auto_n_shards(n_occurrences: int, floor: int) -> int:
+    """Pick n_shards from the estimated occurrence volume: enough shards
+    that one shard's encode frame fits the per-task budget, at least
+    `floor` (use the cluster's default parallelism so sizable corpora
+    use every core), capped at 65536 (file-count sanity; beyond that,
+    raise ENCODE_TARGET_BYTES instead).
+
+    The floor itself is capped at ceil(occ / MIN_OCC_PER_SHARD): a TINY
+    build — an incremental batch commit most of all — must not be padded
+    out to parallelism-many near-empty shards, which cost a task each at
+    encode and a parquet footer each on EVERY later read of the
+    generation (the union reader multiplies that by the gen count).
+    Measured r6 (OPTIMIZATION_r06.md): encoding ~64k occurrences is
+    single-digit-millisecond numpy work while every extra shard task
+    costs Arrow ship + scheduling + a parquet file, so shards below
+    ~64k occurrences are pure overhead at build AND query time."""
+    occ = max(n_occurrences, 1)
+    need = math.ceil(occ * OCC_ROW_BYTES / ENCODE_TARGET_BYTES)
+    floor = min(floor, math.ceil(occ / MIN_OCC_PER_SHARD))
+    return int(min(max(need, floor, 1), 65536))
+
+
+def shard_dispersion_partitions(n_shards: int, parallelism: int) -> int:
+    """Partition count for the encode exchange. groupBy("shard") hashes
+    the shard int into shuffle-partition buckets; with n_shards close to
+    the core count, murmur3 collisions routinely put 2-3 whole shards on
+    one task while other cores sit idle (guide §2.5: synthetic
+    partitioning keys with too few distinct values — use many more
+    buckets than keys so the hash spreads). Dispersing over 4x the shard
+    count makes same-bucket collisions rare; empty partitions cost only
+    a no-op task. When n_shards already dwarfs the parallelism, queueing
+    evens the load and dispersion is unnecessary."""
+    if n_shards <= 4 * max(parallelism, 1):
+        return n_shards * 4
+    return n_shards
+
+
+def pin_build_config(
+    out_dir: str,
+    resume: bool,
+    n_shards: int | None,
+    salt_buckets: int,
+    derive,
+) -> tuple[int, int]:
+    """Resolve (n_shards, salt_buckets) for a sharded build and PERSIST
+    the choice (atomic rename) before any sharded write.
+
+    auto_n_shards floors at the session's defaultParallelism, so the
+    value is NOT a pure function of the corpus: resuming a crashed build
+    on a session/cluster with different parallelism would re-derive a
+    different n_shards and silently mix two pmod(xxhash64, n) shard
+    mappings — done shards kept under the old mapping, remaining shards
+    encoded under the new one, postings duplicated or lost (ADVICE r3).
+    A resumed build therefore reads the pinned value back; an explicit
+    n_shards that conflicts with the pinned one is an error."""
+    cfg_path = os.path.join(out_dir, "_build_config.json")
+    if resume and os.path.exists(cfg_path):
+        with open(cfg_path) as f:
+            cfg = json.load(f)
+        if n_shards is not None and n_shards != cfg["n_shards"]:
+            raise ValueError(
+                f"resume with n_shards={n_shards}, but the interrupted "
+                f"build used {cfg['n_shards']} ({cfg_path}); the shard "
+                "mapping is fixed for the lifetime of a build"
+            )
+        return int(cfg["n_shards"]), int(cfg["salt_buckets"])
+    if n_shards is None:
+        n_shards = derive()
+    salt_buckets = min(salt_buckets, n_shards)
+    tmp = cfg_path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"n_shards": n_shards, "salt_buckets": salt_buckets}, f)
+    os.replace(tmp, cfg_path)
+    return n_shards, salt_buckets
+
+
+# -------------------------------------------------------------- lineage
+
+# Lineage-as-Observation: the lineage row of a shard is a handful of
+# aggregates over the blocks just written, so for builds with a bounded
+# shard count the whole lineage pass can RIDE the postings write as
+# per-shard conditional Observation aggregates instead of a separate
+# read-back job (guide §1.3/§2.6: don't relaunch a job for what another
+# job already observed). n_terms uses the fact that every (field, term)
+# run starts with exactly one block_id==0 block. Above the cap the
+# conditional-aggregate expression tree would bloat (7 aggs per shard),
+# so big builds keep the column-pruned read-back.
+LINEAGE_OBS_MAX_SHARDS = 64
+LINEAGE_HASH_MOD = 2147483647
+
+
+def lineage_observation(remaining: list[int]):
+    """(Observation, aggregate exprs) reproducing the lineage read-back
+    aggregation exactly — one group of 7 conditional aggregates per
+    shard still to encode."""
+    obs = Observation()
+    aggs = []
+    for s in remaining:
+        c = F.col("shard") == s
+        aggs += [
+            F.sum(
+                F.when(c & (F.col("block_id") == 0), 1).otherwise(0)
+            ).alias(f"nt_{s}"),
+            F.min(F.when(c, F.col("term"))).alias(f"tmin_{s}"),
+            F.max(F.when(c, F.col("term"))).alias(f"tmax_{s}"),
+            F.sum(F.when(c, 1).otherwise(0)).alias(f"nb_{s}"),
+            F.sum(F.when(c, F.col("doc_count")).otherwise(0)).alias(f"np_{s}"),
+            F.sum(F.when(c, F.col("_nbytes")).otherwise(0)).alias(f"by_{s}"),
+            F.sum(
+                F.when(c, F.pmod(F.col("_h"), F.lit(LINEAGE_HASH_MOD))).otherwise(0)
+            ).alias(f"h_{s}"),
+        ]
+    return obs, aggs
+
+
+def lineage_rows_from_observation(vals, remaining: list[int], run_id: str):
+    """Observation values -> lineage rows (the lineage/ layout); a
+    shard that produced no blocks yields no row, exactly like the
+    read-back groupBy."""
+    rows = []
+    for s in remaining:
+        nb = int(vals[f"nb_{s}"] or 0)
+        if nb == 0:
+            continue
+        rows.append(
+            (
+                int(s),
+                int(vals[f"nt_{s}"]),
+                vals[f"tmin_{s}"],
+                vals[f"tmax_{s}"],
+                nb,
+                int(vals[f"np_{s}"]),
+                int(vals[f"by_{s}"]),
+                str(int(vals[f"h_{s}"]) % LINEAGE_HASH_MOD),
+                run_id,
+            )
+        )
+    return rows
+
+
+def write_lineage_rows(rows: list[tuple], lin_dir: str) -> None:
+    """Append a handful of driver-held lineage rows as one parquet file
+    WITHOUT a Spark job (a 32-row write cost a full job round-trip of
+    pure overhead — guide §5). Crash-safe like every commit in this
+    package: written to a dot-prefixed temp name (invisible to
+    spark.read.parquet) and atomically renamed into place."""
+    if not rows:
+        return
+    os.makedirs(lin_dir, exist_ok=True)
+    cols = list(zip(*rows))
+    tbl = pa.table(
+        {
+            "shard": pa.array(cols[0], pa.int32()),
+            "n_terms": pa.array(cols[1], pa.int64()),
+            "term_min": pa.array(cols[2], pa.string()),
+            "term_max": pa.array(cols[3], pa.string()),
+            "n_blocks": pa.array(cols[4], pa.int64()),
+            "n_postings": pa.array(cols[5], pa.int64()),
+            "bytes": pa.array(cols[6], pa.int64()),
+            "content_xxh64_sum": pa.array(cols[7], pa.string()),
+            "run_id": pa.array(cols[8], pa.string()),
+        }
+    )
+    token = uuid.uuid4().hex
+    tmp = os.path.join(lin_dir, f"._tmp-lineage-{token}")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(lin_dir, f"part-lineage-{token}.parquet"))
 
 
 # -------------------------------------------------------------------- build
@@ -108,8 +391,7 @@ def build_index_store(
     salted shard shuffle for the block encode. One build = one commit =
     one durable, fully queryable snapshot.
 
-    Resume (same contract as segments.build_segments): table stages skip
-    on an existing _SUCCESS marker; the sharded postings resume at shard
+    Resume: table stages skip on an existing _SUCCESS marker; the sharded postings resume at shard
     granularity via lineage rows — shards with a lineage row are kept,
     partial shard dirs without one are wiped and re-encoded. Blocks are a
     pure function of the (field, term, doc)-sorted postings, so a resumed
@@ -172,8 +454,6 @@ def build_index_store(
         # SMALL batch commit every extra job is fixed latency on the
         # refresh path. Resumed (skipped) stages fall back to counting
         # the existing parquet.
-        from pyspark.sql import Observation
-
         # field lengths: the per-field rows of the same one-pass
         # tokenize, shuffle-free — cheaper than joining against the
         # postings shuffle. When the field list is known (tokenize
@@ -263,11 +543,7 @@ def build_index_store(
         # parallelism — then PINNED to disk so a resume on a different
         # session keeps the same shard mapping (pin_build_config
         # docstring). Explicit n_shards overrides.
-        from meresco_lucene_spark.index.segments import (
-            auto_n_shards,
-            pin_build_config,
-        )
-
+        #
         # salt_buckets=None (auto): a SMALL build (a batch generation
         # commit above all) disables hot-term salting outright
         # (salt_buckets=1): skew is bounded by the batch itself (occ_n
@@ -278,9 +554,10 @@ def build_index_store(
         # instead of behind it. An EXPLICIT salt_buckets is always
         # honored; the choice is pinned via pin_build_config like every
         # other sharding decision, so resume keeps the same mapping.
-        small_cap = int(os.environ.get("MLS_SMALL_BUILD_OCC", "2000000"))
         if salt_buckets is None:
-            salt_buckets = 1 if (occ_n is not None and occ_n <= small_cap) else 8
+            salt_buckets = (
+                1 if (occ_n is not None and occ_n <= SMALL_BUILD_OCC) else 8
+            )
 
         n_shards, salt_buckets = pin_build_config(
             out_dir, resume, n_shards, salt_buckets,
@@ -338,9 +615,8 @@ def build_index_store(
             # round-trip: the concurrent consumers may race to fill the
             # tiny cache, and a duplicated small agg is cheaper than a
             # whole sequential job on the refresh-latency path.
-            # Scale-adaptive on the observed occurrence count; override
-            # via MLS_SMALL_BUILD_OCC.
-            if occ_n is None or occ_n > small_cap:
+            # Scale-adaptive on the observed occurrence count.
+            if occ_n is None or occ_n > SMALL_BUILD_OCC:
                 tstats_cached.count()
             from concurrent.futures import ThreadPoolExecutor
 
@@ -397,7 +673,7 @@ def build_index_store(
                 ["field", "doc_id"],
             )
 
-        # ---- shard-level resume (lineage contract of segments.py) ----
+        # ---- shard-level resume (see the module docstring) ----
         done_shards: set[int] = set()
         if resume and os.path.exists(lin_dir):
             done_shards = {
@@ -516,11 +792,7 @@ def build_index_store(
 
         if remaining:
             # dispersed shard exchange + projection before it: see
-            # segments.shard_dispersion_partitions (guide §2.5/§2.3)
-            from meresco_lucene_spark.index.segments import (
-                shard_dispersion_partitions,
-            )
-
+            # shard_dispersion_partitions (guide §2.5/§2.3)
             encoded = (
                 # _dl fits 32 bits (one document's token count): int not
                 # long across the exchange (narrower types)
@@ -562,18 +834,8 @@ def build_index_store(
                     ),
                 ).withColumn("_nbytes", block_payload_bytes())
             # lineage rides the write as Observations for bounded shard
-            # counts (segments.lineage_observation — one job saved; the
-            # per-(field,term) run starts with exactly one block_id==0
-            # block, so the n_terms count carries over); big builds
+            # counts (lineage_observation — one job saved); big builds
             # keep the column-pruned read-back below.
-            from meresco_lucene_spark.index.segments import (
-                LINEAGE_HASH_MOD,
-                LINEAGE_OBS_MAX_SHARDS,
-                lineage_observation,
-                lineage_rows_from_observation,
-                write_lineage_rows,
-            )
-
             use_obs = lineage and len(remaining) <= LINEAGE_OBS_MAX_SHARDS
             if use_obs:
                 lin_obs, lin_aggs = lineage_observation(remaining)
@@ -750,6 +1012,8 @@ class PersistentIndex:
         # generation count on a MultiGenIndex open (guide §5: the driver
         # should do almost no work it can avoid)
         self._tables: dict[str, DataFrame] = {}
+        # (field, term) -> (df, base_shard, n_salts) or None: see _term_meta
+        self._meta_memo: dict[tuple[str, str], tuple | None] = {}
 
     def _table(self, name: str) -> DataFrame:
         if name not in self._tables:
@@ -825,72 +1089,74 @@ class PersistentIndex:
         pass
 
     # --------------------------------------------- WAND top-k fast path
-    # Block-max pruned top-k straight from the store's blocks (shared
-    # machinery with segments.py in index/wand.py) — the latency path for
-    # plain term/OR/AND top-k; rank- and score-identical to the exact
-    # executor evaluation (tested in test_store.py).
+    # Block-max pruned top-k straight from the store's blocks
+    # (index/wand.py) — the latency path for plain term/OR/AND top-k;
+    # rank- and score-identical to exhaustive scoring (tested in
+    # test_store.py and test_segments.py).
 
-    def _wand_params(self, fld: str):
-        from meresco_lucene_spark.index.wand import WandParams
+    def _term_meta(self, fld: str, terms: list[str]) -> dict[str, tuple]:
+        """term -> (df, base_shard, n_salts) for the terms of ``terms``
+        present in ``fld``, in query order, duplicates dropped.
 
-        st = self.field_stats(fld)
-        return WandParams(st.n_docs, st.avgdl, self.k1, self.b)
-
-    def _field_blocks(self, fld: str, terms: list[str]) -> DataFrame:
-        return self.blocks.filter(
-            (F.col("field") == fld) & F.col("term").isin(terms)
-        )
-
-    def _field_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
+        The handle's term dictionary (metadata only, the analog of
+        Lucene's in-heap term index on an open reader): one term_stats
+        collect per batch of (field, term) keys this handle has not
+        looked up yet, absent terms memoized as None. The handle is an
+        immutable snapshot, so the memo cannot go stale."""
+        terms = list(dict.fromkeys(terms))
+        missing = [t for t in terms if (fld, t) not in self._meta_memo]
+        if missing:
+            found = {
+                r["term"]: (int(r["df"]), int(r["base_shard"]), int(r["n_salts"]))
+                for r in self.term_stats.filter(
+                    (F.col("field") == fld) & F.col("term").isin(missing)
+                )
+                .select("term", "df", "base_shard", "n_salts")
+                .collect()
+            }
+            for t in missing:
+                self._meta_memo[(fld, t)] = found.get(t)
         return {
-            r["term"]: int(r["df"])
-            for r in self.term_stats.filter(
-                (F.col("field") == fld) & F.col("term").isin(terms)
-            )
-            .select("term", "df")
-            .collect()
+            t: self._meta_memo[(fld, t)]
+            for t in terms
+            if self._meta_memo[(fld, t)] is not None
         }
 
-    def term_topk(self, fld: str, term: str, k: int = 10) -> DataFrame:
-        from meresco_lucene_spark.index import wand
-
-        dfs = self._field_dfs(fld, [term])
-        return wand.term_topk(
-            self.spark,
-            self._field_blocks(fld, [term]),
-            dfs.get(term),
-            self._wand_params(fld),
-            k,
+    def _field_blocks(self, fld: str, meta: dict[str, tuple]) -> DataFrame:
+        """The blocks of the terms in ``meta``, pruned to their shards
+        (``(base_shard + s) % n_shards`` for s < n_salts) by the
+        ``shard`` partition column before any file is read."""
+        n = self.meta["n_shards"]
+        shards = sorted(
+            {(base + s) % n for _, base, salts in meta.values() for s in range(salts)}
         )
+        return self.blocks.filter(
+            F.col("shard").isin(shards)
+            & (F.col("field") == fld)
+            & F.col("term").isin(list(meta))
+        )
+
+    def _topk(self, fld: str, meta: dict[str, tuple], k: int, multi) -> DataFrame:
+        """Top-k over the blocks of ``meta``'s terms: ``multi``
+        (wand.or_topk or wand.and_topk) for two or more terms, else the
+        single-term path (empty when no term is present)."""
+        st = self.field_stats(fld)
+        params = wand.WandParams(st.n_docs, st.avgdl, self.k1, self.b)
+        blocks = self._field_blocks(fld, meta)
+        dfs = {t: m[0] for t, m in meta.items()}
+        if len(dfs) <= 1:
+            df_t = next(iter(dfs.values()), None)
+            return wand.term_topk(self.spark, blocks, df_t, params, k)
+        return multi(self.spark, blocks, dfs, params, k)
+
+    def term_topk(self, fld: str, term: str, k: int = 10) -> DataFrame:
+        return self.or_topk(fld, [term], k)
 
     def or_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        from meresco_lucene_spark.index import wand
-
-        terms = list(dict.fromkeys(terms))
-        dfs = self._field_dfs(fld, terms)
-        if len(dfs) == 1:
-            return self.term_topk(fld, next(iter(dfs)), k)
-        return wand.or_topk(
-            self.spark,
-            self._field_blocks(fld, list(dfs)),
-            dfs,
-            self._wand_params(fld),
-            k,
-        )
+        return self._topk(fld, self._term_meta(fld, terms), k, wand.or_topk)
 
     def and_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        from meresco_lucene_spark.index import wand
-
-        terms = list(dict.fromkeys(terms))
-        dfs = self._field_dfs(fld, terms)
-        if len(dfs) < len(terms):
+        meta = self._term_meta(fld, terms)
+        if len(meta) < len(set(terms)):  # a missing term: no conjunction
             return self.spark.createDataFrame([], "doc_id long, score double")
-        if len(dfs) == 1:
-            return self.term_topk(fld, next(iter(dfs)), k)
-        return wand.and_topk(
-            self.spark,
-            self._field_blocks(fld, list(dfs)),
-            dfs,
-            self._wand_params(fld),
-            k,
-        )
+        return self._topk(fld, meta, k, wand.and_topk)

@@ -1,10 +1,9 @@
-"""Block-max WAND top-k over posting blocks — shared by the
-single-field segment store (segments.py) and the multi-field persistent
-store (store.py).
+"""Block-max WAND top-k over the posting blocks of the persistent store
+(store.py; ``PersistentIndex.term_topk``/``or_topk``/``and_topk``).
 
 All functions operate on a BLOCK FRAME: a DataFrame with at least
 (term, shard, min_doc, max_doc, block_max_score, doc_ids, tfs, dls) —
-the block format of segments.py (native Parquet list columns), where
+the store's block format (native Parquet list columns), where
 each block carries its own dl list so scoring needs no side lookup (no
 docs-table broadcast at any scale). Exhaustive decode and scoring are
 JVM expressions (``posexplode`` + ``bm25_score_expr``); only the pruning
@@ -21,12 +20,12 @@ tests/test_store.py).
 
 Hot-term safety: the pool groups by (term, shard), NOT term alone. The
 build salts hot terms across ``salt_buckets`` consecutive shards
-(segments.py:21-27) precisely so no task swallows a hot posting list;
-pooling per (term, shard) preserves that: each task sees at most one
-salt-shard of one term, and the driver-side θ phase merges the per-shard
-pools (a doc's postings for a term live in exactly ONE salt shard —
-shard = base + doc_id % n_salts — so per-doc sums over pooled rows never
-double-count). Inside a pool, block score arrays are accumulated and
+(see the store.py docstring) precisely so no task swallows a hot
+posting list; pooling per (term, shard) preserves that: each task sees
+at most one salt-shard of one term, and the driver-side θ phase merges
+the per-shard pools (a doc's postings for a term live in exactly ONE
+salt shard — shard = base + doc_id % n_salts — so per-doc sums over
+pooled rows never double-count). Inside a pool, block score arrays are accumulated and
 compressed with a vectorized numpy lexsort top-k — no per-posting Python
 loop.
 """
@@ -57,11 +56,8 @@ CANDIDATE_BROADCAST_CAP = 2_000_000
 # over the cluster, while each extra job is a full driver round-trip.
 # Rank/score-identical by construction (exhaustive IS the oracle
 # definition); WAND pruning still kicks in for the hot posting lists
-# where it matters. Scale-adaptive (driven by df, not core count);
-# override via MLS_WAND_EXHAUSTIVE_CAP.
-import os as _os
-
-EXHAUSTIVE_CAP = int(_os.environ.get("MLS_WAND_EXHAUSTIVE_CAP", "2000000"))
+# where it matters. Scale-adaptive (driven by df, not core count).
+EXHAUSTIVE_CAP = 2_000_000
 
 
 @dataclass(frozen=True)

@@ -185,6 +185,35 @@ def test_store_wand_rank_identity(stores, force_wand, monkeypatch):
     assert got == _topk_of(mem, Q.term("lang", "py"), 5)
 
 
+def _jobs(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_wand_term_meta_memo(spark, stores):
+    """A handle looks each (field, term) up in term_stats once: a
+    repeated term_topk runs only its 2 top-k jobs, a batch of terms is
+    one collect of the missing ones, and a term absent from one field
+    is not taken as present because another field has it."""
+    _, disk = stores
+    ix = PersistentIndex(spark, disk.out_dir)  # fresh handle, empty memo
+    first = ix.term_topk("text", "spark", 4).collect()
+    j0 = _jobs(spark)
+    assert ix.term_topk("text", "spark", 4).collect() == first
+    assert _jobs(spark) - j0 == 2
+
+    j0 = _jobs(spark)
+    assert list(ix._term_meta("text", ["join", "spark", "join"])) == ["join", "spark"]
+    assert _jobs(spark) - j0 == 1  # only "join" was missing
+    assert list(ix._term_meta("lang", ["py", "spark"])) == ["py"]
+    assert _jobs(spark) - j0 == 2
+    j0 = _jobs(spark)
+    assert list(ix._term_meta("text", ["py", "spark", "join"])) == ["spark", "join"]
+    assert _jobs(spark) - j0 == 1  # ("text", "py") was not looked up yet
+    assert ix.term_topk("lang", "spark", 4).count() == 0
+    assert ix.and_topk("text", ["spark", "py"], 4).count() == 0
+    assert {r["doc_id"] for r in ix.term_topk("lang", "py", 5).collect()} == {0, 1, 4}
+
+
 def test_composed_queries_over_persistent_cores(spark, tmp_path):
     """Multi-core composed queries run unchanged over PersistentIndex
     cores reopened from disk (MultiLuceneTest.java testJoinQuery golden:
@@ -338,7 +367,7 @@ def test_pin_build_config_resume_keeps_shard_mapping(tmp_path):
     resume; a conflicting explicit n_shards is an error."""
     import pytest as _pytest
 
-    from meresco_lucene_spark.index.segments import pin_build_config
+    from meresco_lucene_spark.index.store import pin_build_config
 
     n, s = pin_build_config(str(tmp_path), False, None, 8, lambda: 7)
     assert (n, s) == (7, 7)

@@ -75,21 +75,25 @@ for name in NAMES:
     except Exception as exc:  # noqa: BLE001
         print("FAILED", name, exc, flush=True)
 
-# wand paths over a segment store (the bench's wand_* heads)
+# wand paths over a single-field store (the bench's wand_* heads)
 try:
     import tempfile
 
     from meresco_lucene_spark.corpus import synthesize_corpus
-    from meresco_lucene_spark.index.segments import build_segments
+    from meresco_lucene_spark.index.store import (
+        build_index_store,
+        open_persistent_index,
+    )
 
     corpus = synthesize_corpus(spark, 2000, seed=42).persist()
     corpus.count()
     d = tempfile.mkdtemp(prefix="mls_plan_seg_")
-    seg = build_segments(corpus, d, n_shards=8, salt_buckets=4)
+    build_index_store(corpus, d, text_cols=["content"], n_shards=8, salt_buckets=4)
     corpus.unpersist()
-    dump("wand_term_top10", seg.term_topk("import", 10))
-    dump("wand_or_top10", seg.or_topk(["import", "struct"], 10))
-    dump("wand_and_top10", seg.and_topk(["import", "return"], 10))
+    seg = open_persistent_index(spark, d)
+    dump("wand_term_top10", seg.term_topk("content", "import", 10))
+    dump("wand_or_top10", seg.or_topk("content", ["import", "struct"], 10))
+    dump("wand_and_top10", seg.and_topk("content", ["import", "return"], 10))
 except Exception as exc:  # noqa: BLE001
     print("FAILED wand", exc, flush=True)
 print("done", flush=True)

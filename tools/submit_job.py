@@ -4,10 +4,11 @@ The north rule ships the engine as ``spark-submit --py-files`` onto a
 multi-executor cluster. This script is that job: it imports the engine
 ONLY from the shipped zip (it lives outside the package on purpose —
 run it from any cwd), synthesizes the deterministic source-code corpus
-(BASELINE.json input_hint shape), builds the compressed term-sharded
-segment store, runs BM25 top-k queries over it, verifies the per-row
-sha256(content) invariant on a sample, and prints ONE JSON line so a
-scheduler (or tests/test_spark_submit.py) can assert on the result.
+(BASELINE.json input_hint shape), builds a single-field term-sharded
+persistent store of its content, reopens it, runs BM25 top-k queries
+over it, verifies the per-row sha256(content) invariant on a sample,
+and prints ONE JSON line so a scheduler (or tests/test_spark_submit.py)
+can assert on the result.
 
 Usage:
   spark-submit --master local[4] --py-files /tmp/mls.zip \
@@ -40,15 +41,21 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from meresco_lucene_spark.corpus import manifest_sha256, synthesize_corpus
-    from meresco_lucene_spark.index.segments import SegmentIndex, build_segments
+    from meresco_lucene_spark.index.store import (
+        build_index_store,
+        open_persistent_index,
+    )
 
     spark = SparkSession.builder.appName("mls_submit_job").getOrCreate()
     try:
         corpus = synthesize_corpus(spark, args.n, seed=args.seed)
 
         shutil.rmtree(args.out, ignore_errors=True)
-        build_segments(corpus, args.out, n_shards=args.n_shards, salt_buckets=4)
-        idx = SegmentIndex(spark, args.out)
+        build_index_store(
+            corpus, args.out, text_cols=["content"], n_shards=args.n_shards,
+            salt_buckets=4,
+        )
+        idx = open_persistent_index(spark, args.out)
 
         def topk(df):
             return [
@@ -58,9 +65,9 @@ def main() -> int:
                 ).collect()
             ]
 
-        term_top = topk(idx.term_topk(args.term, k=args.k))
+        term_top = topk(idx.term_topk("content", args.term, k=args.k))
         or_terms = [t for t in args.or_terms.split(",") if t]
-        or_top = topk(idx.or_topk(or_terms, k=args.k))
+        or_top = topk(idx.or_topk("content", or_terms, k=args.k))
 
         # Per-row content sha256 invariant (input_hint): Spark-side
         # hashes vs the driver-side manifest on an even-spread sample.
