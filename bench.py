@@ -351,7 +351,6 @@ def scaling_main(n_corpus: int, lo: int = 2, hi: int = 8, repeats: int = 3) -> d
         for i in range(len(runs[lo]))
     ]
     out = {
-        "target": "store",
         "n_corpus": n_corpus,
         f"docs_per_sec_local{lo}": thr_n,
         f"docs_per_sec_local{hi}": thr_4n,

@@ -162,18 +162,6 @@ def schema_json(schema: StructType) -> dict:
     return json.loads(schema.json())
 
 
-def block_payload_bytes():
-    """Lineage ``bytes`` of a block: its doc-id and tf payload (8 + 4
-    bytes per posting) before Parquet encoding."""
-    return (F.col("doc_count") * 12).cast("long")
-
-
-def read_table(spark: SparkSession, path: str, schema: dict) -> DataFrame:
-    """Read a store table with its recorded schema: no footer-inference
-    job on open."""
-    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
-
-
 # ------------------------------------------------------------- sharding
 
 # Whole-shard encode memory budget: each encode task materializes one
@@ -832,7 +820,11 @@ def build_index_store(
                         F.col("dls"),
                         F.col("positions"),
                     ),
-                ).withColumn("_nbytes", block_payload_bytes())
+                ).withColumn(
+                    # lineage bytes: the doc-id + tf payload (8 + 4 bytes
+                    # per posting) before Parquet encoding
+                    "_nbytes", (F.col("doc_count") * 12).cast("long")
+                )
             # lineage rides the write as Observations for bounded shard
             # counts (lineage_observation — one job saved); big builds
             # keep the column-pruned read-back below.
@@ -1012,16 +1004,14 @@ class PersistentIndex:
         # generation count on a MultiGenIndex open (guide §5: the driver
         # should do almost no work it can avoid)
         self._tables: dict[str, DataFrame] = {}
-        # (field, term) -> (df, base_shard, n_salts) or None: see _term_meta
-        self._meta_memo: dict[tuple[str, str], tuple | None] = {}
+        # (field, term) -> (df, base_shard, n_salts) of present terms: see _term_meta
+        self._meta_memo: dict[tuple[str, str], tuple] = {}
 
     def _table(self, name: str) -> DataFrame:
         if name not in self._tables:
-            self._tables[name] = read_table(
-                self.spark,
-                os.path.join(self.out_dir, name),
-                self.meta["schemas"][name],
-            )
+            self._tables[name] = self.spark.read.schema(
+                StructType.fromJson(self.meta["schemas"][name])
+            ).parquet(os.path.join(self.out_dir, name))
         return self._tables[name]
 
     @property
@@ -1101,25 +1091,25 @@ class PersistentIndex:
         The handle's term dictionary (metadata only, the analog of
         Lucene's in-heap term index on an open reader): one term_stats
         collect per batch of (field, term) keys this handle has not
-        looked up yet, absent terms memoized as None. The handle is an
+        found yet. Only present terms are kept, so the memo is bounded by
+        the index's term dictionary, not by the queries it is asked (an
+        absent term costs its small collect each time). The handle is an
         immutable snapshot, so the memo cannot go stale."""
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if (fld, t) not in self._meta_memo]
         if missing:
-            found = {
-                r["term"]: (int(r["df"]), int(r["base_shard"]), int(r["n_salts"]))
-                for r in self.term_stats.filter(
+            for r in (
+                self.term_stats.filter(
                     (F.col("field") == fld) & F.col("term").isin(missing)
                 )
                 .select("term", "df", "base_shard", "n_salts")
                 .collect()
-            }
-            for t in missing:
-                self._meta_memo[(fld, t)] = found.get(t)
+            ):
+                self._meta_memo[(fld, r["term"])] = (
+                    int(r["df"]), int(r["base_shard"]), int(r["n_salts"])
+                )
         return {
-            t: self._meta_memo[(fld, t)]
-            for t in terms
-            if self._meta_memo[(fld, t)] is not None
+            t: self._meta_memo[(fld, t)] for t in terms if (fld, t) in self._meta_memo
         }
 
     def _field_blocks(self, fld: str, meta: dict[str, tuple]) -> DataFrame:

@@ -190,10 +190,11 @@ def _jobs(spark):
 
 
 def test_wand_term_meta_memo(spark, stores):
-    """A handle looks each (field, term) up in term_stats once: a
-    repeated term_topk runs only its 2 top-k jobs, a batch of terms is
-    one collect of the missing ones, and a term absent from one field
-    is not taken as present because another field has it."""
+    """A handle looks each present (field, term) up in term_stats once:
+    a repeated term_topk runs only its 2 top-k jobs, a batch of terms is
+    one collect of the missing ones, a term absent from one field is not
+    taken as present because another field has it, and absent terms are
+    not kept (the memo is bounded by the term dictionary)."""
     _, disk = stores
     ix = PersistentIndex(spark, disk.out_dir)  # fresh handle, empty memo
     first = ix.term_topk("text", "spark", 4).collect()
@@ -209,6 +210,11 @@ def test_wand_term_meta_memo(spark, stores):
     j0 = _jobs(spark)
     assert list(ix._term_meta("text", ["py", "spark", "join"])) == ["spark", "join"]
     assert _jobs(spark) - j0 == 1  # ("text", "py") was not looked up yet
+    assert ("text", "py") not in ix._meta_memo
+    assert ("lang", "spark") not in ix._meta_memo
+    j0 = _jobs(spark)
+    assert list(ix._term_meta("text", ["py", "spark"])) == ["spark"]
+    assert _jobs(spark) - j0 == 1  # an absent term is looked up again
     assert ix.term_topk("lang", "spark", 4).count() == 0
     assert ix.and_topk("text", ["spark", "py"], 4).count() == 0
     assert {r["doc_id"] for r in ix.term_topk("lang", "py", 5).collect()} == {0, 1, 4}
@@ -268,11 +274,17 @@ def test_store_array_cols_and_term_frequency_similarity(spark, tmp_path):
 
 
 def _store_logical_content(spark, out_dir):
-    disk = PersistentIndex(spark, out_dir)
-    rows = disk.postings_for("text").collect()
-    return sorted(
-        (r["term"], r["doc_id"], r["tf"], tuple(r["positions"])) for r in rows
+    """Block-level content of the postings table: (shard, field, term,
+    block_id) with a digest of each block's doc_ids, tfs, dls and
+    positions, so a resume must rebuild the same blocks in the same
+    shards, not only the same decoded postings."""
+    digest = F.sha2(F.to_json(F.struct("doc_ids", "tfs", "dls", "positions")), 256)
+    rows = (
+        spark.read.parquet(f"{out_dir}/postings")
+        .select("shard", "field", "term", "block_id", digest.alias("h"))
+        .collect()
     )
+    return sorted(tuple(r) for r in rows)
 
 
 def test_store_crash_resume_identical(spark, tmp_path):
