@@ -384,6 +384,26 @@ class InvertedIndex:
     def term_stats_for(self, fld: str) -> DataFrame:
         return self.term_stats.filter(F.col("field") == fld).select("term", "df", "cf")
 
+    def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
+        """term -> df for the terms of ``terms`` present in ``fld``: one
+        small collect over the cached term_stats."""
+        rows = (
+            self.term_stats.filter(
+                (F.col("field") == fld) & F.col("term").isin(list(terms))
+            )
+            .select("term", "df")
+            .collect()
+        )
+        return {r["term"]: int(r["df"]) for r in rows}
+
+    def term_postings(
+        self, fld: str, terms: list[str], with_dl: bool = False
+    ) -> DataFrame:
+        """The postings of ``terms`` in ``fld``. The cached postings carry
+        no document lengths (no ``inline_dl``), so scorers never ask for
+        ``with_dl``; it is accepted for interface parity only."""
+        return self.postings_for(fld).filter(F.col("term").isin(list(terms)))
+
     def num_docs(self) -> int:
         """Reference Lucene.java:668-674 numDocs."""
         return self.n_docs

@@ -70,6 +70,7 @@ from meresco_lucene_spark.index.committer import COMMITTER
 from meresco_lucene_spark.index.store import (
     PersistentIndex,
     build_index_store,
+    decode_block_frame,
     open_persistent_index,
 )
 from meresco_lucene_spark.session import local_frame
@@ -625,11 +626,12 @@ class MultiGenIndex:
         return self._forward
 
     # --------------------------------------------------------- internals
-    def _union(self, frame_of) -> DataFrame:
-        """Union of per-generation frames, tagged with their gen."""
+    def _union(self, frame_of, gens=None) -> DataFrame:
+        """Union of per-generation frames, tagged with their gen; all
+        generations with data unless ``gens`` names some."""
         parts = [
-            frame_of(s).withColumn("_gen", F.lit(g))
-            for g, s in self.stores.items()
+            frame_of(self.stores[g]).withColumn("_gen", F.lit(g))
+            for g in (self.stores if gens is None else gens)
         ]
         out = parts[0]
         for p in parts[1:]:
@@ -676,9 +678,29 @@ class MultiGenIndex:
         # and stays one broadcast join, instead of being pushed into
         # every union branch with a tombstone broadcast each. The
         # per-branch _gen literal rides through the decode.
-        from meresco_lucene_spark.index.store import decode_block_frame
-
         u = self._union(lambda s: s.blocks.filter(F.col("field") == fld))
+        return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
+
+    def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
+        """term -> df for the terms of ``terms`` present in ``fld``: the
+        sum of the generations' term-dictionary entries, dead docs
+        included (Lucene docFreq counts deleted docs until merge)."""
+        out: dict[str, int] = {}
+        for s in self.stores.values():
+            for t, df in s.term_dfs(fld, terms).items():
+                out[t] = out.get(t, 0) + df
+        return out
+
+    def term_postings(
+        self, fld: str, terms: list[str], with_dl: bool = False
+    ) -> DataFrame:
+        """The live postings of ``terms`` in ``fld``: each generation's
+        blocks pruned to the terms' shards by its own term dictionary
+        (a generation holding none of them is left out of the union),
+        decoded once above the union like postings_for."""
+        metas = {s: s._term_meta(fld, terms) for s in self.stores.values()}
+        gens = [g for g, s in self.stores.items() if metas[s]] or [min(self.stores)]
+        u = self._union(lambda s: s._field_blocks(fld, metas[s]), gens)
         return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
 
     def lengths_for(self, fld: str) -> DataFrame:

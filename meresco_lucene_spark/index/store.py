@@ -17,8 +17,9 @@ Layout under ``out_dir``:
                    dls array<int>, positions array<array<int>>)
   lineage/        (shard, n_terms, term_min, term_max, n_blocks,
                    n_postings, bytes, content_xxh64_sum, run_id)
-  meta.json       {n_docs, field_stats, facet_fields, k1, b, similarity,
-                   quantized, has_positions, n_shards, ..., schemas}
+  meta.json       {snapshot, n_docs, field_stats, facet_fields, k1, b,
+                   similarity, quantized, has_positions, n_shards, ...,
+                   schemas}
 
 Block format: up to ``block_size`` postings of one (field, term) per
 row, as parallel Parquet list columns, plus one sorted position list
@@ -34,8 +35,9 @@ whose df reaches ``hot_df_fraction * N`` is *salted*: its postings
 spread over ``salt_buckets`` consecutive shards (``(base_shard + doc_id
 % n_salts) % n_shards``), so no single encode task or WAND pool
 swallows a whole hot posting list. term_stats records base_shard and
-n_salts, so the WAND reader prunes to a term's shards without
-recomputing the hash.
+n_salts (rows sorted by field and term within each file), so every
+exact-term read — scoring and WAND alike — looks its terms up there and
+scans only their shards.
 
 Resume: each fully-written shard appends a lineage row whose
 content_xxh64_sum covers the shard's block content. On resume, shards
@@ -51,9 +53,10 @@ ids, then ``tfs[i]``, ``dls[i]``, ``positions[i]``). Catalyst pushes
 filters on ``term``/``field`` below it into the parquet scan
 (PushedFilters on term — verified in tests) and prunes the columns a
 query never reads: a term or boolean query does not scan ``positions``.
-A TermQuery therefore reads only the blocks of its term (row-group
-pruned; blocks are term-sorted within each shard file) — while
-query/executor.py runs completely unchanged on top.
+``term_postings(field, terms)`` adds the terms' shards as a partition
+filter, and ``term_dfs(field, terms)`` serves their df from the
+handle's term dictionary without a Spark job, so a TermQuery reads only
+its term's shard files and scores with a literal df.
 """
 
 from __future__ import annotations
@@ -73,6 +76,7 @@ from pyspark.sql.types import StructType
 
 from meresco_lucene_spark.index import wand
 from meresco_lucene_spark.index.builder import FieldStats
+from meresco_lucene_spark.index.committer import COMMITTER
 from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, bm25_score_numpy
 
 STORE_POSTINGS_SCHEMA = (
@@ -609,10 +613,12 @@ def build_index_store(
             from concurrent.futures import ThreadPoolExecutor
 
             tstats_pool = ThreadPoolExecutor(max_workers=1)
+            # sorted by (field, term) within each file, so a term
+            # lookup's predicate skips all but one row group per file
             tstats_writer = tstats_pool.submit(
-                lambda: tstats_cached.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "term_stats")
-                )
+                lambda: tstats_cached.sortWithinPartitions("field", "term")
+                .write.mode("overwrite")
+                .parquet(os.path.join(out_dir, "term_stats"))
             )
             tstats_src = tstats_cached
 
@@ -872,6 +878,9 @@ def build_index_store(
             lineage_df.write.mode("append").parquet(lin_dir)
 
         meta = {
+            # identifies this snapshot: open_persistent_index keys its
+            # handle cache on it, so a rebuild at the same path is a miss
+            "snapshot": uuid.uuid4().hex,
             "n_docs": n_docs,
             "field_stats": field_stats_meta,
             "facet_fields": dict(facet_fields or {}),
@@ -893,8 +902,7 @@ def build_index_store(
         }
         if tstats_writer is not None:
             tstats_writer.result()  # re-raise a failed term_stats write
-        with open(os.path.join(out_dir, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        COMMITTER.publish_file(os.path.join(out_dir, "meta.json"), json.dumps(meta))
         ok = True
     finally:
         if tstats_pool is not None:
@@ -946,12 +954,14 @@ def decode_block_frame(
 
 # Session-scoped HANDLE cache (not a result cache): opening a store costs
 # a parquet directory listing for every table the query touches, and
-# callers like the per-query entry functions
-# and the multi-generation union reader re-open the same immutable store
-# once per query (× generations). The key includes the meta.json inode +
-# mtime, so a store REBUILT at the same path (meta.json rewritten) misses
-# the cache and re-lists — data itself is still read from parquet on
-# every action (guide §5: the driver should do almost no avoidable work).
+# callers like the per-query entry functions and the multi-generation
+# union reader re-open the same immutable store once per query
+# (× generations). A handle also holds the store's term dictionary memo,
+# the df source of every query, so it must never outlive its snapshot:
+# the key is the Spark application, the path and the ``snapshot`` id
+# every build writes into meta.json. A store REBUILT at the same path
+# gets a new id and misses the cache, however its file times fall; a
+# store without the id (an older build) is opened afresh each time.
 _PINDEX_CACHE: dict[tuple, "PersistentIndex"] = {}
 _PINDEX_CACHE_CAP = 64
 
@@ -959,32 +969,39 @@ _PINDEX_CACHE_CAP = 64
 def open_persistent_index(spark: SparkSession, out_dir: str) -> "PersistentIndex":
     out_dir = os.path.abspath(out_dir)
     try:
-        st = os.stat(os.path.join(out_dir, "meta.json"))
+        with open(os.path.join(out_dir, "meta.json")) as f:
+            meta = json.load(f)
     except OSError:
         # missing/unreadable meta: let the constructor raise its usual error
         return PersistentIndex(spark, out_dir)
-    key = (id(spark), out_dir, st.st_ino, st.st_mtime_ns)
+    if "snapshot" not in meta:
+        return PersistentIndex(spark, out_dir, meta)
+    key = (spark.sparkContext.applicationId, out_dir, meta["snapshot"])
     idx = _PINDEX_CACHE.get(key)
     if idx is None:
         while len(_PINDEX_CACHE) >= _PINDEX_CACHE_CAP:
             _PINDEX_CACHE.pop(next(iter(_PINDEX_CACHE)))
-        _PINDEX_CACHE[key] = idx = PersistentIndex(spark, out_dir)
+        _PINDEX_CACHE[key] = idx = PersistentIndex(spark, out_dir, meta)
     return idx
 
 
 class PersistentIndex:
     """Disk-backed index with the exact interface of InvertedIndex
-    (postings_for / lengths_for / term_stats_for / field_stats / forward
-    / facet_fields / similarity / k1 / b / quantized / has_positions),
+    (postings_for / term_postings / term_dfs / lengths_for /
+    term_stats_for / field_stats / forward / facet_fields / similarity /
+    k1 / b / quantized / has_positions),
     so every operator in query/executor.py, compose/ and suggest runs
     unchanged over a store LOADED FROM DISK — no re-tokenization, ever
     (opening touches only parquet + meta.json; asserted in tests)."""
 
-    def __init__(self, spark: SparkSession, out_dir: str):
+    def __init__(self, spark: SparkSession, out_dir: str, meta: dict | None = None):
+        """``meta``: the store's parsed meta.json, when the caller has
+        read it already."""
         self.spark = spark
         self.out_dir = out_dir
-        with open(os.path.join(out_dir, "meta.json")) as f:
-            meta = json.load(f)
+        if meta is None:
+            with open(os.path.join(out_dir, "meta.json")) as f:
+                meta = json.load(f)
         self.meta = meta
         self.id_col = "doc_id"
         self.n_docs = meta["n_docs"]
@@ -1078,39 +1095,53 @@ class PersistentIndex:
     def unpersist(self) -> None:  # interface parity; nothing cached
         pass
 
-    # --------------------------------------------- WAND top-k fast path
-    # Block-max pruned top-k straight from the store's blocks
-    # (index/wand.py) — the latency path for plain term/OR/AND top-k;
-    # rank- and score-identical to exhaustive scoring (tested in
-    # test_store.py and test_segments.py).
+    # ------------------------------------------------- term dictionary
+    # Every exact-term read goes through the handle's term dictionary:
+    # the scorers of query/executor.py take df from term_dfs as a literal
+    # and read term_postings, and the WAND top-k below prunes the same
+    # way (index/wand.py; rank- and score-identical to exhaustive scoring,
+    # tested in test_store.py and test_segments.py).
 
     def _term_meta(self, fld: str, terms: list[str]) -> dict[str, tuple]:
         """term -> (df, base_shard, n_salts) for the terms of ``terms``
         present in ``fld``, in query order, duplicates dropped.
 
         The handle's term dictionary (metadata only, the analog of
-        Lucene's in-heap term index on an open reader): one term_stats
-        collect per batch of (field, term) keys this handle has not
-        found yet. Only present terms are kept, so the memo is bounded by
-        the index's term dictionary, not by the queries it is asked (an
-        absent term costs its small collect each time). The handle is an
+        Lucene's in-heap term index on an open reader): the (field, term)
+        keys this handle has not found yet are read from term_stats on
+        the driver with pyarrow, filtered by field and term, so a lookup
+        starts no Spark job. Only present terms are kept, so the memo is
+        bounded by the index's term dictionary, not by the queries it is
+        asked (an absent term is read again each time). The handle is an
         immutable snapshot, so the memo cannot go stale."""
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if (fld, t) not in self._meta_memo]
         if missing:
-            for r in (
-                self.term_stats.filter(
-                    (F.col("field") == fld) & F.col("term").isin(missing)
-                )
-                .select("term", "df", "base_shard", "n_salts")
-                .collect()
+            found = pq.read_table(
+                os.path.join(self.out_dir, "term_stats"),
+                columns=["term", "df", "base_shard", "n_salts"],
+                filters=[("field", "==", fld), ("term", "in", missing)],
+            ).to_pydict()
+            for t, df, base, salts in zip(
+                found["term"], found["df"], found["base_shard"], found["n_salts"]
             ):
-                self._meta_memo[(fld, r["term"])] = (
-                    int(r["df"]), int(r["base_shard"]), int(r["n_salts"])
-                )
+                self._meta_memo[(fld, t)] = (int(df), int(base), int(salts))
         return {
             t: self._meta_memo[(fld, t)] for t in terms if (fld, t) in self._meta_memo
         }
+
+    def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
+        """term -> df for the terms of ``terms`` present in ``fld``."""
+        return {t: m[0] for t, m in self._term_meta(fld, terms).items()}
+
+    def term_postings(
+        self, fld: str, terms: list[str], with_dl: bool = False
+    ) -> DataFrame:
+        """The decoded postings of ``terms`` in ``fld`` (see postings_for),
+        read from those terms' shards only."""
+        return decode_block_frame(
+            self._field_blocks(fld, self._term_meta(fld, terms)), fld, with_dl
+        )
 
     def _field_blocks(self, fld: str, meta: dict[str, tuple]) -> DataFrame:
         """The blocks of the terms in ``meta``, pruned to their shards

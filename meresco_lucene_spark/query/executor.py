@@ -5,7 +5,9 @@ Reproduces the reference's single-core query surface
 excludeQueries + facets + sortKeys + start/stop pagination + dedup —
 each recast as DataFrame ops:
 
-  TermQuery     -> postings filter + stats joins + BM25 column expr
+  TermQuery     -> the term's postings (index.term_postings) scored by a
+                   BM25 column expr with df a literal from the index's
+                   term dictionary (index.term_dfs)
   BooleanQuery  -> union of scoring-clause frames + groupBy sum(score)
                    with a matched-MUST count gate; FILTER -> left_semi;
                    MUST_NOT -> left_anti              (Q3 in SURVEY §2.2)
@@ -164,46 +166,30 @@ def _term_hits(
 ) -> DataFrame:
     st = index.field_stats(fld)
     sim = similarity or getattr(index, "similarity", "BM25")
-    needs_dl = sim != "TermFrequency" and not st.omit_norms
-    inline = needs_dl and _use_inline_dl(index, quantized)
-    if inline:
-        p = (
-            index.postings_for(fld, with_dl=True)
-            .filter(F.col("term") == value)
-            .select("doc_id", "tf", "_bdl")
-        )
-    else:
-        p = (
-            index.postings_for(fld)
-            .filter(F.col("term") == value)
-            .select("doc_id", "tf")
-        )
     if sim == "TermFrequency":
         # reference search/TermFrequencySimilarity.java:40-58
+        p = index.term_postings(fld, [value])
         return p.select("doc_id", term_frequency_score_expr(F.col("tf"), boost).alias("score"))
-    tstats = (
-        index.term_stats_for(fld).filter(F.col("term") == value).select(
-            F.col("df").alias("_df")
-        )
-    )
-    scored = p.crossJoin(F.broadcast(tstats))
+    inline = not st.omit_norms and _use_inline_dl(index, quantized)
+    dfs = index.term_dfs(fld, [value])
+    p = index.term_postings(fld, list(dfs), with_dl=inline)
+    df = F.lit(dfs.get(value, 0))
     if st.omit_norms:
         score = (
-            idf_expr(F.col("_df"), st.n_docs)
+            idf_expr(df, st.n_docs)
             * (F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1)))
             * F.lit(boost)
         )
-        return scored.select("doc_id", score.alias("score"))
+        return p.select("doc_id", score.alias("score"))
     if inline:
         dl = F.col("_bdl")
     else:
-        lengths = index.lengths_for(fld)
+        p = p.join(index.lengths_for(fld), "doc_id")
         dl = F.col("norm_dl") if quantized else F.col("dl")
-        scored = scored.join(lengths, "doc_id")
     score = bm25_score_expr(
-        F.col("tf"), F.col("_df"), dl, st.n_docs, st.avgdl, index.k1, index.b, boost
+        F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b, boost
     )
-    return scored.select("doc_id", score.alias("score"))
+    return p.select("doc_id", score.alias("score"))
 
 
 def _multi_term_hits(
@@ -250,16 +236,17 @@ def _fused_term_hits(
     quantized: bool,
 ) -> DataFrame:
     """Several TermQuery scoring clauses on ONE field in ONE postings
-    scan (guide §6.2 scan once / §4.1): ``term isin (...)`` replaces one
-    filtered scan + decode branch per clause, per-term df comes from a
-    broadcast term_stats join, and the per-clause (boost, MUST) weights
-    fold into per-term CASE expressions. Row-for-row identical to the
-    per-clause union it replaces: a doc matching term t contributed one
-    row per clause of t with score s_t*boost_c and is_must flag — here
-    the same addends arrive pre-summed per term (s_t*Σboost_c, count of
-    MUST clauses), which the downstream groupBy aggregates identically.
-    With all boosts 1.0 (the common case) the score expression is
-    EXACTLY the single-clause expression."""
+    scan (guide §6.2 scan once / §4.1): one ``term_postings`` read
+    replaces one filtered scan + decode branch per clause, per-term df
+    comes from the index's term dictionary as a CASE over literals, and
+    the per-clause (boost, MUST) weights fold into per-term CASE
+    expressions. Row-for-row identical to the per-clause union it
+    replaces: a doc matching term t contributed one row per clause of t
+    with score s_t*boost_c and is_must flag — here the same addends
+    arrive pre-summed per term (s_t*Σboost_c, count of MUST clauses),
+    which the downstream groupBy aggregates identically. With all boosts
+    1.0 (the common case) the score expression is EXACTLY the
+    single-clause expression."""
     st = index.field_stats(fld)
     sim = getattr(index, "similarity", "BM25")
     # per distinct term: summed boost of its clauses + its MUST count
@@ -268,7 +255,6 @@ def _fused_term_hits(
     for c, is_must in clauses:
         w_boost[c.value] = w_boost.get(c.value, 0.0) + c.boost
         w_must[c.value] = w_must.get(c.value, 0) + (1 if is_must else 0)
-    values = list(w_boost)
 
     def _per_term(mapping: dict, cast: str) -> Column:
         expr = None
@@ -282,23 +268,17 @@ def _fused_term_hits(
 
     is_must_c = _per_term(w_must, "int").alias("is_must")
     uniform_boost = set(w_boost.values()) == {1.0}
-    needs_dl = sim != "TermFrequency" and not st.omit_norms
-    inline = needs_dl and _use_inline_dl(index, quantized)
-    cols = ["term", "doc_id", "tf"] + (["_bdl"] if inline else [])
-    p = (
-        index.postings_for(fld, with_dl=True)
-        if inline
-        else index.postings_for(fld)
-    ).filter(F.col("term").isin(values)).select(*cols)
     if sim == "TermFrequency":
+        p = index.term_postings(fld, list(w_boost))
         score = term_frequency_score_expr(F.col("tf"), 1.0)
     else:
-        tstats = index.term_stats_for(fld).filter(
-            F.col("term").isin(values)
-        ).select("term", F.col("df").alias("_df"))
-        p = p.join(F.broadcast(tstats), "term")
+        inline = not st.omit_norms and _use_inline_dl(index, quantized)
+        dfs = index.term_dfs(fld, list(w_boost))
+        p = index.term_postings(fld, list(dfs), with_dl=inline)
+        # no present term: no postings, and CASE needs a branch
+        df = _per_term(dfs, "long") if dfs else F.lit(0)
         if st.omit_norms:
-            score = idf_expr(F.col("_df"), st.n_docs) * (
+            score = idf_expr(df, st.n_docs) * (
                 F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1))
             )
         else:
@@ -308,8 +288,7 @@ def _fused_term_hits(
                 p = p.join(index.lengths_for(fld), "doc_id")
                 dl = F.col("norm_dl") if quantized else F.col("dl")
             score = bm25_score_expr(
-                F.col("tf"), F.col("_df"), dl, st.n_docs, st.avgdl,
-                index.k1, index.b,
+                F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b,
             )
     if not uniform_boost:
         score = score * _per_term(w_boost, "double")
@@ -395,31 +374,23 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     if len(terms) == 1:
         return _term_hits(index, q.field, terms[0], q.boost, quantized)
     st = index.field_stats(q.field)
+    dfs = index.term_dfs(q.field, terms)
 
     inline = _use_inline_dl(index, quantized)
     if getattr(index, "inline_dl", False):
-        # Disk stores decode blocks through a pandas UDF, so each
-        # per-term branch costs a scan + Python decode stage: gather
-        # all phrase terms in ONE scan instead (guide §6.2 scan once /
-        # §4.1) and pick the per-term position arrays by a doc_id
-        # aggregation with FIRST(CASE) — a doc has at most one posting
-        # per term, so the picks are deterministic and the doc set
-        # (all terms present) matches the inner-join chain this
-        # replaces row for row. Besides halving the decode branches,
-        # this removes a size-estimated broadcast join whose build
-        # side sat above a pandas UDF (Catalyst cannot estimate that
-        # side — a mid-frequency term there was a broadcast-OOM hazard
-        # at scale); the aggregation is shuffle-bounded and
-        # AQE-coalesced. The session-cached DataFrame index keeps the
-        # broadcast-join shape: its postings are already decoded in
-        # memory, so there is no branch cost to save and the
-        # aggregation would only add an exchange (measured r6).
+        # Stores gather all phrase terms in ONE scan of their shards and
+        # pick the per-term position arrays by a doc_id aggregation with
+        # FIRST(CASE) — a doc has at most one posting per term, so the
+        # picks are deterministic and the doc set (all terms present)
+        # matches an inner-join chain row for row. The aggregation is
+        # shuffle-bounded and AQE-coalesced, where a join chain would
+        # size-estimate a broadcast over each decoded term (a
+        # mid-frequency term there is a broadcast-OOM hazard at scale).
+        # The session-cached DataFrame index keeps the join chain: its
+        # postings are already decoded in memory, so the aggregation
+        # would only add an exchange (measured r6).
         distinct_terms = list(dict.fromkeys(terms))
-        p = (
-            index.postings_for(q.field, with_dl=True)
-            if inline
-            else index.postings_for(q.field)
-        ).filter(F.col("term").isin(distinct_terms))
+        p = index.term_postings(q.field, list(dfs), with_dl=inline)
         aggs = [
             F.first(
                 F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
@@ -449,19 +420,9 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     else:
         joined = None
         for i, t in enumerate(terms):
-            cols = ["doc_id", F.col("positions").alias(f"_p{i}")]
-            if inline and i == 0:
-                p = (
-                    index.postings_for(q.field, with_dl=True)
-                    .filter(F.col("term") == t)
-                    .select(*cols, "_bdl")
-                )
-            else:
-                p = (
-                    index.postings_for(q.field)
-                    .filter(F.col("term") == t)
-                    .select(*cols)
-                )
+            p = index.term_postings(q.field, [t]).select(
+                "doc_id", F.col("positions").alias(f"_p{i}")
+            )
             joined = p if joined is None else joined.join(p, "doc_id")
 
     conds = " AND ".join(
@@ -470,34 +431,20 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     phrase_freq = F.expr(f"size(filter(_p0, x -> {conds}))")
     cand = joined.withColumn("_pf", phrase_freq).filter(F.col("_pf") > 0)
 
-    # Sum of idfs of the phrase terms (duplicates counted per occurrence,
-    # as Lucene's PhraseWeight does).
-    tstats = index.term_stats_for(q.field).filter(F.col("term").isin(terms))
-    per_term_idf = tstats.select(
-        F.col("term"), idf_expr(F.col("df"), st.n_docs).alias("_idf")
-    )
-    import pandas as pd  # driver-side tiny frame
-
-    term_counts = {}
+    # Sum of the phrase terms' idfs in query order, duplicates counted
+    # per occurrence, as Lucene's PhraseWeight does: a constant
+    # expression over the df literals (an absent term means no match).
+    idf_sum = None
     for t in terms:
-        term_counts[t] = term_counts.get(t, 0) + 1
-    weights = index.spark.createDataFrame(
-        pd.DataFrame({"term": list(term_counts), "_w": list(term_counts.values())})
-    )
-    idf_sum = (
-        per_term_idf.join(F.broadcast(weights), "term")
-        .agg(F.sum(F.col("_idf") * F.col("_w")).alias("_idf_sum"))
-    )
-
-    cand = cand.crossJoin(F.broadcast(idf_sum))
+        idf = idf_expr(F.lit(dfs.get(t, 0)), st.n_docs)
+        idf_sum = idf if idf_sum is None else idf_sum + idf
     if inline:
         dl = F.col("_bdl")
     else:
-        lengths = index.lengths_for(q.field)
+        cand = cand.join(index.lengths_for(q.field), "doc_id")
         dl = F.col("norm_dl") if quantized else F.col("dl")
-        cand = cand.join(lengths, "doc_id")
     score = (
-        F.col("_idf_sum")
+        idf_sum
         * tf_norm_expr(F.col("_pf"), dl, st.avgdl, index.k1, index.b)
         * F.lit(q.boost)
     )

@@ -207,28 +207,37 @@ def test_facet_path_deeper_than_dim_raises(ix):
 
 
 # Spark jobs of one search() on the one-generation store, measured after
-# the change (4 cores, 4 shuffle partitions; before it: 5, 13 and 11).
+# the change (4 cores, 4 shuffle partitions; before it: 2, 7 and 5 for
+# term, facets and dedup, 3 for a fused boolean and 5 for a phrase).
 # Under adaptive execution every shuffle stage and broadcast is a job of
-# its own: a term query is the term-stats broadcast plus the observed
-# page collect; the facet action (semi-join, groupBy, per-dim top-n
-# window) and dedup's window add their shuffle stages.
-TERM_JOBS = 2
+# its own: a term query is the observed page collect alone (df is a
+# literal from the store's term dictionary); a fused AND/OR and a phrase
+# add the doc_id groupBy's shuffle stage; the facet action (semi-join,
+# groupBy, per-dim top-n window) and dedup's window add their shuffle
+# stages.
+TERM_JOBS = 1
+FUSED_BOOL_JOBS = 2
+PHRASE_JOBS = 2
 FACET_2DIM_JOBS = 7
 DEDUP_JOBS = 5
 
 
 def test_search_job_counts(spark, indexes):
     ix = indexes["store"]
-    q = Q.term("text", "spark")
+    term = Q.term("text", "spark")
     calls = {
-        "term": ({}, TERM_JOBS),
+        "term": (term, {}, TERM_JOBS),
+        "and": (Q.and_(term, Q.term("text", "join")), {}, FUSED_BOOL_JOBS),
+        "or": (Q.or_(term, Q.term("text", "scan")), {}, FUSED_BOOL_JOBS),
+        "phrase": (Q.phrase("text", "spark", "join"), {}, PHRASE_JOBS),
         "facet_2dim": (
+            term,
             {"facets": [{"fieldname": "lang"}, {"fieldname": "repo"}]},
             FACET_2DIM_JOBS,
         ),
-        "dedup": ({"dedup_field": "repo"}, DEDUP_JOBS),
+        "dedup": (term, {"dedup_field": "repo"}, DEDUP_JOBS),
     }
-    for name, (kw, bound) in calls.items():
+    for name, (q, kw, bound) in calls.items():
         search(ix, q, **kw)  # warm: per-reader term metadata memo
         j0 = _jobs(spark)
         search(ix, q, **kw)

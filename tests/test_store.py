@@ -189,32 +189,47 @@ def _jobs(spark):
     return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
-def test_wand_term_meta_memo(spark, stores):
-    """A handle looks each present (field, term) up in term_stats once:
-    a repeated term_topk runs only its 2 top-k jobs, a batch of terms is
-    one collect of the missing ones, a term absent from one field is not
-    taken as present because another field has it, and absent terms are
-    not kept (the memo is bounded by the term dictionary)."""
+def test_wand_term_meta_memo(spark, stores, monkeypatch):
+    """A handle looks each present (field, term) up in term_stats once,
+    on the driver without a Spark job: a repeated term_topk runs only
+    its 2 top-k jobs, a batch of terms is one read of the missing ones, a
+    term absent from one field is not taken as present because another
+    field has it, and absent terms are not kept (the memo is bounded by
+    the term dictionary)."""
     _, disk = stores
+    reads = []  # the (field, terms) of each term_stats read
+    read_table = store_mod.pq.read_table
+
+    def recording_read(path, **kw):
+        (_, _, fld), (_, _, terms) = kw["filters"]
+        reads.append((fld, list(terms)))
+        return read_table(path, **kw)
+
+    monkeypatch.setattr(store_mod.pq, "read_table", recording_read)
     ix = PersistentIndex(spark, disk.out_dir)  # fresh handle, empty memo
     first = ix.term_topk("text", "spark", 4).collect()
     j0 = _jobs(spark)
     assert ix.term_topk("text", "spark", 4).collect() == first
     assert _jobs(spark) - j0 == 2
+    assert reads == [("text", ["spark"])]
 
     j0 = _jobs(spark)
     assert list(ix._term_meta("text", ["join", "spark", "join"])) == ["join", "spark"]
-    assert _jobs(spark) - j0 == 1  # only "join" was missing
+    assert _jobs(spark) - j0 == 0
+    assert reads[1:] == [("text", ["join"])]  # only "join" was missing
     assert list(ix._term_meta("lang", ["py", "spark"])) == ["py"]
-    assert _jobs(spark) - j0 == 2
+    assert _jobs(spark) - j0 == 0
+    assert reads[2:] == [("lang", ["py", "spark"])]
     j0 = _jobs(spark)
     assert list(ix._term_meta("text", ["py", "spark", "join"])) == ["spark", "join"]
-    assert _jobs(spark) - j0 == 1  # ("text", "py") was not looked up yet
+    assert _jobs(spark) - j0 == 0
+    assert reads[3:] == [("text", ["py"])]  # ("text", "py") was not looked up yet
     assert ("text", "py") not in ix._meta_memo
     assert ("lang", "spark") not in ix._meta_memo
     j0 = _jobs(spark)
     assert list(ix._term_meta("text", ["py", "spark"])) == ["spark"]
-    assert _jobs(spark) - j0 == 1  # an absent term is looked up again
+    assert _jobs(spark) - j0 == 0
+    assert reads[4:] == [("text", ["py"])]  # an absent term is looked up again
     assert ix.term_topk("lang", "spark", 4).count() == 0
     assert ix.and_topk("text", ["spark", "py"], 4).count() == 0
     assert {r["doc_id"] for r in ix.term_topk("lang", "py", 5).collect()} == {0, 1, 4}
