@@ -698,9 +698,8 @@ class MultiGenIndex:
         blocks pruned to the terms' shards by its own term dictionary
         (a generation holding none of them is left out of the union),
         decoded once above the union like postings_for."""
-        metas = {s: s._term_meta(fld, terms) for s in self.stores.values()}
-        gens = [g for g, s in self.stores.items() if metas[s]] or [min(self.stores)]
-        u = self._union(lambda s: s._field_blocks(fld, metas[s]), gens)
+        gens = [g for g, s in self.stores.items() if s.term_dfs(fld, terms)]
+        u = self._union(lambda s: s.term_blocks(fld, terms), gens or [min(self.stores)])
         return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
 
     def lengths_for(self, fld: str) -> DataFrame:

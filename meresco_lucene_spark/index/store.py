@@ -35,9 +35,8 @@ whose df reaches ``hot_df_fraction * N`` is *salted*: its postings
 spread over ``salt_buckets`` consecutive shards (``(base_shard + doc_id
 % n_salts) % n_shards``), so no single encode task or WAND pool
 swallows a whole hot posting list. term_stats records base_shard and
-n_salts (rows sorted by field and term within each file), so every
-exact-term read — scoring and WAND alike — looks its terms up there and
-scans only their shards.
+n_salts, so every exact-term read — scoring and WAND alike — looks its
+terms up there and scans only their shards.
 
 Resume: each fully-written shard appends a lineage row whose
 content_xxh64_sum covers the shard's block content. On resume, shards
@@ -613,12 +612,10 @@ def build_index_store(
             from concurrent.futures import ThreadPoolExecutor
 
             tstats_pool = ThreadPoolExecutor(max_workers=1)
-            # sorted by (field, term) within each file, so a term
-            # lookup's predicate skips all but one row group per file
             tstats_writer = tstats_pool.submit(
-                lambda: tstats_cached.sortWithinPartitions("field", "term")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, "term_stats"))
+                lambda: tstats_cached.write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "term_stats")
+                )
             )
             tstats_src = tstats_cached
 
@@ -1139,14 +1136,14 @@ class PersistentIndex:
     ) -> DataFrame:
         """The decoded postings of ``terms`` in ``fld`` (see postings_for),
         read from those terms' shards only."""
-        return decode_block_frame(
-            self._field_blocks(fld, self._term_meta(fld, terms)), fld, with_dl
-        )
+        return decode_block_frame(self.term_blocks(fld, terms), fld, with_dl)
 
-    def _field_blocks(self, fld: str, meta: dict[str, tuple]) -> DataFrame:
-        """The blocks of the terms in ``meta``, pruned to their shards
+    def term_blocks(self, fld: str, terms: list[str]) -> DataFrame:
+        """The raw blocks of ``terms`` in ``fld``, pruned to their shards
         (``(base_shard + s) % n_shards`` for s < n_salts) by the
-        ``shard`` partition column before any file is read."""
+        ``shard`` partition column before any file is read; empty when
+        none of the terms is present."""
+        meta = self._term_meta(fld, terms)
         n = self.meta["n_shards"]
         shards = sorted(
             {(base + s) % n for _, base, salts in meta.values() for s in range(salts)}
@@ -1157,14 +1154,14 @@ class PersistentIndex:
             & F.col("term").isin(list(meta))
         )
 
-    def _topk(self, fld: str, meta: dict[str, tuple], k: int, multi) -> DataFrame:
-        """Top-k over the blocks of ``meta``'s terms: ``multi``
+    def _topk(self, fld: str, terms: list[str], k: int, multi) -> DataFrame:
+        """Top-k over the blocks of the present ``terms``: ``multi``
         (wand.or_topk or wand.and_topk) for two or more terms, else the
         single-term path (empty when no term is present)."""
         st = self.field_stats(fld)
         params = wand.WandParams(st.n_docs, st.avgdl, self.k1, self.b)
-        blocks = self._field_blocks(fld, meta)
-        dfs = {t: m[0] for t, m in meta.items()}
+        blocks = self.term_blocks(fld, terms)
+        dfs = self.term_dfs(fld, terms)
         if len(dfs) <= 1:
             df_t = next(iter(dfs.values()), None)
             return wand.term_topk(self.spark, blocks, df_t, params, k)
@@ -1174,10 +1171,10 @@ class PersistentIndex:
         return self.or_topk(fld, [term], k)
 
     def or_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        return self._topk(fld, self._term_meta(fld, terms), k, wand.or_topk)
+        return self._topk(fld, terms, k, wand.or_topk)
 
     def and_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        meta = self._term_meta(fld, terms)
-        if len(meta) < len(set(terms)):  # a missing term: no conjunction
+        if len(self.term_dfs(fld, terms)) < len(set(terms)):
+            # a missing term: no conjunction
             return self.spark.createDataFrame([], "doc_id long, score double")
-        return self._topk(fld, meta, k, wand.and_topk)
+        return self._topk(fld, terms, k, wand.and_topk)

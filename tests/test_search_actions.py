@@ -206,9 +206,10 @@ def test_facet_path_deeper_than_dim_raises(ix):
         drilldown_data(ix, hits(ix, Q.matchall()), [{"fieldname": "lang", "path": ["py"]}])
 
 
-# Spark jobs of one search() on the one-generation store, measured after
-# the change (4 cores, 4 shuffle partitions; before it: 2, 7 and 5 for
-# term, facets and dedup, 3 for a fused boolean and 5 for a phrase).
+# Spark jobs of one search() on the one-generation store, measured with
+# df read from the store's term dictionary (4 cores, 4 shuffle
+# partitions; with the term_stats broadcast join before it: 2, 7 and 5
+# for term, facets and dedup, 3 for a fused boolean and 5 for a phrase).
 # Under adaptive execution every shuffle stage and broadcast is a job of
 # its own: a term query is the observed page collect alone (df is a
 # literal from the store's term dictionary); a fused AND/OR and a phrase
@@ -218,8 +219,8 @@ def test_facet_path_deeper_than_dim_raises(ix):
 TERM_JOBS = 1
 FUSED_BOOL_JOBS = 2
 PHRASE_JOBS = 2
-FACET_2DIM_JOBS = 7
-DEDUP_JOBS = 5
+FACET_2DIM_JOBS = 5
+DEDUP_JOBS = 4
 
 
 def test_search_job_counts(spark, indexes):
