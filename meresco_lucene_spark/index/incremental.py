@@ -21,10 +21,10 @@ This module reproduces that contract Spark-first:
     re-tokenize the corpus per refresh), builds a generation store,
     tombstones older versions of the batch's ids, commits atomically.
   * MultiGenIndex     — the InvertedIndex/PersistentIndex interface over
-    the union of committed generations: postings/forward rows of
-    superseded docs are filtered out (liveDocs), while df/cf/n_docs/
-    avgdl AGGREGATE across generations INCLUDING dead docs — exactly
-    Lucene's scoring semantics before a merge.
+    the committed generations: postings/forward rows of superseded docs
+    are filtered out (liveDocs), while df/cf/n_docs/avgdl AGGREGATE
+    across generations INCLUDING dead docs — exactly Lucene's scoring
+    semantics before a merge.
   * force_merge()     — folds all generations into one (stats then
     exclude deleted docs, as after a Lucene merge). The merge re-encodes
     DECODED postings via build_index_store(occurrences=...) — no
@@ -35,10 +35,11 @@ This module reproduces that contract Spark-first:
     DELTA volume, not the corpus).
 
 Scale shape: a commit's cost is proportional to the BATCH (one small
-store build + one tombstone write); a query unions per-generation block
-scans whose term filters still push into each parquet scan; liveness is
-one broadcast-size anti-join per query until tombstones grow large, at
-which point force_merge (the tiered-merge analog) resets them to zero.
+store build + one tombstone write); a query reads each table in ONE
+scan over all generations' files, so its jobs do not grow with the
+generation count; liveness is one anti-join per scan against one
+tombstone broadcast per query until tombstones grow large, at which
+point force_merge (the tiered-merge analog) resets them to zero.
 Crash safety: a commit is invisible until its _COMMITTED marker exists
 (written last, via atomic rename), so a crash mid-commit leaves older
 readers consistent; a crashed gen dir is wiped and renumbered by the
@@ -60,10 +61,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
@@ -77,37 +81,45 @@ from meresco_lucene_spark.session import local_frame
 
 _GEN_PREFIX = "gen-"
 
-# Handle cache for tombstone frames (same design as
-# store.open_persistent_index): a committed generation's tombstones dir
-# is immutable, but every reader open re-listed it driver-side. Keyed by
-# the dir inode + mtime so a recreated dir (same path, new commit)
-# misses; rows are still read from parquet on every action.
-_TOMB_CACHE: dict[tuple, DataFrame] = {}
-_TOMB_CACHE_CAP = 256
+# A read over more root paths than this threshold lists its files in a
+# Spark job of its own (HadoopFSUtils.parallelListLeafFiles).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 
-def _read_tombstones(spark: SparkSession, tdir: str) -> DataFrame:
-    """Tombstones have the fixed schema ``doc_id long``: reading them
-    with it runs no schema-inference job."""
-    return spark.read.schema("doc_id long").parquet(tdir)
+def _read_dirs(spark: SparkSession, schema, dirs: list[str]) -> DataFrame:
+    """ONE file-source relation over ``dirs``, read with ``schema`` (no
+    inference job). The dirs lie under one store root, so they are
+    listed on the driver: the threshold is raised to their count for the
+    read, instead of a listing job joining every query that crosses it."""
+    with _LISTING_LOCK:
+        old = spark.conf.get(_LISTING_THRESHOLD)
+        if len(dirs) <= int(old):
+            return spark.read.schema(schema).parquet(*dirs)
+        spark.conf.set(_LISTING_THRESHOLD, str(len(dirs)))
+        try:
+            return spark.read.schema(schema).parquet(*dirs)
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, old)
 
 
-def _tombstone_frame(spark: SparkSession, tdir: str) -> DataFrame:
-    try:
-        st = os.stat(tdir)
-    except OSError:
-        return _read_tombstones(spark, tdir)
-    key = (id(spark), tdir, st.st_ino, st.st_mtime_ns)
-    t = _TOMB_CACHE.get(key)
-    if t is None:
-        while len(_TOMB_CACHE) >= _TOMB_CACHE_CAP:
-            _TOMB_CACHE.pop(next(iter(_TOMB_CACHE)))
-        _TOMB_CACHE[key] = t = _read_tombstones(spark, tdir)
-    return t
+def _read_tombstones(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """Tombstones have the fixed schema ``doc_id long``."""
+    return _read_dirs(spark, "doc_id long", dirs)
 
 
 def _gen_name(n: int) -> str:
     return f"{_GEN_PREFIX}{n:06d}"
+
+
+def _gen_numbers(root: str, committed_only: bool = True) -> list[int]:
+    """The generation numbers under ``root``, ascending."""
+    return sorted(
+        int(e[len(_GEN_PREFIX):])
+        for e in os.listdir(root)
+        if e.startswith(_GEN_PREFIX)
+        and (not committed_only or os.path.exists(_commit_marker(os.path.join(root, e))))
+    )
 
 
 def _commit_marker(gen_dir: str) -> str:
@@ -147,18 +159,19 @@ class IncrementalIndexStore:
 
     # ---------------------------------------------------------- discovery
     def _gens(self, committed_only: bool = True) -> list[int]:
-        out = []
-        for e in os.listdir(self.root):
-            if e.startswith(_GEN_PREFIX):
-                if not committed_only or os.path.exists(
-                    _commit_marker(os.path.join(self.root, e))
-                ):
-                    out.append(int(e[len(_GEN_PREFIX):]))
-        return sorted(out)
+        return _gen_numbers(self.root, committed_only)
 
     def _next_gen(self) -> int:
         all_gens = self._gens(committed_only=False)
         return (all_gens[-1] + 1) if all_gens else 0
+
+    def _new_gen_dir(self) -> tuple[int, str]:
+        """Wipe crashed dirs, then create the next generation's dir."""
+        self._clean_crashed()
+        gen = self._next_gen()
+        gen_dir = os.path.join(self.root, _gen_name(gen))
+        os.makedirs(gen_dir)
+        return gen, gen_dir
 
     def _clean_crashed(self) -> None:
         """Wipe generation dirs that lack a _COMMITTED marker (crashed
@@ -171,16 +184,12 @@ class IncrementalIndexStore:
         _COMMITTED marker and the suffix deletions leaves a transient
         bigger-but-consistent state (the merged gen's tombstones mask
         every folded copy) that heals here on the next write."""
-        merged_away: set[int] = set()
-        for g in self._gens():
-            merged_away.update(self._gen_meta(g).get("merged_from", ()))
-        for e in os.listdir(self.root):
-            if e.startswith(_GEN_PREFIX):
-                gen_dir = os.path.join(self.root, e)
-                if not os.path.exists(_commit_marker(gen_dir)) or (
-                    int(e[len(_GEN_PREFIX):]) in merged_away
-                ):
-                    shutil.rmtree(gen_dir, ignore_errors=True)
+        committed = self._gens()
+        dead = set(self._gens(committed_only=False)) - set(committed)
+        for g in committed:
+            dead.update(self._gen_meta(g).get("merged_from", ()))
+        for g in dead:
+            shutil.rmtree(os.path.join(self.root, _gen_name(g)), ignore_errors=True)
 
     # ------------------------------------------------------------ commits
     def commit_batch(
@@ -210,10 +219,7 @@ class IncrementalIndexStore:
         flow straight into the tombstone parquet write, never through
         the driver (a CDC batch deleting millions of rows must not
         materialize them driver-side)."""
-        self._clean_crashed()
-        gen = self._next_gen()
-        gen_dir = os.path.join(self.root, _gen_name(gen))
-        os.makedirs(gen_dir)
+        gen, gen_dir = self._new_gen_dir()
         tomb_ids = None
         if df is not None:
             tomb_ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
@@ -288,10 +294,7 @@ class IncrementalIndexStore:
             return None
         from pyspark.sql import Observation
 
-        self._clean_crashed()
-        gen = self._next_gen()
-        gen_dir = os.path.join(self.root, _gen_name(gen))
-        os.makedirs(gen_dir)
+        gen, gen_dir = self._new_gen_dir()
         obs = Observation()
         (
             doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
@@ -347,9 +350,10 @@ class IncrementalIndexStore:
         """The TieredMergePolicy trigger (reference default
         segmentsPerTier=8.0, LuceneSettings.java:157-160): merge when the
         committed generation count exceeds the tier size, otherwise do
-        nothing. Call after commit_batch in steady-state ingest so reads
-        never union more than ~segments_per_tier generations and the
-        tombstone anti-join stays broadcast-small.
+        nothing. Call after commit_batch in steady-state ingest so a
+        read's one scan per table spans at most ~segments_per_tier
+        generations' files and the tombstone anti-join stays
+        broadcast-small.
 
         SIZE-TIERED like Lucene, not a full fold: dominant old
         generations are excluded from the merge — a prefix generation
@@ -401,22 +405,23 @@ class IncrementalIndexStore:
         store is re-encoded. Crash-safe like partial_merge: the folded
         gen commits (with ``merged_from``) before the suffix dirs are
         deleted, and _clean_crashed heals a partial deletion."""
-        self._clean_crashed()
-        gen = self._next_gen()
-        gen_dir = os.path.join(self.root, _gen_name(gen))
-        os.makedirs(gen_dir)
-        tomb: DataFrame | None = None
-        for g in gens:
-            tdir = os.path.join(self.root, _gen_name(g), "tombstones")
-            if os.path.isdir(tdir):
-                t = _read_tombstones(self.spark, tdir)
-                tomb = t if tomb is None else tomb.unionByName(t)
-        if tomb is None:
+        gen, gen_dir = self._new_gen_dir()
+        tdirs = [os.path.join(self.root, _gen_name(g), "tombstones") for g in gens]
+        tdirs = [d for d in tdirs if os.path.isdir(d)]
+        if not tdirs:
             shutil.rmtree(gen_dir, ignore_errors=True)
             return None
-        tomb.distinct().write.mode("overwrite").parquet(
+        _read_tombstones(self.spark, tdirs).distinct().write.mode("overwrite").parquet(
             os.path.join(gen_dir, "tombstones")
         )
+        self._commit_merged(gen_dir, gens)
+        return gen
+
+    def _commit_merged(self, gen_dir: str, gens: list[int]) -> None:
+        """Commit a merged generation, then delete the ``gens`` it folds.
+        Its metadata names them (``merged_from``, for _clean_crashed) and
+        carries their stream-epoch watermark, which must never move
+        backwards across a merge."""
         meta: dict = {"merged_from": list(gens)}
         eps = max(
             (int(self._gen_meta(g).get("stream_epoch", -1)) for g in gens),
@@ -428,7 +433,30 @@ class IncrementalIndexStore:
         COMMITTER.publish_file(_commit_marker(gen_dir), "ok")
         for g in gens:
             shutil.rmtree(os.path.join(self.root, _gen_name(g)), ignore_errors=True)
-        return gen
+
+    def _merge(self, reader: "MultiGenIndex", gens: list[int]) -> tuple[int, str]:
+        """Re-encode the live docs of ``reader`` (spanning exactly
+        ``gens``) as one new generation from its decoded postings, no
+        re-tokenization, and commit it in place of ``gens``. Its
+        tombstones mask every id it holds and every id ``gens`` masked."""
+        gen, gen_dir = self._new_gen_dir()
+        build_index_store(
+            reader.forward,
+            os.path.join(gen_dir, "store"),
+            id_col="doc_id",
+            occurrences=reader.live_occurrences(),
+            lengths=reader.live_lengths(),
+            lineage=False,
+            **self.build_kwargs,
+        )
+        tomb = reader.forward.select("doc_id")
+        if reader._tombstones is not None:
+            tomb = tomb.unionByName(reader._tombstones.select("doc_id"))
+        tomb.distinct().write.mode("overwrite").parquet(
+            os.path.join(gen_dir, "tombstones")
+        )
+        self._commit_merged(gen_dir, gens)
+        return gen, gen_dir
 
     def partial_merge(self, start_gen: int) -> int | None:
         """Fold the SUFFIX of generations >= start_gen into one, leaving
@@ -460,40 +488,7 @@ class IncrementalIndexStore:
             return None
         if gens[0] == all_gens[0]:
             return self.force_merge()
-        reader = MultiGenIndex(self.spark, self.root, min_gen=start_gen)
-        self._clean_crashed()
-        gen = self._next_gen()
-        gen_dir = os.path.join(self.root, _gen_name(gen))
-        os.makedirs(gen_dir)
-        build_index_store(
-            reader.forward,
-            os.path.join(gen_dir, "store"),
-            id_col="doc_id",
-            occurrences=reader.live_occurrences(),
-            lengths=reader.live_lengths(),
-            lineage=False,
-            **self.build_kwargs,
-        )
-        tomb = reader.forward.select("doc_id")
-        for g in gens:
-            tdir = os.path.join(self.root, _gen_name(g), "tombstones")
-            if os.path.isdir(tdir):
-                tomb = tomb.unionByName(_read_tombstones(self.spark, tdir))
-        tomb.distinct().write.mode("overwrite").parquet(
-            os.path.join(gen_dir, "tombstones")
-        )
-        meta: dict = {"merged_from": gens}
-        eps = max(
-            (int(self._gen_meta(g).get("stream_epoch", -1)) for g in gens),
-            default=-1,
-        )
-        if eps >= 0:
-            meta["stream_epoch"] = eps
-        _write_meta(gen_dir, meta)
-        COMMITTER.publish_file(_commit_marker(gen_dir), "ok")
-        for g in gens:
-            shutil.rmtree(os.path.join(self.root, _gen_name(g)), ignore_errors=True)
-        return gen
+        return self._merge(MultiGenIndex(self.spark, self.root, min_gen=start_gen), gens)[0]
 
     def force_merge(self) -> int:
         """Fold every committed generation into one (the tiered-merge
@@ -508,37 +503,7 @@ class IncrementalIndexStore:
         gens = self._gens()
         if len(gens) <= 1:
             return gens[0] if gens else -1
-        reader = self.open()
-        self._clean_crashed()
-        gen = self._next_gen()
-        gen_dir = os.path.join(self.root, _gen_name(gen))
-        os.makedirs(gen_dir)
-        build_index_store(
-            reader.forward,
-            os.path.join(gen_dir, "store"),
-            id_col="doc_id",
-            occurrences=reader.live_occurrences(),
-            lengths=reader.live_lengths(),
-            lineage=False,
-            **self.build_kwargs,
-        )
-        reader.forward.select("doc_id").distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(gen_dir, "tombstones"))
-        # carry the stream-epoch watermark into the merged generation —
-        # the old gens' _meta.json files are about to be deleted, and the
-        # watermark must never move backwards across a merge
-        meta: dict = {"merged_from": gens}
-        eps = max(
-            (int(self._gen_meta(g).get("stream_epoch", -1)) for g in gens),
-            default=-1,
-        )
-        if eps >= 0:
-            meta["stream_epoch"] = eps
-        _write_meta(gen_dir, meta)
-        COMMITTER.publish_file(_commit_marker(gen_dir), "ok")
-        for g in gens:
-            shutil.rmtree(os.path.join(self.root, _gen_name(g)), ignore_errors=True)
+        gen, gen_dir = self._merge(self.open(), gens)
         # the merged gen's tombstones (one row per LIVE doc — corpus-sized)
         # only mask the generations just deleted; dropping them now keeps
         # steady-state reads free of any anti-join and keeps the tombstone
@@ -548,12 +513,16 @@ class IncrementalIndexStore:
 
 
 class MultiGenIndex:
-    """Union reader over committed generations with Lucene liveness
-    semantics: superseded/deleted docs drop out of results, stay in the
-    scoring statistics until force_merge. Implements the same interface
-    as InvertedIndex/PersistentIndex, so the whole executor surface
+    """Reader over committed generations with Lucene liveness semantics:
+    superseded/deleted docs drop out of results, stay in the scoring
+    statistics until force_merge. Implements the same interface as
+    InvertedIndex/PersistentIndex, so the whole executor surface
     (term/bool/phrase/prefix/range/facets/sort/dedup/composed) runs
-    unchanged on top."""
+    unchanged on top. Each table is ONE scan over all generations'
+    files, each row's generation (``_gen``, tombstones' ``_tomb_gen``)
+    parsed from its file path; liveness is one anti-join above it
+    against the one tombstone relation, whose broadcast adaptive
+    execution reuses across a query's joins."""
 
     def __init__(
         self,
@@ -569,19 +538,13 @@ class MultiGenIndex:
         self.spark = spark
         self.root = root
         self.id_col = "doc_id"
-        gens = []
-        for e in sorted(os.listdir(root)):
-            if e.startswith(_GEN_PREFIX) and os.path.exists(
-                _commit_marker(os.path.join(root, e))
-            ):
-                g = int(e[len(_GEN_PREFIX):])
-                if (as_of is None or g <= as_of) and (
-                    min_gen is None or g >= min_gen
-                ):
-                    gens.append(g)
+        gens = [
+            g for g in _gen_numbers(root)
+            if (as_of is None or g <= as_of) and (min_gen is None or g >= min_gen)
+        ]
         self.gens = gens
         self.stores: dict[int, PersistentIndex] = {}
-        tomb_parts = []
+        tomb_dirs = []
         for g in gens:
             gen_dir = os.path.join(root, _gen_name(g))
             if os.path.isdir(os.path.join(gen_dir, "store")):
@@ -590,13 +553,19 @@ class MultiGenIndex:
                 )
             tdir = os.path.join(gen_dir, "tombstones")
             if os.path.isdir(tdir):
-                tomb_parts.append(
-                    _tombstone_frame(spark, tdir).select(
-                        "doc_id", F.lit(g).alias("_tomb_gen")
-                    )
-                )
+                tomb_dirs.append(tdir)
         if not self.stores:
             raise ValueError(f"no committed generations with data under {root}")
+        # a file's generation is the gen dir right below the store root,
+        # matched in the URI form Spark reports (scheme, percent-escapes),
+        # so a directory above the root named like a generation is no match
+        root_path = spark._jvm.org.apache.hadoop.fs.Path(
+            os.path.abspath(root)
+        ).toUri().getRawPath()
+        self._gen_pattern = (
+            r"^[^/]*(?://[^/]*)?" + re.escape(root_path.rstrip("/"))
+            + "/" + _GEN_PREFIX + r"(\d+)/"
+        )
         first = self.stores[min(self.stores)]
         self.k1 = first.k1
         self.b = first.b
@@ -605,53 +574,74 @@ class MultiGenIndex:
         self.has_positions = first.has_positions
         self.facet_fields = dict(first.facet_fields)
         self._tombstones = None
-        if tomb_parts:
-            t = tomb_parts[0]
-            for p in tomb_parts[1:]:
-                t = t.unionByName(p)
-            self._tombstones = t
+        if tomb_dirs:
+            self._tombstones = self._tag(
+                _read_tombstones(spark, tomb_dirs), "_tomb_gen"
+            )
         self.n_docs = sum(s.n_docs for s in self.stores.values())
+        self._scans: dict[str, DataFrame] = {}
         self._forward: DataFrame | None = None
 
     @property
     def forward(self) -> DataFrame:
-        """Lazy union of the generations' forward tables (liveness-
-        filtered): building it at open() forced a driver-side parquet
-        open of every generation's forward dir even for queries that
-        never touch stored fields."""
+        """Liveness-filtered forward table, defined on first use: a query
+        that never touches stored fields lists no forward dir."""
         if self._forward is None:
-            self._forward = self._live(
-                self._union(lambda s: s.forward), keep_gen=False
-            )
+            self._forward = self._live(self._scan("forward"))
         return self._forward
 
     # --------------------------------------------------------- internals
-    def _union(self, frame_of, gens=None) -> DataFrame:
-        """Union of per-generation frames, tagged with their gen; all
-        generations with data unless ``gens`` names some."""
-        parts = [
-            frame_of(self.stores[g]).withColumn("_gen", F.lit(g))
-            for g in (self.stores if gens is None else gens)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _tag(self, frame: DataFrame, col: str = "_gen") -> DataFrame:
+        """``frame`` (a file-source relation under the root) plus each
+        row's generation number, parsed from its file path."""
+        path = F.col("_metadata.file_path")
+        return frame.withColumn(
+            col, F.regexp_extract(path, self._gen_pattern, 1).cast("int")
+        )
 
-    def _live(self, tagged: DataFrame, keep_gen: bool = False) -> DataFrame:
+    def _read(self, table: str, dirs: list[str]) -> DataFrame:
+        """One tagged relation over ``dirs`` of ``table``, with the union
+        of the generations' recorded columns."""
+        fields: dict = {}
+        for s in self.stores.values():
+            for f in StructType.fromJson(s.meta["schemas"][table]).fields:
+                fields.setdefault(f.name, f)
+        return self._tag(
+            _read_dirs(self.spark, StructType(list(fields.values())), dirs)
+        )
+
+    def _scan(self, table: str) -> DataFrame:
+        """``table`` over every generation with data. Postings are read
+        from their ``shard=s`` dirs: Spark refuses partition discovery
+        over several roots."""
+        if table not in self._scans:
+            dirs = []
+            for s in self.stores.values():
+                d = os.path.join(s.out_dir, table)
+                if table == "postings":
+                    dirs += [os.path.join(d, e) for e in sorted(os.listdir(d))
+                             if e.startswith("shard=")]
+                else:
+                    dirs.append(d)
+            self._scans[table] = self._read(table, dirs)
+        return self._scans[table]
+
+    def _live(self, tagged: DataFrame) -> DataFrame:
         """Drop rows whose doc_id is tombstoned by a LATER generation (a
         re-added doc's new version survives its own tombstone: the kill
-        condition is strictly tomb_gen > row gen)."""
+        condition is strictly tomb_gen > row gen), then the ``_gen`` tag."""
         if self._tombstones is None:
-            return tagged if keep_gen else tagged.drop("_gen")
+            return tagged.drop("_gen")
         t = F.broadcast(self._tombstones)
-        out = tagged.join(
-            t,
-            (tagged["doc_id"] == t["doc_id"])
-            & (t["_tomb_gen"] > tagged["_gen"]),
-            "left_anti",
+        cond = (tagged["doc_id"] == t["doc_id"]) & (t["_tomb_gen"] > tagged["_gen"])
+        return tagged.join(t, cond, "left_anti").drop("_gen")
+
+    def _live_postings(self, blocks: DataFrame, fld: str, with_dl: bool) -> DataFrame:
+        """The live postings of tagged ``blocks``: decoded with each
+        block's ``_gen`` carried onto its postings, then one anti-join."""
+        return self._live(
+            decode_block_frame(blocks, fld, with_dl, passthrough=("_gen",))
         )
-        return out if keep_gen else out.drop("_gen")
 
     # ------------------------------------------------- InvertedIndex API
     def field_stats(self, fld: str) -> FieldStats:
@@ -668,18 +658,14 @@ class MultiGenIndex:
         return FieldStats(n_docs=n, sum_dl=sdl, omit_norms=omit)
 
     # generation stores are PersistentIndex — the per-posting dl stream
-    # capability (postings_for(with_dl=True) -> _bdl) unions through
+    # capability (postings_for(with_dl=True) -> _bdl) carries through
     inline_dl = True
 
     def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
-        # Union the RAW block frames (field/term filters still push into
-        # every generation's parquet scan) and decode once above the
-        # union: the liveness anti-join then reads the generated doc_id
-        # and stays one broadcast join, instead of being pushed into
-        # every union branch with a tombstone broadcast each. The
-        # per-branch _gen literal rides through the decode.
-        u = self._union(lambda s: s.blocks.filter(F.col("field") == fld))
-        return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
+        """The live postings of ``fld`` from one scan of every
+        generation's blocks (field/term filters push into it)."""
+        blocks = self._scan("postings").filter(F.col("field") == fld)
+        return self._live_postings(blocks, fld, with_dl)
 
     def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
         """term -> df for the terms of ``terms`` present in ``fld``: the
@@ -694,29 +680,43 @@ class MultiGenIndex:
     def term_postings(
         self, fld: str, terms: list[str], with_dl: bool = False
     ) -> DataFrame:
-        """The live postings of ``terms`` in ``fld``: each generation's
-        blocks pruned to the terms' shards by its own term dictionary
-        (a generation holding none of them is left out of the union),
-        decoded once above the union like postings_for."""
-        gens = [g for g, s in self.stores.items() if s.term_dfs(fld, terms)]
-        u = self._union(lambda s: s.term_blocks(fld, terms), gens or [min(self.stores)])
-        return self._live(decode_block_frame(u, fld, with_dl, passthrough=("_gen",)))
+        """The live postings of ``terms`` in ``fld`` from one scan whose
+        paths are chosen up front from the generations' term
+        dictionaries: the ``shard=s`` dirs of the terms' shards, in the
+        generations that hold the terms."""
+        dirs, present = [], set()
+        for s in self.stores.values():
+            present.update(s.term_dfs(fld, terms))
+            for shard in s.term_shards(fld, terms):
+                d = os.path.join(s.out_dir, "postings", f"shard={shard}")
+                if os.path.isdir(d):  # an empty salt bucket writes no dir
+                    dirs.append(d)
+        first = self.stores[min(self.stores)].out_dir
+        blocks = self._read(
+            "postings", dirs or [os.path.join(first, "postings")]
+        ).filter((F.col("field") == fld) & F.col("term").isin(sorted(present)))
+        return self._live_postings(blocks, fld, with_dl)
 
     def lengths_for(self, fld: str) -> DataFrame:
         # MUST be liveness-filtered: the executor joins postings to
         # lengths by bare doc_id (executor.py _term_hits/_phrase_hits),
         # so after an upsert the id has a length row in BOTH its old and
-        # new generation — an unfiltered union duplicates every hit with
+        # new generation — an unfiltered read duplicates every hit with
         # a stale-dl score. Lucene semantics: a live doc has exactly one
         # norm and dead docs never match (delete-then-add,
         # Lucene.java:166-171).
-        return self._live(self._union(lambda s: s.lengths_for(fld)))
+        return self._live(
+            self._scan("field_lengths")
+            .filter(F.col("field") == fld)
+            .select("doc_id", "dl", "norm_dl", "_gen")
+        )
 
     def term_stats_for(self, fld: str) -> DataFrame:
         # df/cf SUM across generations INCLUDING dead docs (Lucene
         # docFreq counts deleted docs until merge)
         return (
-            self._union(lambda s: s.term_stats_for(fld))
+            self._scan("term_stats")
+            .filter(F.col("field") == fld)
             .groupBy("term")
             .agg(
                 F.sum("df").cast("long").alias("df"),
@@ -772,31 +772,28 @@ class MultiGenIndex:
 
     # ------------------------------------------------------- merge feeds
     def live_occurrences(self) -> DataFrame:
-        """(field, term, doc_id, pos, _dl) of every LIVE posting —
-        decoded from blocks, never re-tokenized. Feed for force_merge.
-        The per-posting dl stream rides along (_dl), so the re-encode
-        needs no lengths join either."""
-        def occ(s: PersistentIndex) -> DataFrame:
-            parts = [
-                s.postings_for(f, with_dl=True).select(
-                    "field",
-                    "term",
-                    "doc_id",
-                    F.col("_bdl").alias("_dl"),
-                    F.explode("positions").alias("pos"),
-                )
-                for f in s.fieldnames()
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        return self._live(self._union(occ))
+        """(field, term, doc_id, _dl, pos) of every LIVE posting —
+        decoded from one scan of every generation's blocks, never
+        re-tokenized. Feed for the merges. The per-posting dl stream
+        rides along (_dl), so the re-encode needs no lengths join
+        either."""
+        decoded = decode_block_frame(
+            self._scan("postings"), None, with_dl=True, passthrough=("_gen",)
+        )
+        return self._live(
+            decoded.select(
+                "field",
+                "term",
+                "_gen",
+                "doc_id",
+                F.col("_bdl").alias("_dl"),
+                F.explode("positions").alias("pos"),
+            )
+        )
 
     def live_lengths(self) -> DataFrame:
         return self._live(
-            self._union(lambda s: s.field_lengths.select(
-                "field", "doc_id", "dl", "norm_dl"
-            ))
+            self._scan("field_lengths").select(
+                "field", "doc_id", "dl", "norm_dl", "_gen"
+            )
         )

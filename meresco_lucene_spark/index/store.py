@@ -190,7 +190,7 @@ def auto_n_shards(n_occurrences: int, floor: int) -> int:
     build — an incremental batch commit most of all — must not be padded
     out to parallelism-many near-empty shards, which cost a task each at
     encode and a parquet footer each on EVERY later read of the
-    generation (the union reader multiplies that by the gen count).
+    generation (a multi-generation read opens every generation's files).
     Measured r6 (OPTIMIZATION_r06.md): encoding ~64k occurrences is
     single-digit-millisecond numpy work while every extra shard task
     costs Arrow ship + scheduling + a parquet file, so shards below
@@ -917,7 +917,7 @@ def build_index_store(
 
 def decode_block_frame(
     blocks: DataFrame,
-    fld: str,
+    fld: str | None,
     with_dl: bool = False,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -928,13 +928,14 @@ def decode_block_frame(
     parallel ``tfs``/``dls``/``positions`` lists at the same offset.
     Caller filters on ``term`` push below it into the parquet scan, and
     Catalyst drops every list column the query never reads (a term or
-    boolean query scans no positions). ``passthrough`` names extra
-    block columns carried onto each posting (the union reader's ``_gen``
-    tag)."""
+    boolean query scans no positions). ``fld`` None keeps the blocks'
+    own ``field`` (a decode of every field). ``passthrough`` names extra
+    block columns carried onto each posting (the multi-generation
+    reader's ``_gen`` tag)."""
     pt = list(passthrough)
     i = F.col("_i")
     cols = [
-        F.lit(fld).alias("field"),
+        F.col("field") if fld is None else F.lit(fld).alias("field"),
         "term",
         *pt,
         "doc_id",
@@ -944,7 +945,7 @@ def decode_block_frame(
         cols.append(F.col("dls")[i].cast("long").alias("_bdl"))
     cols.append(F.col("positions")[i].alias("positions"))
     return blocks.select(
-        "term", *pt, "tfs", "dls", "positions",
+        "field", "term", *pt, "tfs", "dls", "positions",
         F.posexplode("doc_ids").alias("_i", "doc_id"),
     ).select(*cols)
 
@@ -952,7 +953,7 @@ def decode_block_frame(
 # Session-scoped HANDLE cache (not a result cache): opening a store costs
 # a parquet directory listing for every table the query touches, and
 # callers like the per-query entry functions and the multi-generation
-# union reader re-open the same immutable store once per query
+# reader re-open the same immutable store once per query
 # (× generations). A handle also holds the store's term dictionary memo,
 # the df source of every query, so it must never outlive its snapshot:
 # the key is the Spark application, the path and the ``snapshot`` id
@@ -1014,9 +1015,8 @@ class PersistentIndex:
         # table handles are LAZY: spark.read.parquet lists files at call
         # time (schemas come from meta.json, so no inference job), so
         # opening all four tables eagerly costs ~4 listing round-trips
-        # per store even for a query that touches one table — multiplied by the
-        # generation count on a MultiGenIndex open (guide §5: the driver
-        # should do almost no work it can avoid)
+        # per store even for a query that touches one table (guide §5:
+        # the driver should do almost no work it can avoid)
         self._tables: dict[str, DataFrame] = {}
         # (field, term) -> (df, base_shard, n_salts) of present terms: see _term_meta
         self._meta_memo: dict[tuple[str, str], tuple] = {}
@@ -1138,20 +1138,20 @@ class PersistentIndex:
         read from those terms' shards only."""
         return decode_block_frame(self.term_blocks(fld, terms), fld, with_dl)
 
+    def term_shards(self, fld: str, terms: list[str]) -> list[int]:
+        """The shards of the terms of ``terms`` present in ``fld``:
+        ``(base_shard + s) % n_shards`` for s < n_salts."""
+        n, meta = self.meta["n_shards"], self._term_meta(fld, terms)
+        return sorted({(b + s) % n for _, b, salts in meta.values() for s in range(salts)})
+
     def term_blocks(self, fld: str, terms: list[str]) -> DataFrame:
         """The raw blocks of ``terms`` in ``fld``, pruned to their shards
-        (``(base_shard + s) % n_shards`` for s < n_salts) by the
-        ``shard`` partition column before any file is read; empty when
-        none of the terms is present."""
-        meta = self._term_meta(fld, terms)
-        n = self.meta["n_shards"]
-        shards = sorted(
-            {(base + s) % n for _, base, salts in meta.values() for s in range(salts)}
-        )
+        by the ``shard`` partition column before any file is read; empty
+        when none of the terms is present."""
         return self.blocks.filter(
-            F.col("shard").isin(shards)
+            F.col("shard").isin(self.term_shards(fld, terms))
             & (F.col("field") == fld)
-            & F.col("term").isin(list(meta))
+            & F.col("term").isin(list(self.term_dfs(fld, terms)))
         )
 
     def _topk(self, fld: str, terms: list[str], k: int, multi) -> DataFrame:

@@ -646,6 +646,10 @@ def search(
     if score_adjust is not None:
         h = score_adjust(h)
 
+    # facets see all (pre-dedup) hits, like FacetSuperCollector, and need
+    # only their doc ids: counted before the stored/sort-field join
+    drilldown = drilldown_data(index, h, facets)
+
     needed = set(stored_fields)
     if dedup_field:
         needed.add(dedup_field)
@@ -660,9 +664,6 @@ def search(
             "doc_id",
             "left",
         )
-
-    # facets see all (pre-dedup) hits, like FacetSuperCollector
-    drilldown = drilldown_data(index, h, facets)
 
     if dedup_field:
         # DeDupFilterSuperCollector (search/DeDupFilterSuperCollector.java:43-109):

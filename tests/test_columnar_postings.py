@@ -7,12 +7,14 @@ that does not need it. Stores and generations open from their recorded
 schemas without inference jobs. The job counts of a multi-generation
 term query and of an add+delete commit are pinned."""
 
+import math
+from collections import Counter
+
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
 from meresco_lucene_spark.core import LuceneCore
-from meresco_lucene_spark.index import incremental as inc_mod
 from meresco_lucene_spark.index import store as store_mod
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
 from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
@@ -69,9 +71,8 @@ def ix(request, indexes):
 
 @pytest.fixture()
 def no_handle_caches(monkeypatch):
-    """Open stores and tombstones afresh, as a new process would."""
+    """Open stores afresh, as a new process would."""
     monkeypatch.setattr(store_mod, "_PINDEX_CACHE", {})
-    monkeypatch.setattr(inc_mod, "_TOMB_CACHE", {})
 
 
 def _jobs(spark):
@@ -184,3 +185,110 @@ def test_add_delete_commit_job_count(spark, tmp_path):
     assert _jobs(spark) - j0 <= ADD_DELETE_COMMIT_JOBS
     got = core.executeQuery(Q.matchall())
     assert sorted(h.id for h in got.hits) == ["b", "c"]
+
+
+# ------------------------------------------------ generations vs. job counts
+
+
+def _fields(text, lang):
+    return [
+        {"type": "TextField", "name": "text", "value": text},
+        {"type": "FacetField", "name": "lang", "value": lang},
+    ]
+
+
+def _core_with_gens(spark, root, n_gens):
+    """A LuceneCore whose reader holds ``n_gens`` generations: a base
+    commit, then commits of new docs, upserts and a delete, and last a
+    delete-only commit. Returns the core and every committed version
+    (identifier, tokens, lang, live)."""
+    core = LuceneCore(spark, root, name="core", n_shards=2, segments_per_tier=100)
+    versions = {}  # identifier -> its versions, newest last
+
+    def add(i, text):
+        ident = f"d{i}"
+        lang = ["py", "go", "rs"][i % 3]
+        core.addDocument(_fields(text, lang), identifier=ident)
+        versions.setdefault(ident, []).append([text.split(), lang, True])
+        for old in versions[ident][:-1]:
+            old[2] = False
+
+    def delete(i):
+        core.delete(identifier=f"d{i}")
+        versions[f"d{i}"][-1][2] = False
+
+    for i in range(24):
+        add(i, " ".join(WORDS[(i * k + k) % len(WORDS)] for k in range(1, 4 + i % 3)))
+    core.commit()
+    for c in range(1, n_gens - 1):
+        for i in range(24 + 3 * c, 27 + 3 * c):
+            add(i, f"fast scan new{c} " + WORDS[i % len(WORDS)])
+        add(c, f"spark upserted{c} table")
+        delete(5 * c + 2)
+        core.commit()
+    delete(n_gens + 10)
+    core.commit()
+    reader = core.reader()
+    assert len(reader.gens) == n_gens
+    return core, [(i, *v) for i, vs in versions.items() for v in vs]
+
+
+def _recomputed(versions, terms):
+    """BM25 hits of an OR over ``terms`` on the live docs, with N, avgdl
+    and df over every committed version (dead docs count until merge),
+    plus the live hits' lang counts."""
+    n = len(versions)
+    avgdl = sum(len(toks) for _, toks, _, _ in versions) / n
+    df = {t: sum(t in toks for _, toks, _, _ in versions) for t in terms}
+    scores, langs = {}, Counter()
+    for ident, toks, lang, live in versions:
+        matched = [t for t in terms if t in toks]
+        if not live or not matched:
+            continue
+        s = 0.0
+        for t in matched:
+            tf = toks.count(t)
+            idf = math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+            s += idf * tf / (tf + 1.2 * (1 - 0.75 + 0.75 * len(toks) / avgdl))
+        scores[ident] = s
+        langs[lang] += 1
+    return scores, langs
+
+
+# Spark jobs of a LuceneCore executeQuery on a freshly opened reader
+# (4 cores, 4 shuffle partitions). Before one scan per table per query,
+# at 2 / 4 / 6 generations: the OR 4 / 7 / 9 and the term query with a
+# lang facet 9 / 15 / 25. After, at every generation count: the OR is
+# the tombstone broadcast, the per-doc score sum's shuffle, the forward
+# broadcast of the identifier join and the page collect; the facet query
+# is the drilldown (tombstone and hit-set broadcasts, two shuffles, the
+# collect) and the page (tombstone and forward broadcasts, the collect).
+MULTIGEN_OR_JOBS = 4
+MULTIGEN_FACET_JOBS = 8
+
+
+@pytest.mark.parametrize("n_gens", [2, 6])
+def test_multigen_query_jobs_do_not_grow_with_generations(spark, tmp_path, n_gens):
+    core, versions = _core_with_gens(spark, str(tmp_path), n_gens)
+    live = [v for v in versions if v[3]]
+    terms = ["rare", "table", "upserted1"]
+    cases = [
+        (Q.or_(*(Q.term("text", t) for t in terms)), terms, (), MULTIGEN_OR_JOBS),
+        (Q.term("text", "spark"), ["spark"],
+         [{"fieldname": "lang", "maxTerms": 10}], MULTIGEN_FACET_JOBS),
+    ]
+    for q, qterms, facets, pinned in cases:
+        core._reader = None  # a fresh snapshot, as after a commit
+        j0 = _jobs(spark)
+        resp = core.executeQuery(q, stop=1000, facets=facets)
+        assert _jobs(spark) - j0 == pinned, (n_gens, q.to_dict())
+        want, langs = _recomputed(versions, qterms)
+        assert resp.total == len(want) and len(want) > 0
+        got = {h.id: h.score for h in resp.hits}
+        assert got.keys() == want.keys()
+        for d, sc in want.items():
+            assert got[d] == pytest.approx(sc, rel=1e-12), d
+        if facets:
+            counts = {t["term"]: t["count"] for t in resp.drilldownData[0]["terms"]}
+            assert counts == dict(langs)
+    assert len(live) < len(versions)

@@ -13,7 +13,7 @@ from meresco_lucene_spark.index.incremental import (
     _commit_marker,
 )
 from meresco_lucene_spark.index.store import build_index_store
-from meresco_lucene_spark.query.executor import hits
+from meresco_lucene_spark.query.executor import hits, search
 from meresco_lucene_spark.query.ir import MUST, SHOULD, Q
 
 SF = "/root/testdata/sf0.001"
@@ -133,10 +133,11 @@ def test_force_merge_equals_fresh_build_on_live_state(spark, docs, tmp_path):
 
 
 def test_multigen_term_filter_pushdown(spark, docs, tmp_path):
-    """The 100 TB contract of the union reader: a term filter must reach
-    EVERY generation's parquet scan (below the decode projection, the
-    Union and the liveness anti-join) — a query touches only its term's
-    blocks in each generation, never a full scan."""
+    """The 100 TB contract of the multi-generation reader: a term filter
+    must reach the parquet scan (below the decode projection and the
+    liveness anti-join) — a query touches only its term's blocks in each
+    generation, never a full scan — and that one scan reads every
+    generation's blocks."""
     import io
     from contextlib import redirect_stdout
 
@@ -150,12 +151,25 @@ def test_multigen_term_filter_pushdown(spark, docs, tmp_path):
     with redirect_stdout(buf):
         plan_df.explain("formatted")
     plan = buf.getvalue()
-    pushed = [
-        ln for ln in plan.splitlines()
-        if "PushedFilters" in ln and "term" in ln and "import" in ln
+    scans = [ln for ln in plan.splitlines() if "PushedFilters" in ln and "term" in ln]
+    # one postings scan for all generations, carrying the term filter
+    assert len(scans) == 1 and "EqualTo(term,import)" in scans[0], plan
+    leaves = plan_df._jdf.queryExecution().sparkPlan().collectLeaves()
+    files = [
+        f.getPath().toString()
+        for i in range(leaves.length())
+        if leaves.apply(i).nodeName().startswith("Scan parquet")
+        for p in _iter(leaves.apply(i).selectedPartitions().filePartitionIterator())
+        for f in _iter(p.files())
     ]
-    # one pushed term filter per generation scan
-    assert len(pushed) >= 2, plan
+    assert {"gen-000000", "gen-000001"} <= {
+        seg for f in files for seg in f.split("/") if seg.startswith("gen-")
+    }, files
+
+
+def _iter(jit):
+    while jit.hasNext():
+        yield jit.next()
 
 
 def test_maybe_merge_tiered_trigger(spark, docs, tmp_path):
@@ -566,3 +580,130 @@ def test_partial_merge_stats_follow_lucene_semantics(spark, docs, tmp_path):
     st = inc.open().field_stats("text")
     # the merged suffix dropped exactly the one dead copy of doc 60
     assert st.n_docs == n_before - 1
+
+
+# ------------------------------------ generation tag and merge feeds
+
+TAG_WORDS = ["spark", "join", "table", "scan", "fast", "slow", "rare", "deep"]
+
+
+def _tag_rows(ids, salt=""):
+    return [
+        (i, f"{TAG_WORDS[i % 8]} {TAG_WORDS[(3 * i + 1) % 8]} w{i} {salt}".strip(),
+         ["py", "go"][i % 2])
+        for i in ids
+    ]
+
+
+def _frame(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+
+def _live_ids(reader):
+    return sorted(r["doc_id"] for r in reader.forward.select("doc_id").collect())
+
+
+def _text_of(reader, doc_id):
+    return reader.forward.filter(F.col("doc_id") == doc_id).collect()
+
+
+def _merged_digest(spark, inc, gen):
+    from tests.test_store import _store_logical_content
+
+    return _store_logical_content(
+        spark, os.path.join(inc.root, f"gen-{gen:06d}", "store")
+    )
+
+
+def _fresh_digest(spark, tmp_path, name, rows):
+    """Blocks are a pure function of the live postings: a store built
+    from the live rows directly has the merged store's blocks."""
+    from tests.test_store import _store_logical_content
+
+    out = str(tmp_path / name)
+    build_index_store(_frame(spark, rows), out, **CFG)
+    return _store_logical_content(spark, out)
+
+
+def test_generation_tag_and_merge_feeds_under_a_gen_named_dir(spark, tmp_path):
+    """Each row's generation comes from its file path, matched below the
+    store root: a root inside a directory named like a generation must
+    not be taken for one. Liveness then holds across a tombstone-only
+    generation, a fold of tombstone-only generations, and the
+    live_occurrences / live_lengths feeds of partial_merge and
+    force_merge, whose stores hold the blocks of the live rows."""
+    inc = IncrementalIndexStore(spark, str(tmp_path / "gen-000042" / "inc"), **CFG)
+    live = {r[0]: r for r in _tag_rows(range(30))}
+    inc.commit_batch(_frame(spark, list(live.values())))
+    batch = _tag_rows(range(30, 40)) + _tag_rows([3, 4], "upserted")
+    inc.commit_batch(_frame(spark, batch))
+    live.update({r[0]: r for r in batch})
+    inc.delete([5, 31])
+    inc.delete([6])
+    for i in (5, 31, 6):
+        del live[i]
+    reader = inc.open()
+    assert reader.gens == [0, 1, 2, 3]
+    assert _live_ids(reader) == sorted(live)
+    assert {r["text"] for r in _text_of(reader, 3)} == {live[3][1]}
+    got = sorted(r["doc_id"] for r in hits(reader, Q.term("text", "upserted")).collect())
+    assert got == [3, 4]
+
+    folded = inc._fold_tombstone_gens([2, 3])
+    assert inc._gens() == [0, 1, folded]
+    tomb = spark.read.parquet(os.path.join(inc.root, f"gen-{folded:06d}", "tombstones"))
+    assert sorted(r["doc_id"] for r in tomb.collect()) == [5, 6, 31]
+    assert _live_ids(inc.open()) == sorted(live)
+
+    suffix = _tag_rows(range(40, 45)) + _tag_rows([35], "again")
+    inc.commit_batch(_frame(spark, suffix))
+    start = inc._gens()[-1]
+    inc.commit_batch(_frame(spark, _tag_rows([41], "later")), delete_ids=[42])
+    suffix_live = {r[0]: r for r in suffix}
+    suffix_live.update({r[0]: r for r in _tag_rows([41], "later")})
+    del suffix_live[42]
+    live.update(suffix_live)
+    merged = inc.partial_merge(start)
+    assert _merged_digest(spark, inc, merged) == _fresh_digest(
+        spark, tmp_path, "suffix", list(suffix_live.values())
+    )
+    assert _live_ids(inc.open()) == sorted(live)
+
+    merged = inc.force_merge()
+    assert inc._gens() == [merged]
+    assert _merged_digest(spark, inc, merged) == _fresh_digest(
+        spark, tmp_path, "all", list(live.values())
+    )
+    reader = inc.open()
+    assert _live_ids(reader) == sorted(live)
+    assert reader.field_stats("text").n_docs == len(live)
+
+
+def test_wide_scan_adds_no_listing_job(spark, tmp_path):
+    """A term query whose one postings scan spans more leaf dirs than
+    Spark's parallel-listing threshold lists them on the driver: it runs
+    as many jobs as a one-dir query, and the threshold is left as it
+    was."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    inc = IncrementalIndexStore(spark, str(tmp_path / "inc"), text_cols=["text"], n_shards=8)
+    for g in range(5):
+        inc.commit_batch(_frame(spark, _tag_rows(range(20 * g, 20 * g + 20))))
+    inc.delete([7])
+    reader = inc.open()
+    terms = [f"w{i}" for i in range(100)]
+    wide = sum(len(s.term_shards("text", terms)) for s in reader.stores.values())
+    assert wide > int(spark.conf.get(key))
+    threshold = spark.conf.get(key)
+
+    def jobs(q):
+        j0 = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+        assert search(reader, q, stop=200).total > 0
+        return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs() - j0
+
+    def or_(ts):
+        return Q.or_(*(Q.term("text", t) for t in ts))
+
+    jobs(or_(["w1", "w2"]))  # warm: the tombstone relation
+    narrow = jobs(or_(["w1", "w2"]))
+    assert jobs(or_(terms)) == narrow
+    assert spark.conf.get(key) == threshold

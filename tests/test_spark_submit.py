@@ -107,3 +107,39 @@ def test_spark_submit_py_files(tmp_path):
     # OR query: scores strictly descending, ids present, k rows.
     ors = [s for _, s in res["or_topk"]]
     assert len(ors) == K and all(a >= b - 1e-12 for a, b in zip(ors, ors[1:]))
+
+
+def test_package_zip_keyed_on_checkout_and_content(tmp_path, monkeypatch):
+    """Two checkouts on one host never ship each other's code: copies of
+    the package that differ in one byte get two zips, each holding its
+    own bytes, and an unchanged package reuses its zip unwritten."""
+    import tempfile
+    import zipfile
+
+    import meresco_lucene_spark
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    src = os.path.dirname(meresco_lucene_spark.__file__)
+    ignore = shutil.ignore_patterns("__pycache__")
+    a = shutil.copytree(src, str(tmp_path / "a" / "meresco_lucene_spark"), ignore=ignore)
+    b = shutil.copytree(src, str(tmp_path / "b" / "meresco_lucene_spark"), ignore=ignore)
+    with open(os.path.join(b, "shipping.py"), "a") as f:
+        f.write("#")
+
+    za, zb = package_zip_path(a), package_zip_path(b)
+    assert za != zb
+    for pkg, z in ((a, za), (b, zb)):
+        with open(os.path.join(pkg, "shipping.py"), "rb") as f:
+            mine = f.read()
+        with zipfile.ZipFile(z) as zf:
+            assert zf.read("meresco_lucene_spark/shipping.py") == mine
+            assert "meresco_lucene_spark/index/store.py" in zf.namelist()
+
+    st = os.stat(za)
+    assert package_zip_path(a) == za
+    again = os.stat(za)
+    assert (again.st_ino, again.st_mtime_ns) == (st.st_ino, st.st_mtime_ns)
+    assert sorted(os.listdir(tempfile.tempdir)) == sorted(
+        os.path.basename(z) for z in (za, zb)
+    )
