@@ -55,7 +55,7 @@ query never reads: a term or boolean query does not scan ``positions``.
 ``term_postings(field, terms)`` adds the terms' shards as a partition
 filter, and ``term_dfs(field, terms)`` serves their df from the
 handle's term dictionary without a Spark job, so a TermQuery reads only
-its term's shard files and scores with a literal df.
+its term's shard files and scores with the dictionary's df.
 """
 
 from __future__ import annotations
@@ -1094,8 +1094,8 @@ class PersistentIndex:
 
     # ------------------------------------------------- term dictionary
     # Every exact-term read goes through the handle's term dictionary:
-    # the scorers of query/executor.py take df from term_dfs as a literal
-    # and read term_postings, and the WAND top-k below prunes the same
+    # the scorers of query/executor.py take df from term_dfs (a map
+    # constant in the plan) and read term_postings, and the WAND top-k below prunes the same
     # way (index/wand.py; rank- and score-identical to exhaustive scoring,
     # tested in test_store.py and test_segments.py).
 

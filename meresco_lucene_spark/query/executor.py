@@ -6,8 +6,9 @@ excludeQueries + facets + sortKeys + start/stop pagination + dedup —
 each recast as DataFrame ops:
 
   TermQuery     -> the term's postings (index.term_postings) scored by a
-                   BM25 column expr with df a literal from the index's
-                   term dictionary (index.term_dfs)
+                   BM25 column expr with df from the index's term
+                   dictionary (index.term_dfs), looked up by term in a
+                   map literal (_by_term)
   BooleanQuery  -> union of scoring-clause frames + groupBy sum(score)
                    with a matched-MUST count gate; FILTER -> left_semi;
                    MUST_NOT -> left_anti              (Q3 in SURVEY §2.2)
@@ -36,6 +37,7 @@ dims when facets are requested.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field as dc_field, fields as dc_fields
 from typing import Any, Sequence
 
@@ -173,7 +175,10 @@ def _term_hits(
     inline = not st.omit_norms and _use_inline_dl(index, quantized)
     dfs = index.term_dfs(fld, [value])
     p = index.term_postings(fld, list(dfs), with_dl=inline)
-    df = F.lit(dfs.get(value, 0))
+    # df as a map lookup, not a numeric literal: codegen writes a number
+    # into the generated Java, so each new df would compile new classes,
+    # while a map constant is one of the class's references (_by_term).
+    df = _by_term({value: dfs.get(value, 0)})
     if st.omit_norms:
         score = (
             idf_expr(df, st.n_docs)
@@ -190,6 +195,22 @@ def _term_hits(
         F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b, boost
     )
     return p.select("doc_id", score.alias("score"))
+
+
+def _by_term(values: dict[str, Any]) -> Column:
+    """Each posting's entry of ``values``, looked up by its ``term``
+    column in one map literal.
+
+    Whole-stage codegen writes a numeric literal into the generated Java
+    source but keeps a map constant in the generated class's
+    ``references`` array, so queries that differ only in their terms'
+    numbers (df, MUST count, boost) share one compiled class. The value
+    reaches the arithmetic unchanged, so scores are bit-identical to
+    folding it as a literal (``Log`` is ``StrictMath.log`` either way)."""
+    return F.element_at(
+        F.create_map(*[F.lit(x) for kv in values.items() for x in kv]),
+        F.col("term"),
+    )
 
 
 def _multi_term_hits(
@@ -238,10 +259,10 @@ def _fused_term_hits(
     """Several TermQuery scoring clauses on ONE field in ONE postings
     scan (guide §6.2 scan once / §4.1): one ``term_postings`` read
     replaces one filtered scan + decode branch per clause, per-term df
-    comes from the index's term dictionary as a CASE over literals, and
-    the per-clause (boost, MUST) weights fold into per-term CASE
-    expressions. Row-for-row identical to the per-clause union it
-    replaces: a doc matching term t contributed one row per clause of t
+    comes from the index's term dictionary, and the per-clause (boost,
+    MUST) weights fold into per-term weights; each is a lookup by the
+    posting's term (_by_term). Row-for-row identical to the per-clause
+    union it replaces: a doc matching term t contributed one row per clause of t
     with score s_t*boost_c and is_must flag — here the same addends
     arrive pre-summed per term (s_t*Σboost_c, count of MUST clauses),
     which the downstream groupBy aggregates identically. With all boosts
@@ -255,18 +276,7 @@ def _fused_term_hits(
     for c, is_must in clauses:
         w_boost[c.value] = w_boost.get(c.value, 0.0) + c.boost
         w_must[c.value] = w_must.get(c.value, 0) + (1 if is_must else 0)
-
-    def _per_term(mapping: dict, cast: str) -> Column:
-        expr = None
-        for t, v in mapping.items():
-            expr = (
-                F.when(F.col("term") == t, F.lit(v))
-                if expr is None
-                else expr.when(F.col("term") == t, F.lit(v))
-            )
-        return expr.otherwise(F.lit(0)).cast(cast)
-
-    is_must_c = _per_term(w_must, "int").alias("is_must")
+    is_must_c = _by_term(w_must).alias("is_must")
     uniform_boost = set(w_boost.values()) == {1.0}
     if sim == "TermFrequency":
         p = index.term_postings(fld, list(w_boost))
@@ -275,8 +285,7 @@ def _fused_term_hits(
         inline = not st.omit_norms and _use_inline_dl(index, quantized)
         dfs = index.term_dfs(fld, list(w_boost))
         p = index.term_postings(fld, list(dfs), with_dl=inline)
-        # no present term: no postings, and CASE needs a branch
-        df = _per_term(dfs, "long") if dfs else F.lit(0)
+        df = _by_term({t: dfs.get(t, 0) for t in w_boost})
         if st.omit_norms:
             score = idf_expr(df, st.n_docs) * (
                 F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1))
@@ -291,7 +300,7 @@ def _fused_term_hits(
                 F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b,
             )
     if not uniform_boost:
-        score = score * _per_term(w_boost, "double")
+        score = score * _by_term(w_boost)
     return p.select("doc_id", score.alias("score"), is_must_c)
 
 
@@ -375,6 +384,7 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         return _term_hits(index, q.field, terms[0], q.boost, quantized)
     st = index.field_stats(q.field)
     dfs = index.term_dfs(q.field, terms)
+    df = _by_term({t: dfs.get(t, 0) for t in terms})
 
     inline = _use_inline_dl(index, quantized)
     if getattr(index, "inline_dl", False):
@@ -389,31 +399,38 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         # The session-cached DataFrame index keeps the join chain: its
         # postings are already decoded in memory, so the aggregation
         # would only add an exchange (measured r6).
+        # Each term's df rides the same pick as its positions. A posting
+        # is picked by its term's place j in distinct_terms, looked up
+        # like df (_by_term), not by comparing with the term: the picks
+        # are common subexpressions, which codegen orders by their hash,
+        # so a literal term in them made new code for every phrase.
         distinct_terms = list(dict.fromkeys(terms))
-        p = index.term_postings(q.field, list(dfs), with_dl=inline)
-        aggs = [
-            F.first(
-                F.when(F.col("term") == t, F.col("positions")), ignorenulls=True
-            ).alias(f"_q{j}")
-            for j, t in enumerate(distinct_terms)
-        ]
+        p = index.term_postings(q.field, list(dfs), with_dl=inline).select(
+            "*",
+            _by_term({t: j for j, t in enumerate(distinct_terms)}).alias("_j"),
+            df.alias("_df"),
+        )
+        aggs = []
+        for j in range(len(distinct_terms)):
+            mine = F.col("_j") == j
+            aggs += [
+                F.first(F.when(mine, F.col("positions")), ignorenulls=True).alias(f"_q{j}"),
+                F.first(F.when(mine, F.col("_df")), ignorenulls=True).alias(f"_e{j}"),
+            ]
         if inline:
             # dl rides the first term's posting — no lengths join below
             aggs.append(
-                F.first(
-                    F.when(F.col("term") == terms[0], F.col("_bdl")),
-                    ignorenulls=True,
-                ).alias("_bdl")
+                F.first(F.when(F.col("_j") == 0, F.col("_bdl")), ignorenulls=True).alias("_bdl")
             )
         g = p.groupBy("doc_id").agg(*aggs)
         present = None
         for j in range(len(distinct_terms)):
             c = F.col(f"_q{j}").isNotNull()
             present = c if present is None else (present & c)
-        sel = ["doc_id"] + [
-            F.col(f"_q{distinct_terms.index(t)}").alias(f"_p{i}")
-            for i, t in enumerate(terms)
-        ]
+        sel = ["doc_id"]
+        for i, t in enumerate(terms):
+            j = distinct_terms.index(t)
+            sel += [F.col(f"_q{j}").alias(f"_p{i}"), F.col(f"_e{j}").alias(f"_d{i}")]
         if inline:
             sel.append(F.col("_bdl"))
         joined = g.filter(present).select(*sel)
@@ -421,7 +438,7 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         joined = None
         for i, t in enumerate(terms):
             p = index.term_postings(q.field, [t]).select(
-                "doc_id", F.col("positions").alias(f"_p{i}")
+                "doc_id", F.col("positions").alias(f"_p{i}"), df.alias(f"_d{i}")
             )
             joined = p if joined is None else joined.join(p, "doc_id")
 
@@ -432,11 +449,11 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     cand = joined.withColumn("_pf", phrase_freq).filter(F.col("_pf") > 0)
 
     # Sum of the phrase terms' idfs in query order, duplicates counted
-    # per occurrence, as Lucene's PhraseWeight does: a constant
-    # expression over the df literals (an absent term means no match).
+    # per occurrence, as Lucene's PhraseWeight does, over each term's df
+    # carried as _d{i} (an absent term means no match).
     idf_sum = None
-    for t in terms:
-        idf = idf_expr(F.lit(dfs.get(t, 0)), st.n_docs)
+    for i in range(len(terms)):
+        idf = idf_expr(F.col(f"_d{i}"), st.n_docs)
         idf_sum = idf if idf_sum is None else idf_sum + idf
     if inline:
         dl = F.col("_bdl")
@@ -475,14 +492,19 @@ class LuceneResponse:
     drilldownData: list[dict] = dc_field(default_factory=list)
     keys: list | None = None  # exported key set (composed queries)
     suggestions: dict | None = None  # spellcheck per word (LuceneCore)
+    # ms of the whole search() call, and of its page ("searchTime") and
+    # facet ("facetTime") actions (Lucene.java:287-344); timings are not
+    # part of an answer, so two responses compare equal without them
+    queryTime: int | None = dc_field(default=None, compare=False)
+    times: dict[str, int] | None = dc_field(default=None, compare=False)
 
     # ------------------------------------------------- JSON wire parity
     # The reference serializes responses with a tagged-Hit JSON codec
     # (luceneresponse.py:38-65: Hit becomes {"__class__": "Hit", ...};
     # fromJson reverses it). Unset/empty members are omitted on the way
     # out — the reference only carries keys that were set — and unknown
-    # keys coming IN (e.g. the Java side's queryTime/times) are kept as
-    # plain attributes, like the reference's kwargs-open classes.
+    # keys coming IN (e.g. a Java hit's sortValues) are kept as plain
+    # attributes, like the reference's kwargs-open classes.
 
     def asJson(self, **dumps_kwargs) -> str:
         import json
@@ -641,14 +663,21 @@ def search(
     (stop <= start).
 
     score_adjust: optional fn(hits_df)->hits_df applied before ranking —
-    the composed-query rank-blend hook (AggregateScoreSuperCollector)."""
+    the composed-query rank-blend hook (AggregateScoreSuperCollector).
+
+    The response carries the reference's timings in ms: ``queryTime``
+    for the whole call, ``times["searchTime"]`` for the page action and,
+    with facets, ``times["facetTime"]`` for the facet action."""
+    t_query = time.perf_counter()
     h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters, quantized)
     if score_adjust is not None:
         h = score_adjust(h)
 
     # facets see all (pre-dedup) hits, like FacetSuperCollector, and need
     # only their doc ids: counted before the stored/sort-field join
+    t_facet = time.perf_counter()
     drilldown = drilldown_data(index, h, facets)
+    facet_ms = _ms_since(t_facet)
 
     needed = set(stored_fields)
     if dedup_field:
@@ -696,7 +725,11 @@ def search(
         )
 
     dupes = ["duplicateCount"] if dedup_field else []
+    t_page = time.perf_counter()
     totals, rows = collect_page(h, sort_exprs(sort_keys), start, stop, dupes)
+    times = {"searchTime": _ms_since(t_page)}
+    if facets:
+        times["facetTime"] = facet_ms
     hits_out = []
     for r in rows:
         d = r.asDict()
@@ -713,7 +746,15 @@ def search(
         hits=hits_out,
         totalWithDuplicates=totals["duplicateCount"] if dedup_field else None,
         drilldownData=drilldown,
+        queryTime=_ms_since(t_query),
+        times=times,
     )
+
+
+def _ms_since(t0: float) -> int:
+    """Whole milliseconds since ``t0`` (a ``time.perf_counter()``), as
+    the reference reports its timings."""
+    return int((time.perf_counter() - t0) * 1000)
 
 
 def collect_page(

@@ -3,8 +3,11 @@
 The total, the pre-dedup total and the page ride one observed collect;
 all facet dims share one aggregation. These tests pin the edge cases of
 that collect (an empty page runs only the totals), the facet helper
-against a per-dim recount, and the Spark job counts of a search."""
+against a per-dim recount, the Spark job counts of a search, the Java
+classes and py4j commands a warm search costs, and the response's
+timings."""
 
+import json
 from collections import Counter
 
 import pandas as pd
@@ -13,12 +16,14 @@ import pytest
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
 from meresco_lucene_spark.index.store import build_index_store
 from meresco_lucene_spark.query.executor import (
+    LuceneResponse,
     drilldown_data,
     facet_counts,
     hits,
     search,
 )
 from meresco_lucene_spark.query.ir import MUST_NOT, SHOULD, Q
+from meresco_lucene_spark.session import SESSION_DEFAULTS
 
 LANGS = ["py", "go", "java", None]
 REPOS = ["r0", "r1", "r2", "r3", "r4", None]
@@ -211,8 +216,8 @@ def test_facet_path_deeper_than_dim_raises(ix):
 # partitions; with the term_stats broadcast join before it: 2, 7 and 5
 # for term, facets and dedup, 3 for a fused boolean and 5 for a phrase).
 # Under adaptive execution every shuffle stage and broadcast is a job of
-# its own: a term query is the observed page collect alone (df is a
-# literal from the store's term dictionary); a fused AND/OR and a phrase
+# its own: a term query is the observed page collect alone (df comes
+# from the store's term dictionary, no job); a fused AND/OR and a phrase
 # add the doc_id groupBy's shuffle stage; the facet action (semi-join,
 # groupBy, per-dim top-n window) and dedup's window add their shuffle
 # stages.
@@ -243,3 +248,86 @@ def test_search_job_counts(spark, indexes):
         j0 = _jobs(spark)
         search(ix, q, **kw)
         assert _jobs(spark) - j0 <= bound, name
+
+
+def _compiles(spark):
+    """Java classes compiled by codegen so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_new_terms_compile_no_classes(spark, indexes):
+    """A query's df, MUST counts and boosts are map constants, not code:
+    after one warm search of a shape, the same shape over other terms
+    with other dfs reuses every compiled class (with literal df a term
+    search compiled 2 classes, a fused OR 2-4 and a phrase 2-3)."""
+    ix = indexes["store"]
+    dfs = ix.term_dfs("text", WORDS)
+    pairs = {
+        "term": (Q.term("text", "spark"), Q.term("text", "table")),
+        "or": (
+            Q.or_(Q.term("text", "spark"), Q.term("text", "scan")),
+            Q.or_(Q.term("text", "join"), Q.term("text", "table")),
+        ),
+        "phrase": (Q.phrase("text", "spark", "join"), Q.phrase("text", "table", "scan")),
+    }
+    assert dfs["spark"] != dfs["table"] and dfs["scan"] != dfs["join"]
+    for name, (warm, other) in pairs.items():
+        search(ix, warm)
+        c0 = _compiles(spark)
+        r = search(ix, other)
+        assert r.total > 0, name
+        assert _compiles(spark) - c0 == 0, name
+
+
+def test_get_spark_session_confs(spark):
+    """The test session comes from get_spark and carries the codegen
+    cache size and the call-site capture switch of SESSION_DEFAULTS."""
+    for key in (
+        "spark.sql.codegen.cache.maxEntries",
+        "spark.python.sql.dataFrameDebugging.enabled",
+    ):
+        assert spark.conf.get(key) == SESSION_DEFAULTS[key], key
+
+
+# py4j commands of one warm term search on the store, not counting the
+# object-release messages py4j's finalizer sends whenever Python frees
+# JVM handles (their number depends on what the tests before freed):
+# 240, measured at 4 cores. With PySpark's per-Column call-site capture
+# on, a warm term search on the benchmark store made 682.
+TERM_PY4J_COMMANDS = 250
+RELEASE = "m\nd\n"  # py4j protocol: memory command, delete subcommand
+
+
+def test_term_search_py4j_commands(spark, indexes, monkeypatch):
+    ix = indexes["store"]
+    search(ix, Q.term("text", "spark"))
+    client = spark.sparkContext._gateway._gateway_client
+    sent = [0]
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent[0] += not command.startswith(RELEASE)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    search(ix, Q.term("text", "join"))
+    monkeypatch.undo()
+    assert 0 < sent[0] <= TERM_PY4J_COMMANDS
+
+
+def test_search_reports_times(indexes):
+    """queryTime is the whole call, times holds the page (searchTime)
+    and facet (facetTime) actions, all whole ms, and both survive the
+    JSON round trip."""
+    r = search(
+        indexes["store"], Q.term("text", "spark"), facets=[{"fieldname": "lang"}]
+    )
+    assert set(r.times) == {"searchTime", "facetTime"}
+    for v in r.times.values():
+        assert isinstance(v, int) and 0 <= v <= r.queryTime
+    back = LuceneResponse.fromJson(r.asJson())
+    assert (back.queryTime, back.times) == (r.queryTime, r.times)
+    assert json.loads(r.asJson())["times"] == r.times
+    plain = search(indexes["store"], Q.term("text", "spark"))
+    assert set(plain.times) == {"searchTime"}

@@ -22,6 +22,7 @@ import pyspark
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
 from meresco_lucene_spark.corpus import content_for_row
+from meresco_lucene_spark.session import SESSION_DEFAULTS
 from meresco_lucene_spark.shipping import package_zip_path
 
 N, SEED, K = 800, 42, 10
@@ -87,6 +88,9 @@ def test_spark_submit_py_files(tmp_path):
     res = json.loads(line)
 
     assert res["sha_ok"] is True and res["sha_checked"] >= 25
+    # the engine's session defaults hold on the submit path, and a
+    # --conf flag keeps its own value
+    assert res["conf"] == {**SESSION_DEFAULTS, "spark.sql.shuffle.partitions": "8"}
     assert res["n_shards_built"] == 4
 
     # Rank identity vs the no-Spark oracle. Exact-score ties are broken

@@ -1,6 +1,6 @@
 """Every exact-term scorer reads the index's term dictionary.
 
-``term_dfs`` gives a term's df as a literal and ``term_postings`` reads
+``term_dfs`` gives a term's df without a Spark job and ``term_postings`` reads
 only the term's shards. These tests check ``search()`` totals and scores
 against exhaustive scoring in Python on a 32-shard store with salted hot
 terms, and that a term's postings are read from its own ``shard=``

@@ -37,6 +37,7 @@ def main() -> int:
 
     # Engine modules resolve from --py-files (this file is NOT inside
     # the package; a bare checkout without the zip would fail here).
+    from pyspark import SparkConf
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -45,8 +46,19 @@ def main() -> int:
         build_index_store,
         open_persistent_index,
     )
+    from meresco_lucene_spark.session import SESSION_DEFAULTS, shuffle_partitions_for
 
-    spark = SparkSession.builder.appName("mls_submit_job").getOrCreate()
+    # The engine's session defaults, under whatever the submit's --conf
+    # flags set; shuffle partitions follow the cluster's task slots.
+    conf = SparkConf()
+    for k, v in SESSION_DEFAULTS.items():
+        conf.setIfMissing(k, v)
+    spark = SparkSession.builder.appName("mls_submit_job").config(conf=conf).getOrCreate()
+    if not conf.contains("spark.sql.shuffle.partitions"):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions_for(spark.sparkContext.defaultParallelism)),
+        )
     try:
         corpus = synthesize_corpus(spark, args.n, seed=args.seed)
 
@@ -94,6 +106,10 @@ def main() -> int:
                     "or_topk": or_top,
                     "sha_ok": sha_ok,
                     "sha_checked": len(sample_ids),
+                    "conf": {
+                        k: spark.conf.get(k)
+                        for k in [*SESSION_DEFAULTS, "spark.sql.shuffle.partitions"]
+                    },
                 }
             ),
             flush=True,
