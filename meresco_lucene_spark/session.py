@@ -5,12 +5,16 @@ sized to cores (not 200), AQE on (runtime coalescing + skew-join),
 Arrow enabled for the pandas-UDF hot paths, UTC so DuckDB oracle
 comparisons are stable.
 
-The settings that do not depend on the master live in
-``SESSION_DEFAULTS``; ``get_spark`` and the ``spark-submit`` job
-(tools/submit_job.py) both start from it. Two of them exist for the
-query path's fixed driver cost, which at benchmark scale outweighs the
-scan (a warm term search spent about three quarters of its time on the
-driver before its one Spark job started):
+The settings that do not depend on the master come from
+``session_defaults()``; ``get_spark`` and the ``spark-submit`` job
+(tools/submit_job.py) both start from it. It is a function, not a
+module-level dict, so that ``SPARK_GRAFT_MAX_PARTITION_BYTES`` is read
+when a session is made, not when the package is imported.
+
+Two of the settings exist for the query path's fixed driver cost,
+which at benchmark scale outweighs the scan (a warm term search spent
+about three quarters of its time on the driver before its one Spark
+job started):
 
 - ``spark.sql.codegen.cache.maxEntries`` (static): whole-stage codegen
   compiles each plan to Java classes and keeps them in a process-wide
@@ -42,30 +46,33 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-SESSION_DEFAULTS: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # zstd parquet: ~25-30% smaller index/intermediate files than
-    # snappy at indistinguishable local build time (measured r6,
-    # OPTIMIZATION_r06.md); at cluster scale the saved scan bytes
-    # are the win (guide §6)
-    "spark.sql.parquet.compression.codec": "zstd",
-    # let the planner pick shuffled-hash over sort-merge when the
-    # per-partition build side fits (guide §3.1); most engine joins
-    # are broadcast anyway
-    "spark.sql.join.preferSortMergeJoin": "false",
-    # scan split size: 128m local default (tiny test inputs), raise
-    # via env for large sequential scans on real clusters (guide §6)
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"
-    ),
-    # see the module docstring for these two
-    "spark.sql.codegen.cache.maxEntries": "1000",
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
-}
+
+def session_defaults() -> dict[str, str]:
+    """The engine's session settings that do not depend on the master."""
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # zstd parquet: ~25-30% smaller index/intermediate files than
+        # snappy at indistinguishable local build time (measured r6,
+        # OPTIMIZATION_r06.md); at cluster scale the saved scan bytes
+        # are the win (guide §6)
+        "spark.sql.parquet.compression.codec": "zstd",
+        # let the planner pick shuffled-hash over sort-merge when the
+        # per-partition build side fits (guide §3.1); most engine joins
+        # are broadcast anyway
+        "spark.sql.join.preferSortMergeJoin": "false",
+        # scan split size: 128m local default (tiny test inputs), raise
+        # via env for large sequential scans on real clusters (guide §6)
+        "spark.sql.files.maxPartitionBytes": os.environ.get(
+            "SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"
+        ),
+        # see the module docstring for these two
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+    }
 
 
 def shuffle_partitions_for(cores: int) -> int:
@@ -88,7 +95,7 @@ def get_spark(
     if driver_memory is None:
         driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", "12g")
     conf = {
-        **SESSION_DEFAULTS,
+        **session_defaults(),
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.driver.memory": driver_memory,
         "spark.ui.enabled": "false",

@@ -23,7 +23,7 @@ from meresco_lucene_spark.query.executor import (
     search,
 )
 from meresco_lucene_spark.query.ir import MUST_NOT, SHOULD, Q
-from meresco_lucene_spark.session import SESSION_DEFAULTS
+from meresco_lucene_spark.session import session_defaults
 
 LANGS = ["py", "go", "java", None]
 REPOS = ["r0", "r1", "r2", "r3", "r4", None]
@@ -282,12 +282,12 @@ def test_new_terms_compile_no_classes(spark, indexes):
 
 def test_get_spark_session_confs(spark):
     """The test session comes from get_spark and carries the codegen
-    cache size and the call-site capture switch of SESSION_DEFAULTS."""
+    cache size and the call-site capture switch of session_defaults()."""
     for key in (
         "spark.sql.codegen.cache.maxEntries",
         "spark.python.sql.dataFrameDebugging.enabled",
     ):
-        assert spark.conf.get(key) == SESSION_DEFAULTS[key], key
+        assert spark.conf.get(key) == session_defaults()[key], key
 
 
 # py4j commands of one warm term search on the store, not counting the
@@ -329,5 +329,9 @@ def test_search_reports_times(indexes):
     back = LuceneResponse.fromJson(r.asJson())
     assert (back.queryTime, back.times) == (r.queryTime, r.times)
     assert json.loads(r.asJson())["times"] == r.times
+    # a top-level key that is not a field survives as an attribute
+    foreign = json.loads(r.asJson())
+    foreign["topDocsTime"] = 3
+    assert LuceneResponse.fromJson(json.dumps(foreign)).topDocsTime == 3
     plain = search(indexes["store"], Q.term("text", "spark"))
     assert set(plain.times) == {"searchTime"}

@@ -22,7 +22,7 @@ import pyspark
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
 from meresco_lucene_spark.corpus import content_for_row
-from meresco_lucene_spark.session import SESSION_DEFAULTS
+from meresco_lucene_spark.session import session_defaults
 from meresco_lucene_spark.shipping import package_zip_path
 
 N, SEED, K = 800, 42, 10
@@ -68,7 +68,8 @@ def test_spark_submit_py_files(tmp_path):
         [
             spark_submit,
             "--master", "local[4]",
-            "--conf", "spark.sql.shuffle.partitions=8",
+            "--conf", "spark.sql.shuffle.partitions=5",
+            "--conf", "spark.sql.adaptive.skewJoin.enabled=false",
             "--conf", "spark.sql.session.timeZone=UTC",
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.driver.host=127.0.0.1",
@@ -88,9 +89,14 @@ def test_spark_submit_py_files(tmp_path):
     res = json.loads(line)
 
     assert res["sha_ok"] is True and res["sha_checked"] >= 25
-    # the engine's session defaults hold on the submit path, and a
-    # --conf flag keeps its own value
-    assert res["conf"] == {**SESSION_DEFAULTS, "spark.sql.shuffle.partitions": "8"}
+    # the engine's session defaults hold on the submit path, and each
+    # --conf flag keeps its own value over a default (skewJoin) and over
+    # the task-slot sizing (max(4, 8) = 8 shuffle partitions)
+    assert res["conf"] == {
+        **session_defaults(),
+        "spark.sql.adaptive.skewJoin.enabled": "false",
+        "spark.sql.shuffle.partitions": "5",
+    }
     assert res["n_shards_built"] == 4
 
     # Rank identity vs the no-Spark oracle. Exact-score ties are broken

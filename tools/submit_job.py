@@ -37,7 +37,7 @@ def main() -> int:
 
     # Engine modules resolve from --py-files (this file is NOT inside
     # the package; a bare checkout without the zip would fail here).
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -46,15 +46,19 @@ def main() -> int:
         build_index_store,
         open_persistent_index,
     )
-    from meresco_lucene_spark.session import SESSION_DEFAULTS, shuffle_partitions_for
+    from meresco_lucene_spark.session import session_defaults, shuffle_partitions_for
 
     # The engine's session defaults, under whatever the submit's --conf
-    # flags set; shuffle partitions follow the cluster's task slots.
-    conf = SparkConf()
-    for k, v in SESSION_DEFAULTS.items():
-        conf.setIfMissing(k, v)
-    spark = SparkSession.builder.appName("mls_submit_job").config(conf=conf).getOrCreate()
-    if not conf.contains("spark.sql.shuffle.partitions"):
+    # flags set. Those flags live in spark-submit's JVM, so connect to it
+    # first: only then is SparkConf() backed by the JVM's conf (before,
+    # it is an empty Python dict). Shuffle partitions follow the
+    # cluster's task slots unless --conf sets them.
+    SparkContext._ensure_initialized()
+    submitted = SparkConf()
+    defaults = session_defaults()
+    missing = {k: v for k, v in defaults.items() if not submitted.contains(k)}
+    spark = SparkSession.builder.appName("mls_submit_job").config(map=missing).getOrCreate()
+    if not submitted.contains("spark.sql.shuffle.partitions"):
         spark.conf.set(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions_for(spark.sparkContext.defaultParallelism)),
@@ -108,7 +112,7 @@ def main() -> int:
                     "sha_checked": len(sample_ids),
                     "conf": {
                         k: spark.conf.get(k)
-                        for k in [*SESSION_DEFAULTS, "spark.sql.shuffle.partitions"]
+                        for k in [*defaults, "spark.sql.shuffle.partitions"]
                     },
                 }
             ),
