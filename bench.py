@@ -5,7 +5,7 @@ Default mode (driver contract): run at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line:
   {"metric": ..., "value": <total suite sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <float>,
-   "index_docs_per_sec": ..., "segment_docs_per_sec": ...}
+   "segment_docs_per_sec": ..., "store_docs_per_sec": ...}
 
 ``segment_build_corpus`` and the ``wand_*`` heads build and query a
 single-field store (``build_index_store(text_cols=["content"])``) of
@@ -67,7 +67,6 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
 
     from meresco_lucene_spark import entry_queries
     from meresco_lucene_spark.corpus import synthesize_corpus
-    from meresco_lucene_spark.index.builder import InvertedIndex
     from meresco_lucene_spark.index.store import build_index_store
 
     q_rep = int(os.environ.get("MLS_BENCH_REPEATS", "3"))
@@ -85,24 +84,8 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
     store_dir = os.path.join(tempfile.gettempdir(), f"mls_bench_store_{os.getpid()}")
 
     # --- builds, interleaved passes --------------------------------------
-    idx = seg = None
+    seg = None
     for _ in range(b_rep):
-        def _build_and_materialize():
-            ix = InvertedIndex.build(
-                docs,
-                id_col="doc_id",
-                text_cols=["text"],
-                keyword_cols=["lang", "source"],
-                facet_fields={"lang": ["lang"], "langsrc": ["lang", "source"]},
-            )
-            ix.postings.count()  # materialize the cache inside the timing
-            return ix
-
-        if idx is not None:
-            idx.unpersist()
-        t, idx = timed(_build_and_materialize)
-        rec("index_build_documents", t)
-
         shutil.rmtree(seg_dir, ignore_errors=True)
         t, seg = timed(
             lambda: build_index_store(
@@ -173,8 +156,8 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
         rec("inc_term_query", t)
         shutil.rmtree(inc_dir, ignore_errors=True)
 
-    entry_queries._INDEX_CACHE[(id(spark), sf_dir)] = idx
-    entry_queries._STORE_CACHE[(id(spark), sf_dir)] = store_dir
+    # the documents entries below read this store instead of building one
+    entry_queries._BUILT[(*entry_queries._cache_key(spark, sf_dir), "store")] = store_dir
 
     # --- queries, interleaved passes -------------------------------------
     heads = [
@@ -228,7 +211,6 @@ def run_suite(spark, sf_dir: str, n_corpus: int) -> dict:
         "sf": _sf_of(sf_dir),
         "n_documents": n_docs,
         "n_corpus": n_corpus,
-        "index_docs_per_sec": round(n_docs / queries["index_build_documents"], 1),
         "segment_docs_per_sec": round(n_corpus / queries["segment_build_corpus"], 1),
         "store_docs_per_sec": round(n_docs / queries["store_build_documents"], 1),
         "inc_commit_docs_per_sec": round(n_docs / queries["inc_three_commits"], 1),

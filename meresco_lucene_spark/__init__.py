@@ -18,7 +18,6 @@ HOW is idiomatic Spark.
 
 from meresco_lucene_spark.session import get_spark
 from meresco_lucene_spark.core import LuceneCore, MultiLuceneSpark
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.ir import Q
 from meresco_lucene_spark.query.executor import LuceneResponse, search
 from meresco_lucene_spark.query.cql import cql_to_query
@@ -29,7 +28,6 @@ __all__ = [
     "get_spark",
     "LuceneCore",
     "MultiLuceneSpark",
-    "InvertedIndex",
     "Q",
     "LuceneResponse",
     "search",

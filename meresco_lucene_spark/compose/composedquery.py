@@ -42,7 +42,7 @@ from meresco_lucene_spark.query.executor import (
 from meresco_lucene_spark.query.ir import Q
 
 if TYPE_CHECKING:
-    from meresco_lucene_spark.index.builder import InvertedIndex
+    from meresco_lucene_spark.index.store import PersistentIndex
     from meresco_lucene_spark.compose.relational import RQ
 
 
@@ -342,7 +342,18 @@ def _query_with_drilldowns(cq: ComposedQuery, core: str) -> Q | None:
     return Q.boolean(*clauses)
 
 
-def collect_keys(index: "InvertedIndex", query: Q | None, key_field: str) -> DataFrame:
+class _WithForward:
+    """A reader whose forward table is replaced (by one with join-sort
+    columns added); everything else is the wrapped reader's."""
+
+    def __init__(self, index: "PersistentIndex", forward: DataFrame):
+        self._index, self.forward = index, forward
+
+    def __getattr__(self, name):
+        return getattr(self._index, name)
+
+
+def collect_keys(index: "PersistentIndex", query: Q | None, key_field: str) -> DataFrame:
     """KeySuperCollector (search/join/KeySuperCollector.java:35-62): the
     distinct key set of docs matching the query."""
     h = hits(index, query or Q.matchall()).select("doc_id")
@@ -355,7 +366,7 @@ def collect_keys(index: "InvertedIndex", query: Q | None, key_field: str) -> Dat
 
 
 def execute_composed(
-    cores: dict[str, "InvertedIndex"],
+    cores: dict[str, "PersistentIndex"],
     cq: ComposedQuery,
     export_key: str | None = None,
 ) -> LuceneResponse:
@@ -479,8 +490,6 @@ def execute_composed(
     # arbitrary doc's slot).
     sort_keys = list(cq.sort_keys or [])
     if any("core" in sk for sk in sort_keys):
-        import dataclasses
-
         aug = result_idx.forward
         resolved: list[dict] = []
         for i, sk in enumerate(sort_keys):
@@ -499,7 +508,7 @@ def execute_composed(
             )
             aug = aug.join(F.broadcast(vals), result_key, "left")
             resolved.append({**{k: v for k, v in sk.items() if k != "core"}, "sortBy": syn})
-        result_idx = dataclasses.replace(result_idx, forward=aug)
+        result_idx = _WithForward(result_idx, aug)
         sort_keys = resolved
 
     # ---- 5. result-core query -------------------------------------------

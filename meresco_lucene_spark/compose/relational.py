@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
-    from meresco_lucene_spark.index.builder import InvertedIndex
+    from meresco_lucene_spark.index.store import PersistentIndex
     from meresco_lucene_spark.query.ir import Q
 
 
@@ -75,7 +75,7 @@ class RQ:
         return RQ("not", q=q)
 
     # -------------------------------------------------------------- eval
-    def collect_keys(self, cores: dict[str, "InvertedIndex"]) -> KeySet:
+    def collect_keys(self, cores: dict[str, "PersistentIndex"]) -> KeySet:
         from meresco_lucene_spark.query.executor import hits
 
         if self.kind == "lucene":

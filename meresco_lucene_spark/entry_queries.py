@@ -7,8 +7,9 @@ deliberately expressible in DuckDB
 (lower(strip_accents(...)) + regexp [a-z0-9_]+) so BM25 itself is
 oracle-checked end-to-end: same formula, same top-k, same tie-breaks.
 
-Index builds are cached per sf_dir (module-level) because the driver
-calls each query separately.
+Index stores are built once per sf_dir and Spark application
+(module-level, _built_dir) because the driver calls each query
+separately; every query reopens them from disk.
 
 Floats are rounded to 4 decimals on BOTH sides (engine + oracle) before
 hashing; ordering inside the query uses full precision.
@@ -16,11 +17,17 @@ hashing; ordering inside the query uses full precision.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from meresco_lucene_spark.index.builder import InvertedIndex
+from meresco_lucene_spark.index.store import (
+    PersistentIndex,
+    build_index_store,
+    open_persistent_index,
+)
 from meresco_lucene_spark.query.bm25 import K1_DEFAULT, B_DEFAULT
 from meresco_lucene_spark.query.executor import (
     facet_counts_df,
@@ -30,8 +37,6 @@ from meresco_lucene_spark.query.executor import (
 )
 from meresco_lucene_spark.query.cql import cql_to_query
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
-
-_INDEX_CACHE: dict[tuple[str, str], InvertedIndex] = {}
 
 # DuckDB CTE prelude shared by the full-text oracles: tokenize, tf, dl,
 # corpus stats, df — the same quantities the engine's index tables hold.
@@ -60,43 +65,48 @@ _DOCS_INDEX_SPEC = dict(
 )
 
 
-def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
-    key = (id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        from meresco_lucene_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        _INDEX_CACHE[key] = InvertedIndex.build(df, **_DOCS_INDEX_SPEC)
-    return _INDEX_CACHE[key]
+def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Key of the per-input caches below: the Spark application and the
+    input dir. Not ``id(spark)``: Python reuses an object's id once the
+    object is gone, so a later session could be handed a stopped
+    session's entries."""
+    return (spark.sparkContext.applicationId, sf_dir)
 
 
-_STORE_CACHE: dict[tuple[int, str], str] = {}
+# (application, sf_dir, name) -> the temp dir an entry's fixture was built in
+_BUILT: dict[tuple[str, str, str], str] = {}
 
 
-def get_persistent_index(spark: SparkSession, sf_dir: str):
-    """The seg_* entries' index: a persistent store built ONCE per
-    sf_dir, then REOPENED from disk on every query (the session-scoped
-    HANDLE cache in store.open_persistent_index — no session-cached
-    DataFrame *data*, no re-tokenization, parquet re-read per action;
-    the reference's durable commit -> search contract)."""
-    from meresco_lucene_spark.index.store import (
-        build_index_store,
-        open_persistent_index,
-    )
-
-    key = (id(spark), sf_dir)
-    if key not in _STORE_CACHE:
+def _built_dir(spark: SparkSession, sf_dir: str, name: str, build) -> str:
+    """The dir that ``build(path)`` filled with fixture ``name`` over
+    ``sf_dir``: built ONCE per Spark application into a fresh temp dir,
+    then reused by every query."""
+    key = (*_cache_key(spark, sf_dir), name)
+    if key not in _BUILT:
         import tempfile
 
         from meresco_lucene_spark.shipping import ensure_shipped
 
         ensure_shipped(spark)
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        path = tempfile.mkdtemp(prefix="mls_store_")
-        build_index_store(df, path, **_DOCS_INDEX_SPEC)
-        _STORE_CACHE[key] = path
-    return open_persistent_index(spark, _STORE_CACHE[key])
+        path = tempfile.mkdtemp(prefix=f"mls_{name}_")
+        build(path)
+        _BUILT[key] = path
+    return _BUILT[key]
+
+
+def get_persistent_index(spark: SparkSession, sf_dir: str) -> PersistentIndex:
+    """The documents index: a persistent store built ONCE per sf_dir,
+    then REOPENED from disk on every query (the session-scoped HANDLE
+    cache in store.open_persistent_index — no session-cached DataFrame
+    *data*, no re-tokenization, parquet re-read per action; the
+    reference's durable commit -> search contract)."""
+    path = _built_dir(
+        spark, sf_dir, "store",
+        lambda p: build_index_store(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), p, **_DOCS_INDEX_SPEC
+        ),
+    )
+    return open_persistent_index(spark, path)
 
 
 def _round_score(df: DataFrame, col: str = "score") -> DataFrame:
@@ -109,41 +119,41 @@ def _topk(df: DataFrame, k: int = 10) -> DataFrame:
 
 # ------------------------------------------------------------------ queries
 
-def q_term_bm25_top10(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_term_bm25_top10(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q2+C1: TermQuery scored with Lucene-8 BM25, top-10 by score."""
     idx = get_idx(spark, sf_dir)
     return _round_score(_topk(hits(idx, Q.term("text", "spark"))))
 
 
-def q_bool_must_top10(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_bool_must_top10(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q3 MUST: conjunction, score = sum of clause scores."""
     idx = get_idx(spark, sf_dir)
     q = Q.and_(Q.term("text", "merge"), Q.term("text", "vector"))
     return _round_score(_topk(hits(idx, q)))
 
 
-def q_bool_should_top10(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_bool_should_top10(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q3 SHOULD: disjunction, score = sum of matching clause scores."""
     idx = get_idx(spark, sf_dir)
     q = Q.or_(Q.term("text", "customer"), Q.term("text", "stream"))
     return _round_score(_topk(hits(idx, q)))
 
 
-def q_bool_must_not(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_bool_must_not(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q3 MUST_NOT: anti-join; count + ids (no scores -> exact)."""
     idx = get_idx(spark, sf_dir)
     q = Q.not_(Q.term("text", "window"), Q.term("text", "spark"))
     return hits(idx, q).select("doc_id").orderBy("doc_id")
 
 
-def q_bool_filter_top10(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_bool_filter_top10(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q3 FILTER: non-scoring conjunctive clause (keyword field)."""
     idx = get_idx(spark, sf_dir)
     q = Q.boolean((MUST, Q.term("text", "table")), (FILTER, Q.term("lang", "en")))
     return _round_score(_topk(hits(idx, q)))
 
 
-def q_phrase_match(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_phrase_match(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q4 PhraseQuery: ordered-adjacent 'fast table'; match set only
     (phrase_freq scoring is engine-side; the oracle checks the match
     semantics via token-adjacency regex)."""
@@ -151,26 +161,26 @@ def q_phrase_match(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataF
     return hits(idx, Q.phrase("text", "fast", "table")).select("doc_id").orderBy("doc_id")
 
 
-def q_prefix_docs(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_prefix_docs(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q5 PrefixQuery: constant-score docs containing a 'sca'-prefixed term."""
     idx = get_idx(spark, sf_dir)
     return hits(idx, Q.prefix("text", "sca")).select("doc_id").orderBy("doc_id")
 
 
-def q_matchall_count(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_matchall_count(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q1+C3: MatchAllDocsQuery + TotalHitCount collector."""
     idx = get_idx(spark, sf_dir)
     return hits(idx, Q.matchall()).agg(F.count("*").cast("long").alias("total"))
 
 
-def q_range_numeric(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_range_numeric(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q7 RangeQuery over a numeric doc-value (n_chars), bounds incl/excl."""
     idx = get_idx(spark, sf_dir)
     q = Q.range("n_chars", lower=200, upper=400, include_lower=True, include_upper=False)
     return hits(idx, q).select("doc_id").orderBy("doc_id")
 
 
-def q_facet_lang(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_facet_lang(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """C4 FacetSuperCollector: facet counts over all hits, top terms by
     count desc / term asc."""
     idx = get_idx(spark, sf_dir)
@@ -178,7 +188,7 @@ def q_facet_lang(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFra
     return facet_counts_df(idx, all_hits, "lang")
 
 
-def q_facet_drilldown(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_facet_drilldown(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """C4+Q10 hierarchical drilldown: source counts under lang='en'
     (taxonomy path [lang, source], Lucene.java:611-627)."""
     idx = get_idx(spark, sf_dir)
@@ -187,14 +197,14 @@ def q_facet_drilldown(spark: SparkSession, sf_dir: str, get_idx=get_index) -> Da
     return facet_counts_df(idx, h, "langsrc", path=["en"]).limit(10)
 
 
-def q_facet_on_query(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_facet_on_query(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """C4 facets restricted to a query's hit set."""
     idx = get_idx(spark, sf_dir)
     h = hits(idx, Q.term("text", "join"))
     return facet_counts_df(idx, h, "lang")
 
 
-def q_sort_paginate(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_sort_paginate(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """O2+O6: sortKeys + start/stop pagination — page [10:20) of docs
     sorted by n_chars desc, doc_id asc."""
     idx = get_idx(spark, sf_dir)
@@ -210,7 +220,7 @@ def q_sort_paginate(spark: SparkSession, sf_dir: str, get_idx=get_index) -> Data
     )
 
 
-def q_dedup_by_lang(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_dedup_by_lang(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """C5 DeDupFilterSuperCollector: best doc per dedup key (highest
     n_chars, doc_id tiebreak) + duplicateCount per group."""
     idx = get_idx(spark, sf_dir)
@@ -227,7 +237,7 @@ def q_dedup_by_lang(spark: SparkSession, sf_dir: str, get_idx=get_index) -> Data
     )
 
 
-def q_prefix_search_terms(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_prefix_search_terms(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """O8 prefixSearch (autocomplete): top terms by docFreq with prefix
     's' (Lucene.java:629-666; client sorts by count _lucene.py:132-143)."""
     idx = get_idx(spark, sf_dir)
@@ -240,7 +250,7 @@ def q_prefix_search_terms(spark: SparkSession, sf_dir: str, get_idx=get_index) -
     )
 
 
-def q_suggest_spellcheck(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_suggest_spellcheck(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """O11 suggest: edit-distance<=2 candidates for 'tabel' ranked by
     docFreq (DirectSpellChecker semantics over the term dict)."""
     idx = get_idx(spark, sf_dir)
@@ -254,7 +264,7 @@ def q_suggest_spellcheck(spark: SparkSession, sf_dir: str, get_idx=get_index) ->
     )
 
 
-def q_similar_documents(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_similar_documents(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """O12 similarDocuments (MLT): seed doc's terms with df <= 0.1*N
     (CommonTermsQuery maxFreq 0.1, Lucene.java:818-846), OR over other
     docs, ranked by count of shared rare terms.
@@ -295,17 +305,16 @@ def q_distance_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     JsonQueryConverter.java:333-339): docs whose point lies within
     2500 km of (10.25, 20.5); haversine on the mean earth radius,
     constant score. Coordinates synthesized from doc_id."""
-    from meresco_lucene_spark.shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    idx = InvertedIndex.build(
-        _geo_docs(spark, sf_dir), id_col="doc_id", keyword_cols=["lang"], cache=False
+    path = _built_dir(
+        spark, sf_dir, "geo",
+        lambda p: build_index_store(_geo_docs(spark, sf_dir), p, keyword_cols=["lang"]),
     )
+    idx = open_persistent_index(spark, path)
     q = Q.distance("geo", 10.25, 20.5, 2_500_000.0)
     return hits(idx, q).select("doc_id").orderBy("doc_id")
 
 
-def q_cql_boolean(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFrame:
+def q_cql_boolean(spark: SparkSession, sf_dir: str, get_idx=get_persistent_index) -> DataFrame:
     """Q13 CQL front-end END-TO-END: the reference's full query pipeline
     (CQL string -> QueryExpression -> query IR -> plan,
     adaptertolucenequery.py:42-52): parse a CQL boolean and execute it —
@@ -314,9 +323,6 @@ def q_cql_boolean(spark: SparkSession, sf_dir: str, get_idx=get_index) -> DataFr
     idx = get_idx(spark, sf_dir)
     q = cql_to_query("text = window NOT text = spark")
     return hits(idx, q).select("doc_id").orderBy("doc_id")
-
-
-_INGEST_CACHE: dict[tuple[int, str], str] = {}
 
 
 def q_ingest_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,23 +335,19 @@ def q_ingest_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     real streams get batch boundaries from the source."""
     from meresco_lucene_spark.streaming.ingest import IngestSink
 
-    key = (id(spark), sf_dir)
-    if key not in _INGEST_CACHE:
-        import tempfile
-
+    def build(state_dir: str) -> None:
         events = spark.read.parquet(f"{sf_dir}/events.parquet")
         w = Window.orderBy("ts", "event_id")
         staged = events.withColumn("_batch", F.ntile(4).over(w)).withColumn(
             "_seq", F.row_number().over(w)
         )
-        state_dir = tempfile.mkdtemp(prefix="mls_ingest_")
         sink = IngestSink(spark, state_dir, id_col="user_id")
         for b in range(1, 5):
             sink.process_batch(
                 staged.filter(F.col("_batch") == b).drop("_batch"), b - 1
             )
-        _INGEST_CACHE[key] = state_dir
-    sink = IngestSink(spark, _INGEST_CACHE[key], id_col="user_id")
+
+    sink = IngestSink(spark, _built_dir(spark, sf_dir, "ingest", build), id_col="user_id")
     return (
         sink.current_state()
         .select("user_id", "event_id", "event_type", F.round("value", 4).alias("value"))
@@ -360,7 +362,6 @@ def q_stateful_versioned_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-changing update with its per-doc version; the oracle is the
     closed form: version 0 = original text, version 1 = edited text,
     nothing from the resend."""
-    import os as _os
     import tempfile
 
     from meresco_lucene_spark.streaming.stateful import versioned_updates
@@ -371,7 +372,7 @@ def q_stateful_versioned_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     d = tempfile.mkdtemp(prefix="mls_vu_")
-    src = _os.path.join(d, "in")
+    src = os.path.join(d, "in")
     batches = [
         docs,
         docs,  # identical resend -> fully suppressed
@@ -381,22 +382,22 @@ def q_stateful_versioned_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.coalesce(1).write.mode("append").parquet(src)
         # one file per micro-batch, ordered by mtime (FileStreamSource
         # processes oldest-first with maxFilesPerTrigger=1)
-        for f in _os.listdir(src):
-            p = _os.path.join(src, f)
-            if f.endswith(".parquet") and _os.path.getmtime(p) > i:
-                _os.utime(p, (i + 1, i + 1))
+        for f in os.listdir(src):
+            p = os.path.join(src, f)
+            if f.endswith(".parquet") and os.path.getmtime(p) > i:
+                os.utime(p, (i + 1, i + 1))
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"vu_{_os.getpid()}_{abs(hash(sf_dir)) % 10000}"
+    name = f"vu_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
     q = (
         versioned_updates(stream, state_ttl_ms=0)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", _os.path.join(d, "ckpt"))
+        .option("checkpointLocation", os.path.join(d, "ckpt"))
         .start()
     )
     try:
@@ -427,86 +428,37 @@ def q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exercised over two "cores" built from TPC-H tables: customer core keyed
 # c_custkey, orders core keyed o_custkey. Every entry has a plain-SQL twin.
 
-_COMPOSED_CACHE: dict[tuple[int, str], dict] = {}
-
-
-def _composed_cores(spark: SparkSession, sf_dir: str) -> dict:
-    key = (id(spark), sf_dir)
-    if key not in _COMPOSED_CACHE:
-        from meresco_lucene_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet").withColumnRenamed(
-            "c_custkey", "doc_id"
-        ).withColumn("c_custkey", F.col("doc_id"))
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumnRenamed(
-            "o_orderkey", "doc_id"
-        )
-        core_c = InvertedIndex.build(
-            cust,
-            id_col="doc_id",
-            keyword_cols=["c_mktsegment"],
-            facet_fields={"cat_segment": ["c_mktsegment"]},
-        )
-        core_o = InvertedIndex.build(
-            orders,
-            id_col="doc_id",
-            keyword_cols=["o_orderstatus", "o_orderpriority"],
-            facet_fields={"cat_priority": ["o_orderpriority"]},
-        )
-        _COMPOSED_CACHE[key] = {"customers": core_c, "orders": core_o}
-    return _COMPOSED_CACHE[key]
-
-
-_COMPOSED_STORE_CACHE: dict[tuple[int, str], dict[str, str]] = {}
-
-
-def _composed_store_cores(spark: SparkSession, sf_dir: str):
-    """The seg_cq_* entries' cores: persistent multi-core stores built
-    ONCE per sf_dir, then REOPENED from disk on every query (fresh
+def _composed_store_cores(spark: SparkSession, sf_dir: str) -> dict[str, PersistentIndex]:
+    """The cq_* entries' cores: persistent multi-core stores built ONCE
+    per sf_dir, then REOPENED from disk on every query (fresh
     PersistentIndex handles — no session-cached DataFrames). Reference
     contract: MultiLucene.java:100-193 serves composed queries from
     durable committed per-core indexes."""
-    from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
 
-    key = (id(spark), sf_dir)
-    if key not in _COMPOSED_STORE_CACHE:
-        import tempfile
-
-        from meresco_lucene_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
+    def build(path: str) -> None:
         cust = spark.read.parquet(f"{sf_dir}/customer.parquet").withColumnRenamed(
             "c_custkey", "doc_id"
         ).withColumn("c_custkey", F.col("doc_id"))
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumnRenamed(
             "o_orderkey", "doc_id"
         )
-        paths: dict[str, str] = {}
-        specs = {
-            "customers": (
-                cust,
-                dict(
-                    keyword_cols=["c_mktsegment"],
-                    facet_fields={"cat_segment": ["c_mktsegment"]},
-                ),
-            ),
-            "orders": (
-                orders,
-                dict(
-                    keyword_cols=["o_orderstatus", "o_orderpriority"],
-                    facet_fields={"cat_priority": ["o_orderpriority"]},
-                ),
-            ),
-        }
-        for name, (df, spec) in specs.items():
-            path = tempfile.mkdtemp(prefix=f"mls_cqstore_{name}_")
-            build_index_store(df, path, id_col="doc_id", **spec)
-            paths[name] = path
-        _COMPOSED_STORE_CACHE[key] = paths
+        build_index_store(
+            cust,
+            os.path.join(path, "customers"),
+            keyword_cols=["c_mktsegment"],
+            facet_fields={"cat_segment": ["c_mktsegment"]},
+        )
+        build_index_store(
+            orders,
+            os.path.join(path, "orders"),
+            keyword_cols=["o_orderstatus", "o_orderpriority"],
+            facet_fields={"cat_priority": ["o_orderpriority"]},
+        )
+
+    path = _built_dir(spark, sf_dir, "cqstores", build)
     return {
-        name: PersistentIndex(spark, p)
-        for name, p in _COMPOSED_STORE_CACHE[key].items()
+        name: PersistentIndex(spark, os.path.join(path, name))
+        for name in ("customers", "orders")
     }
 
 
@@ -518,7 +470,7 @@ def _cq(result_from: str) -> "ComposedQuery":
     return cq
 
 
-def q_cq_join_semi(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_join_semi(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J2 multi-core filter join: customers having a 1-URGENT order
     (other-core key collection -> broadcast semi-join)."""
     from meresco_lucene_spark.compose.composedquery import collect_keys
@@ -534,7 +486,7 @@ def q_cq_join_semi(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) 
     return h.select(F.col("doc_id").alias("c_custkey")).orderBy("c_custkey")
 
 
-def q_cq_join_anti(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_join_anti(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J3 exclude-filter join: customers with NO 1-URGENT order."""
     from meresco_lucene_spark.compose.composedquery import collect_keys
     from meresco_lucene_spark.query.executor import scored_hits_df
@@ -549,7 +501,7 @@ def q_cq_join_anti(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) 
     return h.select(F.col("doc_id").alias("c_custkey")).orderBy("c_custkey")
 
 
-def q_cq_unite(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_unite(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J4 unite: customers in BUILDING segment OR having an F-status
     order (union of two cores' key sets as one filter)."""
     from meresco_lucene_spark.compose.composedquery import collect_keys
@@ -567,7 +519,7 @@ def q_cq_unite(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> D
     return h.select(F.col("doc_id").alias("c_custkey")).orderBy("c_custkey")
 
 
-def q_cq_rank_blend(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_rank_blend(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J5+C7/C8 rank query: customer relevance blended with the BM25
     score of their 1-URGENT orders:
     blended = (1-r)*own + r*(1 + max_other_score), r=0.5. Top-20."""
@@ -603,7 +555,7 @@ def q_cq_rank_blend(spark: SparkSession, sf_dir: str, get_cores=_composed_cores)
     )
 
 
-def q_cq_join_facet(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_join_facet(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J6 join facets: order-priority facet over the orders core,
     restricted to keys of BUILDING-segment customers."""
     from meresco_lucene_spark.query.executor import facet_counts_df, hits
@@ -625,7 +577,7 @@ def q_cq_join_facet(spark: SparkSession, sf_dir: str, get_cores=_composed_cores)
     return facet_counts_df(cores["orders"], restricted, "cat_priority")
 
 
-def q_cq_relational_not(spark: SparkSession, sf_dir: str, get_cores=_composed_cores) -> DataFrame:
+def q_cq_relational_not(spark: SparkSession, sf_dir: str, get_cores=_composed_store_cores) -> DataFrame:
     """J8 relational algebra: customers where NOT(BUILDING AND has
     P-status order) — lazily-inverted key set applied as anti-join."""
     from meresco_lucene_spark.compose.relational import RQ
@@ -860,23 +812,15 @@ def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(plant)
 
 
-_ANN_INDEX_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _ann_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialized LSH bucket index per sf_dir (built once over the
     planted corpus, probed by partition-pruned lookups — the 100 TB
     probe path)."""
-    key = (id(spark), sf_dir)
-    if key not in _ANN_INDEX_CACHE:
-        import tempfile
+    from meresco_lucene_spark.extras.ann import write_lsh_index
 
-        from meresco_lucene_spark.extras.ann import write_lsh_index
-
-        path = tempfile.mkdtemp(prefix="mls_lsh_")
-        write_lsh_index(_ann_corpus(spark, sf_dir), path)
-        _ANN_INDEX_CACHE[key] = path
-    return _ANN_INDEX_CACHE[key]
+    return _built_dir(
+        spark, sf_dir, "lsh", lambda p: write_lsh_index(_ann_corpus(spark, sf_dir), p)
+    )
 
 
 def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,20 +843,13 @@ def q_ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("cosine", F.round("cosine", 4))
 
 
-_IVF_INDEX_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (id(spark), sf_dir)
-    if key not in _IVF_INDEX_CACHE:
-        import tempfile
+    from meresco_lucene_spark.extras.ann import write_ivf_index
 
-        from meresco_lucene_spark.extras.ann import write_ivf_index
-
-        path = tempfile.mkdtemp(prefix="mls_ivf_")
-        write_ivf_index(_ann_corpus(spark, sf_dir), path, n_centroids=8, seed=11)
-        _IVF_INDEX_CACHE[key] = path
-    return _IVF_INDEX_CACHE[key]
+    return _built_dir(
+        spark, sf_dir, "ivf",
+        lambda p: write_ivf_index(_ann_corpus(spark, sf_dir), p, n_centroids=8, seed=11),
+    )
 
 
 def q_ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -978,57 +915,50 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
+def _titles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Suggestion values: the first-2-token 'titles' of documents."""
+    from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
+
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id",
+        F.concat_ws(" ", F.slice(tokenize_expr(F.col("text")), 1, 2)).alias("title"),
+    )
+
+
 def q_suggest_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1-G3 ngram autocomplete: suggestion values = first-2-token
     'titles' of documents; char-bigram MUST query for partial input
     'ke', BM25-ranked (shorter values outrank longer)."""
-    from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
-    from meresco_lucene_spark.suggest import build_suggestion_index, suggest
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    titled = df.select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(tokenize_expr(F.col("text")), 1, 2)).alias("title"),
+    from meresco_lucene_spark.suggest import (
+        build_suggestion_store,
+        open_suggestion_store,
+        suggest,
     )
-    si = build_suggestion_index(titled, "title", key_col="doc_id")
-    out = suggest(si, "ke", limit=25).withColumn("score", F.round("score", 4))
-    return out
 
-
-_SUGG_STORE_CACHE: dict[tuple[int, str], str] = {}
+    path = _built_dir(
+        spark, sf_dir, "sugg",
+        lambda p: build_suggestion_store(_titles(spark, sf_dir), "title", p, key_col="doc_id"),
+    )
+    si = open_suggestion_store(spark, path)
+    return suggest(si, "ke", limit=25).withColumn("score", F.round("score", 4))
 
 
 def q_seg_suggest_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G2/G3/G5 from the DURABLE suggestion store: built once per
-    sf_dir via the atomic generation-dir swap, REOPENED from disk per
-    query (SuggestionIndex.java:132-158's rebuild-and-swap contract).
-    Same results as the session-built suggest_ngram — the shared oracle
-    gates that the durable path changes nothing."""
-    from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
+    """G2/G3/G5 from a suggestion store behind the atomic generation-dir
+    swap, REOPENED from disk per query (SuggestionIndex.java:132-158's
+    rebuild-and-swap contract). Same results as suggest_ngram — the
+    shared oracle gates that the swap changes nothing."""
     from meresco_lucene_spark.suggest import (
         open_suggestion_store,
         suggest,
         swap_suggestion_store,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _SUGG_STORE_CACHE:
-        import tempfile
-
-        from meresco_lucene_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        titled = df.select(
-            "doc_id",
-            F.concat_ws(" ", F.slice(tokenize_expr(F.col("text")), 1, 2)).alias(
-                "title"
-            ),
-        )
-        live = tempfile.mkdtemp(prefix="mls_sugg_")
-        swap_suggestion_store(titled, "title", live, key_col="doc_id")
-        _SUGG_STORE_CACHE[key] = live
-    si = open_suggestion_store(spark, _SUGG_STORE_CACHE[key])
+    path = _built_dir(
+        spark, sf_dir, "sugg_swap",
+        lambda p: swap_suggestion_store(_titles(spark, sf_dir), "title", p, key_col="doc_id"),
+    )
+    si = open_suggestion_store(spark, path)
     return suggest(si, "ke", limit=25).withColumn("score", F.round("score", 4))
 
 
@@ -1040,7 +970,7 @@ def q_cluster_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic: stable sorts over deterministic input."""
     from meresco_lucene_spark.query.clustering import cluster_top_docs
 
-    idx = get_index(spark, sf_dir)
+    idx = get_persistent_index(spark, sf_dir)
     h = hits(idx, Q.term("text", "spark"))
     clusters = cluster_top_docs(
         idx, h, "text", stop=10, cluster_more_records=40
@@ -1104,10 +1034,10 @@ QUERIES = {
     "stateful_versioned_updates": q_stateful_versioned_updates,
 }
 
-# seg_* entries: the SAME queries served from the persistent on-disk
-# segment store (index/store.py) instead of the session DataFrame index —
-# built once per sf_dir, REOPENED from disk per query, zero
-# re-tokenization. Oracle SQL is identical (same results contract).
+# seg_* entries: the SAME queries under a second name. Every base entry
+# now reads the persistent store (index/store.py) too — built once per
+# sf_dir, REOPENED from disk per query, zero re-tokenization — so each
+# seg_* entry is a twin of its base entry. Oracle SQL is identical.
 import functools as _functools  # noqa: E402
 
 _SEG_BASE = {
@@ -1162,21 +1092,16 @@ QUERIES.update(
 # does by construction.
 _INC_UPSERT_HI = 20
 _INC_DELETE_LO, _INC_DELETE_HI = 490, 500
-_INC_STORE_CACHE: dict[tuple[int, str], str] = {}
 
 
 def get_incremental_index(spark: SparkSession, sf_dir: str):
-    from meresco_lucene_spark.index.incremental import IncrementalIndexStore
+    from meresco_lucene_spark.index.incremental import (
+        IncrementalIndexStore,
+        MultiGenIndex,
+    )
 
-    key = (id(spark), sf_dir)
-    if key not in _INC_STORE_CACHE:
-        import tempfile
-
-        from meresco_lucene_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
+    def build(root: str) -> None:
         df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        root = tempfile.mkdtemp(prefix="mls_inc_")
         spec = {k: v for k, v in _DOCS_INDEX_SPEC.items() if k != "id_col"}
         inc = IncrementalIndexStore(spark, root, **spec)
         for lo, hi in ((0, 170), (170, 340), (340, 1 << 60)):
@@ -1189,10 +1114,8 @@ def get_incremental_index(spark: SparkSession, sf_dir: str):
             )
         )
         inc.delete(list(range(_INC_DELETE_LO, _INC_DELETE_HI)))
-        _INC_STORE_CACHE[key] = root
-    from meresco_lucene_spark.index.incremental import MultiGenIndex
 
-    return MultiGenIndex(spark, _INC_STORE_CACHE[key])
+    return MultiGenIndex(spark, _built_dir(spark, sf_dir, "inc", build))
 
 
 _INC_BASE = {
@@ -1219,9 +1142,8 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole point); the edit supersedes the originals via tombstones while
     df/dl stats keep counting them until merge — so the oracle is BM25
     over the explicit (doc, generation) corpus with only edited rows
-    live. This chain is exactly the round-3 upsert path that the
-    lengths_for liveness bug broke."""
-    import os as _os
+    live. This chain is the upsert path on which a length read without
+    the liveness filter once scored every edited doc twice."""
     import tempfile
 
     from meresco_lucene_spark.index.incremental import MultiGenIndex
@@ -1234,7 +1156,7 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     d = tempfile.mkdtemp(prefix="mls_cdc_")
-    src = _os.path.join(d, "in")
+    src = os.path.join(d, "in")
     batches = [
         docs,
         docs,  # identical resend -> suppressed, commits no generation
@@ -1242,10 +1164,10 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for i, b in enumerate(batches):
         b.coalesce(1).write.mode("append").parquet(src)
-        for f in _os.listdir(src):
-            p = _os.path.join(src, f)
-            if f.endswith(".parquet") and _os.path.getmtime(p) > i:
-                _os.utime(p, (i + 1, i + 1))
+        for f in os.listdir(src):
+            p = os.path.join(src, f)
+            if f.endswith(".parquet") and os.path.getmtime(p) > i:
+                os.utime(p, (i + 1, i + 1))
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -1253,8 +1175,8 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store, q = stream_ingest_incremental(
         versioned_updates(stream, state_ttl_ms=0).drop("version"),
-        _os.path.join(d, "store"),
-        checkpoint_dir=_os.path.join(d, "ckpt"),
+        os.path.join(d, "store"),
+        checkpoint_dir=os.path.join(d, "ckpt"),
         auto_merge_tier=8,  # tiered trigger wired in; 2 gens stay unmerged
         text_cols=["text"],
     )
@@ -1295,15 +1217,16 @@ QUERIES = {name: _with_shipping(fn) for name, fn in QUERIES.items()}
 # ---------------------------------------------------------- sweep order
 # The driver oracle-checks exactly the FIRST 50 keys of QUERIES in dict
 # order. _SWEEP_ORDER pins positions 0-49 so that every operator family,
-# both store paths (session InvertedIndex + durable PersistentIndex),
-# the composed-query algebra over durable stores (seg_cq_*), and the
+# the store reader through both its base and seg_* entry names (twins
+# since every entry reads a PersistentIndex), the composed-query
+# algebra over durable stores (seg_cq_*), and the
 # whole incremental/CDC subsystem (inc_*, cdc_*) have oracle rows each
 # round. Entries after position 49 stay registered and are swept by
 # tests/test_entry_oracle.py; each is either a strict semantics twin of
 # an in-window entry (same executor code path) or a rows-only entry
 # whose guarantees live in pytest. Guarded by tests/test_entry_sweep.py.
 _SWEEP_BASE = [
-    # session-index singles (one per operator family)
+    # documents-store singles (one per operator family)
     "term_bm25_top10", "bool_must_top10", "bool_should_top10",
     "bool_filter_top10", "matchall_count", "facet_drilldown",
     "prefix_search_terms", "suggest_spellcheck", "distance_within",
@@ -1311,9 +1234,9 @@ _SWEEP_BASE = [
     # streaming / stateful / CDC
     "ingest_latest_state", "events_windowed_counts",
     "stateful_versioned_updates", "cdc_incremental_query",
-    # suggestions (session + durable)
+    # suggestions (plain store + generation swap)
     "suggest_ngram", "seg_suggest_ngram",
-    # composed queries (session cores)
+    # composed queries (base entry names)
     "cq_join_semi", "cq_join_anti", "cq_unite", "cq_rank_blend",
     "cq_join_facet", "cq_relational_not",
     # dedup / ANN / text pipeline (oracle-checked subset)
@@ -1343,7 +1266,7 @@ _SWEEP_BASE = [
 # round. The local pytest sweep (tests/test_entry_oracle.py) checks ALL
 # entries every round regardless; rotation only decides driver rows.
 _TWIN_ROTATION: list[tuple[str, str]] = [
-    # boolean algebra: session index <-> durable store
+    # boolean algebra: base <-> seg_ entry name
     ("bool_must_top10", "seg_bool_must_top10"),
     ("bool_should_top10", "seg_bool_should_top10"),
     ("bool_filter_top10", "seg_bool_filter_top10"),
@@ -1378,7 +1301,6 @@ def _round_parity() -> int:
     every process in round N sees files up to N-1). Defaults to odd
     when no round files exist (fresh checkout: exercise the non-default
     window)."""
-    import os
     import re as _re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -1910,8 +1832,8 @@ ORDER BY shared_terms DESC, doc_id ASC LIMIT 10
 """,
 }
 
-# seg_* entries share the base oracles: the persistent-store path must
-# produce byte-identical results to the DataFrame path.
+# seg_* entries share the base oracles (they are twins of the base
+# entries, on the same store).
 for _seg_name in list(_SEG_BASE) + list(_SEG_CQ_BASE):
     ORACLES[_seg_name] = ORACLES[_seg_name[len("seg_"):]]
 
@@ -2001,7 +1923,7 @@ SELECT doc_id, round(score, 4) AS score
 FROM scored WHERE term = 'edited'
 ORDER BY doc_id
 """
-# durable suggestion store must answer identically to the session build
+# the swapped suggestion store must answer identically to the plain one
 # (cluster_top_docs stays rows-only: DBSCAN/PageRank are not
 # SQL-expressible; goldens live in pytest).
 ORACLES["seg_suggest_ngram"] = ORACLES["suggest_ngram"]

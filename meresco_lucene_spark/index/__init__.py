@@ -1,3 +1,1 @@
-from meresco_lucene_spark.index.builder import InvertedIndex
-
-__all__ = ["InvertedIndex"]
+"""Index builds, the on-disk store and its readers (see store.py)."""

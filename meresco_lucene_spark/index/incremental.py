@@ -20,7 +20,7 @@ This module reproduces that contract Spark-first:
   * commit_batch(df)  — tokenizes ONLY the batch (at 100 TB you cannot
     re-tokenize the corpus per refresh), builds a generation store,
     tombstones older versions of the batch's ids, commits atomically.
-  * MultiGenIndex     — the InvertedIndex/PersistentIndex interface over
+  * MultiGenIndex     — the PersistentIndex reader interface over
     the committed generations: postings/forward rows of superseded docs
     are filtered out (liveDocs), while df/cf/n_docs/avgdl AGGREGATE
     across generations INCLUDING dead docs — exactly Lucene's scoring
@@ -516,7 +516,7 @@ class MultiGenIndex:
     """Reader over committed generations with Lucene liveness semantics:
     superseded/deleted docs drop out of results, stay in the scoring
     statistics until force_merge. Implements the same interface as
-    InvertedIndex/PersistentIndex, so the whole executor surface
+    PersistentIndex, so the whole executor surface
     (term/bool/phrase/prefix/range/facets/sort/dedup/composed) runs
     unchanged on top. Each table is ONE scan over all generations'
     files, each row's generation (``_gen``, tombstones' ``_tomb_gen``)
@@ -570,8 +570,6 @@ class MultiGenIndex:
         self.k1 = first.k1
         self.b = first.b
         self.similarity = first.similarity
-        self.quantized = first.quantized
-        self.has_positions = first.has_positions
         self.facet_fields = dict(first.facet_fields)
         self._tombstones = None
         if tomb_dirs:
@@ -636,14 +634,12 @@ class MultiGenIndex:
         cond = (tagged["doc_id"] == t["doc_id"]) & (t["_tomb_gen"] > tagged["_gen"])
         return tagged.join(t, cond, "left_anti").drop("_gen")
 
-    def _live_postings(self, blocks: DataFrame, fld: str, with_dl: bool) -> DataFrame:
+    def _live_postings(self, blocks: DataFrame, fld: str) -> DataFrame:
         """The live postings of tagged ``blocks``: decoded with each
         block's ``_gen`` carried onto its postings, then one anti-join."""
-        return self._live(
-            decode_block_frame(blocks, fld, with_dl, passthrough=("_gen",))
-        )
+        return self._live(decode_block_frame(blocks, fld, passthrough=("_gen",)))
 
-    # ------------------------------------------------- InvertedIndex API
+    # ------------------------------------------------- reader API
     def field_stats(self, fld: str) -> FieldStats:
         n, sdl, omit = 0, 0, False
         for s in self.stores.values():
@@ -657,15 +653,11 @@ class MultiGenIndex:
             return FieldStats(n_docs=self.n_docs, sum_dl=self.n_docs or 1)
         return FieldStats(n_docs=n, sum_dl=sdl, omit_norms=omit)
 
-    # generation stores are PersistentIndex — the per-posting dl stream
-    # capability (postings_for(with_dl=True) -> _bdl) carries through
-    inline_dl = True
-
-    def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
+    def postings_for(self, fld: str) -> DataFrame:
         """The live postings of ``fld`` from one scan of every
         generation's blocks (field/term filters push into it)."""
         blocks = self._scan("postings").filter(F.col("field") == fld)
-        return self._live_postings(blocks, fld, with_dl)
+        return self._live_postings(blocks, fld)
 
     def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
         """term -> df for the terms of ``terms`` present in ``fld``: the
@@ -677,9 +669,7 @@ class MultiGenIndex:
                 out[t] = out.get(t, 0) + df
         return out
 
-    def term_postings(
-        self, fld: str, terms: list[str], with_dl: bool = False
-    ) -> DataFrame:
+    def term_postings(self, fld: str, terms: list[str]) -> DataFrame:
         """The live postings of ``terms`` in ``fld`` from one scan whose
         paths are chosen up front from the generations' term
         dictionaries: the ``shard=s`` dirs of the terms' shards, in the
@@ -695,21 +685,7 @@ class MultiGenIndex:
         blocks = self._read(
             "postings", dirs or [os.path.join(first, "postings")]
         ).filter((F.col("field") == fld) & F.col("term").isin(sorted(present)))
-        return self._live_postings(blocks, fld, with_dl)
-
-    def lengths_for(self, fld: str) -> DataFrame:
-        # MUST be liveness-filtered: the executor joins postings to
-        # lengths by bare doc_id (executor.py _term_hits/_phrase_hits),
-        # so after an upsert the id has a length row in BOTH its old and
-        # new generation — an unfiltered read duplicates every hit with
-        # a stale-dl score. Lucene semantics: a live doc has exactly one
-        # norm and dead docs never match (delete-then-add,
-        # Lucene.java:166-171).
-        return self._live(
-            self._scan("field_lengths")
-            .filter(F.col("field") == fld)
-            .select("doc_id", "dl", "norm_dl", "_gen")
-        )
+        return self._live_postings(blocks, fld)
 
     def term_stats_for(self, fld: str) -> DataFrame:
         # df/cf SUM across generations INCLUDING dead docs (Lucene
@@ -767,9 +743,6 @@ class MultiGenIndex:
             names.update(s.fieldnames())
         return sorted(names)
 
-    def unpersist(self) -> None:
-        pass
-
     # ------------------------------------------------------- merge feeds
     def live_occurrences(self) -> DataFrame:
         """(field, term, doc_id, _dl, pos) of every LIVE posting —
@@ -777,9 +750,7 @@ class MultiGenIndex:
         re-tokenized. Feed for the merges. The per-posting dl stream
         rides along (_dl), so the re-encode needs no lengths join
         either."""
-        decoded = decode_block_frame(
-            self._scan("postings"), None, with_dl=True, passthrough=("_gen",)
-        )
+        decoded = decode_block_frame(self._scan("postings"), None, passthrough=("_gen",))
         return self._live(
             decoded.select(
                 "field",

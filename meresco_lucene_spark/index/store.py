@@ -18,7 +18,7 @@ Layout under ``out_dir``:
   lineage/        (shard, n_terms, term_min, term_max, n_blocks,
                    n_postings, bytes, content_xxh64_sum, run_id)
   meta.json       {snapshot, n_docs, field_stats, facet_fields, k1, b,
-                   similarity, quantized, has_positions, n_shards, ...,
+                   similarity, quantized, n_shards, ...,
                    schemas}
 
 Block format: up to ``block_size`` postings of one (field, term) per
@@ -389,8 +389,8 @@ def build_index_store(
     build is logically identical to an uninterrupted one (tested).
 
     ``occurrences``/``lengths`` override the tokenize pass with
-    precomputed frames (occurrences: field, term, doc_id, pos; lengths:
-    field, doc_id, dl, norm_dl) — the generation-merge path re-encodes
+    precomputed frames (occurrences: field, term, doc_id, pos, _dl;
+    lengths: field, doc_id, dl, norm_dl) — the generation-merge path re-encodes
     decoded postings WITHOUT re-tokenizing (Lucene's merge copies
     postings, it never re-analyzes: index/incremental.py).
 
@@ -408,7 +408,6 @@ def build_index_store(
     os.makedirs(out_dir, exist_ok=True)
     if occurrences is not None and lengths is not None:
         occurrences_lazy, lengths_lazy = occurrences, lengths
-        have_inline_dl = "_dl" in occurrences.columns
     else:
         # carry the document length ON the occurrence rows (the same
         # token arrays produce both), so the encode stage needs no
@@ -420,9 +419,8 @@ def build_index_store(
             keyword_cols=keyword_cols,
             array_cols=array_cols,
             dutch_cols=dutch_cols,
-            inline_dl="norm_dl" if quantized else "dl",
+            dl_col="norm_dl" if quantized else "dl",
         )
-        have_inline_dl = True
     forward = df.withColumnRenamed(id_col, "doc_id") if id_col != "doc_id" else df
     flat_dir = os.path.join(out_dir, "_flat_postings")
     post_dir = os.path.join(out_dir, "postings")
@@ -652,17 +650,6 @@ def build_index_store(
                 % n_shards
             ).cast("int"),
         )
-        if not have_inline_dl:
-            # precomputed-occurrence feeds (merge path) have no _dl on
-            # the rows; attach it from the lengths table as before
-            dl_col = "norm_dl" if quantized else "dl"
-            lengths_df = spark.read.schema(lengths_lazy.schema).parquet(
-                os.path.join(out_dir, "field_lengths")
-            )
-            flat = flat.join(
-                lengths_df.select("field", "doc_id", F.col(dl_col).alias("_dl")),
-                ["field", "doc_id"],
-            )
 
         # ---- shard-level resume (see the module docstring) ----
         done_shards: set[int] = set()
@@ -885,7 +872,6 @@ def build_index_store(
             "b": b,
             "similarity": similarity,
             "quantized": quantized,
-            "has_positions": True,
             "n_shards": n_shards,
             "salt_buckets": salt_buckets,
             "block_size": block_size,
@@ -916,13 +902,12 @@ def build_index_store(
 
 
 def decode_block_frame(
-    blocks: DataFrame,
-    fld: str | None,
-    with_dl: bool = False,
-    passthrough: tuple[str, ...] = (),
+    blocks: DataFrame, fld: str | None, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Posting-block frame -> decoded (field, term, [passthrough...,]
-    doc_id, tf[, _bdl], positions) rows.
+    doc_id, tf, _bdl, positions) rows; ``_bdl`` is the posting's
+    document length AS BUILT (norm_dl when the store was built
+    quantized, raw dl otherwise), so scoring needs no lengths join.
 
     A plain JVM projection: ``posexplode`` the doc ids, then index the
     parallel ``tfs``/``dls``/``positions`` lists at the same offset.
@@ -940,10 +925,9 @@ def decode_block_frame(
         *pt,
         "doc_id",
         F.col("tfs")[i].cast("long").alias("tf"),
+        F.col("dls")[i].cast("long").alias("_bdl"),
+        F.col("positions")[i].alias("positions"),
     ]
-    if with_dl:
-        cols.append(F.col("dls")[i].cast("long").alias("_bdl"))
-    cols.append(F.col("positions")[i].alias("positions"))
     return blocks.select(
         "field", "term", *pt, "tfs", "dls", "positions",
         F.posexplode("doc_ids").alias("_i", "doc_id"),
@@ -984,13 +968,13 @@ def open_persistent_index(spark: SparkSession, out_dir: str) -> "PersistentIndex
 
 
 class PersistentIndex:
-    """Disk-backed index with the exact interface of InvertedIndex
-    (postings_for / term_postings / term_dfs / lengths_for /
-    term_stats_for / field_stats / forward / facet_fields / similarity /
-    k1 / b / quantized / has_positions),
-    so every operator in query/executor.py, compose/ and suggest runs
-    unchanged over a store LOADED FROM DISK — no re-tokenization, ever
-    (opening touches only parquet + meta.json; asserted in tests)."""
+    """The engine's index reader: a store LOADED FROM DISK (postings_for
+    / term_postings / term_dfs / term_stats_for / field_stats / forward
+    / facet_fields / similarity / k1 / b), read by every operator in
+    query/executor.py, compose/ and suggest — no re-tokenization, ever
+    (opening touches only parquet + meta.json; asserted in tests).
+    Whether lengths were quantized is a build setting: the postings
+    carry the length as built, and meta.json records the setting."""
 
     def __init__(self, spark: SparkSession, out_dir: str, meta: dict | None = None):
         """``meta``: the store's parsed meta.json, when the caller has
@@ -1006,8 +990,6 @@ class PersistentIndex:
         self.k1 = meta["k1"]
         self.b = meta["b"]
         self.similarity = meta["similarity"]
-        self.quantized = meta["quantized"]
-        self.has_positions = meta["has_positions"]
         self.facet_fields = {k: list(v) for k, v in meta["facet_fields"].items()}
         self.stats = {
             f: FieldStats(**d) for f, d in meta["field_stats"].items()
@@ -1044,39 +1026,20 @@ class PersistentIndex:
     def blocks(self) -> DataFrame:
         return self._table("postings")
 
-    # ------------------------------------------------- InvertedIndex API
+    # ------------------------------------------------- reader API
     def field_stats(self, fld: str) -> FieldStats:
         if fld not in self.stats:
             return FieldStats(n_docs=self.n_docs, sum_dl=self.n_docs or 1)
         return self.stats[fld]
 
-    # capability flag: the posting blocks carry the per-posting document
-    # length stream, so scoring can skip the field_lengths join entirely
-    # (postings_for(with_dl=True) exposes it as _bdl)
-    inline_dl = True
-
-    def postings_for(self, fld: str, with_dl: bool = False) -> DataFrame:
-        """Lazily-decoded (field, term, doc_id, tf, positions[, _bdl])
-        frame.
+    def postings_for(self, fld: str) -> DataFrame:
+        """Lazily-decoded (field, term, doc_id, tf, _bdl, positions)
+        frame (see decode_block_frame).
 
         Decode is a JVM projection: term/field filters applied by callers
         push below it into the parquet scan (PushedFilters), so only the
-        filtered terms' blocks are ever read.
-
-        ``with_dl=True`` additionally exposes the blocks' dl list as
-        a ``_bdl`` column (the document length AS BUILT — norm_dl when the
-        store was built quantized, raw dl otherwise): scoring reads the
-        length straight off the posting instead of joining the
-        field_lengths table — one broadcast join and one full lengths
-        scan removed from every term/phrase query (guide §2.4)."""
-        return decode_block_frame(
-            self.blocks.filter(F.col("field") == fld), fld, with_dl
-        )
-
-    def lengths_for(self, fld: str) -> DataFrame:
-        return self.field_lengths.filter(F.col("field") == fld).select(
-            "doc_id", "dl", "norm_dl"
-        )
+        filtered terms' blocks are ever read."""
+        return decode_block_frame(self.blocks.filter(F.col("field") == fld), fld)
 
     def term_stats_for(self, fld: str) -> DataFrame:
         return self.term_stats.filter(F.col("field") == fld).select(
@@ -1088,9 +1051,6 @@ class PersistentIndex:
 
     def fieldnames(self) -> list[str]:
         return sorted(self.stats)
-
-    def unpersist(self) -> None:  # interface parity; nothing cached
-        pass
 
     # ------------------------------------------------- term dictionary
     # Every exact-term read goes through the handle's term dictionary:
@@ -1131,12 +1091,10 @@ class PersistentIndex:
         """term -> df for the terms of ``terms`` present in ``fld``."""
         return {t: m[0] for t, m in self._term_meta(fld, terms).items()}
 
-    def term_postings(
-        self, fld: str, terms: list[str], with_dl: bool = False
-    ) -> DataFrame:
+    def term_postings(self, fld: str, terms: list[str]) -> DataFrame:
         """The decoded postings of ``terms`` in ``fld`` (see postings_for),
         read from those terms' shards only."""
-        return decode_block_frame(self.term_blocks(fld, terms), fld, with_dl)
+        return decode_block_frame(self.term_blocks(fld, terms), fld)
 
     def term_shards(self, fld: str, terms: list[str]) -> list[int]:
         """The shards of the terms of ``terms`` present in ``fld``:

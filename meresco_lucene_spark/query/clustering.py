@@ -25,12 +25,14 @@ only distributed step.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.index.builder import InvertedIndex
+if TYPE_CHECKING:
+    from meresco_lucene_spark.index.store import PersistentIndex
 
 DAMPING = 0.85
 PAGERANK_ITERATIONS = 5
@@ -186,7 +188,7 @@ class MerescoCluster:
 
 
 def cluster_top_docs_strategies(
-    index: InvertedIndex,
+    index: PersistentIndex,
     hits_df: DataFrame,
     config: ClusterConfig,
     stop: int = 10,
@@ -315,7 +317,7 @@ def cluster_top_docs_strategies(
 
 
 def cluster_top_docs(
-    index: InvertedIndex,
+    index: PersistentIndex,
     hits_df: DataFrame,
     field: str,
     stop: int = 10,

@@ -1,4 +1,4 @@
-"""Query execution: Q IR -> Catalyst plan over the index tables.
+"""Query execution: Q IR -> Catalyst plan over an index store's tables.
 
 Reproduces the reference's single-core query surface
 (Lucene.executeQuery, Lucene.java:247-349): query + filterQueries +
@@ -8,11 +8,12 @@ each recast as DataFrame ops:
   TermQuery     -> the term's postings (index.term_postings) scored by a
                    BM25 column expr with df from the index's term
                    dictionary (index.term_dfs), looked up by term in a
-                   map literal (_by_term)
+                   map literal (_by_term), and dl off the posting (_bdl)
   BooleanQuery  -> union of scoring-clause frames + groupBy sum(score)
                    with a matched-MUST count gate; FILTER -> left_semi;
                    MUST_NOT -> left_anti              (Q3 in SURVEY §2.2)
-  PhraseQuery   -> per-term postings joins + position-adjacency HOFs
+  PhraseQuery   -> one scan of the terms' postings, per-term positions
+                   picked by a doc_id aggregation + position-adjacency HOFs
   Prefix/Wildcard -> term-range scan, constant score (Lucene rewrite)
   RangeQuery    -> plain column predicate on the forward table
   dedup         -> Window.partitionBy(key) + row_number / count
@@ -33,6 +34,10 @@ partial aggregation; nothing imperative remains here — every function
 returns a lazy DataFrame and Catalyst does pushdown/broadcast/AQE.
 ``search()`` runs one action for total + page, plus one for all facet
 dims when facets are requested.
+
+``index`` is a reader over an index store: a :class:`PersistentIndex`,
+or the multi-generation reader with the same interface
+(index/incremental.py).
 """
 
 from __future__ import annotations
@@ -50,8 +55,8 @@ from pyspark.sql.window import Window
 
 from meresco_lucene_spark.columns import qcol
 
-if TYPE_CHECKING:  # avoid circular import (builder imports query.bm25)
-    from meresco_lucene_spark.index.builder import InvertedIndex
+if TYPE_CHECKING:  # avoid circular import (the store imports query.bm25)
+    from meresco_lucene_spark.index.store import PersistentIndex
 from meresco_lucene_spark.query.bm25 import (
     bm25_score_expr,
     idf_expr,
@@ -63,20 +68,19 @@ from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 # --------------------------------------------------------------------------- hits
 
 
-def hits(index: InvertedIndex, q: Q, quantized: bool | None = None) -> DataFrame:
+def hits(index: PersistentIndex, q: Q) -> DataFrame:
     """Scored hit frame for a query: DataFrame(doc_id, score)."""
-    quantized = index_quantized(index, quantized)
     t = q.type
     if t == "MatchAllDocsQuery":
         return index.forward.select(
             "doc_id", F.lit(1.0 * q.boost).alias("score")
         )
     if t == "TermQuery":
-        return _term_hits(index, q.field, q.value, q.boost, quantized)
+        return _term_hits(index, q.field, q.value, q.boost)
     if t == "BooleanQuery":
-        return _bool_hits(index, q, quantized)
+        return _bool_hits(index, q)
     if t == "PhraseQuery":
-        return _phrase_hits(index, q, quantized)
+        return _phrase_hits(index, q)
     if t == "PrefixQuery":
         return _multi_term_hits(
             index, q.field, F.col("term").startswith(q.value), q.boost
@@ -107,7 +111,7 @@ def haversine_meters(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> 
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-def _distance_hits(index: InvertedIndex, q: Q) -> DataFrame:
+def _distance_hits(index: PersistentIndex, q: Q) -> DataFrame:
     """Q8 geo distance: docs whose point lies within maxDistance meters
     of (lat, lon); constant score (Lucene LatLonPoint distance queries
     are constant-score). The geo field is either a struct column with
@@ -126,73 +130,36 @@ def _distance_hits(index: InvertedIndex, q: Q) -> DataFrame:
     )
 
 
-def index_quantized(index: InvertedIndex, override: bool | None) -> bool:
-    if override is not None:
-        return override
-    return bool(getattr(index, "quantized", False))
-
-
 def _re_escape(c: str) -> str:
     import re
 
     return re.escape(c)
 
 
-def _dl_col(stats_omit_norms: bool, quantized: bool) -> Column:
-    if stats_omit_norms:
-        # Norms omitted (StringField / NoTermsFrequencyField,
-        # DocumentStringToDocument.java:97-98): Lucene's norm term
-        # collapses to 1 -> tfNorm = tf / (tf + k1).
-        return F.lit(None)
-    return F.col("norm_dl") if quantized else F.col("dl")
-
-
-def _use_inline_dl(index: InvertedIndex, quantized: bool) -> bool:
-    """True when the index's posting blocks carry the document length
-    the query wants (built quantized == queried quantized): scoring then
-    reads dl straight off the decoded posting (_bdl) instead of joining
-    the field_lengths table — one join + one full lengths scan removed
-    per scored term (guide §2.4)."""
-    return bool(getattr(index, "inline_dl", False)) and quantized == bool(
-        getattr(index, "quantized", False)
-    )
-
-
-def _term_hits(
-    index: InvertedIndex,
-    fld: str,
-    value: str,
-    boost: float,
-    quantized: bool,
-    similarity: str | None = None,
-) -> DataFrame:
+def _term_hits(index: PersistentIndex, fld: str, value: str, boost: float) -> DataFrame:
     st = index.field_stats(fld)
-    sim = similarity or getattr(index, "similarity", "BM25")
-    if sim == "TermFrequency":
+    if index.similarity == "TermFrequency":
         # reference search/TermFrequencySimilarity.java:40-58
         p = index.term_postings(fld, [value])
         return p.select("doc_id", term_frequency_score_expr(F.col("tf"), boost).alias("score"))
-    inline = not st.omit_norms and _use_inline_dl(index, quantized)
     dfs = index.term_dfs(fld, [value])
-    p = index.term_postings(fld, list(dfs), with_dl=inline)
+    p = index.term_postings(fld, list(dfs))
     # df as a map lookup, not a numeric literal: codegen writes a number
     # into the generated Java, so each new df would compile new classes,
     # while a map constant is one of the class's references (_by_term).
     df = _by_term({value: dfs.get(value, 0)})
     if st.omit_norms:
+        # Norms omitted (StringField / NoTermsFrequencyField,
+        # DocumentStringToDocument.java:97-98): Lucene's norm term
+        # collapses to 1 -> tfNorm = tf / (tf + k1).
         score = (
             idf_expr(df, st.n_docs)
             * (F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1)))
             * F.lit(boost)
         )
         return p.select("doc_id", score.alias("score"))
-    if inline:
-        dl = F.col("_bdl")
-    else:
-        p = p.join(index.lengths_for(fld), "doc_id")
-        dl = F.col("norm_dl") if quantized else F.col("dl")
     score = bm25_score_expr(
-        F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b, boost
+        F.col("tf"), df, F.col("_bdl"), st.n_docs, st.avgdl, index.k1, index.b, boost
     )
     return p.select("doc_id", score.alias("score"))
 
@@ -214,7 +181,7 @@ def _by_term(values: dict[str, Any]) -> Column:
 
 
 def _multi_term_hits(
-    index: InvertedIndex, fld: str, term_pred: Column, boost: float
+    index: PersistentIndex, fld: str, term_pred: Column, boost: float
 ) -> DataFrame:
     """Prefix/Wildcard: Lucene 8 rewrites to a constant-score query over
     the union of matching terms' postings (JsonQueryConverter.java:207-211)."""
@@ -224,7 +191,7 @@ def _multi_term_hits(
     )
 
 
-def _range_hits(index: InvertedIndex, q: Q) -> DataFrame:
+def _range_hits(index: PersistentIndex, q: Q) -> DataFrame:
     """Range over a forward-table column (reference point/term ranges,
     JsonQueryConverter.java:296-331). Constant score 1."""
     col = qcol(q.field)
@@ -238,7 +205,7 @@ def _range_hits(index: InvertedIndex, q: Q) -> DataFrame:
     )
 
 
-def _drilldown_hits(index: InvertedIndex, q: Q) -> DataFrame:
+def _drilldown_hits(index: PersistentIndex, q: Q) -> DataFrame:
     """Facet drilldown: filter forward rows whose facet path for dim
     starts with the given path (Lucene.java:763-774)."""
     cols = index.facet_fields.get(q.field, [q.field])
@@ -251,10 +218,7 @@ def _drilldown_hits(index: InvertedIndex, q: Q) -> DataFrame:
 
 
 def _fused_term_hits(
-    index: InvertedIndex,
-    fld: str,
-    clauses: list[tuple[Q, bool]],
-    quantized: bool,
+    index: PersistentIndex, fld: str, clauses: list[tuple[Q, bool]]
 ) -> DataFrame:
     """Several TermQuery scoring clauses on ONE field in ONE postings
     scan (guide §6.2 scan once / §4.1): one ``term_postings`` read
@@ -269,7 +233,6 @@ def _fused_term_hits(
     1.0 (the common case) the score expression is EXACTLY the
     single-clause expression."""
     st = index.field_stats(fld)
-    sim = getattr(index, "similarity", "BM25")
     # per distinct term: summed boost of its clauses + its MUST count
     w_boost: dict[str, float] = {}
     w_must: dict[str, int] = {}
@@ -278,33 +241,27 @@ def _fused_term_hits(
         w_must[c.value] = w_must.get(c.value, 0) + (1 if is_must else 0)
     is_must_c = _by_term(w_must).alias("is_must")
     uniform_boost = set(w_boost.values()) == {1.0}
-    if sim == "TermFrequency":
+    if index.similarity == "TermFrequency":
         p = index.term_postings(fld, list(w_boost))
         score = term_frequency_score_expr(F.col("tf"), 1.0)
     else:
-        inline = not st.omit_norms and _use_inline_dl(index, quantized)
         dfs = index.term_dfs(fld, list(w_boost))
-        p = index.term_postings(fld, list(dfs), with_dl=inline)
+        p = index.term_postings(fld, list(dfs))
         df = _by_term({t: dfs.get(t, 0) for t in w_boost})
         if st.omit_norms:
             score = idf_expr(df, st.n_docs) * (
                 F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1))
             )
         else:
-            if inline:
-                dl = F.col("_bdl")
-            else:
-                p = p.join(index.lengths_for(fld), "doc_id")
-                dl = F.col("norm_dl") if quantized else F.col("dl")
             score = bm25_score_expr(
-                F.col("tf"), df, dl, st.n_docs, st.avgdl, index.k1, index.b,
+                F.col("tf"), df, F.col("_bdl"), st.n_docs, st.avgdl, index.k1, index.b,
             )
     if not uniform_boost:
         score = score * _by_term(w_boost)
     return p.select("doc_id", score.alias("score"), is_must_c)
 
 
-def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
+def _bool_hits(index: PersistentIndex, q: Q) -> DataFrame:
     musts = [c for occ, c in q.clauses if occ == MUST]
     shoulds = [c for occ, c in q.clauses if occ == SHOULD]
     filters = [c for occ, c in q.clauses if occ == FILTER]
@@ -326,13 +283,11 @@ def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         frames = []
         for fldname, grp in by_field.items():
             if len(grp) >= 2:
-                frames.append(
-                    _fused_term_hits(index, fldname, grp, quantized)
-                )
+                frames.append(_fused_term_hits(index, fldname, grp))
             else:
                 rest.extend(grp)
         frames += [
-            hits(index, c, quantized).select(
+            hits(index, c).select(
                 "doc_id", "score", F.lit(1 if is_must else 0).alias("is_must")
             )
             for c, is_must in rest
@@ -359,88 +314,67 @@ def _bool_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
         )
 
     for c in filters:
-        base = base.join(
-            hits(index, c, quantized).select("doc_id"), "doc_id", "left_semi"
-        )
+        base = base.join(hits(index, c).select("doc_id"), "doc_id", "left_semi")
     for c in nots:
-        base = base.join(
-            hits(index, c, quantized).select("doc_id"), "doc_id", "left_anti"
-        )
+        base = base.join(hits(index, c).select("doc_id"), "doc_id", "left_anti")
     if q.boost != 1.0:
         base = base.select("doc_id", (F.col("score") * q.boost).alias("score"))
     return base
 
 
-def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
+def _phrase_hits(index: PersistentIndex, q: Q) -> DataFrame:
     """Ordered-adjacent phrase match via per-term position arrays.
 
     Matching: positions p in terms[0] with p+i present in terms[i] for
     all i. Scoring follows Lucene's PhraseQuery: tf = phrase frequency,
     weight idf = sum of per-term idfs."""
-    if not index.has_positions:
-        raise ValueError("index built without positions; phrase queries unavailable")
     terms = list(q.terms)
     if len(terms) == 1:
-        return _term_hits(index, q.field, terms[0], q.boost, quantized)
+        return _term_hits(index, q.field, terms[0], q.boost)
     st = index.field_stats(q.field)
     dfs = index.term_dfs(q.field, terms)
     df = _by_term({t: dfs.get(t, 0) for t in terms})
 
-    inline = _use_inline_dl(index, quantized)
-    if getattr(index, "inline_dl", False):
-        # Stores gather all phrase terms in ONE scan of their shards and
-        # pick the per-term position arrays by a doc_id aggregation with
-        # FIRST(CASE) — a doc has at most one posting per term, so the
-        # picks are deterministic and the doc set (all terms present)
-        # matches an inner-join chain row for row. The aggregation is
-        # shuffle-bounded and AQE-coalesced, where a join chain would
-        # size-estimate a broadcast over each decoded term (a
-        # mid-frequency term there is a broadcast-OOM hazard at scale).
-        # The session-cached DataFrame index keeps the join chain: its
-        # postings are already decoded in memory, so the aggregation
-        # would only add an exchange (measured r6).
-        # Each term's df rides the same pick as its positions. A posting
-        # is picked by its term's place j in distinct_terms, looked up
-        # like df (_by_term), not by comparing with the term: the picks
-        # are common subexpressions, which codegen orders by their hash,
-        # so a literal term in them made new code for every phrase.
-        distinct_terms = list(dict.fromkeys(terms))
-        p = index.term_postings(q.field, list(dfs), with_dl=inline).select(
-            "*",
-            _by_term({t: j for j, t in enumerate(distinct_terms)}).alias("_j"),
-            df.alias("_df"),
-        )
-        aggs = []
-        for j in range(len(distinct_terms)):
-            mine = F.col("_j") == j
-            aggs += [
-                F.first(F.when(mine, F.col("positions")), ignorenulls=True).alias(f"_q{j}"),
-                F.first(F.when(mine, F.col("_df")), ignorenulls=True).alias(f"_e{j}"),
-            ]
-        if inline:
-            # dl rides the first term's posting — no lengths join below
-            aggs.append(
-                F.first(F.when(F.col("_j") == 0, F.col("_bdl")), ignorenulls=True).alias("_bdl")
-            )
-        g = p.groupBy("doc_id").agg(*aggs)
-        present = None
-        for j in range(len(distinct_terms)):
-            c = F.col(f"_q{j}").isNotNull()
-            present = c if present is None else (present & c)
-        sel = ["doc_id"]
-        for i, t in enumerate(terms):
-            j = distinct_terms.index(t)
-            sel += [F.col(f"_q{j}").alias(f"_p{i}"), F.col(f"_e{j}").alias(f"_d{i}")]
-        if inline:
-            sel.append(F.col("_bdl"))
-        joined = g.filter(present).select(*sel)
-    else:
-        joined = None
-        for i, t in enumerate(terms):
-            p = index.term_postings(q.field, [t]).select(
-                "doc_id", F.col("positions").alias(f"_p{i}"), df.alias(f"_d{i}")
-            )
-            joined = p if joined is None else joined.join(p, "doc_id")
+    # All phrase terms are gathered in ONE scan of their shards, and the
+    # per-term position arrays are picked by a doc_id aggregation with
+    # FIRST(CASE) — a doc has at most one posting per term, so the picks
+    # are deterministic and the doc set (all terms present) matches an
+    # inner-join chain row for row. The aggregation is shuffle-bounded
+    # and AQE-coalesced, where a join chain would size-estimate a
+    # broadcast over each decoded term (a mid-frequency term there is a
+    # broadcast-OOM hazard at scale).
+    # Each term's df rides the same pick as its positions. A posting is
+    # picked by its term's place j in distinct_terms, looked up like df
+    # (_by_term), not by comparing with the term: the picks are common
+    # subexpressions, which codegen orders by their hash, so a literal
+    # term in them made new code for every phrase.
+    distinct_terms = list(dict.fromkeys(terms))
+    p = index.term_postings(q.field, list(dfs)).select(
+        "*",
+        _by_term({t: j for j, t in enumerate(distinct_terms)}).alias("_j"),
+        df.alias("_df"),
+    )
+    aggs = []
+    for j in range(len(distinct_terms)):
+        mine = F.col("_j") == j
+        aggs += [
+            F.first(F.when(mine, F.col("positions")), ignorenulls=True).alias(f"_q{j}"),
+            F.first(F.when(mine, F.col("_df")), ignorenulls=True).alias(f"_e{j}"),
+        ]
+    # dl rides the first term's posting
+    aggs.append(
+        F.first(F.when(F.col("_j") == 0, F.col("_bdl")), ignorenulls=True).alias("_bdl")
+    )
+    g = p.groupBy("doc_id").agg(*aggs)
+    present = None
+    for j in range(len(distinct_terms)):
+        c = F.col(f"_q{j}").isNotNull()
+        present = c if present is None else (present & c)
+    sel = ["doc_id"]
+    for i, t in enumerate(terms):
+        j = distinct_terms.index(t)
+        sel += [F.col(f"_q{j}").alias(f"_p{i}"), F.col(f"_e{j}").alias(f"_d{i}")]
+    joined = g.filter(present).select(*sel, "_bdl")
 
     conds = " AND ".join(
         f"exists(_p{i}, y -> y = x + {i})" for i in range(1, len(terms))
@@ -455,14 +389,9 @@ def _phrase_hits(index: InvertedIndex, q: Q, quantized: bool) -> DataFrame:
     for i in range(len(terms)):
         idf = idf_expr(F.col(f"_d{i}"), st.n_docs)
         idf_sum = idf if idf_sum is None else idf_sum + idf
-    if inline:
-        dl = F.col("_bdl")
-    else:
-        cand = cand.join(index.lengths_for(q.field), "doc_id")
-        dl = F.col("norm_dl") if quantized else F.col("dl")
     score = (
         idf_sum
-        * tf_norm_expr(F.col("_pf"), dl, st.avgdl, index.k1, index.b)
+        * tf_norm_expr(F.col("_pf"), F.col("_bdl"), st.avgdl, index.k1, index.b)
         * F.lit(q.boost)
     )
     return cand.select("doc_id", score.alias("score"))
@@ -602,23 +531,22 @@ def sort_exprs(sort_keys: Sequence[dict] | None) -> list[Column]:
 
 
 def scored_hits_df(
-    index: InvertedIndex,
+    index: PersistentIndex,
     query: Q | None = None,
     filter_queries: Sequence[Q] = (),
     exclude_queries: Sequence[Q] = (),
     key_filters: Sequence[tuple[DataFrame, str, bool]] = (),
-    quantized: bool | None = None,
 ) -> DataFrame:
     """Hit frame after filters/excludes/key-set joins.
 
     key_filters: (keys_df with single column key, key_field_in_forward,
     inverted) triples — the composed-query KeyFilter (queries/KeyFilter.java:46-124):
     semi-join normally, anti-join when inverted."""
-    h = hits(index, query or Q.matchall(), quantized)
+    h = hits(index, query or Q.matchall())
     for fq in filter_queries:
-        h = h.join(hits(index, fq, quantized).select("doc_id"), "doc_id", "left_semi")
+        h = h.join(hits(index, fq).select("doc_id"), "doc_id", "left_semi")
     for eq in exclude_queries:
-        h = h.join(hits(index, eq, quantized).select("doc_id"), "doc_id", "left_anti")
+        h = h.join(hits(index, eq).select("doc_id"), "doc_id", "left_anti")
     if key_filters:
         fwd = index.forward
         for keys_df, key_field, inverted in key_filters:
@@ -635,7 +563,7 @@ def scored_hits_df(
 
 
 def search(
-    index: InvertedIndex,
+    index: PersistentIndex,
     query: Q | None = None,
     filter_queries: Sequence[Q] = (),
     exclude_queries: Sequence[Q] = (),
@@ -648,7 +576,6 @@ def search(
     dedup_sort_fields: Sequence[dict] = (),
     stored_fields: Sequence[str] = (),
     score_adjust: "callable | None" = None,
-    quantized: bool | None = None,
 ) -> LuceneResponse:
     """The reference's executeQuery in one pass (Lucene.java:247-349).
 
@@ -669,7 +596,7 @@ def search(
     for the whole call, ``times["searchTime"]`` for the page action and,
     with facets, ``times["facetTime"]`` for the facet action."""
     t_query = time.perf_counter()
-    h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters, quantized)
+    h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters)
     if score_adjust is not None:
         h = score_adjust(h)
 
@@ -801,7 +728,7 @@ def _kept_top_k(page: DataFrame) -> bool:
 
 
 def similar_documents_df(
-    index: InvertedIndex,
+    index: PersistentIndex,
     doc_id: int,
     field: str = "text",
     max_freq: float = 0.1,
@@ -841,7 +768,7 @@ def similar_documents_df(
 
 
 def mlt_seed_doc(
-    index: InvertedIndex, field: str = "text", max_freq: float = 0.1
+    index: PersistentIndex, field: str = "text", max_freq: float = 0.1
 ) -> int | None:
     """Lowest doc id that shares a rare term (2 <= df <= max_freq * N)
     with at least one OTHER doc — a deterministic, guaranteed-nontrivial
@@ -864,7 +791,7 @@ def mlt_seed_doc(
 
 
 def drilldown_data(
-    index: InvertedIndex, hits_df: DataFrame, facets: Sequence[dict]
+    index: PersistentIndex, hits_df: DataFrame, facets: Sequence[dict]
 ) -> list[dict]:
     """Counts of every requested facet dim (FacetSuperCollector.java:43-99
     merged form) in ONE Spark action, in request order.
@@ -905,13 +832,13 @@ def drilldown_data(
     return out
 
 
-def facet_counts(index: InvertedIndex, hits_df: DataFrame, facet: dict) -> dict:
+def facet_counts(index: PersistentIndex, hits_df: DataFrame, facet: dict) -> dict:
     """One facet dim's counts: ``drilldown_data`` for a single dim."""
     return drilldown_data(index, hits_df, [facet])[0]
 
 
 def facet_counts_df(
-    index: InvertedIndex, hits_df: DataFrame, dim: str, path: Sequence[str] = ()
+    index: PersistentIndex, hits_df: DataFrame, dim: str, path: Sequence[str] = ()
 ) -> DataFrame:
     """DataFrame form of one dim's facet counts: (term, count) ordered by
     count desc, term asc."""
@@ -923,7 +850,7 @@ def facet_counts_df(
 
 
 def _facet_groups(
-    index: InvertedIndex,
+    index: PersistentIndex,
     hits_df: DataFrame,
     dims: Sequence[tuple[str, Sequence[str]]],
 ) -> DataFrame:

@@ -12,8 +12,8 @@ Structured-Streaming restatement: the update stream flows through
     table (last write in a batch wins, mirroring Lucene's sequential
     writer),
   - the forward table is a parquet dir partitioned by commit epoch; a
-    new searchable snapshot (InvertedIndex) is built on demand from the
-    latest state — the searcher-refresh analog,
+    new searchable snapshot (an index store, ``searchable_store``) is
+    built on demand from the latest state — the searcher-refresh analog,
   - commitCount maps to ``maxFilesPerTrigger``-style source limits and
     commitTimeout to the trigger interval, both caller-set.
 
@@ -29,8 +29,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from meresco_lucene_spark.index.builder import InvertedIndex
 
 
 @dataclass
@@ -173,12 +171,6 @@ class IngestSink:
         for e in eps:
             shutil.rmtree(os.path.join(self.state_dir, f"epoch={e}"))
         return len(eps)
-
-    def searchable_index(self, **build_kwargs) -> InvertedIndex:
-        """Searcher refresh: a fresh InvertedIndex over current state."""
-        return InvertedIndex.build(
-            self.current_state(), id_col=self.id_col, cache=False, **build_kwargs
-        )
 
     def searchable_store(self, out_dir: str, **build_kwargs):
         """Durable searcher refresh: materialize current state as a

@@ -15,24 +15,26 @@ Faithful restatement of the reference pipeline:
     distanceScore = max(0, -ln(levenshtein+1)/4 + 1) and matchScore =
     count of query words contained in the suggestion; dedup; top 10.
   G5: the reference atomically swaps a rebuilt index dir
-    (SuggestionIndex.java:132-158); here a rebuild is a new DataFrame /
-    overwritten table — snapshot semantics come for free.
+    (SuggestionIndex.java:132-158); here a rebuild is a new store
+    generation behind a CURRENT pointer (swap_suggestion_store).
 
-The ngram "index" is a regular InvertedIndex over pre-tokenized array
+The ngram "index" is a regular index store over pre-tokenized array
 columns, so scoring, filters, and key-set restriction reuse the engine's
 single query path.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from meresco_lucene_spark.analysis.tokenizer import char_ngrams, tokenize_text
-from meresco_lucene_spark.index.builder import InvertedIndex
+from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
 from meresco_lucene_spark.query.executor import hits
 from meresco_lucene_spark.query.ir import MUST, Q
 
@@ -52,19 +54,27 @@ def value_ngrams(value: str, trigram: bool = False) -> list[str]:
 class SuggestionIndex:
     """Ngram suggestion index: one row per distinct suggestion value."""
 
-    index: InvertedIndex  # fields: 'bigram', 'trigram'
-    values: DataFrame  # (doc_id, suggestion, keys array<long>)
+    index: PersistentIndex  # fields: 'bigram', 'trigram'
+    values: DataFrame  # (doc_id, suggestion, keys array<long>, ...)
 
 
-def build_suggestion_index(
+def build_suggestion_store(
     df: DataFrame,
     value_col: str,
+    out_dir: str,
     key_col: str | None = None,
     shingle_values: bool = False,
     min_shingle_size: int = 2,
     max_shingle_size: int = 4,
 ) -> SuggestionIndex:
-    """df: records with a suggestion-value column (+ optional int key).
+    """Durable suggestion index: the values and their ngrams encoded
+    straight into an on-disk index store (index/store.py) under
+    ``out_dir/index`` — reopenable in any session with zero re-analysis;
+    the store's forward table holds the values. The reference's
+    equivalent is the SuggestionNGramIndex directory
+    (SuggestionNGramIndex.java:109-135).
+
+    df: records with a suggestion-value column (+ optional int key).
     Distinct values get stable doc ids = xxhash64(value): deterministic
     across runs and fully parallel (an earlier Window.orderBy with no
     partitionBy serialized every distinct value through one task —
@@ -84,9 +94,7 @@ def build_suggestion_index(
         sel.append(F.col(key_col).alias("_key"))
     vals = df.select(*sel).filter(F.col("suggestion").isNotNull())
     if shingle_values:
-        from pyspark.sql import types as T
-
-        from meresco_lucene_spark.analysis.tokenizer import shingles, tokenize_text
+        from meresco_lucene_spark.analysis.tokenizer import shingles
 
         @F.pandas_udf(T.ArrayType(T.StringType()))
         def shingles_of_value(s: pd.Series) -> pd.Series:
@@ -109,8 +117,6 @@ def build_suggestion_index(
         )
     values = grouped.withColumn("doc_id", F.xxhash64(F.col("suggestion")))
 
-    from pyspark.sql import types as T
-
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def bigrams_udf(s: pd.Series) -> pd.Series:
         return s.map(lambda v: value_ngrams(v, trigram=False))
@@ -125,54 +131,22 @@ def build_suggestion_index(
         "keys",
         bigrams_udf("suggestion").alias("bigram"),
         trigrams_udf("suggestion").alias("trigram"),
-    ).persist()
-    idx = InvertedIndex.build(
-        values, id_col="doc_id", array_cols=["bigram", "trigram"], positions=False
-    )
-    return SuggestionIndex(index=idx, values=values)
-
-
-def build_suggestion_store(
-    df: DataFrame,
-    value_col: str,
-    out_dir: str,
-    key_col: str | None = None,
-    shingle_values: bool = False,
-    min_shingle_size: int = 2,
-    max_shingle_size: int = 4,
-) -> SuggestionIndex:
-    """Durable suggestion index: the ngram index persisted as an on-disk
-    store (index/store.py) plus a values parquet — reopenable in any
-    session with zero re-analysis. Same semantics as
-    build_suggestion_index; the reference's equivalent is the
-    SuggestionNGramIndex directory (SuggestionNGramIndex.java:109-135)."""
-    import os
-
-    from meresco_lucene_spark.index.store import build_index_store
-
-    si = build_suggestion_index(
-        df, value_col, key_col, shingle_values, min_shingle_size, max_shingle_size
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    si.values.select("doc_id", "suggestion", "keys").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "values"))
-    build_index_store(
-        si.values,
-        os.path.join(out_dir, "index"),
-        id_col="doc_id",
-        array_cols=["bigram", "trigram"],
-    )
-    si.values.unpersist()
-    si.index.unpersist()
+    ).persist()  # the build reads it once per table: analyze each value once
+    try:
+        build_index_store(
+            values,
+            os.path.join(out_dir, "index"),
+            id_col="doc_id",
+            array_cols=["bigram", "trigram"],
+        )
+    finally:
+        values.unpersist()
     return open_suggestion_store(df.sparkSession, out_dir)
 
 
 def _resolve_store_dir(out_dir: str) -> str:
     """Resolve the generation the CURRENT pointer names; a store without
     a pointer (plain build_suggestion_store output) is its own root."""
-    import os
-
     cur = os.path.join(out_dir, "CURRENT")
     if os.path.exists(cur):
         with open(cur) as f:
@@ -181,15 +155,8 @@ def _resolve_store_dir(out_dir: str) -> str:
 
 
 def open_suggestion_store(spark, out_dir: str) -> SuggestionIndex:
-    import os
-
-    from meresco_lucene_spark.index.store import PersistentIndex
-
-    d = _resolve_store_dir(out_dir)
-    return SuggestionIndex(
-        index=PersistentIndex(spark, os.path.join(d, "index")),
-        values=spark.read.parquet(os.path.join(d, "values")),
-    )
+    index = PersistentIndex(spark, os.path.join(_resolve_store_dir(out_dir), "index"))
+    return SuggestionIndex(index=index, values=index.forward)
 
 
 def swap_suggestion_store(
@@ -213,7 +180,6 @@ def swap_suggestion_store(
     previous generation keep a working on-disk snapshot until its
     generation ages out of the grace window (keep_generations=0 = GC
     immediately; concurrent readers then unsupported, as before)."""
-    import os
     import shutil
 
     os.makedirs(live_dir, exist_ok=True)

@@ -19,5 +19,17 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def build_store(tmp_path_factory):
+    """``build_store(df, **kwargs)``: an index store built from ``df`` in
+    a fresh temp dir (``build_index_store`` options), opened from disk."""
+    from meresco_lucene_spark.index.store import build_index_store
+
+    def build(df, **kwargs):
+        return build_index_store(df, str(tmp_path_factory.mktemp("store")), **kwargs)
+
+    return build
+
+
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"

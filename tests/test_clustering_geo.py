@@ -7,7 +7,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.clustering import (
     cluster_top_docs,
     dbscan,
@@ -64,7 +63,7 @@ def test_pagerank_hub_wins():
 
 
 @pytest.fixture(scope="module")
-def cluster_idx(spark):
+def cluster_idx(spark, build_store):
     rows = [
         (0, "apple banana cherry"),
         (1, "apple banana cherry date"),
@@ -74,9 +73,8 @@ def cluster_idx(spark):
         (5, "unrelated solitary words"),
     ]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
-    yield ix
-    ix.unpersist()
+    ix = build_store(df, id_col="doc_id", text_cols=["text"])
+    return ix
 
 
 def test_cluster_top_docs(cluster_idx):
@@ -99,7 +97,7 @@ def test_cluster_top_docs(cluster_idx):
 
 
 @pytest.fixture(scope="module")
-def geo_idx(spark):
+def geo_idx(spark, build_store):
     rows = [
         (0, "amsterdam", 52.37, 4.90),
         (1, "utrecht", 52.09, 5.12),
@@ -109,9 +107,8 @@ def geo_idx(spark):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "name", "loc_lat", "loc_lon"])
     )
-    ix = InvertedIndex.build(df, id_col="doc_id", keyword_cols=["name"])
-    yield ix
-    ix.unpersist()
+    ix = build_store(df, id_col="doc_id", keyword_cols=["name"])
+    return ix
 
 
 def test_distance_query(geo_idx):

@@ -5,7 +5,6 @@ LuceneTest.java:687-750 (testClusteringOnVectorsMultipleStrategies) and
 import pandas as pd
 import pytest
 
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.clustering import (
     ClusterConfig,
     ClusterStrategy,
@@ -21,7 +20,7 @@ def _clusters_as_id_sets(clusters):
     )
 
 
-def test_multiple_strategies_golden(spark):
+def test_multiple_strategies_golden(spark, build_store):
     """LuceneTest.java:687-750: three doc groups, three strategies (two
     filtered); each doc lands in the FIRST matching strategy (most
     filters first) -> clusters of sizes [2, 3, 5] with exact members."""
@@ -29,34 +28,31 @@ def test_multiple_strategies_golden(spark):
     rows += [(i, f"aap noot vis {i}") for i in range(5, 8)]
     rows += [(i, f"boom roos aap noot {i}") for i in range(8, 10)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "termvector"]))
-    idx = InvertedIndex.build(df, id_col="doc_id", text_cols=["termvector"])
-    try:
-        config = ClusterConfig(cluster_more_records=0)
-        config.add_strategy(
-            ClusterStrategy(0.4, 1).add_field("termvector", 1.0, None)
-        )
-        config.add_strategy(
-            ClusterStrategy(0.4, 2).add_field("termvector", 1.0, "vis")
-        )
-        config.add_strategy(
-            ClusterStrategy(0.4, 2).add_field("termvector", 1.0, "vuur")
-        )
-        clusters = cluster_top_docs_strategies(
-            idx, hits(idx, Q.matchall()), config, stop=10
-        )
-        assert _clusters_as_id_sets(clusters) == [
-            [8, 9],
-            [5, 6, 7],
-            [0, 1, 2, 3, 4],
-        ]
-        # every cluster reports PageRank-ranked terms
-        assert all(c.topTerms for c in clusters)
-    finally:
-        idx.unpersist()
+    idx = build_store(df, id_col="doc_id", text_cols=["termvector"])
+    config = ClusterConfig(cluster_more_records=0)
+    config.add_strategy(
+        ClusterStrategy(0.4, 1).add_field("termvector", 1.0, None)
+    )
+    config.add_strategy(
+        ClusterStrategy(0.4, 2).add_field("termvector", 1.0, "vis")
+    )
+    config.add_strategy(
+        ClusterStrategy(0.4, 2).add_field("termvector", 1.0, "vuur")
+    )
+    clusters = cluster_top_docs_strategies(
+        idx, hits(idx, Q.matchall()), config, stop=10
+    )
+    assert _clusters_as_id_sets(clusters) == [
+        [8, 9],
+        [5, 6, 7],
+        [0, 1, 2, 3, 4],
+    ]
+    # every cluster reports PageRank-ranked terms
+    assert all(c.topTerms for c in clusters)
 
 
 @pytest.fixture(scope="module")
-def multifield_idx(spark):
+def multifield_idx(spark, build_store):
     rows = [(i, "aap noot vuur", None) for i in range(15)]
     rows += [
         (100, "aap noot vuur", "mies water"),
@@ -66,11 +62,10 @@ def multifield_idx(spark):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["doc_id", "termvector1", "termvector2"])
     )
-    idx = InvertedIndex.build(
+    idx = build_store(
         df, id_col="doc_id", text_cols=["termvector1", "termvector2"]
     )
-    yield idx
-    idx.unpersist()
+    return idx
 
 
 def _co_clustered(clusters, a, b):

@@ -143,7 +143,7 @@ def test_open_runs_no_spark_job(spark, indexes, no_handle_caches):
     fresh = PersistentIndex(spark, indexes["store"].out_dir)
     frames = [fresh.forward, fresh.field_lengths, fresh.term_stats, fresh.blocks]
     reopened = IncrementalIndexStore(spark, indexes["multigen"].root).open()
-    frames += [reopened.forward, reopened.postings_for("text"), reopened.lengths_for("text")]
+    frames += [reopened.forward, reopened.postings_for("text"), reopened.live_lengths()]
     assert all(f.columns for f in frames)
     assert _jobs(spark) == j0
 

@@ -11,7 +11,6 @@ from pyspark.sql import types as T
 
 from meresco_lucene_spark.compose.composedquery import ComposedQuery, execute_composed
 from meresco_lucene_spark.compose.relational import RQ
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.ir import Q
 
 A_ROWS = [
@@ -57,7 +56,7 @@ def _schema(spec):
 
 
 @pytest.fixture(scope="module")
-def cores(spark):
+def cores(spark, build_store):
     lng, s = T.LongType(), T.StringType()
     a = spark.createDataFrame(
         A_ROWS,
@@ -74,22 +73,20 @@ def cores(spark):
         _schema([("doc_id", lng), ("id", s), ("C", lng), ("C2", lng),
                  ("R", s), ("S", s)]),
     )
-    core_a = InvertedIndex.build(
+    core_a = build_store(
         a, id_col="doc_id", keyword_cols=["M", "Q", "U", "S"],
         facet_fields={"cat_M": ["M"], "cat_Q": ["Q"], "cat_U": ["U"], "cat_S": ["S"]},
     )
-    core_b = InvertedIndex.build(
+    core_b = build_store(
         b, id_col="doc_id", keyword_cols=["N", "O", "P", "T"],
         facet_fields={"cat_N": ["N"], "cat_O": ["O"], "cat_P": ["P"], "cat_T": ["T"]},
     )
-    core_c = InvertedIndex.build(
+    core_c = build_store(
         c, id_col="doc_id", keyword_cols=["R", "S"],
         facet_fields={"cat_R": ["R"], "cat_S": ["S"]},
         similarity="TermFrequency",
     )
-    yield {"coreA": core_a, "coreB": core_b, "coreC": core_c}
-    for ix in (core_a, core_b, core_c):
-        ix.unpersist()
+    return {"coreA": core_a, "coreB": core_b, "coreC": core_c}
 
 
 def ids(cores, cq, response=None, **kw):

@@ -10,7 +10,6 @@ import pandas as pd
 import pytest
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.executor import hits
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 
@@ -102,21 +101,22 @@ def _random_query(rng, depth=0):
 
 
 @pytest.fixture(scope="module")
-def diff_idx(spark, tmp_path_factory):
-    """Both execution paths under test: the session DataFrame index AND
-    the persistent store reopened from disk — each random query must be
-    score-identical to the pure-Python evaluator on BOTH."""
-    from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
-
+def diff_idx(spark, tmp_path_factory, build_store):
+    """Both build inputs under test: a store built from an in-memory
+    frame (a local relation, whose tokenize projection the optimizer
+    folds into the relation) AND one built from the same rows read back
+    from parquet — each random query must be score-identical to the
+    pure-Python evaluator on BOTH."""
     docs = _corpus()
-    pdf = pd.DataFrame(docs, columns=["doc_id", "text"])
-    df = spark.createDataFrame(pdf)
-    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
-    out = str(tmp_path_factory.mktemp("diffstore") / "idx")
-    build_index_store(df, out, id_col="doc_id", text_cols=["text"], n_shards=4)
-    disk = PersistentIndex(spark, out)
-    yield {"mem": ix, "disk": disk}, PyIndex(docs)
-    ix.unpersist()
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    src = str(tmp_path_factory.mktemp("diffsrc") / "docs")
+    df.write.parquet(src)
+    spec = dict(id_col="doc_id", text_cols=["text"], n_shards=4)
+    indexes = {
+        "mem": build_store(df, **spec),
+        "disk": build_store(spark.read.parquet(src), **spec),
+    }
+    return indexes, PyIndex(docs)
 
 
 @pytest.mark.parametrize("path", ["mem", "disk"])

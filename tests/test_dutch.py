@@ -11,7 +11,6 @@ from meresco_lucene_spark.analysis.dutch import (
     tokenize_dutch_flat,
     tokenize_dutch_text,
 )
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.executor import hits
 from meresco_lucene_spark.query.ir import Q
 
@@ -45,18 +44,18 @@ def test_keyword_repeat_dedup_shape():
     ]
 
 
-def test_dutch_cols_builder_param(spark):
-    """dutch_cols on InvertedIndex.build applies the stemming analyzer
+def test_dutch_cols_builder_param(spark, build_store):
+    """dutch_cols on a store build applies the stemming analyzer
     directly (no manual token column)."""
     pdf = pd.DataFrame({"doc_id": [1, 2], "field5": ["hond en kat", "de katten"]})
-    idx = InvertedIndex.build(
-        spark.createDataFrame(pdf), id_col="doc_id", dutch_cols=["field5"], cache=False
+    idx = build_store(
+        spark.createDataFrame(pdf), id_col="doc_id", dutch_cols=["field5"]
     )
     got = {r["doc_id"] for r in hits(idx, Q.term("field5", "kat")).collect()}
     assert got == {1, 2}
 
 
-def test_stemmed_field_matches_both_forms(spark):
+def test_stemmed_field_matches_both_forms(spark, build_store):
     """field indexed with Dutch stemming: query 'katten' and 'kat' both
     match; a doc containing 'kat' matches query 'katten' too."""
     from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
@@ -68,8 +67,8 @@ def test_stemmed_field_matches_both_forms(spark):
     df = spark.createDataFrame(pdf).withColumn(
         "field4_tokens", tokenize_dutch_udf(F.col("field4"))
     )
-    idx = InvertedIndex.build(
-        df, id_col="doc_id", array_cols=["field4_tokens"], cache=False
+    idx = build_store(
+        df, id_col="doc_id", array_cols=["field4_tokens"]
     )
     # stemmed query side: analyze the query term the same way
     got_kat = {r["doc_id"] for r in hits(idx, Q.term("field4_tokens", "kat")).collect()}

@@ -291,7 +291,7 @@ def test_random_op_sequences_match_dict_model(spark, tmp_path):
         }
         assert got == model, f"seed {seed}"
         # every live doc matches the shared token EXACTLY ONCE (lists,
-        # not sets — the round-3 lengths_for bug duplicated upserted
+        # not sets — the round-3 length-read bug duplicated upserted
         # hits and a set comparison collapsed the duplicates)
         q = Q.term("text", f"w{seed}")
         ids = [r["doc_id"] for r in hits(inc.open(), q).collect()]
@@ -321,10 +321,10 @@ def test_random_op_sequences_match_dict_model(spark, tmp_path):
         assert merged_scores == fresh_scores, f"seed {seed}"
 
 
-def test_composed_query_over_incremental_core(spark, tmp_path):
+def test_composed_query_over_incremental_core(spark, tmp_path, build_store):
     """Interface interchangeability: a MultiGenIndex (built from two
     commits, one row updated) is a drop-in core for the multi-core
-    composed-query algebra — same semi-join answer as the session-built
+    composed-query algebra — same semi-join answer as the single-store
     cores in test_composed.py::test_join_query."""
     from pyspark.sql import types as T
 
@@ -332,7 +332,6 @@ def test_composed_query_over_incremental_core(spark, tmp_path):
         ComposedQuery,
         execute_composed,
     )
-    from meresco_lucene_spark.index.builder import InvertedIndex
     from tests.test_composed import A_ROWS, B_ROWS, _schema
 
     lng, s = T.LongType(), T.StringType()
@@ -359,7 +358,7 @@ def test_composed_query_over_incremental_core(spark, tmp_path):
         _schema([("doc_id", lng), ("id", s), ("B", lng), ("D", lng),
                  ("N", s), ("O", s), ("P", s), ("T", s), ("intField", lng)]),
     )
-    core_b = InvertedIndex.build(b, id_col="doc_id", keyword_cols=["N", "O", "P", "T"])
+    core_b = build_store(b, id_col="doc_id", keyword_cols=["N", "O", "P", "T"])
 
     cq = ComposedQuery("coreA", queries={"coreA": Q.matchall()})
     cq.set_core_query("coreB", Q.term("N", "true"))
@@ -391,10 +390,10 @@ def test_uncommitted_generation_invisible(spark, docs, tmp_path):
 def test_upsert_hit_multiplicity_and_live_dl_scores(spark, tmp_path):
     """Regression for the round-3 wrong-answer bug: after an upsert the
     updated doc was returned TWICE per query (term AND phrase) with one
-    stale-dl score, because MultiGenIndex.lengths_for skipped the
-    liveness filter while the executor joins postings to lengths on
-    bare doc_id. Asserts hit MULTIPLICITY (lists, never sets) and the
-    exact live-dl BM25 score. Reference contract: one norm per live doc,
+    stale-dl score, because a length read skipped the liveness filter
+    while the executor joined postings to lengths on bare doc_id. The
+    postings now carry their own dl. Asserts hit MULTIPLICITY (lists,
+    never sets) and the exact live-dl BM25 score. Reference contract: one norm per live doc,
     dead docs never match (delete-then-add, Lucene.java:166-171)."""
     import numpy as np
 
@@ -415,10 +414,14 @@ def test_upsert_hit_multiplicity_and_live_dl_scores(spark, tmp_path):
     )
     multi = inc.open()
 
-    # lengths_for is the buggy surface itself: exactly one row per live doc
-    dl_rows = multi.lengths_for("text").filter(F.col("doc_id") == 5).collect()
-    assert len(dl_rows) == 1, f"duplicate length rows: {dl_rows}"
-    live_dl = dl_rows[0]["dl"]
+    # exactly one live posting of the doc, carrying the live dl
+    dl_rows = (
+        multi.postings_for("text")
+        .filter((F.col("doc_id") == 5) & (F.col("term") == "alpha"))
+        .collect()
+    )
+    assert len(dl_rows) == 1, f"duplicate postings: {dl_rows}"
+    live_dl = dl_rows[0]["_bdl"]
     assert live_dl > 5  # the LIVE (long) version, not the stale one
 
     for q in (Q.term("text", "alpha"), Q.phrase("text", "alpha", "beta")):

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.executor import facet_counts_df, hits, search
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 
@@ -56,18 +55,19 @@ def naive_bm25(term, doc):
 
 
 @pytest.fixture(scope="module")
-def idx(spark):
+def idx(spark, build_store):
     pdf = pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"])
-    df = spark.createDataFrame(pdf)
-    ix = InvertedIndex.build(
-        df,
+    return build_store(
+        spark.createDataFrame(pdf),
         id_col="doc_id",
         text_cols=["text"],
         keyword_cols=["lang"],
         facet_fields={"lang": ["lang"]},
     )
-    yield ix
-    ix.unpersist()
+
+
+def _lengths(ix, fld):
+    return ix.field_lengths.filter(F.col("field") == fld).collect()
 
 
 def _hit_map(ix, q):
@@ -89,7 +89,7 @@ def test_postings_tf_df(idx):
 
 
 def test_field_lengths(idx):
-    dl = {r["doc_id"]: r["dl"] for r in idx.lengths_for("text").collect()}
+    dl = {r["doc_id"]: r["dl"] for r in _lengths(idx, "text")}
     assert dl == {0: 4, 1: 3, 2: 5, 3: 4, 4: 2, 5: 5}
 
 
@@ -221,36 +221,32 @@ def test_drilldown(idx):
     assert set(got) == {2}
 
 
-def test_quantized_scoring_end_to_end(spark):
-    """quantized=True scores with the SmallFloat-rounded dl — the
-    Lucene-8 parity mode (SURVEY §1.4). dl=20 quantizes to 20 exactly?
-    no: 20 -> (20>>1&7|8)<<1 = 20; use dl=19 -> 18."""
-    import math
+def test_quantized_scoring_end_to_end(spark, build_store):
+    """A store built quantized=True scores with the SmallFloat-rounded dl
+    — the Lucene-8 parity mode (SURVEY §1.4) — and one built without it
+    with the raw dl. dl=20 quantizes to 20 exactly ((20>>1&7|8)<<1 =
+    20), so the test uses dl=19, which quantizes to 18."""
+    import numpy as np
 
     from meresco_lucene_spark.query.bm25 import quantize_dl
-    import numpy as np
 
     words = ["filler%d" % i for i in range(18)] + ["target"]  # dl = 19
     pdf = pd.DataFrame({"doc_id": [0, 1], "text": [" ".join(words), "target two"]})
-    ix = InvertedIndex.build(
-        spark.createDataFrame(pdf), id_col="doc_id", text_cols=["text"],
-        quantized=True, cache=False,
-    )
-    got = {r["doc_id"]: r["score"] for r in hits(ix, Q.term("text", "target")).collect()}
+    df = spark.createDataFrame(pdf)
     n, avgdl = 2, (19 + 2) / 2
     q19 = int(quantize_dl(np.array([19]))[0])
     assert q19 == 18  # the quantization actually changes this dl
     idf = math.log(1 + (n - 2 + 0.5) / (2 + 0.5))
-    expect0 = idf * 1 / (1 + K1 * (1 - B + B * q19 / avgdl))
-    assert abs(got[0] - expect0) < 1e-9
-    # unquantized differs
-    expect0_raw = idf * 1 / (1 + K1 * (1 - B + B * 19 / avgdl))
-    assert abs(got[0] - expect0_raw) > 1e-6
+    for quantized, dl in ((True, q19), (False, 19)):
+        ix = build_store(df, id_col="doc_id", text_cols=["text"], quantized=quantized)
+        got = _hit_map(ix, Q.term("text", "target"))
+        assert abs(got[0] - idf * 1 / (1 + K1 * (1 - B + B * dl / avgdl))) < 1e-9
+        assert abs(got[1] - idf * 1 / (1 + K1 * (1 - B + B * 2 / avgdl))) < 1e-9
 
 
 def test_quantized_norms_change_dl(idx):
     # dl=5 is <8 so exact; craft check via norm_dl column equality instead
-    rows = {r["doc_id"]: (r["dl"], r["norm_dl"]) for r in idx.lengths_for("text").collect()}
+    rows = {r["doc_id"]: (r["dl"], r["norm_dl"]) for r in _lengths(idx, "text")}
     for d, (dl, ndl) in rows.items():
         assert ndl <= dl
 
@@ -358,35 +354,3 @@ def test_dedup(idx):
     py_hit = [h for h in r.hits if h.duplicateCount == 3]
     assert len(py_hit) == 1
 
-
-class _FailingFrame:
-    def count(self):
-        raise RuntimeError("warm-up scan failed")
-
-
-def test_unpersist_joins_postings_warmup_and_passes_failure(spark, monkeypatch):
-    """build(cache=True) warms the postings cache on a thread the index
-    keeps: unpersist() joins it and re-raises its failure, except when
-    the failure was the session stopping under it."""
-    from meresco_lucene_spark.index import builder
-
-    df = spark.createDataFrame(
-        pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "stars"])
-    )
-    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
-    warmer = ix._warmer
-    ix.unpersist()
-    assert not warmer.is_alive() and warmer.error is None
-    assert ix._warmer is None
-
-    ix = InvertedIndex.build(df, id_col="doc_id", text_cols=["text"])
-    ix.unpersist()
-    ix._warmer = builder._PostingsWarmer(_FailingFrame())
-    ix._warmer.start()
-    with pytest.raises(RuntimeError, match="warm-up scan failed"):
-        ix.unpersist()
-
-    ix._warmer = builder._PostingsWarmer(_FailingFrame())
-    ix._warmer.start()
-    monkeypatch.setattr(builder, "_session_stopped", lambda spark: True)
-    ix.unpersist()  # session teardown: nothing to pass on

@@ -22,7 +22,6 @@ from pyspark.sql import types as T
 
 from meresco_lucene_spark.analysis.dutch import tokenize_dutch_flat
 from meresco_lucene_spark.compose.composedquery import ComposedQuery, execute_composed
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.executor import facet_counts_df, hits, search
 from meresco_lucene_spark.query.ir import Q
 
@@ -56,7 +55,7 @@ def _parse_dir(d):
 
 
 @pytest.fixture(scope="module")
-def main_idx(spark):
+def main_idx(spark, build_store):
     rows = _parse_dir(f"{DATA}/main")
     pdf = pd.DataFrame(rows)
     pdf["doc_id"] = pdf["id"].str.replace("record:", "").astype(int)
@@ -76,7 +75,7 @@ def main_idx(spark):
         lambda v: tokenize_dutch_flat(v) if isinstance(v, str) else []
     )
     df = spark.createDataFrame(pdf.drop(columns=["fieldHier"]))
-    idx = InvertedIndex.build(
+    idx = build_store(
         df,
         id_col="doc_id",
         text_cols=["field1", "field2", "field3", "field_missing"],
@@ -87,12 +86,11 @@ def main_idx(spark):
             "untokenized.fieldHier": ["hier0", "hier1", "hier2"],
         },
     )
-    yield idx, pdf
-    idx.unpersist()
+    return idx, pdf
 
 
 @pytest.fixture(scope="module")
-def main2_idx(spark):
+def main2_idx(spark, build_store):
     rows = _parse_dir(f"{DATA}/main2")
     pdf = pd.DataFrame(rows)
     pdf["doc_id"] = pdf["id"].str.replace("main2:record:", "").astype(int)
@@ -101,15 +99,14 @@ def main2_idx(spark):
         pdf[c] = pd.to_numeric(pdf[c], errors="coerce").astype("Int64")
     keep = ["doc_id", "id", "field1", "field2", "field3", "key_field", "groupfield", "sort1", "sort2"]
     df = spark.createDataFrame(pdf[keep])
-    idx = InvertedIndex.build(
+    idx = build_store(
         df,
         id_col="doc_id",
         text_cols=["field1", "field2", "field3"],
         keyword_cols=[],
         facet_fields={"untokenized.field2": ["field2"]},
     )
-    yield idx, pdf
-    idx.unpersist()
+    return idx, pdf
 
 
 def ids_of(resp):

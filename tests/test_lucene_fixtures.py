@@ -6,13 +6,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.query.executor import hits, search
 from meresco_lucene_spark.query.ir import SHOULD, Q
 
 
 @pytest.fixture(scope="module")
-def facet_idx(spark):
+def facet_idx(spark, build_store):
     # LuceneTest.java:174-231: 3 docs with two facet fields
     pdf = pd.DataFrame(
         {
@@ -22,7 +21,7 @@ def facet_idx(spark):
             "facet_field3": ["second item", "other value", "second item"],
         }
     )
-    ix = InvertedIndex.build(
+    ix = build_store(
         spark.createDataFrame(pdf),
         id_col="doc_id",
         keyword_cols=["field1"],
@@ -31,8 +30,7 @@ def facet_idx(spark):
             "facet-field3": ["facet_field3"],
         },
     )
-    yield ix
-    ix.unpersist()
+    return ix
 
 
 def test_facets_golden(facet_idx):
@@ -62,13 +60,13 @@ def test_facet_max_terms_zero_unlimited(facet_idx):
     assert len(r.drilldownData[0]["terms"]) == 3
 
 
-def test_boost_changes_ranking(spark):
+def test_boost_changes_ranking(spark, build_store):
     """LuceneTest boost: a SHOULD clause with a higher boost outranks."""
     pdf = pd.DataFrame(
         {"doc_id": [0, 1], "text": ["aap noot mies", "vuur water mies"]}
     )
-    ix = InvertedIndex.build(
-        spark.createDataFrame(pdf), id_col="doc_id", text_cols=["text"], cache=False
+    ix = build_store(
+        spark.createDataFrame(pdf), id_col="doc_id", text_cols=["text"]
     )
     q = Q.boolean(
         (SHOULD, Q.term("text", "aap", boost=10.0)),
@@ -84,7 +82,7 @@ def test_boost_changes_ranking(spark):
     assert [h.id for h in r.hits] == [1, 0]
 
 
-def test_prefix_search_counts(spark):
+def test_prefix_search_counts(spark, build_store):
     """Lucene.java:629-666 prefixSearch returns (term, docFreq) ordered
     by count desc (client _lucene.py:132-143)."""
     pdf = pd.DataFrame(
@@ -93,8 +91,8 @@ def test_prefix_search_counts(spark):
             "text": ["value0 value1", "value1 value2", "value1"],
         }
     )
-    ix = InvertedIndex.build(
-        spark.createDataFrame(pdf), id_col="doc_id", text_cols=["text"], cache=False
+    ix = build_store(
+        spark.createDataFrame(pdf), id_col="doc_id", text_cols=["text"]
     )
     got = [
         (r["term"], r["df"])

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from meresco_lucene_spark.core import LuceneCore
-from meresco_lucene_spark.index.builder import occurrence_frames, posting_frames
+from meresco_lucene_spark.index.builder import occurrence_frames
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
 from meresco_lucene_spark.index.store import build_index_store
 
@@ -60,11 +60,11 @@ DL = {
 NORM_DL = {k: (16 if dl == 17 else dl) for k, dl in DL.items()}
 
 
-@pytest.mark.parametrize("inline_dl", ["dl", "norm_dl"])
-def test_occurrence_frames_hand_computed(batch, inline_dl):
-    occ, lengths = occurrence_frames(batch, "doc_id", inline_dl=inline_dl, **SPEC)
+@pytest.mark.parametrize("dl_col", ["dl", "norm_dl"])
+def test_occurrence_frames_hand_computed(batch, dl_col):
+    occ, lengths = occurrence_frames(batch, "doc_id", dl_col=dl_col, **SPEC)
     assert occ.columns == ["field", "term", "doc_id", "pos", "_dl"]
-    dls = DL if inline_dl == "dl" else NORM_DL
+    dls = DL if dl_col == "dl" else NORM_DL
     assert {tuple(r) for r in occ.collect()} == {
         (*o, dls[(o[0], o[2])]) for o in OCCURRENCES
     }
@@ -73,21 +73,6 @@ def test_occurrence_frames_hand_computed(batch, inline_dl):
     assert {(r.field, r.doc_id): (r.dl, r.norm_dl) for r in rows} == {
         k: (DL[k], NORM_DL[k]) for k in DL
     }
-
-
-@pytest.mark.parametrize("positions", [True, False])
-def test_posting_frames_group_occurrences(batch, positions):
-    postings, lengths = posting_frames(batch, "doc_id", positions=positions, **SPEC)
-    expected: dict[tuple, list[int]] = {}
-    for f, t, d, p in OCCURRENCES:
-        expected.setdefault((f, t, d), []).append(p)
-    got = {
-        (r.field, r.term, r.doc_id): (r.tf, r.positions) for r in postings.collect()
-    }
-    assert got == {
-        k: (len(ps), sorted(ps) if positions else None) for k, ps in expected.items()
-    }
-    assert lengths.count() == len(DL)
 
 
 def test_store_build_writes_one_lengths_file_per_input_partition(spark, tmp_path):

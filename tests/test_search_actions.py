@@ -143,30 +143,26 @@ def test_pages_tile_the_ranking(ix):
         assert [h.id for h in page.hits] == [h.id for h in full.hits[start:stop]]
 
 
-def test_total_exact_when_adaptive_plan_drops_the_limit(spark):
+def test_total_exact_when_adaptive_plan_drops_the_limit(spark, build_store):
     """Once adaptive execution knows the hits fit in the page, it drops
     the limit and sorts globally; its range-partition sample re-reads
     the observed rows. The total must stay exact on every such plan —
     the plan varies from call to call, hence the repeats."""
-    from meresco_lucene_spark.index.builder import InvertedIndex
 
     df = spark.createDataFrame(
         [(i, i + 1, "x" if i % 2 else "y") for i in range(8)],
         "doc_id long, A long, M string",
     )
-    ix = InvertedIndex.build(df, id_col="doc_id", keyword_cols=["M"])
+    ix = build_store(df, id_col="doc_id", keyword_cols=["M"])
     keys = spark.createDataFrame([(k,) for k in range(1, 9)], "key long")
-    try:
-        for stop in (3, 8, 8, 8, 10):
-            r = search(ix, Q.matchall(), key_filters=[(keys, "A", False)], stop=stop)
-            assert (r.total, len(r.hits)) == (8, min(stop, 8)), stop
-            r = search(
-                ix, Q.matchall(), key_filters=[(keys, "A", False)],
-                dedup_field="M", stop=stop,
-            )
-            assert (r.total, r.totalWithDuplicates) == (2, 8), stop
-    finally:
-        ix.unpersist()
+    for stop in (3, 8, 8, 8, 10):
+        r = search(ix, Q.matchall(), key_filters=[(keys, "A", False)], stop=stop)
+        assert (r.total, len(r.hits)) == (8, min(stop, 8)), stop
+        r = search(
+            ix, Q.matchall(), key_filters=[(keys, "A", False)],
+            dedup_field="M", stop=stop,
+        )
+        assert (r.total, r.totalWithDuplicates) == (2, 8), stop
 
 
 def _recount(ix, q, dim, path, cap):

@@ -55,7 +55,8 @@ def exhaustive_scores(ix, term):
     post = ix.postings_for(FIELD).filter(F.col("term") == term).toPandas()
     if not len(post):
         return []
-    dls = ix.lengths_for(FIELD).toPandas().set_index("doc_id")["dl"]
+    lengths = ix.field_lengths.filter(F.col("field") == FIELD)
+    dls = lengths.toPandas().set_index("doc_id")["dl"]
     st = ix.field_stats(FIELD)
     s = bm25_score_numpy(
         post["tf"].to_numpy(float),

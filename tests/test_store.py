@@ -1,20 +1,23 @@
 """Persistent index store: the full query surface served from disk.
 
-Parity contract: every operator of query/executor.py must produce
-IDENTICAL results over a PersistentIndex reopened from disk as over the
-session InvertedIndex — term/bool/phrase/prefix/range/facets/sort/dedup
-— with zero re-tokenization on reopen (the reference's durable
+Parity contract: every operator of query/executor.py over a
+PersistentIndex reopened from disk must match an independent reference
+— hand-computed postings and the pure-Python exhaustive scorer of
+tests/exhaustive.py — for term/bool/phrase/prefix/range/facets/sort/
+dedup, with zero re-tokenization on reopen (the reference's durable
 commit -> search contract, Lucene.java:920-945, :899-907)."""
 
 import io
+from collections import defaultdict
 from contextlib import redirect_stdout
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from exhaustive import Exhaustive
+from meresco_lucene_spark.analysis.tokenizer import tokenize_text
 from meresco_lucene_spark.index import store as store_mod
-from meresco_lucene_spark.index.builder import InvertedIndex
 from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
 from meresco_lucene_spark.query.executor import facet_counts_df, hits, search
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
@@ -41,33 +44,43 @@ def stores(spark, tmp_path_factory):
         facet_fields={"lang": ["lang"]},
     )
     build_index_store(df, out, n_shards=4, **kwargs)
-    mem = InvertedIndex.build(df, **kwargs)
+    exact = Exhaustive(pdf, ["text"], ["lang"], facet_fields={"lang": ["lang"]})
     disk = PersistentIndex(spark, out)  # REOPEN: fresh handle, disk only
-    yield mem, disk
-    mem.unpersist()
+    return exact, disk
 
 
 def _hits(ix, q):
-    return {r["doc_id"]: round(r["score"], 9) for r in hits(ix, q).collect()}
+    return {r["doc_id"]: r["score"] for r in hits(ix, q).collect()}
 
 
-def test_postings_identical_to_dataframe_index(stores):
-    mem, disk = stores
-    a = {
-        (r["term"], r["doc_id"]): (r["tf"], list(r["positions"]))
-        for r in mem.postings_for("text").collect()
-    }
-    b = {
-        (r["term"], r["doc_id"]): (r["tf"], list(r["positions"]))
+def _assert_scores(got, want, q=None):
+    assert got.keys() == want.keys(), q
+    for d, s in want.items():
+        assert got[d] == pytest.approx(s, rel=1e-12), (q, d)
+
+
+def test_postings_match_hand_computed(stores):
+    _, disk = stores
+    positions = defaultdict(list)  # (term, doc_id) -> positions
+    dls = {}
+    for d, text, _, _ in DOCS:
+        toks = tokenize_text(text)
+        dls[d] = len(toks)
+        for p, t in enumerate(toks):
+            positions[(t, d)].append(p)
+    assert {
+        (r["term"], r["doc_id"]): (r["tf"], r["_bdl"], list(r["positions"]))
         for r in disk.postings_for("text").collect()
-    }
-    assert a == b
-    assert {r["doc_id"]: r["dl"] for r in disk.lengths_for("text").collect()} == {
-        r["doc_id"]: r["dl"] for r in mem.lengths_for("text").collect()
-    }
-    assert sorted(
-        map(tuple, disk.term_stats_for("text").collect())
-    ) == sorted(map(tuple, mem.term_stats_for("text").collect()))
+    } == {(t, d): (len(ps), dls[d], ps) for (t, d), ps in positions.items()}
+    lengths = disk.field_lengths.filter(F.col("field") == "text")
+    assert {r["doc_id"]: r["dl"] for r in lengths.collect()} == dls
+    df, cf = defaultdict(int), defaultdict(int)
+    for (t, _), ps in positions.items():
+        df[t] += 1
+        cf[t] += len(ps)
+    assert sorted(map(tuple, disk.term_stats_for("text").collect())) == sorted(
+        (t, df[t], cf[t]) for t in df
+    )
 
 
 QUERIES = [
@@ -89,30 +102,38 @@ QUERIES = [
 
 @pytest.mark.parametrize("qi", range(len(QUERIES)))
 def test_query_surface_parity(stores, qi):
-    mem, disk = stores
+    exact, disk = stores
     q = QUERIES[qi]
-    assert _hits(disk, q) == _hits(mem, q), f"mismatch for {q.to_dict()}"
+    _assert_scores(_hits(disk, q), exact.evaluate(q), q.to_dict())
 
 
 def test_search_facets_sort_dedup_from_disk(stores):
-    mem, disk = stores
-    kw = dict(
-        query=Q.term("text", "join"),
+    exact, disk = stores
+    r = search(
+        disk,
+        query=Q.term("text", "join"),  # docs 0, 1 (py), 3 (go), 5 (no lang)
         facets=[{"fieldname": "lang", "maxTerms": 10}],
         dedup_field="lang",
         stored_fields=["lang", "stars"],
         sort_keys=[{"sortBy": "score", "sortDescending": True}],
     )
-    ra, rb = search(mem, **kw), search(disk, **kw)
-    assert rb.total == ra.total
-    assert rb.totalWithDuplicates == ra.totalWithDuplicates
-    assert rb.drilldownData == ra.drilldownData
-    assert [(h.id, round(h.score, 9), h.fields) for h in rb.hits] == [
-        (h.id, round(h.score, 9), h.fields) for h in ra.hits
+    scores = exact.evaluate(Q.term("text", "join"))
+    best_py = min((0, 1), key=lambda d: (-scores[d], d))
+    kept = sorted((best_py, 3, 5), key=lambda d: (-scores[d], d))
+    fields = {0: ("py", 3), 1: ("py", 1), 3: ("go", None), 5: (None, 4)}
+    assert (r.total, r.totalWithDuplicates) == (3, 4)
+    assert r.drilldownData == [
+        {"fieldname": "lang", "terms": [{"term": "py", "count": 2}, {"term": "go", "count": 1}]}
     ]
-    fa = facet_counts_df(mem, hits(mem, Q.matchall()), "lang").collect()
-    fb = facet_counts_df(disk, hits(disk, Q.matchall()), "lang").collect()
-    assert [tuple(r) for r in fa] == [tuple(r) for r in fb]
+    assert [h.id for h in r.hits] == kept
+    assert [h.duplicateCount for h in r.hits] == [2 if d == best_py else 1 for d in kept]
+    for h in r.hits:
+        assert h.score == pytest.approx(scores[h.id], rel=1e-12)
+        lang, stars = fields[h.id]
+        assert h.fields["lang"] == lang
+        assert pd.isna(h.fields["stars"]) if stars is None else h.fields["stars"] == stars
+    counts = facet_counts_df(disk, hits(disk, Q.matchall()), "lang").collect()
+    assert [tuple(c) for c in counts] == [("py", 3), ("go", 1), ("java", 1)]
 
 
 def test_term_filter_pushed_to_parquet_scan(stores):
@@ -147,14 +168,14 @@ def test_reopen_zero_retokenization(spark, stores, monkeypatch):
     assert r.total == 4 and len(r.hits) == 3
 
 
-def _topk_of(ix, q, k):
-    return [
-        (r["doc_id"], round(r["score"], 9))
-        for r in hits(ix, q)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .collect()
-    ]
+def _assert_topk(rows, exact, q, k):
+    """``rows`` (doc_id, score) are the exact top-k of ``q``: the same
+    docs in (score desc, doc_id asc) order, with the same scores."""
+    want = sorted(exact.evaluate(q).items(), key=lambda ds: (-ds[1], ds[0]))[:k]
+    got = [(r["doc_id"], r["score"]) for r in rows]
+    assert [d for d, _ in got] == [d for d, _ in want], q.to_dict()
+    for (_, s), (_, w) in zip(got, want):
+        assert s == pytest.approx(w, rel=1e-12)
 
 
 @pytest.mark.parametrize("force_wand", [False, True])
@@ -167,22 +188,17 @@ def test_store_wand_rank_identity(stores, force_wand, monkeypatch):
         import meresco_lucene_spark.index.wand as wand
 
         monkeypatch.setattr(wand, "EXHAUSTIVE_CAP", 0)
-    mem, disk = stores
+    exact, disk = stores
     for term in ("spark", "fast", "unique_term", "nosuchterm"):
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in disk.term_topk("text", term, 4).collect()]
-        assert got == _topk_of(mem, Q.term("text", term), 4), term
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in disk.or_topk("text", ["spark", "join"], 4).collect()]
-    assert got == _topk_of(mem, Q.or_(Q.term("text", "spark"), Q.term("text", "join")), 4)
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in disk.and_topk("text", ["spark", "join"], 4).collect()]
-    assert got == _topk_of(mem, Q.and_(Q.term("text", "spark"), Q.term("text", "join")), 4)
+        rows = disk.term_topk("text", term, 4).collect()
+        _assert_topk(rows, exact, Q.term("text", term), 4)
+    rows = disk.or_topk("text", ["spark", "join"], 4).collect()
+    _assert_topk(rows, exact, Q.or_(Q.term("text", "spark"), Q.term("text", "join")), 4)
+    rows = disk.and_topk("text", ["spark", "join"], 4).collect()
+    _assert_topk(rows, exact, Q.and_(Q.term("text", "spark"), Q.term("text", "join")), 4)
     assert disk.and_topk("text", ["spark", "nosuchterm"], 4).count() == 0
     # keyword field (omit_norms): dl=1/avgdl=1 collapses to tf/(tf+k1)
-    got = [(r["doc_id"], round(r["score"], 9))
-           for r in disk.term_topk("lang", "py", 5).collect()]
-    assert got == _topk_of(mem, Q.term("lang", "py"), 5)
+    _assert_topk(disk.term_topk("lang", "py", 5).collect(), exact, Q.term("lang", "py"), 5)
 
 
 def _jobs(spark):

@@ -49,7 +49,7 @@ def test_upsert_and_delete_batches(spark, tmp_path):
     assert {r["doc_id"] for r in state.collect()} == {1, 3}
 
     # searcher refresh: new index reflects latest commit
-    idx = sink.searchable_index(text_cols=["text"])
+    idx = sink.searchable_store(str(tmp_path / "store"), text_cols=["text"])
     assert idx.num_docs() == 2
     got = {r["doc_id"] for r in hits(idx, Q.term("text", "updated")).collect()}
     assert got == {1}
@@ -140,7 +140,7 @@ def test_streaming_foreachbatch_end_to_end(spark, tmp_path):
     finally:
         query.stop()
 
-    idx = sink.searchable_index(text_cols=["text"])
+    idx = sink.searchable_store(str(tmp_path / "store"), text_cols=["text"])
     assert {r["doc_id"] for r in hits(idx, Q.term("text", "gamma")).collect()} == {11, 12}
 
 

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 
 from meresco_lucene_spark.suggest import (
-    build_suggestion_index,
+    build_suggestion_store,
     rank_suggestions,
     suggest,
     value_ngrams,
@@ -21,7 +21,7 @@ def test_value_ngrams_golden():
 
 
 @pytest.fixture(scope="module")
-def si(spark):
+def si(spark, tmp_path_factory):
     # SuggestionIndexTest.testSuggestionIndex fixture
     pdf = pd.DataFrame(
         {
@@ -31,9 +31,9 @@ def si(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    s = build_suggestion_index(df, "title", key_col="key")
-    yield s
-    s.index.unpersist()
+    return build_suggestion_store(
+        df, "title", str(tmp_path_factory.mktemp("sugg")), key_col="key"
+    )
 
 
 def _suggestions(si, value, trigram=False):
@@ -56,7 +56,7 @@ def test_suggest_words(si):
     assert _suggestions(si, "fel") == ["Fellowship of the ring"]
 
 
-def test_shingle_record_index(spark):
+def test_shingle_record_index(spark, tmp_path):
     """G1 shingle records (SuggestionIndex.java:234-244 shingles +
     SuggestionIndexTest.java:158-159 golden): with shingle_values=True
     every word shingle of a title is its own suggestion value, so a
@@ -65,8 +65,9 @@ def test_shingle_record_index(spark):
     pdf = pd.DataFrame(
         {"rec": ["identifier"], "key": [1], "title": ["Lord of the rings"]}
     )
-    s = build_suggestion_index(
-        spark.createDataFrame(pdf), "title", key_col="key", shingle_values=True
+    s = build_suggestion_store(
+        spark.createDataFrame(pdf), "title", str(tmp_path / "sugg"),
+        key_col="key", shingle_values=True,
     )
     vals = {r["suggestion"] for r in s.values.select("suggestion").collect()}
     assert vals == {
@@ -80,7 +81,6 @@ def test_shingle_record_index(spark):
     # all shingles carry the source record's key
     keys = {tuple(r["keys"]) for r in s.values.collect()}
     assert keys == {(1,)}
-    s.index.unpersist()
 
 
 def test_suggestion_store_reopen_and_swap(spark, tmp_path):
@@ -88,7 +88,6 @@ def test_suggestion_store_reopen_and_swap(spark, tmp_path):
     suggestions; then an atomic rebuild-and-swap (G5,
     SuggestionIndex.java:132-158) replaces the live dir with new values."""
     from meresco_lucene_spark.suggest import (
-        build_suggestion_store,
         open_suggestion_store,
         swap_suggestion_store,
     )
@@ -140,7 +139,7 @@ def test_swap_generation_grace(spark, tmp_path):
     assert gens == ["gen-1", "gen-2"]  # gen-0 aged out of the grace window
 
 
-def test_ranking_shorter_value_wins(spark):
+def test_ranking_shorter_value_wins(spark, tmp_path):
     """SuggestionIndexTest.testRanking: 'lo' ranks 'Lord magic' (shorter,
     fewer ngrams -> higher BM25 tf-norm) above 'Lord of the rings'."""
     pdf = pd.DataFrame(
@@ -153,11 +152,12 @@ def test_ranking_shorter_value_wins(spark):
             ],
         }
     )
-    s = build_suggestion_index(spark.createDataFrame(pdf), "title", key_col="key")
+    s = build_suggestion_store(
+        spark.createDataFrame(pdf), "title", str(tmp_path / "sugg"), key_col="key"
+    )
     got = suggest(s, "lo").collect()
     assert [r["suggestion"] for r in got] == ["Lord magic", "Lord of the rings"]
     assert got[0]["score"] > got[1]["score"]
-    s.index.unpersist()
 
 
 def test_key_filter(si):

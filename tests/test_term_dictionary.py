@@ -17,14 +17,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.analysis.tokenizer import tokenize_text
+from exhaustive import B, K1, Exhaustive
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
 from meresco_lucene_spark.index.store import build_index_store, open_persistent_index
-from meresco_lucene_spark.query.bm25 import quantize_dl
 from meresco_lucene_spark.query.executor import hits, search
 from meresco_lucene_spark.query.ir import MUST, SHOULD, Q
 
-K1, B = 1.2, 0.75
 N_SHARDS, SALTS = 32, 8
 HOT, RARE, SHARED = "alpha", "quark", "delta"
 FILLER = ["beta", "gamma", "epsilon", "zeta", "eta", "theta", "iota"]
@@ -32,12 +30,16 @@ FILLER = ["beta", "gamma", "epsilon", "zeta", "eta", "theta", "iota"]
 
 def _rows(n=96):
     """Every doc holds HOT; RARE is in three docs; SHARED is a word of
-    both text fields; some docs hold the phrase "alpha beta alpha"."""
+    both text fields; some docs hold the phrase "alpha beta alpha"; a
+    quarter of the docs are long enough (dl > 16) that the SmallFloat
+    norm rounds their length."""
     rows = []
     for i in range(n):
         words = [HOT] + [FILLER[(i * k) % len(FILLER)] for k in range(1, 3 + i % 5)]
         if i % 4 == 0:
             words += ["alpha", "beta", "alpha"]
+        if i % 8 in (0, 1):
+            words += FILLER * 2
         if i in (5, 40, 77):
             words.append(RARE)
         if i % 3 == 0:
@@ -45,83 +47,6 @@ def _rows(n=96):
         title = f"{SHARED} {FILLER[i % len(FILLER)]}" if i % 5 else FILLER[i % 3]
         rows.append((i, " ".join(words), title, ["py", "go", "c"][i % 3]))
     return pd.DataFrame(rows, columns=["doc_id", "text", "title", "lang"])
-
-
-class Exhaustive:
-    """Lucene 8 BM25 / TermFrequency scoring of every doc, from the
-    token lists alone."""
-
-    def __init__(self, pdf, text_fields, keyword_fields, similarity="BM25"):
-        self.similarity = similarity
-        self.keyword = set(keyword_fields)
-        self.pos = defaultdict(dict)  # field -> doc -> term -> positions
-        for _, r in pdf.iterrows():
-            for f in text_fields:
-                toks = tokenize_text(r[f])
-                per_term = defaultdict(list)
-                for p, t in enumerate(toks):
-                    per_term[t].append(p)
-                self.pos[f][r["doc_id"]] = (len(toks), per_term)
-            for f in keyword_fields:
-                self.pos[f][r["doc_id"]] = (1, {r[f]: [0]})
-
-    def _stats(self, fld):
-        docs = self.pos[fld]
-        return len(docs), sum(dl for dl, _ in docs.values()) / len(docs)
-
-    def df(self, fld, t):
-        return sum(1 for _, terms in self.pos[fld].values() if t in terms)
-
-    def _idf(self, fld, t):
-        n, _ = self._stats(fld)
-        df = self.df(fld, t)
-        return math.log(1 + (n - df + 0.5) / (df + 0.5))
-
-    def _norm(self, fld, freq, dl, quantized):
-        if fld in self.keyword:
-            return freq / (freq + K1)
-        _, avgdl = self._stats(fld)
-        if quantized:
-            dl = int(quantize_dl([dl])[0])
-        return freq / (freq + K1 * (1 - B + B * dl / avgdl))
-
-    def term(self, fld, t, quantized=False):
-        out = {}
-        for d, (dl, terms) in self.pos[fld].items():
-            if t in terms:
-                tf = len(terms[t])
-                if self.similarity == "TermFrequency":
-                    out[d] = min(tf, 1000) / 1000
-                else:
-                    out[d] = self._idf(fld, t) * self._norm(fld, tf, dl, quantized)
-        return out
-
-    def phrase(self, fld, terms, quantized=False):
-        idf = sum(self._idf(fld, t) for t in terms)
-        out = {}
-        for d, (dl, pos) in self.pos[fld].items():
-            if all(t in pos for t in terms):
-                pf = sum(
-                    1
-                    for p in pos[terms[0]]
-                    if all(p + i in pos[t] for i, t in enumerate(terms) if i)
-                )
-                if pf:
-                    out[d] = idf * self._norm(fld, pf, dl, quantized)
-        return out
-
-    def evaluate(self, q, quantized=False):
-        if q.type == "TermQuery":
-            return self.term(q.field, q.value, quantized)
-        if q.type == "PhraseQuery":
-            return self.phrase(q.field, list(q.terms), quantized)
-        assert q.type == "BooleanQuery"
-        parts = [(occ, self.evaluate(c, quantized)) for occ, c in q.clauses]
-        musts = [m for occ, m in parts if occ == MUST]
-        docs = set.intersection(*map(set, musts)) if musts else set().union(
-            *(set(s) for _, s in parts)
-        )
-        return {d: sum(m.get(d, 0.0) for _, m in parts) for d in docs}
 
 
 CFG = dict(text_cols=["text", "title"], keyword_cols=["lang"])
@@ -135,6 +60,7 @@ def corpus(spark, tmp_path_factory):
     kw = dict(n_shards=N_SHARDS, salt_buckets=SALTS, **CFG)
     return {
         "bm25": build_index_store(df, str(root / "bm25"), **kw),
+        "bm25q": build_index_store(df, str(root / "bm25q"), quantized=True, **kw),
         "tf": build_index_store(
             df, str(root / "tf"), similarity="TermFrequency", **kw
         ),
@@ -143,35 +69,36 @@ def corpus(spark, tmp_path_factory):
     }
 
 
-# name -> (store, query, quantized override, (field, terms) of its postings)
+# name -> (store, query, (field, terms) of its postings)
 CASES = {
-    "salted_hot_term": ("bm25", Q.term("text", HOT), None, ("text", [HOT])),
-    "unsalted_term": ("bm25", Q.term("text", RARE), None, ("text", [RARE])),
-    "two_fields_text": ("bm25", Q.term("text", SHARED), None, ("text", [SHARED])),
-    "two_fields_title": ("bm25", Q.term("title", SHARED), None, ("title", [SHARED])),
-    "absent_term": ("bm25", Q.term("text", "nosuchterm"), None, ("text", ["nosuchterm"])),
+    "salted_hot_term": ("bm25", Q.term("text", HOT), ("text", [HOT])),
+    "unsalted_term": ("bm25", Q.term("text", RARE), ("text", [RARE])),
+    "two_fields_text": ("bm25", Q.term("text", SHARED), ("text", [SHARED])),
+    "two_fields_title": ("bm25", Q.term("title", SHARED), ("title", [SHARED])),
+    "absent_term": ("bm25", Q.term("text", "nosuchterm"), ("text", ["nosuchterm"])),
     "fused_and": (
-        "bm25", Q.and_(Q.term("text", HOT), Q.term("text", RARE)), None, ("text", [HOT, RARE]),
+        "bm25", Q.and_(Q.term("text", HOT), Q.term("text", RARE)), ("text", [HOT, RARE]),
     ),
     "fused_or_absent": (
-        "bm25", Q.or_(Q.term("text", RARE), Q.term("text", "nosuchterm")), None,
+        "bm25", Q.or_(Q.term("text", RARE), Q.term("text", "nosuchterm")),
         ("text", [RARE, "nosuchterm"]),
     ),
     "phrase_repeated_term": (
-        "bm25", Q.phrase("text", "alpha", "beta", "alpha"), None, ("text", ["alpha", "beta"]),
+        "bm25", Q.phrase("text", "alpha", "beta", "alpha"), ("text", ["alpha", "beta"]),
     ),
-    "term_frequency_core": ("tf", Q.term("text", HOT), None, ("text", [HOT])),
-    "omit_norms_keyword": ("bm25", Q.term("lang", "py"), None, ("lang", ["py"])),
+    "term_frequency_core": ("tf", Q.term("text", HOT), ("text", [HOT])),
+    "omit_norms_keyword": ("bm25", Q.term("lang", "py"), ("lang", ["py"])),
     "omit_norms_fused": (
         "bm25", Q.boolean((SHOULD, Q.term("lang", "py")), (SHOULD, Q.term("lang", "go"))),
-        None, ("lang", ["py", "go"]),
+        ("lang", ["py", "go"]),
     ),
-    "quantized_mismatch_term": ("bm25", Q.term("text", HOT), True, ("text", [HOT])),
-    "quantized_mismatch_fused": (
-        "bm25", Q.or_(Q.term("text", HOT), Q.term("text", SHARED)), True, ("text", [HOT, SHARED]),
+    # a store built quantized scores with the SmallFloat-rounded dl it stores
+    "quantized_term": ("bm25q", Q.term("text", HOT), ("text", [HOT])),
+    "quantized_fused": (
+        "bm25q", Q.or_(Q.term("text", HOT), Q.term("text", SHARED)), ("text", [HOT, SHARED]),
     ),
-    "quantized_mismatch_phrase": (
-        "bm25", Q.phrase("text", "alpha", "beta", "alpha"), True, ("text", ["alpha", "beta"]),
+    "quantized_phrase": (
+        "bm25q", Q.phrase("text", "alpha", "beta", "alpha"), ("text", ["alpha", "beta"]),
     ),
 }
 
@@ -208,10 +135,12 @@ def _scanned_files(frame):
 
 @pytest.mark.parametrize("name", list(CASES))
 def test_scores_match_exhaustive_and_postings_read_only_term_shards(spark, corpus, name):
-    store, q, quantized, (fld, terms) = CASES[name]
+    store, q, (fld, terms) = CASES[name]
     ix = corpus[store]
-    exact = corpus["exact_tf" if store == "tf" else "exact"].evaluate(q, bool(quantized))
-    resp = search(ix, q, stop=10_000, quantized=quantized)
+    exact = corpus["exact_tf" if store == "tf" else "exact"].evaluate(q, store == "bm25q")
+    if store == "bm25q":  # the rounded lengths change some scores
+        assert exact != corpus["exact"].evaluate(q)
+    resp = search(ix, q, stop=10_000)
     assert resp.total == len(exact)
     got = {h.id: h.score for h in resp.hits}
     assert got.keys() == exact.keys()
@@ -274,7 +203,7 @@ def _reference_scores(ix, q):
     st = ix.field_stats(fld)
     df = {r["term"]: r["df"] for r in ix.term_stats_for(fld).collect()}
     post = defaultdict(dict)  # term -> doc -> (tf, dl, positions)
-    for r in ix.postings_for(fld, with_dl=True).collect():
+    for r in ix.postings_for(fld).collect():
         post[r["term"]][r["doc_id"]] = (r["tf"], r["_bdl"], list(r["positions"]))
 
     def idf(t):
@@ -360,3 +289,44 @@ def test_rebuild_at_same_path_and_mtime_opens_new_snapshot(spark, tmp_path):
     assert (r.total, [h.id for h in r.hits]) == (1, [5])
     assert new.term_dfs("text", ["alpha", "beta"]) == {"alpha": 1}
     assert open_persistent_index(spark, out) is new
+
+
+# ------------------------------------------- no field_lengths read at query time
+
+GUARD_QUERIES = {
+    "term": Q.term("text", "spark"),
+    "fused_or": Q.or_(Q.term("text", "spark"), Q.term("text", "table")),
+    "phrase": Q.phrase("text", "spark", "join"),
+}
+
+
+@pytest.fixture(scope="module")
+def guard_readers(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("no_lengths_read")
+    docs = spark.createDataFrame(_gen_docs(range(30)))
+    store = build_index_store(docs, str(root / "store"), text_cols=["text"], n_shards=4)
+    inc = IncrementalIndexStore(spark, str(root / "inc"), text_cols=["text"], n_shards=4)
+    inc.commit_batch(docs)
+    inc.commit_batch(spark.createDataFrame(_gen_docs(range(0, 30, 3), "fresh")))
+    return {"store": store, "multigen": inc.open()}
+
+
+@pytest.mark.parametrize("reader", ["store", "multigen"])
+@pytest.mark.parametrize("query", list(GUARD_QUERIES))
+def test_search_scans_no_field_lengths(guard_readers, reader, query, monkeypatch):
+    """Scoring reads each posting's document length off the posting: the
+    plan ``search()`` executes for a term, a fused OR and a phrase scans
+    postings files and no ``field_lengths`` file."""
+    from meresco_lucene_spark.query import executor
+
+    scanned = []
+    collect_page = executor.collect_page
+
+    def recording(df, *args, **kwargs):
+        scanned.extend(_scanned_files(df))
+        return collect_page(df, *args, **kwargs)
+
+    monkeypatch.setattr(executor, "collect_page", recording)
+    assert search(guard_readers[reader], GUARD_QUERIES[query]).total > 0
+    assert any("/postings/" in f for f in scanned), scanned
+    assert [f for f in scanned if "/field_lengths/" in f] == []
