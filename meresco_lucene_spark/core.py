@@ -186,16 +186,9 @@ class LuceneCore:
         # a transient write failure leaves every op re-committable).
         store = self._ensure_store(samples=list(adds.values()) if adds else None)
         adds_df = self._frame(adds) if adds else None
-        # deleted identifiers are hashed inside the tombstone write: no
-        # separate hash job
-        dels_df = (
-            self._id_frame(dels).select(
-                F.xxhash64(F.col(ID_FIELD)).alias("doc_id")
-            )
-            if dels
-            else None
-        )
-        gen = store.commit_batch(adds_df, delete_frame=dels_df)
+        # deleted identifiers are hashed on the driver (a local relation:
+        # no job), so the commit writes its tombstones without Spark
+        gen = store.commit_batch(adds_df, delete_ids=self._hash_ids(dels))
         self._buffer.clear()
         store.maybe_merge(segments_per_tier=self.segments_per_tier)
         self._reader = None

@@ -9,7 +9,8 @@ oracle-checked end-to-end: same formula, same top-k, same tie-breaks.
 
 Index stores are built once per sf_dir and Spark application
 (module-level, _built_dir) because the driver calls each query
-separately; every query reopens them from disk.
+separately; every query reopens them from disk. Their temp dirs are
+removed when the interpreter exits (_temp_dir).
 
 Floats are rounded to 4 decimals on BOTH sides (engine + oracle) before
 hashing; ordering inside the query uses full precision.
@@ -17,7 +18,10 @@ hashing; ordering inside the query uses full precision.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +77,16 @@ def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return (spark.sparkContext.applicationId, sf_dir)
 
 
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp dir that is removed when the interpreter exits: an
+    entry's fixture outlives the call that built it (later queries and
+    the lazy frames an entry returns read it), so nothing else can
+    remove it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 # (application, sf_dir, name) -> the temp dir an entry's fixture was built in
 _BUILT: dict[tuple[str, str, str], str] = {}
 
@@ -83,12 +97,10 @@ def _built_dir(spark: SparkSession, sf_dir: str, name: str, build) -> str:
     then reused by every query."""
     key = (*_cache_key(spark, sf_dir), name)
     if key not in _BUILT:
-        import tempfile
-
         from meresco_lucene_spark.shipping import ensure_shipped
 
         ensure_shipped(spark)
-        path = tempfile.mkdtemp(prefix=f"mls_{name}_")
+        path = _temp_dir(f"mls_{name}_")
         build(path)
         _BUILT[key] = path
     return _BUILT[key]
@@ -362,8 +374,6 @@ def q_stateful_versioned_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-changing update with its per-doc version; the oracle is the
     closed form: version 0 = original text, version 1 = edited text,
     nothing from the resend."""
-    import tempfile
-
     from meresco_lucene_spark.streaming.stateful import versioned_updates
 
     docs = (
@@ -371,7 +381,7 @@ def q_stateful_versioned_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 40)
         .select("doc_id", "text")
     )
-    d = tempfile.mkdtemp(prefix="mls_vu_")
+    d = _temp_dir("mls_vu_")
     src = os.path.join(d, "in")
     batches = [
         docs,
@@ -1144,8 +1154,6 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the explicit (doc, generation) corpus with only edited rows
     live. This chain is the upsert path on which a length read without
     the liveness filter once scored every edited doc twice."""
-    import tempfile
-
     from meresco_lucene_spark.index.incremental import MultiGenIndex
     from meresco_lucene_spark.streaming.ingest import stream_ingest_incremental
     from meresco_lucene_spark.streaming.stateful import versioned_updates
@@ -1155,7 +1163,7 @@ def q_cdc_incremental_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 40)
         .select("doc_id", "text")
     )
-    d = tempfile.mkdtemp(prefix="mls_cdc_")
+    d = _temp_dir("mls_cdc_")
     src = os.path.join(d, "in")
     batches = [
         docs,

@@ -35,11 +35,16 @@ This module reproduces that contract Spark-first:
     DELTA volume, not the corpus).
 
 Scale shape: a commit's cost is proportional to the BATCH (one small
-store build + one tombstone write); a query reads each table in ONE
-scan over all generations' files, so its jobs do not grow with the
-generation count; liveness is one anti-join per scan against one
-tombstone broadcast per query until tombstones grow large, at which
-point force_merge (the tiered-merge analog) resets them to zero.
+store build + one tombstone write). A small batch is one Spark job: the
+store build's bounded collect, after which the driver encodes and
+writes the generation, tombstones included (build_index_store's driver
+route); a batch over the bound, or a delete frame whose ids must stay
+off the driver, goes through the distributed build and a Spark
+tombstone write. A query reads each table in ONE scan over all
+generations' files, so its jobs do not grow with the generation count;
+liveness is one anti-join per scan against one tombstone broadcast per
+query until tombstones grow large, at which point force_merge (the
+tiered-merge analog) resets them to zero.
 Crash safety: a commit is invisible until its _COMMITTED marker exists
 (written last, via atomic rename), so a crash mid-commit leaves older
 readers consistent; a crashed gen dir is wiped and renumbered by the
@@ -65,19 +70,25 @@ import re
 import shutil
 import threading
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
+from meresco_lucene_spark.index import store as index_store
 from meresco_lucene_spark.index.store import (
     PersistentIndex,
     build_index_store,
     decode_block_frame,
     open_persistent_index,
+    parquet_options,
+    publish_parquet,
 )
-from meresco_lucene_spark.session import local_frame
+from meresco_lucene_spark.session import in_stage, local_frame, stage
 
 _GEN_PREFIX = "gen-"
 
@@ -206,8 +217,14 @@ class IncrementalIndexStore:
         are written unconditionally for the batch's ids — one write
         instead of an existence-check join against every older
         generation; a tombstone for an id that never existed matches
-        nothing. (Frame-sourced predicate deletes go through
-        ``delete_matching`` — the no-driver-collect path.)
+        nothing. When every id is on the driver (no ``delete_frame``,
+        and at most DRIVER_BUILD_ROWS of them) the driver writes the
+        tombstones, reading the batch's ids from the forward table the
+        build just wrote; otherwise Spark does. (Frame-sourced predicate
+        deletes go through ``delete_matching`` — the no-driver-collect
+        path.)
+
+        Every Spark job of a commit is tagged ``commit:<stage>``.
 
         ``meta``: small JSON dict recorded durably INSIDE this commit
         (written before the _COMMITTED marker) — used by the streaming
@@ -220,52 +237,73 @@ class IncrementalIndexStore:
         the driver (a CDC batch deleting millions of rows must not
         materialize them driver-side)."""
         gen, gen_dir = self._new_gen_dir()
-        tomb_ids = None
-        if df is not None:
-            tomb_ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
-        if delete_ids:
-            extra = local_frame(
-                self.spark, [(int(i),) for i in delete_ids], "doc_id long"
-            )
-            tomb_ids = extra if tomb_ids is None else tomb_ids.unionByName(extra)
-        if delete_frame is not None:
-            dfr = delete_frame.select(
-                F.col(delete_frame.columns[0]).cast("long").alias("doc_id")
-            )
-            tomb_ids = dfr if tomb_ids is None else tomb_ids.unionByName(dfr)
+        tomb_dir = os.path.join(gen_dir, "tombstones")
         # tombstones only matter when an older generation exists
-        if not self._gens():
-            tomb_ids = None
-        # The tombstone write and the generation-store build are
-        # independent jobs over the same batch — submit the tombstone
-        # write on a thread so it back-fills executors while the store
-        # build's stages drain (guide §2.6); on a small refresh commit
-        # this removes one whole sequential job round-trip. Ordering
-        # stays safe: both exist before the _COMMITTED marker lands.
-        tomb_writer = None
-        if tomb_ids is not None:
-            from concurrent.futures import ThreadPoolExecutor
+        has_older = bool(self._gens())
 
-            tomb_frame = tomb_ids.distinct()
-            pool = ThreadPoolExecutor(max_workers=1)
-            tomb_writer = pool.submit(
-                lambda: tomb_frame.write.mode("overwrite").parquet(
-                    os.path.join(gen_dir, "tombstones")
-                )
-            )
-        try:
+        def spark_tombstones():
+            tomb_ids = None
             if df is not None:
-                # lineage=False: generation stores are wiped on crash,
-                # never shard-resumed, so the lineage pass is pure fixed
-                # overhead on the per-commit refresh cost
-                build_index_store(
-                    df, os.path.join(gen_dir, "store"), id_col=id_col,
-                    lineage=False, **self.build_kwargs,
+                tomb_ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
+            if delete_ids:
+                extra = local_frame(
+                    self.spark, [(int(i),) for i in delete_ids], "doc_id long"
                 )
-        finally:
-            if tomb_writer is not None:
-                tomb_writer.result()  # re-raise a failed tombstone write
-                pool.shutdown(wait=True)
+                tomb_ids = extra if tomb_ids is None else tomb_ids.unionByName(extra)
+            if delete_frame is not None:
+                dfr = delete_frame.select(
+                    F.col(delete_frame.columns[0]).cast("long").alias("doc_id")
+                )
+                tomb_ids = dfr if tomb_ids is None else tomb_ids.unionByName(dfr)
+            tomb_ids.distinct().write.mode("overwrite").parquet(tomb_dir)
+
+        with stage(self.spark, "commit"):
+            # A delete frame's ids stay off the driver: Spark writes the
+            # tombstones on a thread, concurrent with the store build
+            # (guide §2.6). Ordering stays safe: both exist before the
+            # _COMMITTED marker lands.
+            tomb_writer = pool = None
+            if has_older and delete_frame is not None:
+                from concurrent.futures import ThreadPoolExecutor
+
+                pool = ThreadPoolExecutor(max_workers=1)
+                tomb_writer = pool.submit(
+                    in_stage(self.spark, "tombstones", spark_tombstones)
+                )
+            built = None
+            try:
+                if df is not None:
+                    # lineage=False: generation stores are wiped on crash,
+                    # never shard-resumed, so a small batch takes the
+                    # store's driver route
+                    built = build_index_store(
+                        df, os.path.join(gen_dir, "store"), id_col=id_col,
+                        lineage=False, **self.build_kwargs,
+                    )
+            finally:
+                if tomb_writer is not None:
+                    tomb_writer.result()  # re-raise a failed tombstone write
+                    pool.shutdown(wait=True)
+            if has_older and delete_frame is None:
+                n_ids = len(delete_ids or []) + (built.n_docs if built else 0)
+                if n_ids <= index_store.DRIVER_BUILD_ROWS:
+                    # every id is on the driver: the batch's from the
+                    # forward table just written, no Spark job
+                    ids = [np.asarray(delete_ids or [], dtype=np.int64)]
+                    if built is not None:
+                        fwd = pq.read_table(
+                            os.path.join(built.out_dir, "forward"), columns=["doc_id"]
+                        )
+                        ids.append(fwd.column("doc_id").to_numpy().astype(np.int64))
+                    ids = np.unique(np.concatenate(ids))
+                    if len(ids):
+                        publish_parquet(
+                            pa.table({"doc_id": ids}), tomb_dir,
+                            **parquet_options(self.spark),
+                        )
+                else:
+                    with stage(self.spark, "tombstones"):
+                        spark_tombstones()
         if meta:
             _write_meta(gen_dir, meta)
         COMMITTER.publish_file(_commit_marker(gen_dir), "ok")
@@ -296,13 +334,14 @@ class IncrementalIndexStore:
 
         gen, gen_dir = self._new_gen_dir()
         obs = Observation()
-        (
-            doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(gen_dir, "tombstones"))
-        )
+        with stage(self.spark, "delete"):
+            (
+                doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"))
+                .distinct()
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(gen_dir, "tombstones"))
+            )
         if int(obs.get["n"]) == 0:
             shutil.rmtree(gen_dir, ignore_errors=True)
             return None
@@ -411,9 +450,10 @@ class IncrementalIndexStore:
         if not tdirs:
             shutil.rmtree(gen_dir, ignore_errors=True)
             return None
-        _read_tombstones(self.spark, tdirs).distinct().write.mode("overwrite").parquet(
-            os.path.join(gen_dir, "tombstones")
-        )
+        with stage(self.spark, "merge"):
+            _read_tombstones(self.spark, tdirs).distinct().write.mode(
+                "overwrite"
+            ).parquet(os.path.join(gen_dir, "tombstones"))
         self._commit_merged(gen_dir, gens)
         return gen
 
@@ -440,21 +480,23 @@ class IncrementalIndexStore:
         re-tokenization, and commit it in place of ``gens``. Its
         tombstones mask every id it holds and every id ``gens`` masked."""
         gen, gen_dir = self._new_gen_dir()
-        build_index_store(
-            reader.forward,
-            os.path.join(gen_dir, "store"),
-            id_col="doc_id",
-            occurrences=reader.live_occurrences(),
-            lengths=reader.live_lengths(),
-            lineage=False,
-            **self.build_kwargs,
-        )
-        tomb = reader.forward.select("doc_id")
-        if reader._tombstones is not None:
-            tomb = tomb.unionByName(reader._tombstones.select("doc_id"))
-        tomb.distinct().write.mode("overwrite").parquet(
-            os.path.join(gen_dir, "tombstones")
-        )
+        with stage(self.spark, "merge"):
+            build_index_store(
+                reader.forward,
+                os.path.join(gen_dir, "store"),
+                id_col="doc_id",
+                occurrences=reader.live_occurrences(),
+                lengths=reader.live_lengths(),
+                lineage=False,
+                **self.build_kwargs,
+            )
+            tomb = reader.forward.select("doc_id")
+            if reader._tombstones is not None:
+                tomb = tomb.unionByName(reader._tombstones.select("doc_id"))
+            with stage(self.spark, "tombstones"):
+                tomb.distinct().write.mode("overwrite").parquet(
+                    os.path.join(gen_dir, "tombstones")
+                )
         self._commit_merged(gen_dir, gens)
         return gen, gen_dir
 

@@ -23,11 +23,20 @@ Layout under ``out_dir``:
 
 Block format: up to ``block_size`` postings of one (field, term) per
 row, as parallel Parquet list columns, plus one sorted position list
-per posting. The postings tables are written with the Parquet v2
-writer: doc ids that repeat within a page stay dictionary-encoded,
-others are stored DELTA_BINARY_PACKED (see PARQUET_V2). ``schemas``
-records each table's schema, so opening a store runs no
-schema-inference job.
+per posting. The postings tables are written with Parquet v2 data
+pages: Spark's v2 writer keeps doc ids that repeat within a page
+dictionary-encoded and stores others DELTA_BINARY_PACKED (see
+PARQUET_V2). ``schemas`` records each table's schema, so opening a
+store runs no schema-inference job.
+
+Two build routes, one encode (build_index_store). Both tokenize in the
+JVM (``occurrence_frames``) and cut blocks with the same ``_encode``.
+A build that is never resumed and whose tokenized rows fit
+``DRIVER_BUILD_ROWS`` — a small generation commit or merge — collects
+them in one bounded Spark job and is encoded and written on the driver
+with pyarrow, one file per table; every other build encodes in an
+``applyInArrow`` shard shuffle and writes with Spark. The two routes
+give the same store.
 
 Sharding & skew: ``base_shard = xxhash64(field, term) % n_shards``
 (JVM-side, deterministic across sessions, so resume is safe). A term
@@ -71,12 +80,14 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from meresco_lucene_spark.columns import qcol
 from meresco_lucene_spark.index import wand
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
 from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, bm25_score_numpy
+from meresco_lucene_spark.session import in_stage, stage
 
 STORE_POSTINGS_SCHEMA = (
     "shard int, field string, term string, block_id int, doc_count int, "
@@ -98,6 +109,20 @@ PARQUET_V2 = {"parquet.writer.version": "v2"}
 # generation commit above all): salt_buckets=None disables hot-term
 # salting for it, and its term_stats cache is not materialized up front.
 SMALL_BUILD_OCC = 2_000_000
+
+# A build that is never resumed (lineage=False) collects its tokenized
+# rows to the driver in one Spark job, reading at most this many plus
+# one; when they fit, the driver encodes and writes the store (the
+# DRIVER route of build_index_store), else the build takes the
+# distributed route. Occurrences are nearly all of the rows. Measured
+# on a 4-core host, local[2], code-corpus batches: the driver route
+# built 4.4k occurrences in 0.30 s against 1.41 s distributed, 187k in
+# 0.86 s against 1.59 s, 929k in 3.14 s against 4.43 s and 1.24M in
+# 5.9 s against 7.5 s (local[4]: 929k in 3.6 s against 4.2 s), so the
+# crossover lies above 1.2M; its driver process peaked at 435 MB RSS
+# at 929k. Over the bound a build pays for the failed collect (2.7 s
+# more at 1.24M), so the bound sits below the crossover, not at it.
+DRIVER_BUILD_ROWS = 1_000_000
 
 
 # ------------------------------------------------------ block format
@@ -319,15 +344,24 @@ def lineage_rows_from_observation(vals, remaining: list[int], run_id: str):
     return rows
 
 
+def publish_parquet(tbl: pa.Table, table_dir: str, **write_options) -> None:
+    """Write ``tbl`` as one parquet file of ``table_dir`` WITHOUT a Spark
+    job. Crash-safe like every commit in this package: written to a
+    dot-prefixed temp name (invisible to spark.read.parquet) and
+    atomically renamed into place."""
+    os.makedirs(table_dir, exist_ok=True)
+    token = uuid.uuid4().hex
+    tmp = os.path.join(table_dir, f"._tmp-{token}")
+    pq.write_table(tbl, tmp, **write_options)
+    os.replace(tmp, os.path.join(table_dir, f"part-{token}.parquet"))
+
+
 def write_lineage_rows(rows: list[tuple], lin_dir: str) -> None:
     """Append a handful of driver-held lineage rows as one parquet file
-    WITHOUT a Spark job (a 32-row write cost a full job round-trip of
-    pure overhead — guide §5). Crash-safe like every commit in this
-    package: written to a dot-prefixed temp name (invisible to
-    spark.read.parquet) and atomically renamed into place."""
+    (a 32-row write cost a full job round-trip of pure overhead —
+    guide §5)."""
     if not rows:
         return
-    os.makedirs(lin_dir, exist_ok=True)
     cols = list(zip(*rows))
     tbl = pa.table(
         {
@@ -342,10 +376,279 @@ def write_lineage_rows(rows: list[tuple], lin_dir: str) -> None:
             "run_id": pa.array(cols[8], pa.string()),
         }
     )
-    token = uuid.uuid4().hex
-    tmp = os.path.join(lin_dir, f"._tmp-lineage-{token}")
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(lin_dir, f"part-lineage-{token}.parquet"))
+    publish_parquet(tbl, lin_dir)
+
+
+# -------------------------------------------------------------- encode
+
+
+def _encode(
+    tbl: pa.Table,
+    shard: int,
+    field_params: dict[str, tuple[int, float]],
+    block_size: int,
+    k1: float,
+    b: float,
+) -> pa.Table:
+    """One shard's RAW OCCURRENCE rows (field, term, doc_id, pos, _dl,
+    _hot_df) -> its posting blocks (STORE_POSTINGS_SCHEMA), in
+    whole-shard Arrow/numpy passes: one sort and run-length pass derive
+    the postings (tf = occurrences per doc, the sorted position list =
+    the run's positions), then block boundaries and scores, and the list
+    columns are built from offsets — no per-posting or per-block Python.
+    ``field_params``: field -> (n_docs, avgdl) of the build. Both build
+    routes call it: per shard in an ``applyInArrow`` task, or per shard
+    on the driver."""
+    tbl = tbl.take(
+        pc.sort_indices(
+            tbl,
+            [
+                ("field", "ascending"),
+                ("term", "ascending"),
+                ("doc_id", "ascending"),
+                ("pos", "ascending"),
+            ],
+        )
+    )
+    n_occ = tbl.num_rows
+    fields_o = tbl.column("field").combine_chunks()
+    terms_o = tbl.column("term").combine_chunks()
+    docs_o = tbl.column("doc_id").to_numpy()
+    # a (field, term) run starts a posting; so does a doc change
+    new_run = np.ones(n_occ, dtype=bool)
+    new_run[1:] = value_changes(fields_o) | value_changes(terms_o)
+    p_start = new_run.copy()
+    p_start[1:] |= docs_o[1:] != docs_o[:-1]
+    p_idx = np.flatnonzero(p_start)
+    p_bounds = np.append(p_idx, n_occ)
+    doc_ids = docs_o[p_idx]
+    tfs = np.diff(p_bounds)
+    dls = tbl.column("_dl").to_numpy()[p_idx]
+    hot_df = pc.fill_null(tbl.column("_hot_df"), np.nan).to_numpy()[p_idx]
+    starts, block_ids, dfs = block_layout(new_run[p_idx], hot_df, block_size)
+
+    # per-field BM25 bound per posting -> block max (used only by
+    # WAND-style pruning; harmless for TermFrequency similarity)
+    fields = fields_o.take(p_idx)
+    scores = np.zeros(len(p_idx), dtype=np.float64)
+    for f, (f_n, f_avgdl) in field_params.items():
+        m = pc.equal(fields, f).to_numpy(zero_copy_only=False)
+        if m.any():
+            scores[m] = bm25_score_numpy(
+                tfs[m].astype(float), dfs[m], dls[m].astype(float),
+                f_n, f_avgdl, k1, b,
+            )
+    positions = pa.ListArray.from_arrays(
+        pa.array(p_bounds.astype(np.int32)),
+        pa.array(tbl.column("pos").to_numpy(), pa.int32()),
+    )
+    return pa.table(
+        {
+            "shard": np.full(len(starts), shard, dtype=np.int32),
+            "field": fields.take(starts),
+            "term": terms_o.take(p_idx[starts]),
+            "block_id": block_ids,
+            **block_columns(starts, doc_ids, tfs, dls, scores, positions),
+        }
+    )
+
+
+# ------------------------------------------------------ build settings
+
+
+def _resolve_sharding(
+    spark: SparkSession,
+    out_dir: str,
+    resume: bool,
+    n_shards: int | None,
+    salt_buckets: int | None,
+    occ_n: int | None,
+    count_occurrences,
+) -> tuple[int, int]:
+    """(n_shards, salt_buckets) of a build, pinned to disk.
+
+    Auto-shard from the occurrence count so one shard's encode frame
+    fits the per-task budget, floored at the session's parallelism —
+    then PINNED so a resume on a different session keeps the same shard
+    mapping (pin_build_config). Explicit n_shards overrides.
+
+    salt_buckets=None (auto): a SMALL build (a batch generation commit
+    above all) disables hot-term salting outright (salt_buckets=1):
+    skew is bounded by the batch itself, and with no salting the encode
+    needs NOTHING from term_stats — no hot-term broadcast, and the
+    distributed encode runs concurrent with the term_stats write. An
+    EXPLICIT salt_buckets is always honored. ``occ_n`` None (a resumed
+    stage) counts with ``count_occurrences()`` when auto-sharding."""
+    if salt_buckets is None:
+        salt_buckets = 1 if (occ_n is not None and occ_n <= SMALL_BUILD_OCC) else 8
+    return pin_build_config(
+        out_dir, resume, n_shards, salt_buckets,
+        lambda: auto_n_shards(
+            occ_n if occ_n is not None else count_occurrences(),
+            spark.sparkContext.defaultParallelism,
+        ),
+    )
+
+
+def _term_stats_schema(occurrences: StructType) -> StructType:
+    """term_stats' schema, as the distributed route's aggregation types
+    it (tested), from the occurrence frame's schema: the grouping keys
+    keep their nullability."""
+    return StructType(
+        [
+            occurrences["field"],
+            occurrences["term"],
+            StructField("df", LongType(), False),
+            StructField("cf", LongType(), True),
+            StructField("base_shard", IntegerType(), True),
+            StructField("n_salts", IntegerType(), False),
+        ]
+    )
+
+
+def _field_stats_meta(stat_rows, omit: set[str]) -> dict:
+    """meta.json ``field_stats`` from per-field (field, nd, sdl) rows."""
+    return {
+        r["field"]: {
+            "n_docs": int(r["nd"]),
+            "sum_dl": int(r["sdl"]),
+            "omit_norms": r["field"] in omit,
+        }
+        for r in stat_rows
+    }
+
+
+def _field_params(field_stats_meta: dict) -> dict[str, tuple[int, float]]:
+    return {
+        f: (d["n_docs"], d["sum_dl"] / d["n_docs"] if d["n_docs"] else 1.0)
+        for f, d in field_stats_meta.items()
+    }
+
+
+def parquet_options(spark: SparkSession) -> dict:
+    """pyarrow write options for the store's tables: the session's
+    parquet codec, and no serialized Arrow schema in the footer (Spark
+    reads the Parquet schema; the Arrow copy made a small generation's
+    files a sixth larger than Spark's)."""
+    codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    return {
+        "compression": {"uncompressed": "none", "lz4raw": "lz4", "lz4_raw": "lz4"}.get(
+            codec, codec
+        ),
+        "store_schema": False,
+    }
+
+
+# ------------------------------------------------------- driver route
+
+
+def _collect_build_rows(
+    occurrences: DataFrame, lengths: DataFrame, forward: DataFrame, bound: int
+) -> tuple[pa.Table, pa.Table, pa.Table] | None:
+    """The build's occurrence, field-length and forward rows as Arrow
+    tables, from ONE Spark job, or None when they number more than
+    ``bound`` in all (occurrences are nearly all of them).
+
+    The three frames are one union, read in one task up to ``bound + 1``
+    rows: a ``coalesce(1)`` keeps the limit from adding a shuffle, and
+    an input that is over the bound stops being read at the limit. The
+    occurrence rows carry ``_h = xxhash64(field, term)``, the hash every
+    shard mapping starts from, so the driver places terms exactly as
+    the JVM would for any n_shards. The forward rows ride as one struct
+    column."""
+    occ = occurrences.select(
+        F.lit(0).alias("_kind"), "field", "term", "doc_id", "pos",
+        F.col("_dl").cast("int").alias("_dl"),
+        F.xxhash64("field", "term").alias("_h"),
+    )
+    lens = lengths.select(F.lit(1).alias("_kind"), "field", "doc_id", "dl", "norm_dl")
+    # nullable struct fields: the struct is null on the other rows
+    fwd_type = StructType([StructField(f.name, f.dataType) for f in forward.schema])
+    fwd = forward.select(
+        F.lit(2).alias("_kind"),
+        F.struct(*[qcol(c) for c in forward.columns]).cast(fwd_type).alias("_fwd"),
+    )
+    rows = (
+        occ.unionByName(lens, allowMissingColumns=True)
+        .unionByName(fwd, allowMissingColumns=True)
+        .coalesce(1)
+        .limit(bound + 1)
+        .toArrow()
+    )
+    if rows.num_rows > bound:
+        return None
+    kind = rows.column("_kind")
+
+    def part(k: int, cols: list[str]) -> pa.Table:
+        return rows.filter(pc.equal(kind, k)).select(cols)
+
+    return (
+        part(0, ["field", "term", "doc_id", "pos", "_dl", "_h"]),
+        part(1, ["field", "doc_id", "dl", "norm_dl"]),
+        pa.Table.from_struct_array(part(2, ["_fwd"]).column("_fwd")),
+    )
+
+
+def _driver_term_stats(
+    occ: pa.Table, n_shards: int, salt_buckets: int, hot_threshold: int
+) -> pa.Table:
+    """term_stats (field, term, df, cf, base_shard, n_salts) of the
+    collected occurrences, sorted by (field, term) — the same rows the
+    distributed two-phase aggregation writes."""
+    agg = occ.group_by(["field", "term"]).aggregate(
+        [("doc_id", "count_distinct"), ("doc_id", "count"), ("_h", "min")]
+    )
+    df = agg.column("doc_id_count_distinct").to_numpy()
+    tstats = pa.table(
+        {
+            "field": agg.column("field"),
+            "term": agg.column("term"),
+            "df": pa.array(df, pa.int64()),
+            "cf": agg.column("doc_id_count").cast(pa.int64()),
+            "base_shard": pa.array(
+                np.mod(agg.column("_h_min").to_numpy(), n_shards), pa.int32()
+            ),
+            "n_salts": pa.array(
+                np.where(df >= hot_threshold, salt_buckets, 1), pa.int32()
+            ),
+        }
+    )
+    return tstats.sort_by([("field", "ascending"), ("term", "ascending")])
+
+
+def _driver_postings(
+    occ: pa.Table,
+    tstats: pa.Table,
+    n_shards: int,
+    field_params: dict[str, tuple[int, float]],
+    block_size: int,
+    k1: float,
+    b: float,
+):
+    """(shard, blocks) of the collected occurrences: each occurrence's
+    shard computed as the distributed route's column expression
+    computes it, then the shard's rows through :func:`_encode`."""
+    hot = tstats.filter(pc.greater(tstats.column("n_salts"), 1))
+    if hot.num_rows:
+        hot = hot.select(["field", "term", "df", "n_salts"]).rename_columns(
+            ["field", "term", "_hot_df", "_hot_salts"]
+        )
+        occ = occ.join(hot, ["field", "term"], join_type="left outer")
+        hot_df = occ.column("_hot_df").cast(pa.float64())
+        salts = pc.fill_null(occ.column("_hot_salts"), 1).to_numpy()
+    else:
+        hot_df = pa.nulls(occ.num_rows, pa.float64())
+        salts = 1
+    shard = (
+        np.mod(occ.column("_h").to_numpy(), n_shards)
+        + np.mod(occ.column("doc_id").to_numpy(), salts)
+    ) % n_shards
+    occ = occ.select(["field", "term", "doc_id", "pos", "_dl"]).append_column(
+        "_hot_df", hot_df
+    )
+    for s in np.unique(shard):
+        rows = occ.filter(pa.array(shard == s))
+        yield int(s), _encode(rows, int(s), field_params, block_size, k1, b)
 
 
 # -------------------------------------------------------------------- build
@@ -374,34 +677,51 @@ def build_index_store(
     lengths: DataFrame | None = None,
     lineage: bool = True,
 ) -> "PersistentIndex":
-    """Build the persistent store: one tokenize+agg pass materialized to
-    a parquet intermediate (no in-memory caching of the positions-heavy
-    postings — disk-backed intermediates keep executor heaps flat, which
-    is both the 100 TB shape and what kills the GC-stall stragglers this
-    host showed with cached builds), then four parquet tables and one
-    salted shard shuffle for the block encode. One build = one commit =
-    one durable, fully queryable snapshot.
+    """Build the persistent store: the four tables and meta.json. One
+    build = one commit = one durable, fully queryable snapshot.
 
-    Resume: table stages skip on an existing _SUCCESS marker; the sharded postings resume at shard
-    granularity via lineage rows — shards with a lineage row are kept,
-    partial shard dirs without one are wiped and re-encoded. Blocks are a
-    pure function of the (field, term, doc)-sorted postings, so a resumed
-    build is logically identical to an uninterrupted one (tested).
+    Two routes, one encode. Both tokenize in the JVM with
+    ``occurrence_frames`` and cut blocks with the same :func:`_encode`;
+    they differ in where the encode runs and who writes the files:
+
+    * the DRIVER route: a build that is never resumed (``lineage=False``:
+      incremental generation commits and merges) collects its
+      occurrence, length and forward rows as Arrow in ONE bounded Spark
+      job; when they number at most ``DRIVER_BUILD_ROWS`` the driver
+      computes term_stats and the field stats from them, encodes each
+      shard and writes every table with pyarrow, one file per table, each
+      published by rename. A small commit is then one Spark job instead
+      of a dozen, each with its planning and file-commit overhead (the
+      reference flushes a small batch as one small segment,
+      Lucene.java:183-214).
+    * the DISTRIBUTED route, for every other build: one tokenize pass
+      materialized to a parquet intermediate (no in-memory caching of
+      the positions-heavy postings — disk-backed intermediates keep
+      executor heaps flat), then the four parquet tables and one salted
+      shard shuffle into an ``applyInArrow`` encode.
+
+    Resume (distributed route only): table stages skip on an existing
+    _SUCCESS marker; the sharded postings resume at shard granularity
+    via lineage rows — shards with a lineage row are kept, partial shard
+    dirs without one are wiped and re-encoded. Blocks are a pure
+    function of the (field, term, doc)-sorted postings, so a resumed
+    build is logically identical to an uninterrupted one (tested), and
+    so is a driver-route build of the same rows.
 
     ``occurrences``/``lengths`` override the tokenize pass with
     precomputed frames (occurrences: field, term, doc_id, pos, _dl;
-    lengths: field, doc_id, dl, norm_dl) — the generation-merge path re-encodes
-    decoded postings WITHOUT re-tokenizing (Lucene's merge copies
-    postings, it never re-analyzes: index/incremental.py).
+    lengths: field, doc_id, dl, norm_dl) — the generation-merge path
+    re-encodes decoded postings WITHOUT re-tokenizing (Lucene's merge
+    copies postings, it never re-analyzes: index/incremental.py).
 
-    ``lineage=False`` skips the shard-lineage pass (a full re-read +
-    hash + write of the encoded postings). Queries never touch lineage —
-    it exists only for shard-level RESUME — so builds that are wiped on
-    crash rather than resumed (incremental generation commits) drop a
-    whole job of fixed overhead per commit; a later resume=True of such
-    a store simply re-encodes from scratch."""
-    import shutil
+    ``lineage=False`` marks a build that is wiped on crash rather than
+    resumed: it writes no shard lineage (a full re-read + hash + write
+    of the encoded postings that only resume needs), and it may take
+    the driver route; a later resume=True of such a store simply
+    re-encodes from scratch.
 
+    Every Spark job of a build carries a ``build:<stage>`` description
+    (session.stage), under its caller's stage if any."""
     from meresco_lucene_spark.index.builder import occurrence_frames
 
     spark = df.sparkSession
@@ -422,6 +742,172 @@ def build_index_store(
             dl_col="norm_dl" if quantized else "dl",
         )
     forward = df.withColumnRenamed(id_col, "doc_id") if id_col != "doc_id" else df
+    # the field list, when the build tokenizes (not for merge feeds)
+    known_fields = (
+        list(
+            dict.fromkeys(
+                [
+                    *(text_cols or []),
+                    *(array_cols or []),
+                    *(dutch_cols or []),
+                    *(keyword_cols or []),
+                ]
+            )
+        )
+        if occurrences is None
+        else None
+    )
+    settings = dict(
+        facet_fields=dict(facet_fields or {}),
+        k1=k1,
+        b=b,
+        similarity=similarity,
+        quantized=quantized,
+        block_size=block_size,
+        hot_df_fraction=hot_df_fraction,
+    )
+    omit = set(keyword_cols or [])
+    schemas = {
+        "forward": schema_json(forward.schema),
+        "field_lengths": schema_json(lengths_lazy.schema),
+        "term_stats": schema_json(_term_stats_schema(occurrences_lazy.schema)),
+        "postings": schema_json(StructType.fromDDL(STORE_POSTINGS_SCHEMA)),
+    }
+    with stage(spark, "build"):
+        if not lineage:
+            with stage(spark, "collect"):
+                rows = _collect_build_rows(
+                    occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
+                )
+            if rows is not None:
+                _build_on_driver(
+                    spark, out_dir, *rows,
+                    n_shards=n_shards,
+                    salt_buckets=salt_buckets,
+                    known_fields=known_fields,
+                    omit=omit,
+                    schemas=schemas,
+                    **settings,
+                )
+                return PersistentIndex(spark, out_dir)
+        _build_distributed(
+            spark, out_dir, occurrences_lazy, lengths_lazy, forward,
+            known_fields=known_fields,
+            omit=omit,
+            n_shards=n_shards,
+            salt_buckets=salt_buckets,
+            resume=resume,
+            run_id=run_id,
+            lineage=lineage,
+            schemas=schemas,
+            **settings,
+        )
+    return PersistentIndex(spark, out_dir)
+
+
+def _store_meta(n_docs: int, field_stats: dict, n_shards: int, salt_buckets: int,
+                schemas: dict, **settings) -> str:
+    """meta.json of a store; ``snapshot`` identifies it:
+    open_persistent_index keys its handle cache on it, so a rebuild at
+    the same path is a miss."""
+    return json.dumps(
+        {
+            "snapshot": uuid.uuid4().hex,
+            "n_docs": n_docs,
+            "field_stats": field_stats,
+            **settings,
+            "n_shards": n_shards,
+            "salt_buckets": salt_buckets,
+            "schemas": schemas,
+        }
+    )
+
+
+def _build_on_driver(
+    spark: SparkSession,
+    out_dir: str,
+    occ: pa.Table,
+    lens: pa.Table,
+    fwd: pa.Table,
+    *,
+    n_shards: int | None,
+    salt_buckets: int | None,
+    known_fields: list[str] | None,
+    omit: set[str],
+    schemas: dict,
+    **settings,
+) -> None:
+    """The driver route of build_index_store over the collected rows:
+    term_stats, field stats, the shard encode and the four table writes,
+    with the same settings, shard mapping and meta.json as the
+    distributed route. No Spark job."""
+    import shutil
+
+    n_shards, salt_buckets = _resolve_sharding(
+        spark, out_dir, False, n_shards, salt_buckets, occ.num_rows, None
+    )
+    n_docs = fwd.num_rows
+    hot_threshold = max(int(settings["hot_df_fraction"] * n_docs), 1)
+    per_field = {
+        r["field"]: {"field": r["field"], "nd": r["doc_id_count"], "sdl": r["dl_sum"]}
+        for r in lens.group_by("field")
+        .aggregate([("doc_id", "count"), ("dl", "sum")])
+        .to_pylist()
+    }
+    order = known_fields if known_fields is not None else sorted(per_field)
+    field_stats = _field_stats_meta([per_field[f] for f in order if f in per_field], omit)
+    tstats = _driver_term_stats(occ, n_shards, salt_buckets, hot_threshold)
+
+    opts = parquet_options(spark)
+    for t in ("forward", "field_lengths", "term_stats", "postings"):
+        shutil.rmtree(os.path.join(out_dir, t), ignore_errors=True)
+    publish_parquet(fwd, os.path.join(out_dir, "forward"), **opts)
+    publish_parquet(lens, os.path.join(out_dir, "field_lengths"), **opts)
+    publish_parquet(tstats, os.path.join(out_dir, "term_stats"), **opts)
+    post_dir = os.path.join(out_dir, "postings")
+    os.makedirs(post_dir)
+    blocks = _driver_postings(
+        occ, tstats, n_shards, _field_params(field_stats),
+        settings["block_size"], settings["k1"], settings["b"],
+    )
+    for s, shard_blocks in blocks:
+        # the shard is the directory, as in a partitionBy("shard") write
+        publish_parquet(
+            shard_blocks.drop_columns(["shard"]),
+            os.path.join(post_dir, f"shard={s}"),
+            data_page_version="2.0",
+            **opts,
+        )
+    COMMITTER.publish_file(
+        os.path.join(out_dir, "meta.json"),
+        _store_meta(n_docs, field_stats, n_shards, salt_buckets, schemas, **settings),
+    )
+
+
+def _build_distributed(
+    spark: SparkSession,
+    out_dir: str,
+    occurrences_lazy: DataFrame,
+    lengths_lazy: DataFrame,
+    forward: DataFrame,
+    *,
+    known_fields: list[str] | None,
+    omit: set[str],
+    n_shards: int | None,
+    salt_buckets: int | None,
+    resume: bool,
+    run_id: str,
+    lineage: bool,
+    schemas: dict,
+    **settings,
+) -> None:
+    """The distributed route of build_index_store."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import StorageLevel
+
+    block_size, k1, b = settings["block_size"], settings["k1"], settings["b"]
     flat_dir = os.path.join(out_dir, "_flat_postings")
     post_dir = os.path.join(out_dir, "postings")
     lin_dir = os.path.join(out_dir, "lineage")
@@ -438,32 +924,15 @@ def build_index_store(
         # inside the whole-shard numpy encode, which sorts anyway); every
         # later stage reads the parquet back instead of recomputing.
         # Row counts (n_docs, occurrence volume for auto-sharding) ride
-        # the write jobs as Observations instead of separate count jobs —
-        # at 100 TB a count is cheap relative to the write, but for a
-        # SMALL batch commit every extra job is fixed latency on the
-        # refresh path. Resumed (skipped) stages fall back to counting
-        # the existing parquet.
+        # the write jobs as Observations instead of separate count jobs.
+        # Resumed (skipped) stages fall back to counting the existing
+        # parquet.
         # field lengths: the per-field rows of the same one-pass
         # tokenize, shuffle-free — cheaper than joining against the
         # postings shuffle. When the field list is known (tokenize
         # path), the per-field corpus stats (n_docs, sum_dl) ride this
-        # write as conditional-sum Observations — one fewer job on the
-        # per-commit refresh path; the precomputed-frames merge path
-        # keeps the groupBy collect.
-        known_fields = (
-            list(
-                dict.fromkeys(
-                    [
-                        *(text_cols or []),
-                        *(array_cols or []),
-                        *(dutch_cols or []),
-                        *(keyword_cols or []),
-                    ]
-                )
-            )
-            if occurrences is None
-            else None
-        )
+        # write as conditional-sum Observations; the precomputed-frames
+        # merge path keeps the groupBy collect.
         flat_obs = fwd_obs = len_obs = None
         stage_writes = []
         if not _stage_done(flat_dir):
@@ -472,15 +941,16 @@ def build_index_store(
                 flat_obs, F.count(F.lit(1)).alias("n")
             )
             stage_writes.append(
-                lambda: flat_write.write.mode("overwrite").parquet(flat_dir)
+                in_stage(spark, "occurrences",
+                         lambda: flat_write.write.mode("overwrite").parquet(flat_dir))
             )
         if not _stage_done(os.path.join(out_dir, "forward")):
             fwd_obs = Observation()
             fwd_write = forward.observe(fwd_obs, F.count(F.lit(1)).alias("n"))
             stage_writes.append(
-                lambda: fwd_write.write.mode("overwrite").parquet(
+                in_stage(spark, "forward", lambda: fwd_write.write.mode("overwrite").parquet(
                     os.path.join(out_dir, "forward")
-                )
+                ))
             )
         if not _stage_done(os.path.join(out_dir, "field_lengths")):
             lengths_write = lengths_lazy
@@ -499,63 +969,37 @@ def build_index_store(
                     )
                 lengths_write = lengths_write.observe(len_obs, *aggs)
             stage_writes.append(
-                lambda: lengths_write.write.mode("overwrite").parquet(
+                in_stage(spark, "field_lengths", lambda: lengths_write.write.mode("overwrite").parquet(
                     os.path.join(out_dir, "field_lengths")
-                )
+                ))
             )
         # The three stage-1 tables are independent projections of the
         # input batch, so their write JOBS are submitted concurrently
-        # (Spark's scheduler interleaves them across the executor pool).
-        # Same total work, but the per-commit refresh latency stops
-        # being the SUM of three job round-trips — on a small
-        # incremental commit the fixed overhead dominates, and at
-        # cluster scale concurrent jobs keep the executors busy while
+        # (Spark's scheduler interleaves them across the executor pool):
+        # at cluster scale concurrent jobs keep the executors busy while
         # each job's stragglers drain.
         if len(stage_writes) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=len(stage_writes)) as pool:
                 for fut in [pool.submit(w) for w in stage_writes]:
                     fut.result()  # re-raises the first stage failure
         elif stage_writes:
             stage_writes[0]()
         flat_postings = spark.read.schema(occurrences_lazy.schema).parquet(flat_dir)
-        n_docs = (
-            int(fwd_obs.get["n"])
-            if fwd_obs is not None
-            else spark.read.parquet(os.path.join(out_dir, "forward")).count()
-        )
+        if fwd_obs is not None:
+            n_docs = int(fwd_obs.get["n"])
+        else:
+            with stage(spark, "forward"):
+                n_docs = spark.read.parquet(os.path.join(out_dir, "forward")).count()
         occ_n = int(flat_obs.get["n"]) if flat_obs is not None else None
-        # Auto-shard from the materialized occurrence count so one
-        # shard's encode frame fits the per-task budget (a metadata-cheap
-        # count over the parquet intermediate), floored at the session's
-        # parallelism — then PINNED to disk so a resume on a different
-        # session keeps the same shard mapping (pin_build_config
-        # docstring). Explicit n_shards overrides.
-        #
-        # salt_buckets=None (auto): a SMALL build (a batch generation
-        # commit above all) disables hot-term salting outright
-        # (salt_buckets=1): skew is bounded by the batch itself (occ_n
-        # <= small cap keeps any single shard's encode frame inside the
-        # per-task budget), and with no salting the encode needs
-        # NOTHING from term_stats — no hot-term broadcast, and the
-        # encode job runs fully concurrent with the term_stats write
-        # instead of behind it. An EXPLICIT salt_buckets is always
-        # honored; the choice is pinned via pin_build_config like every
-        # other sharding decision, so resume keeps the same mapping.
-        if salt_buckets is None:
-            salt_buckets = (
-                1 if (occ_n is not None and occ_n <= SMALL_BUILD_OCC) else 8
-            )
 
-        n_shards, salt_buckets = pin_build_config(
-            out_dir, resume, n_shards, salt_buckets,
-            lambda: auto_n_shards(
-                occ_n if occ_n is not None else flat_postings.count(),
-                spark.sparkContext.defaultParallelism,
-            ),
+        def count_occurrences() -> int:
+            with stage(spark, "occurrences"):
+                return flat_postings.count()
+
+        n_shards, salt_buckets = _resolve_sharding(
+            spark, out_dir, resume, n_shards, salt_buckets, occ_n, count_occurrences
         )
-        hot_threshold = max(int(hot_df_fraction * n_docs), 1)
+        hot_threshold = max(int(settings["hot_df_fraction"] * n_docs), 1)
         # two-phase df/cf: aggregate to (field, term, doc_id) first — a
         # doc's occurrences all sit in one input partition, so the map-
         # side partial agg collapses the shuffle to postings size — then
@@ -590,8 +1034,6 @@ def build_index_store(
         # sequential barrier between stage 1 and the encode (guide §2.6
         # overlap of independent jobs). On resume the written table is
         # the source of truth instead.
-        from pyspark import StorageLevel
-
         if _stage_done(os.path.join(out_dir, "term_stats")):
             tstats_src = spark.read.schema(tstats.schema).parquet(
                 os.path.join(out_dir, "term_stats")
@@ -600,20 +1042,19 @@ def build_index_store(
             tstats_cached = tstats.persist(StorageLevel.MEMORY_AND_DISK)
             # Large builds materialize the cache once up front so the two
             # consumers (table write, encode join) never duplicate the
-            # aggregation. A SMALL batch commit skips that extra job
-            # round-trip: the concurrent consumers may race to fill the
-            # tiny cache, and a duplicated small agg is cheaper than a
-            # whole sequential job on the refresh-latency path.
-            # Scale-adaptive on the observed occurrence count.
+            # aggregation. A SMALL build skips that extra job round-trip:
+            # the concurrent consumers may race to fill the tiny cache,
+            # and a duplicated small agg is cheaper than a whole
+            # sequential job. Scale-adaptive on the observed occurrence
+            # count.
             if occ_n is None or occ_n > SMALL_BUILD_OCC:
-                tstats_cached.count()
-            from concurrent.futures import ThreadPoolExecutor
-
+                with stage(spark, "term_stats"):
+                    tstats_cached.count()
             tstats_pool = ThreadPoolExecutor(max_workers=1)
             tstats_writer = tstats_pool.submit(
-                lambda: tstats_cached.write.mode("overwrite").parquet(
+                in_stage(spark, "term_stats", lambda: tstats_cached.write.mode("overwrite").parquet(
                     os.path.join(out_dir, "term_stats")
-                )
+                ))
             )
             tstats_src = tstats_cached
 
@@ -654,10 +1095,11 @@ def build_index_store(
         # ---- shard-level resume (see the module docstring) ----
         done_shards: set[int] = set()
         if resume and os.path.exists(lin_dir):
-            done_shards = {
-                r["shard"]
-                for r in spark.read.parquet(lin_dir).select("shard").collect()
-            }
+            with stage(spark, "lineage"):
+                done_shards = {
+                    r["shard"]
+                    for r in spark.read.parquet(lin_dir).select("shard").collect()
+                }
             if os.path.exists(post_dir):
                 for entry in os.listdir(post_dir):
                     if entry.startswith("shard="):
@@ -674,7 +1116,6 @@ def build_index_store(
         # available (zero extra jobs), else one small aggregate over the
         # WRITTEN lengths table (nothing recomputed from raw text either
         # way). Zero-row fields are dropped to match the groupBy shape.
-        omit = set(keyword_cols or [])
         if len_obs is not None:
             vals = len_obs.get
             stat_rows = [
@@ -687,86 +1128,15 @@ def build_index_store(
             ]
             stat_rows = [r for r in stat_rows if r["nd"] > 0]
         else:
-            stat_rows = (
-                spark.read.parquet(os.path.join(out_dir, "field_lengths"))
-                .groupBy("field")
-                .agg(F.count("*").alias("nd"), F.sum("dl").alias("sdl"))
-                .collect()
-            )
-        field_stats_meta = {
-            r["field"]: {
-                "n_docs": int(r["nd"]),
-                "sum_dl": int(r["sdl"]),
-                "omit_norms": r["field"] in omit,
-            }
-            for r in stat_rows
-        }
-        field_params = {
-            f: (d["n_docs"], d["sum_dl"] / d["n_docs"] if d["n_docs"] else 1.0)
-            for f, d in field_stats_meta.items()
-        }
-
-        # (key, pyarrow.Table) -> pyarrow.Table, left unannotated:
-        # applyInArrow picks its calling mode from type hints
-        def _encode(key, tbl):
-            # Whole-shard Arrow/numpy passes: the input is RAW OCCURRENCE
-            # rows (field, term, doc_id, pos); one sort and run-length
-            # pass derive the postings (tf = occurrences per doc, the
-            # sorted position list = the run's positions), then block
-            # boundaries and scores, and the list columns are built from
-            # offsets — no per-posting or per-block Python.
-            tbl = tbl.take(
-                pc.sort_indices(
-                    tbl,
-                    [
-                        ("field", "ascending"),
-                        ("term", "ascending"),
-                        ("doc_id", "ascending"),
-                        ("pos", "ascending"),
-                    ],
+            with stage(spark, "field_stats"):
+                stat_rows = (
+                    spark.read.parquet(os.path.join(out_dir, "field_lengths"))
+                    .groupBy("field")
+                    .agg(F.count("*").alias("nd"), F.sum("dl").alias("sdl"))
+                    .collect()
                 )
-            )
-            n_occ = tbl.num_rows
-            fields_o = tbl.column("field").combine_chunks()
-            terms_o = tbl.column("term").combine_chunks()
-            docs_o = tbl.column("doc_id").to_numpy()
-            # a (field, term) run starts a posting; so does a doc change
-            new_run = np.ones(n_occ, dtype=bool)
-            new_run[1:] = value_changes(fields_o) | value_changes(terms_o)
-            p_start = new_run.copy()
-            p_start[1:] |= docs_o[1:] != docs_o[:-1]
-            p_idx = np.flatnonzero(p_start)
-            p_bounds = np.append(p_idx, n_occ)
-            doc_ids = docs_o[p_idx]
-            tfs = np.diff(p_bounds)
-            dls = tbl.column("_dl").to_numpy()[p_idx]
-            hot_df = pc.fill_null(tbl.column("_hot_df"), np.nan).to_numpy()[p_idx]
-            starts, block_ids, dfs = block_layout(new_run[p_idx], hot_df, block_size)
-
-            # per-field BM25 bound per posting -> block max (used only by
-            # WAND-style pruning; harmless for TermFrequency similarity)
-            fields = fields_o.take(p_idx)
-            scores = np.zeros(len(p_idx), dtype=np.float64)
-            for f, (f_n, f_avgdl) in field_params.items():
-                m = pc.equal(fields, f).to_numpy(zero_copy_only=False)
-                if m.any():
-                    scores[m] = bm25_score_numpy(
-                        tfs[m].astype(float), dfs[m], dls[m].astype(float),
-                        f_n, f_avgdl, k1, b,
-                    )
-            positions = pa.ListArray.from_arrays(
-                pa.array(p_bounds.astype(np.int32)),
-                pa.array(tbl.column("pos").to_numpy(), pa.int32()),
-            )
-            return pa.table(
-                {
-                    "shard": np.full(len(starts), key[0].as_py(), dtype=np.int32),
-                    "field": fields.take(starts),
-                    "term": terms_o.take(p_idx[starts]),
-                    "block_id": block_ids,
-                    **block_columns(starts, doc_ids, tfs, dls, scores, positions),
-                }
-            )
+        field_stats = _field_stats_meta(stat_rows, omit)
+        field_params = _field_params(field_stats)
 
         if remaining:
             # dispersed shard exchange + projection before it: see
@@ -790,7 +1160,14 @@ def build_index_store(
                     "shard",
                 )
                 .groupBy("shard")
-                .applyInArrow(_encode, schema=STORE_POSTINGS_SCHEMA)
+                # (key, pyarrow.Table) -> pyarrow.Table, left unannotated:
+                # applyInArrow picks its calling mode from type hints
+                .applyInArrow(
+                    lambda key, tbl: _encode(
+                        tbl, key[0].as_py(), field_params, block_size, k1, b
+                    ),
+                    schema=STORE_POSTINGS_SCHEMA,
+                )
             )
             if lineage:
                 # per-block lineage helpers computed ONCE at write time
@@ -824,9 +1201,10 @@ def build_index_store(
                 # the helpers feed the observation only; no read-back
                 # needs them on disk
                 encoded = encoded.observe(lin_obs, *lin_aggs).drop("_h", "_nbytes")
-            encoded.write.options(**PARQUET_V2).mode("append").partitionBy(
-                "shard"
-            ).parquet(post_dir)
+            with stage(spark, "encode"):
+                encoded.write.options(**PARQUET_V2).mode("append").partitionBy(
+                    "shard"
+                ).parquet(post_dir)
             if use_obs:
                 write_lineage_rows(
                     lineage_rows_from_observation(
@@ -859,33 +1237,15 @@ def build_index_store(
                     F.lit(run_id).alias("run_id"),
                 )
             )
-            lineage_df.write.mode("append").parquet(lin_dir)
+            with stage(spark, "lineage"):
+                lineage_df.write.mode("append").parquet(lin_dir)
 
-        meta = {
-            # identifies this snapshot: open_persistent_index keys its
-            # handle cache on it, so a rebuild at the same path is a miss
-            "snapshot": uuid.uuid4().hex,
-            "n_docs": n_docs,
-            "field_stats": field_stats_meta,
-            "facet_fields": dict(facet_fields or {}),
-            "k1": k1,
-            "b": b,
-            "similarity": similarity,
-            "quantized": quantized,
-            "n_shards": n_shards,
-            "salt_buckets": salt_buckets,
-            "block_size": block_size,
-            "hot_df_fraction": hot_df_fraction,
-            "schemas": {
-                "forward": schema_json(forward.schema),
-                "field_lengths": schema_json(lengths_lazy.schema),
-                "term_stats": schema_json(tstats.schema),
-                "postings": schema_json(StructType.fromDDL(STORE_POSTINGS_SCHEMA)),
-            },
-        }
         if tstats_writer is not None:
             tstats_writer.result()  # re-raise a failed term_stats write
-        COMMITTER.publish_file(os.path.join(out_dir, "meta.json"), json.dumps(meta))
+        COMMITTER.publish_file(
+            os.path.join(out_dir, "meta.json"),
+            _store_meta(n_docs, field_stats, n_shards, salt_buckets, schemas, **settings),
+        )
         ok = True
     finally:
         if tstats_pool is not None:
@@ -895,7 +1255,6 @@ def build_index_store(
         # keep the intermediate on failure so a resume can reuse it
         if ok:
             shutil.rmtree(flat_dir, ignore_errors=True)
-    return PersistentIndex(spark, out_dir)
 
 
 # --------------------------------------------------------------------- open

@@ -42,6 +42,7 @@ or the multi-generation reader with the same interface
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field as dc_field, fields as dc_fields
 from typing import Any, Sequence
@@ -56,6 +57,7 @@ from pyspark.sql.window import Window
 from meresco_lucene_spark.columns import qcol
 
 if TYPE_CHECKING:  # avoid circular import (the store imports query.bm25)
+    from meresco_lucene_spark.index.builder import FieldStats
     from meresco_lucene_spark.index.store import PersistentIndex
 from meresco_lucene_spark.query.bm25 import (
     bm25_score_expr,
@@ -143,25 +145,42 @@ def _term_hits(index: PersistentIndex, fld: str, value: str, boost: float) -> Da
         p = index.term_postings(fld, [value])
         return p.select("doc_id", term_frequency_score_expr(F.col("tf"), boost).alias("score"))
     dfs = index.term_dfs(fld, [value])
-    p = index.term_postings(fld, list(dfs))
-    # df as a map lookup, not a numeric literal: codegen writes a number
-    # into the generated Java, so each new df would compile new classes,
-    # while a map constant is one of the class's references (_by_term).
-    df = _by_term({value: dfs.get(value, 0)})
+    p, score = _bm25_postings(index, st, index.term_postings(fld, list(dfs)), [value], dfs)
+    if boost != 1.0:
+        score = score * F.lit(boost)
+    return p.select("doc_id", score.alias("score"))
+
+
+def _bm25_postings(
+    index: PersistentIndex,
+    st: FieldStats,
+    p: DataFrame,
+    terms: list[str],
+    dfs: dict[str, int],
+) -> tuple[DataFrame, Column]:
+    """``p`` with each posting's df, n_docs and avgdl (``_df``, ``_n``,
+    ``_a``), and its BM25 score over them.
+
+    The three are map lookups by term (_by_term), not numeric literals:
+    codegen writes a number into the generated Java, so each new df, and
+    each new snapshot's n_docs and avgdl, would compile new classes,
+    while a map constant is one of the class's references. They are
+    projected below the score, so the score's common subexpressions
+    (df is read twice) hold no map constant: codegen orders common
+    subexpressions by their hash, which a constant's value changes."""
+    p = p.selectExpr(
+        "*",
+        _by_term_sql({t: dfs.get(t, 0) for t in terms}) + " AS _df",
+        _by_term_sql({t: st.n_docs for t in terms}) + " AS _n",
+        _by_term_sql({t: st.avgdl for t in terms}) + " AS _a",
+    )
+    tf, df, n = F.col("tf"), F.col("_df"), F.col("_n")
     if st.omit_norms:
         # Norms omitted (StringField / NoTermsFrequencyField,
         # DocumentStringToDocument.java:97-98): Lucene's norm term
         # collapses to 1 -> tfNorm = tf / (tf + k1).
-        score = (
-            idf_expr(df, st.n_docs)
-            * (F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1)))
-            * F.lit(boost)
-        )
-        return p.select("doc_id", score.alias("score"))
-    score = bm25_score_expr(
-        F.col("tf"), df, F.col("_bdl"), st.n_docs, st.avgdl, index.k1, index.b, boost
-    )
-    return p.select("doc_id", score.alias("score"))
+        return p, idf_expr(df, n) * (tf.cast("double") / (tf + F.lit(index.k1)))
+    return p, bm25_score_expr(tf, df, F.col("_bdl"), n, F.col("_a"), index.k1, index.b)
 
 
 def _by_term(values: dict[str, Any]) -> Column:
@@ -173,11 +192,32 @@ def _by_term(values: dict[str, Any]) -> Column:
     ``references`` array, so queries that differ only in their terms'
     numbers (df, MUST count, boost) share one compiled class. The value
     reaches the arithmetic unchanged, so scores are bit-identical to
-    folding it as a literal (``Log`` is ``StrictMath.log`` either way)."""
-    return F.element_at(
-        F.create_map(*[F.lit(x) for kv in values.items() for x in kv]),
-        F.col("term"),
-    )
+    folding it as a literal (``Log`` is ``StrictMath.log`` either way).
+
+    The lookup is written as one SQL expression, one py4j call instead
+    of about twenty for the Column-by-Column form; the map folds to the
+    same constant of the same types (see _sql_literal)."""
+    return F.expr(_by_term_sql(values))
+
+
+def _by_term_sql(values: dict[str, Any]) -> str:
+    """The SQL text of :func:`_by_term`."""
+    pairs = ", ".join(_sql_literal(x) for kv in values.items() for x in kv)
+    return f"element_at(map({pairs}), term)"
+
+
+def _sql_literal(value: str | int | float) -> str:
+    """``value`` as a SQL literal of the type ``F.lit`` gives it: a term
+    as the cast of its UTF-8 bytes (no quoting or escaping to get wrong),
+    an int as int or bigint by its range, a float as a double written in
+    its shortest round-trip form, so it parses back to the same bits."""
+    if isinstance(value, str):
+        return f"cast(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(value, int) and not isinstance(value, bool):
+        return str(value)
+    if isinstance(value, float) and math.isfinite(value):
+        return f"{value!r}D"
+    raise TypeError(f"no SQL literal for {value!r}")
 
 
 def _multi_term_hits(
@@ -246,16 +286,9 @@ def _fused_term_hits(
         score = term_frequency_score_expr(F.col("tf"), 1.0)
     else:
         dfs = index.term_dfs(fld, list(w_boost))
-        p = index.term_postings(fld, list(dfs))
-        df = _by_term({t: dfs.get(t, 0) for t in w_boost})
-        if st.omit_norms:
-            score = idf_expr(df, st.n_docs) * (
-                F.col("tf").cast("double") / (F.col("tf") + F.lit(index.k1))
-            )
-        else:
-            score = bm25_score_expr(
-                F.col("tf"), df, F.col("_bdl"), st.n_docs, st.avgdl, index.k1, index.b,
-            )
+        p, score = _bm25_postings(
+            index, st, index.term_postings(fld, list(dfs)), list(w_boost), dfs
+        )
     if not uniform_boost:
         score = score * _by_term(w_boost)
     return p.select("doc_id", score.alias("score"), is_must_c)
@@ -349,10 +382,14 @@ def _phrase_hits(index: PersistentIndex, q: Q) -> DataFrame:
     # subexpressions, which codegen orders by their hash, so a literal
     # term in them made new code for every phrase.
     distinct_terms = list(dict.fromkeys(terms))
+    # n_docs and avgdl ride every posting the same way and are picked
+    # once per doc, so no snapshot's numbers are code either
     p = index.term_postings(q.field, list(dfs)).select(
         "*",
         _by_term({t: j for j, t in enumerate(distinct_terms)}).alias("_j"),
         df.alias("_df"),
+        _by_term({t: st.n_docs for t in distinct_terms}).alias("_n"),
+        _by_term({t: st.avgdl for t in distinct_terms}).alias("_a"),
     )
     aggs = []
     for j in range(len(distinct_terms)):
@@ -362,9 +399,11 @@ def _phrase_hits(index: PersistentIndex, q: Q) -> DataFrame:
             F.first(F.when(mine, F.col("_df")), ignorenulls=True).alias(f"_e{j}"),
         ]
     # dl rides the first term's posting
-    aggs.append(
-        F.first(F.when(F.col("_j") == 0, F.col("_bdl")), ignorenulls=True).alias("_bdl")
-    )
+    aggs += [
+        F.first(F.when(F.col("_j") == 0, F.col("_bdl")), ignorenulls=True).alias("_bdl"),
+        F.first("_n").alias("_n"),
+        F.first("_a").alias("_a"),
+    ]
     g = p.groupBy("doc_id").agg(*aggs)
     present = None
     for j in range(len(distinct_terms)):
@@ -374,7 +413,7 @@ def _phrase_hits(index: PersistentIndex, q: Q) -> DataFrame:
     for i, t in enumerate(terms):
         j = distinct_terms.index(t)
         sel += [F.col(f"_q{j}").alias(f"_p{i}"), F.col(f"_e{j}").alias(f"_d{i}")]
-    joined = g.filter(present).select(*sel, "_bdl")
+    joined = g.filter(present).select(*sel, "_bdl", "_n", "_a")
 
     conds = " AND ".join(
         f"exists(_p{i}, y -> y = x + {i})" for i in range(1, len(terms))
@@ -387,11 +426,11 @@ def _phrase_hits(index: PersistentIndex, q: Q) -> DataFrame:
     # carried as _d{i} (an absent term means no match).
     idf_sum = None
     for i in range(len(terms)):
-        idf = idf_expr(F.col(f"_d{i}"), st.n_docs)
+        idf = idf_expr(F.col(f"_d{i}"), F.col("_n"))
         idf_sum = idf if idf_sum is None else idf_sum + idf
     score = (
         idf_sum
-        * tf_norm_expr(F.col("_pf"), F.col("_bdl"), st.avgdl, index.k1, index.b)
+        * tf_norm_expr(F.col("_pf"), F.col("_bdl"), F.col("_a"), index.k1, index.b)
         * F.lit(q.boost)
     )
     return cand.select("doc_id", score.alias("score"))
@@ -747,10 +786,12 @@ def similar_documents_df(
     with the term filter pushed to the scan, and the top-k is a
     TakeOrderedAndProject — no full shuffle at any corpus size."""
     n = index.n_docs
+    # the seed's own terms are the broadcast side of the term_stats join
+    # whatever the tables' file sizes: one doc's vocabulary is small
     seed_terms = (
-        index.postings_for(field)
-        .filter(F.col("doc_id") == doc_id)
-        .select("term")
+        F.broadcast(
+            index.postings_for(field).filter(F.col("doc_id") == doc_id).select("term")
+        )
         .join(index.term_stats_for(field), "term")
         .filter(F.col("df") <= max_freq * n)
         .select("term")

@@ -42,9 +42,12 @@ are map constants, not code (query/executor.py ``_by_term``).
 from __future__ import annotations
 
 import os
-from typing import Sequence
+from contextlib import contextmanager
+from typing import Callable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def session_defaults() -> dict[str, str]:
@@ -106,6 +109,43 @@ def get_spark(
     spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def stage(spark: SparkSession, name: str):
+    """Tag the Spark jobs this thread submits inside the block with
+    ``name`` as their ``spark.job.description``, nested under the
+    thread's current stage (``commit`` then ``encode`` gives
+    ``commit:encode``). The tag is a property of the submitting thread,
+    so a job submitted from a thread pool needs :func:`in_stage`."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(f"{outer}:{name}" if outer else name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, outer)
+
+
+def in_stage(spark: SparkSession, name: str, fn: Callable[[], T]) -> Callable[[], T]:
+    """``fn`` as a callable for a thread pool that runs in stage ``name``,
+    nested under the CALLING thread's current stage."""
+    outer = spark.sparkContext.getLocalProperty(_JOB_DESCRIPTION)
+    full = f"{outer}:{name}" if outer else name
+
+    def run() -> T:
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+        sc.setJobDescription(full)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty(_JOB_DESCRIPTION, prev)
+
+    return run
 
 
 def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:

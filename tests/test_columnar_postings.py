@@ -154,11 +154,13 @@ def test_open_runs_no_spark_job(spark, indexes, no_handle_caches):
 # warm reader and on a freshly opened one alike: df is the sum of the
 # generations' term-dictionary entries, read on the driver, and no
 # generation table needs a schema-inference job. A LuceneCore commit
-# with one add and one delete is the store build's jobs plus the
-# tombstone write, with no separate hash job.
+# with one add and one delete is the one bounded collect of the store's
+# driver route: the deleted identifier is hashed without a job, and the
+# driver writes the store and the tombstones (11 jobs before, when the
+# distributed build and a Spark tombstone write ran every commit).
 MULTIGEN_TERM_JOBS = 2
 MULTIGEN_OPEN_TERM_JOBS = 2
-ADD_DELETE_COMMIT_JOBS = 11
+ADD_DELETE_COMMIT_JOBS = 1
 
 
 def test_multigen_term_query_job_count(spark, indexes, no_handle_caches):

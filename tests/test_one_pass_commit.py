@@ -1,8 +1,9 @@
 """A commit ships its batch to the JVM once, as Arrow, and tokenizes it
 in one pass.
 
-The batch and delete frames of ``LuceneCore.commit`` plan as local
-relations, so no scan of them needs a Python worker. ``occurrence_frames``
+The batch frame of ``LuceneCore.commit`` plans as a local relation,
+so no scan of it needs a Python worker, and its deleted identifiers
+are hashed on the driver without a job. ``occurrence_frames``
 tokenizes every indexed column in one projection; its occurrence and
 field-length rows are checked against hand-computed sets, and a store
 build writes one ``field_lengths`` file per input partition, not one
@@ -96,8 +97,9 @@ def _plan(frame) -> str:
 
 
 def test_commit_frames_are_local_relations(spark, tmp_path, monkeypatch):
-    """The batch frame and the delete frame of a commit plan as local
-    table scans, not as scans of a pickled Python RDD."""
+    """The batch frame of a commit plans as a local table scan, not as a
+    scan of a pickled Python RDD, and its deletes reach the store as
+    ids hashed on the driver, not as a frame."""
     core = LuceneCore(spark, str(tmp_path), name="core", n_shards=2)
     core.addDocument({"text": "spark join", "n": 3}, identifier="a")
     core.addDocument({"text": "slow table"}, identifier="b")
@@ -108,14 +110,14 @@ def test_commit_frames_are_local_relations(spark, tmp_path, monkeypatch):
     real = IncrementalIndexStore.commit_batch
 
     def spy(self, df, *args, **kwargs):
-        seen["adds"], seen["dels"] = df, kwargs["delete_frame"]
+        seen["adds"], seen["dels"] = df, kwargs
         return real(self, df, *args, **kwargs)
 
     monkeypatch.setattr(IncrementalIndexStore, "commit_batch", spy)
     core.commit()
-    for frame in seen.values():
-        plan = _plan(frame)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    plan = _plan(seen["adds"])
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert seen["dels"] == {"delete_ids": core._hash_ids(["a"])}
     assert sorted(h.id for h in core.executeQuery({"type": "MatchAllDocsQuery"}).hits) == [
         "b", "c"
     ]

@@ -276,6 +276,45 @@ def test_new_terms_compile_no_classes(spark, indexes):
         assert _compiles(spark) - c0 == 0, name
 
 
+def test_new_snapshot_compiles_no_classes(spark, tmp_path):
+    """A snapshot's n_docs and avgdl are map constants as well: after a
+    commit, the same term+facet query and fused OR as before it reuse
+    every compiled class (with literal n_docs and avgdl each compiled 2)."""
+    from meresco_lucene_spark.core import LuceneCore
+
+    core = LuceneCore(spark, str(tmp_path), name="core", n_shards=2)
+
+    def commit(lo, hi):
+        for i in range(lo, hi):
+            text = " ".join(WORDS[(i * k + k) % len(WORDS)] for k in range(1, 4 + i % 3))
+            core.addDocument(
+                identifier=f"d{i}",
+                fields=[
+                    {"type": "TextField", "name": "text", "value": text},
+                    {"type": "FacetField", "name": "lang", "value": ["py", "go"][i % 2]},
+                ],
+            )
+        core.commit()
+
+    queries = {
+        "term+facet": lambda: core.executeQuery(
+            Q.term("text", "spark"), facets=[{"fieldname": "lang", "maxTerms": 10}]
+        ),
+        "or": lambda: core.executeQuery(Q.or_(Q.term("text", "spark"), Q.term("text", "scan"))),
+    }
+    # three generations with upserts, so that the next commit changes
+    # the numbers of the reader and not the shape of its plans
+    for lo in (0, 8, 16):
+        commit(lo, lo + 12)
+    for q in queries.values():
+        q()
+    commit(24, 36)
+    for name, q in queries.items():
+        c0 = _compiles(spark)
+        assert q().total > 0, name
+        assert _compiles(spark) - c0 == 0, name
+
+
 def test_get_spark_session_confs(spark):
     """The test session comes from get_spark and carries the codegen
     cache size and the call-site capture switch of session_defaults()."""
