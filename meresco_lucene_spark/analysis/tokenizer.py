@@ -30,6 +30,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meresco_lucene_spark.columns import sql_literal
+
 TOKEN_RE = re.compile(r"[a-z0-9_]+")
 # DuckDB-equivalent tokenizer expression for oracle SQL generation.
 DUCKDB_TOKENIZE = "regexp_extract_all(lower(strip_accents({col})), '[a-z0-9_]+')"
@@ -85,21 +87,25 @@ def _build_accent_map() -> tuple[str, str]:
 _ACCENT_SRC, _ACCENT_DST = _build_accent_map()
 
 
-def tokenize_expr(col: Column | str) -> Column:
-    """JVM-side tokenizer: identical contract to :func:`tokenize_udf`
+def tokenize_sql(col: str) -> str:
+    """JVM-side tokenizer, as the SQL text of an expression over the SQL
+    expression ``col``: identical contract to :func:`tokenize_udf`
     (fold -> lower -> [a-z0-9_]+ runs) but pure Catalyst expressions —
     whole-stage codegen, no Python workers in the scan. This is the
     build hot path; the pandas UDF remains for exotic multi-char folds
-    (none exist in the NFKD single-char range covered here).
+    (none exist in the NFKD single-char range covered here). Written as
+    SQL so a build plans it in one py4j call, not one per function.
 
-    split() on the complement class yields empty strings at boundaries;
-    the filter drops them."""
-    c = F.col(col) if isinstance(col, str) else col
-    # Fold BEFORE lowering: some accented uppercase chars lowercase to
-    # multi-codepoint strings (e.g. U+0130), which would misalign the
-    # translate() src/dst pairing.
-    folded = F.lower(F.translate(c, _ACCENT_SRC, _ACCENT_DST))
-    return F.regexp_extract_all(folded, F.lit("[a-z0-9_]+"), 0)
+    Fold BEFORE lowering: some accented uppercase chars lowercase to
+    multi-codepoint strings (e.g. U+0130), which would misalign the
+    translate() src/dst pairing."""
+    src, dst = sql_literal(_ACCENT_SRC), sql_literal(_ACCENT_DST)
+    return f"regexp_extract_all(lower(translate({col}, {src}, {dst})), '[a-z0-9_]+', 0)"
+
+
+def tokenize_expr(col: str) -> Column:
+    """:func:`tokenize_sql` over the column named ``col``."""
+    return F.expr(tokenize_sql(f"`{col}`"))
 
 
 def shingles(tokens: list[str], min_size: int = 2, max_size: int = 4) -> list[str]:

@@ -931,7 +931,7 @@ def _titles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
-        F.concat_ws(" ", F.slice(tokenize_expr(F.col("text")), 1, 2)).alias("title"),
+        F.concat_ws(" ", F.slice(tokenize_expr("text"), 1, 2)).alias("title"),
     )
 
 

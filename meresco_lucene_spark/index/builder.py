@@ -34,12 +34,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from meresco_lucene_spark.analysis.tokenizer import tokenize_expr
-from meresco_lucene_spark.columns import qcol
-from meresco_lucene_spark.query.bm25 import quantize_dl_expr
+from meresco_lucene_spark.analysis.tokenizer import tokenize_sql
+from meresco_lucene_spark.columns import qcol, sql_literal
+from meresco_lucene_spark.query.bm25 import quantize_dl_sql
 
 # Smallest optimizer size estimate of an input for which the tokenize
 # passes are spread over the session's parallelism (_spread_for_tokenize).
@@ -74,6 +74,11 @@ def _spread_for_tokenize(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     return df.repartition(par) if est >= TOKENIZE_SPREAD_MIN_BYTES else df
+
+
+def _q(name: str) -> str:
+    """A column name quoted for SQL text (see columns.qcol)."""
+    return f"`{name}`"
 
 
 def occurrence_frames(
@@ -112,18 +117,21 @@ def occurrence_frames(
     the extra column is a run-length-friendly int that parquet
     compresses to almost nothing."""
 
-    # (field, tokens, whether a null tokens value drops the entry)
-    fields = [
-        (c, F.coalesce(tokenize_expr(qcol(c)), F.array().cast("array<string>")), False)
+    # (field, its tokens as SQL text — a Column for the Dutch UDF —, and
+    # whether a null tokens value drops the entry). Every step below is
+    # SQL text: a commit plans these frames anew for each batch, and one
+    # py4j call per projection costs far less than one per function.
+    fields: list[tuple[str, str | Column, bool]] = [
+        (c, f"coalesce({tokenize_sql(_q(c))}, cast(array() AS array<string>))", False)
         for c in text_cols or []
     ]
-    fields += [(c, qcol(c), False) for c in array_cols or []]
+    fields += [(c, _q(c), False) for c in array_cols or []]
     if dutch_cols:
         from meresco_lucene_spark.analysis.dutch import tokenize_dutch_udf
 
         fields += [(c, tokenize_dutch_udf(qcol(c)), False) for c in dutch_cols]
     fields += [
-        (c, F.when(qcol(c).isNotNull(), F.array(qcol(c).cast("string"))), True)
+        (c, f"CASE WHEN {_q(c)} IS NOT NULL THEN array(CAST({_q(c)} AS STRING)) END", True)
         for c in keyword_cols or []
     ]
     if not fields:
@@ -136,31 +144,34 @@ def occurrence_frames(
     # took 7% longer on 2 cores.
     tokens = _spread_for_tokenize(df).select(
         F.col(id_col).alias("doc_id"),
-        *(t.alias(f"_t{i}") for i, (_, t, _) in enumerate(fields)),
+        *(
+            (F.expr(t) if isinstance(t, str) else t).alias(f"_t{i}")
+            for i, (_, t, _) in enumerate(fields)
+        ),
     )
     entries = []
     for i, (c, _, optional) in enumerate(fields):
-        e = F.struct(F.lit(c).alias("field"), F.col(f"_t{i}").alias("tokens"))
-        entries.append(F.when(F.col(f"_t{i}").isNotNull(), e) if optional else e)
+        e = f"named_struct('field', {sql_literal(c)}, 'tokens', _t{i})"
+        entries.append(f"CASE WHEN _t{i} IS NOT NULL THEN {e} END" if optional else e)
     per_field = (
-        tokens.select("doc_id", F.explode(F.array(*entries)).alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select(
-            "e.field", "doc_id", "e.tokens",
-            F.coalesce(F.size("e.tokens"), F.lit(0)).cast("long").alias("dl"),
+        tokens.selectExpr("doc_id", f"explode(array({', '.join(entries)})) AS e")
+        .filter("e IS NOT NULL")
+        .selectExpr(
+            "e.field AS field", "doc_id", "e.tokens AS tokens",
+            "CAST(coalesce(size(e.tokens), 0) AS BIGINT) AS dl",
         )
     )
-    dl = quantize_dl_expr(F.col("dl")) if dl_col == "norm_dl" else F.col("dl")
+    dl = quantize_dl_sql("dl") if dl_col == "norm_dl" else "dl"
     occurrences = (
-        per_field.select("*", F.posexplode("tokens").alias("pos", "term"))
-        .filter(F.col("term").isNotNull())
-        .select(
-            "field", "term", "doc_id", F.col("pos").cast("int").alias("pos"),
-            dl.cast("long").alias("_dl"),
+        per_field.selectExpr("*", "posexplode(tokens) AS (pos, term)")
+        .filter("term IS NOT NULL")
+        .selectExpr(
+            "field", "term", "doc_id", "CAST(pos AS INT) AS pos",
+            f"CAST({dl} AS BIGINT) AS _dl",
         )
     )
-    field_lengths = per_field.select(
-        "field", "doc_id", "dl", quantize_dl_expr(F.col("dl")).alias("norm_dl")
+    field_lengths = per_field.selectExpr(
+        "field", "doc_id", "dl", f"{quantize_dl_sql('dl')} AS norm_dl"
     )
     return occurrences, field_lengths
 

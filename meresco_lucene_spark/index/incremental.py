@@ -72,11 +72,13 @@ import threading
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
+from meresco_lucene_spark.columns import PLAIN_TYPES
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
 from meresco_lucene_spark.index import store as index_store
@@ -86,6 +88,7 @@ from meresco_lucene_spark.index.store import (
     decode_block_frame,
     open_persistent_index,
     parquet_options,
+    parquet_rows,
     publish_parquet,
 )
 from meresco_lucene_spark.session import in_stage, local_frame, stage
@@ -117,6 +120,58 @@ def _read_dirs(spark: SparkSession, schema, dirs: list[str]) -> DataFrame:
 def _read_tombstones(spark: SparkSession, dirs: list[str]) -> DataFrame:
     """Tombstones have the fixed schema ``doc_id long``."""
     return _read_dirs(spark, "doc_id long", dirs)
+
+
+def _ids(tbl: pa.Table) -> np.ndarray:
+    return tbl.column("doc_id").to_numpy().astype(np.int64)
+
+
+def _read_ids(table_dir: str) -> np.ndarray:
+    """The ``doc_id`` column of a parquet dir, read with pyarrow."""
+    return _ids(pq.read_table(table_dir, columns=["doc_id"]))
+
+
+def _live_occurrence_rows(blocks: pa.Table, live) -> pa.Table:
+    """(field, term, doc_id, pos, _dl) of every position of the postings
+    in ``blocks`` whose doc ids ``live(doc_ids)`` keeps."""
+    if blocks.num_rows == 0:
+        return _OCC_SCHEMA.empty_table()
+    blocks = blocks.combine_chunks()
+    doc_l = blocks.column("doc_ids").chunk(0)
+    docs = pc.list_flatten(doc_l).to_numpy().astype(np.int64)
+    block = pc.list_parent_indices(doc_l).to_numpy()
+    dls = pc.list_flatten(blocks.column("dls").chunk(0)).to_numpy()
+    per_posting = pc.list_flatten(blocks.column("positions").chunk(0))
+    posting = pc.list_parent_indices(per_posting).to_numpy()
+    pos = pc.list_flatten(per_posting).to_numpy()
+    keep = np.flatnonzero(live(docs)[posting])
+    posting = posting[keep]
+    rows = pa.array(block[posting])
+    return pa.table(
+        [
+            blocks.column("field").take(rows),
+            blocks.column("term").take(rows),
+            pa.array(docs[posting], pa.int64()),
+            pa.array(pos[keep], pa.int32()),
+            pa.array(dls[posting], pa.int32()),
+        ],
+        schema=_OCC_SCHEMA,
+    )
+
+
+# the merge feed's occurrence rows (before their term hash _h)
+_OCC_SCHEMA = pa.schema(
+    [("field", pa.string()), ("term", pa.string()), ("doc_id", pa.int64()),
+     ("pos", pa.int32()), ("_dl", pa.int32())]
+)
+
+
+def _publish_tombstones(spark: SparkSession, ids: list[np.ndarray], tomb_dir: str) -> None:
+    """The union of ``ids`` as ``tomb_dir``'s one file, written by the
+    driver (publish_parquet, no Spark job); nothing when it is empty."""
+    ids = np.unique(np.concatenate(ids))
+    if len(ids):
+        publish_parquet(pa.table({"doc_id": ids}), tomb_dir, **parquet_options(spark))
 
 
 def _gen_name(n: int) -> str:
@@ -291,16 +346,8 @@ class IncrementalIndexStore:
                     # forward table just written, no Spark job
                     ids = [np.asarray(delete_ids or [], dtype=np.int64)]
                     if built is not None:
-                        fwd = pq.read_table(
-                            os.path.join(built.out_dir, "forward"), columns=["doc_id"]
-                        )
-                        ids.append(fwd.column("doc_id").to_numpy().astype(np.int64))
-                    ids = np.unique(np.concatenate(ids))
-                    if len(ids):
-                        publish_parquet(
-                            pa.table({"doc_id": ids}), tomb_dir,
-                            **parquet_options(self.spark),
-                        )
+                        ids.append(_read_ids(os.path.join(built.out_dir, "forward")))
+                    _publish_tombstones(self.spark, ids, tomb_dir)
                 else:
                     with stage(self.spark, "tombstones"):
                         spark_tombstones()
@@ -450,10 +497,14 @@ class IncrementalIndexStore:
         if not tdirs:
             shutil.rmtree(gen_dir, ignore_errors=True)
             return None
+        out = os.path.join(gen_dir, "tombstones")
         with stage(self.spark, "merge"):
-            _read_tombstones(self.spark, tdirs).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(gen_dir, "tombstones"))
+            if sum(parquet_rows(d) for d in tdirs) <= index_store.DRIVER_BUILD_ROWS:
+                _publish_tombstones(self.spark, [_read_ids(d) for d in tdirs], out)
+            else:
+                _read_tombstones(self.spark, tdirs).distinct().write.mode(
+                    "overwrite"
+                ).parquet(out)
         self._commit_merged(gen_dir, gens)
         return gen
 
@@ -480,23 +531,35 @@ class IncrementalIndexStore:
         re-tokenization, and commit it in place of ``gens``. Its
         tombstones mask every id it holds and every id ``gens`` masked."""
         gen, gen_dir = self._new_gen_dir()
+        tomb_dir = os.path.join(gen_dir, "tombstones")
         with stage(self.spark, "merge"):
-            build_index_store(
+            built = build_index_store(
                 reader.forward,
                 os.path.join(gen_dir, "store"),
                 id_col="doc_id",
                 occurrences=reader.live_occurrences(),
                 lengths=reader.live_lengths(),
                 lineage=False,
+                # a merge that fits the driver route reads its feed with
+                # pyarrow: no Spark job at all
+                collected=reader.merge_rows(index_store.DRIVER_BUILD_ROWS),
                 **self.build_kwargs,
             )
-            tomb = reader.forward.select("doc_id")
-            if reader._tombstones is not None:
-                tomb = tomb.unionByName(reader._tombstones.select("doc_id"))
-            with stage(self.spark, "tombstones"):
-                tomb.distinct().write.mode("overwrite").parquet(
-                    os.path.join(gen_dir, "tombstones")
+            if built.n_docs + reader.tombstone_rows() <= index_store.DRIVER_BUILD_ROWS:
+                # as in commit_batch: the merged ids from the forward
+                # table just written, the reader's tombstones by pyarrow
+                _publish_tombstones(
+                    self.spark,
+                    [_read_ids(os.path.join(built.out_dir, "forward")),
+                     reader.tombstone_arrays()[0]],
+                    tomb_dir,
                 )
+            else:
+                tomb = reader.forward.select("doc_id")
+                if reader._tombstones is not None:
+                    tomb = tomb.unionByName(reader._tombstones.select("doc_id"))
+                with stage(self.spark, "tombstones"):
+                    tomb.distinct().write.mode("overwrite").parquet(tomb_dir)
         self._commit_merged(gen_dir, gens)
         return gen, gen_dir
 
@@ -586,7 +649,8 @@ class MultiGenIndex:
         ]
         self.gens = gens
         self.stores: dict[int, PersistentIndex] = {}
-        tomb_dirs = []
+        # (generation, tombstone dir) of every generation with tombstones
+        self._tomb_dirs: list[tuple[int, str]] = []
         for g in gens:
             gen_dir = os.path.join(root, _gen_name(g))
             if os.path.isdir(os.path.join(gen_dir, "store")):
@@ -595,32 +659,82 @@ class MultiGenIndex:
                 )
             tdir = os.path.join(gen_dir, "tombstones")
             if os.path.isdir(tdir):
-                tomb_dirs.append(tdir)
+                self._tomb_dirs.append((g, tdir))
         if not self.stores:
             raise ValueError(f"no committed generations with data under {root}")
-        # a file's generation is the gen dir right below the store root,
-        # matched in the URI form Spark reports (scheme, percent-escapes),
-        # so a directory above the root named like a generation is no match
-        root_path = spark._jvm.org.apache.hadoop.fs.Path(
-            os.path.abspath(root)
-        ).toUri().getRawPath()
-        self._gen_pattern = (
-            r"^[^/]*(?://[^/]*)?" + re.escape(root_path.rstrip("/"))
-            + "/" + _GEN_PREFIX + r"(\d+)/"
-        )
         first = self.stores[min(self.stores)]
         self.k1 = first.k1
         self.b = first.b
         self.similarity = first.similarity
         self.facet_fields = dict(first.facet_fields)
-        self._tombstones = None
-        if tomb_dirs:
-            self._tombstones = self._tag(
-                _read_tombstones(spark, tomb_dirs), "_tomb_gen"
-            )
+        # the Spark relations (tombstones, table scans, the forward
+        # table) and the file-path pattern they are tagged with are made
+        # on first use: a reader answered on the driver makes none
+        self._gen_pattern_memo: str | None = None
+        self._tomb_frame: DataFrame | None = None
+        self._tomb_arrays: tuple[np.ndarray, np.ndarray] | None = None
         self.n_docs = sum(s.n_docs for s in self.stores.values())
         self._scans: dict[str, DataFrame] = {}
         self._forward: DataFrame | None = None
+
+    @property
+    def _gen_pattern(self) -> str:
+        """The regex that takes a file's generation from its path: the gen
+        dir right below the store root, matched in the URI form Spark
+        reports (scheme, percent-escapes), so a directory above the root
+        named like a generation is no match."""
+        if self._gen_pattern_memo is None:
+            root_path = self.spark._jvm.org.apache.hadoop.fs.Path(
+                os.path.abspath(self.root)
+            ).toUri().getRawPath()
+            self._gen_pattern_memo = (
+                r"^[^/]*(?://[^/]*)?" + re.escape(root_path.rstrip("/"))
+                + "/" + _GEN_PREFIX + r"(\d+)/"
+            )
+        return self._gen_pattern_memo
+
+    @property
+    def _tombstones(self) -> DataFrame | None:
+        """(doc_id, _tomb_gen) of every tombstone, one Spark relation over
+        the generations' tombstone dirs; None without tombstones."""
+        if self._tomb_frame is None and self._tomb_dirs:
+            self._tomb_frame = self._tag(
+                _read_tombstones(self.spark, [d for _, d in self._tomb_dirs]),
+                "_tomb_gen",
+            )
+        return self._tomb_frame
+
+    def tombstone_rows(self) -> int:
+        """The tombstone row count, from the parquet footers."""
+        return sum(parquet_rows(d) for _, d in self._tomb_dirs)
+
+    def tombstone_arrays(self) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, gens): every tombstoned doc id, ascending and unique, and
+        the newest generation that tombstones it, read with pyarrow (no
+        Spark job). A row of generation g is live unless its id is here
+        with a gen > g. The caller bounds the read by tombstone_rows()."""
+        if self._tomb_arrays is None:
+            ids, gens = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+            for g, d in self._tomb_dirs:
+                ids.append(_read_ids(d))
+                gens.append(np.full(len(ids[-1]), g, np.int64))
+            ids, gens = np.concatenate(ids), np.concatenate(gens)
+            # newest generation last, so each id's last row holds its max
+            order = np.lexsort((gens, ids))
+            ids, gens = ids[order], gens[order]
+            last = np.ones(len(ids), bool)
+            last[:-1] = ids[1:] != ids[:-1]
+            self._tomb_arrays = (ids[last], gens[last])
+        return self._tomb_arrays
+
+    def live_mask(self, doc_ids: np.ndarray, gen: int) -> np.ndarray:
+        """Which of ``doc_ids``, rows of generation ``gen``, are live:
+        no tombstone of a later generation holds them."""
+        ids, gens = self.tombstone_arrays()
+        if not len(ids):
+            return np.ones(len(doc_ids), bool)
+        i = np.minimum(np.searchsorted(ids, doc_ids), len(ids) - 1)
+        return (ids[i] != doc_ids) | (gens[i] <= gen)
 
     @property
     def forward(self) -> DataFrame:
@@ -642,13 +756,7 @@ class MultiGenIndex:
     def _read(self, table: str, dirs: list[str]) -> DataFrame:
         """One tagged relation over ``dirs`` of ``table``, with the union
         of the generations' recorded columns."""
-        fields: dict = {}
-        for s in self.stores.values():
-            for f in StructType.fromJson(s.meta["schemas"][table]).fields:
-                fields.setdefault(f.name, f)
-        return self._tag(
-            _read_dirs(self.spark, StructType(list(fields.values())), dirs)
-        )
+        return self._tag(_read_dirs(self.spark, StructType(self._fields(table)), dirs))
 
     def _scan(self, table: str) -> DataFrame:
         """``table`` over every generation with data. Postings are read
@@ -772,7 +880,7 @@ class MultiGenIndex:
                     return int(d["n"])
             except (ValueError, KeyError):
                 pass
-        n = self.n_docs if self._tombstones is None else self.forward.count()
+        n = self.n_docs if not self._tomb_dirs else self.forward.count()
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"gens": sig, "n": int(n)}, f)
@@ -786,6 +894,70 @@ class MultiGenIndex:
         return sorted(names)
 
     # ------------------------------------------------------- merge feeds
+    def merge_rows(self, bound: int) -> tuple[pa.Table, pa.Table, pa.Table] | None:
+        """The merge feed read with pyarrow, with no Spark job: the live
+        occurrence, field-length and forward rows, typed as
+        store._collect_build_rows collects them from live_occurrences(),
+        live_lengths() and forward. None when they could number more
+        than ``bound`` (counted from the generations' metadata before
+        any read: an occurrence per token, a length row per field and
+        doc, a forward row per doc), or when a forward column is not of
+        a plain type."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        n = self.tombstone_rows()
+        for s in self.stores.values():
+            n += s.n_docs + sum(st.sum_dl + st.n_docs for st in s.stats.values())
+        fwd_fields = self._fields("forward")
+        if n > bound or not all(
+            isinstance(f.dataType, PLAIN_TYPES) for f in fwd_fields
+        ):
+            return None
+        fwd_schema = to_arrow_schema(StructType([StructField(f.name, f.dataType) for f in fwd_fields]))
+        len_schema = to_arrow_schema(StructType([
+            StructField(f.name, f.dataType)
+            for f in self._fields("field_lengths")
+            if f.name in ("field", "doc_id", "dl", "norm_dl")
+        ]))
+        occ, lens, fwd = [], [], []
+        for gen, s in sorted(self.stores.items()):
+            t = pq.read_table(s.table_files("forward"))
+            t = t.filter(pa.array(self.live_mask(_ids(t), gen)))
+            fwd.append(pa.table([
+                t.column(f.name).cast(f.type) if f.name in t.column_names
+                else pa.nulls(t.num_rows, f.type)
+                for f in fwd_schema
+            ], schema=fwd_schema))
+            t = pq.read_table(s.table_files("field_lengths"), columns=len_schema.names)
+            lens.append(t.filter(pa.array(self.live_mask(_ids(t), gen))).cast(len_schema))
+            shards = sorted(
+                e for e in os.listdir(os.path.join(s.out_dir, "postings"))
+                if e.startswith("shard=")
+            )
+            files = [f for e in shards for f in s.table_files(f"postings/{e}")]
+            if files:
+                occ.append(_live_occurrence_rows(
+                    pq.read_table(files, columns=["field", "term", "doc_ids", "dls", "positions"]),
+                    lambda docs, g=gen: self.live_mask(docs, g),
+                ))
+        occ = pa.concat_tables(occ) if occ else _OCC_SCHEMA.empty_table()
+        pairs = occ.select(["field", "term"]).group_by(["field", "term"]).aggregate([])
+        pairs = pairs.append_column(
+            "_h", pa.array(index_store.term_hashes(self.spark, pairs), pa.int64())
+        )
+        occ = occ.join(pairs, ["field", "term"]).select(
+            ["field", "term", "doc_id", "pos", "_dl", "_h"]
+        )
+        return occ, pa.concat_tables(lens), pa.concat_tables(fwd)
+
+    def _fields(self, table: str) -> list:
+        """The union of the generations' recorded columns of ``table``."""
+        fields: dict = {}
+        for s in self.stores.values():
+            for f in StructType.fromJson(s.meta["schemas"][table]).fields:
+                fields.setdefault(f.name, f)
+        return list(fields.values())
+
     def live_occurrences(self) -> DataFrame:
         """(field, term, doc_id, _dl, pos) of every LIVE posting —
         decoded from one scan of every generation's blocks, never

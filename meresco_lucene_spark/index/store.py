@@ -65,6 +65,14 @@ query never reads: a term or boolean query does not scan ``positions``.
 filter, and ``term_dfs(field, terms)`` serves their df from the
 handle's term dictionary without a Spark job, so a TermQuery reads only
 its term's shard files and scores with the dictionary's df.
+
+The same two facts let ``search()`` skip Spark altogether for a
+selective query (query/driver.py): the terms' summed df bounds its
+postings read before it starts, and ``term_files(field, terms)`` lists
+the files of the terms' shards (once per handle), which the driver reads
+with pyarrow, filtered by field and term. The forward table is read the
+same way, bounded by the doc count, for facets, sort keys, dedup and a
+page's stored fields.
 """
 
 from __future__ import annotations
@@ -73,6 +81,7 @@ import json
 import math
 import os
 import uuid
+import weakref
 
 import numpy as np
 import pyarrow as pa
@@ -82,7 +91,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from meresco_lucene_spark.columns import qcol
+from meresco_lucene_spark.columns import qcol, sql_literal
 from meresco_lucene_spark.index import wand
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
@@ -123,6 +132,24 @@ SMALL_BUILD_OCC = 2_000_000
 # at 929k. Over the bound a build pays for the failed collect (2.7 s
 # more at 1.24M), so the bound sits below the crossover, not at it.
 DRIVER_BUILD_ROWS = 1_000_000
+
+# A search() whose terms' summed df is at most this — and the doc count
+# too, when it reads the forward table (facets, sort keys, dedup,
+# stored fields, match-all), and a multi-generation reader's tombstone
+# count — is answered on the driver with pyarrow and numpy, no Spark job
+# (query/driver.py); -1 sends every search to Spark. Measured on a
+# 4-core host, local[2], medians of 7 warm repeats, Spark route against
+# driver route: on a 300k-doc store, a term of df 3k in 273 ms against
+# 26 ms, df 100k 274 against 49, df 300k 289 against 76, an OR of 400k
+# postings 694 against 123 and a df-300k term with a facet 802 against
+# 126; on a 1M-doc store, df 10k 292 against 54, df 333k 328 against
+# 124, df 1M 504 against 267, an OR of 1.33M postings 1281 against 384
+# and a df-1M term with a facet 1781 against 516, the driver process
+# growing by under 50 MB for the search. The crossover lies above 1.3M
+# postings; the bound sits below it, as DRIVER_BUILD_ROWS does, because
+# the route runs on the caller's thread and holds the postings in
+# driver memory.
+DRIVER_QUERY_POSTINGS = 1_000_000
 
 
 # ------------------------------------------------------ block format
@@ -356,6 +383,24 @@ def publish_parquet(tbl: pa.Table, table_dir: str, **write_options) -> None:
     os.replace(tmp, os.path.join(table_dir, f"part-{token}.parquet"))
 
 
+def parquet_files(table_dir: str) -> list[str]:
+    """The data files of a parquet dir, written by Spark or by
+    publish_parquet, skipping hidden (``.``) and marker (``_``) names as
+    Spark's reader does; none when the dir does not exist."""
+    if not os.path.isdir(table_dir):
+        return []
+    return [
+        os.path.join(table_dir, e)
+        for e in sorted(os.listdir(table_dir))
+        if not e.startswith((".", "_"))
+    ]
+
+
+def parquet_rows(table_dir: str) -> int:
+    """The row count of a parquet dir, from its files' footers."""
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(table_dir))
+
+
 def write_lineage_rows(rows: list[tuple], lin_dir: str) -> None:
     """Append a handful of driver-held lineage rows as one parquet file
     (a 32-row write cost a full job round-trip of pure overhead —
@@ -556,12 +601,11 @@ def _collect_build_rows(
     shard mapping starts from, so the driver places terms exactly as
     the JVM would for any n_shards. The forward rows ride as one struct
     column."""
-    occ = occurrences.select(
-        F.lit(0).alias("_kind"), "field", "term", "doc_id", "pos",
-        F.col("_dl").cast("int").alias("_dl"),
-        F.xxhash64("field", "term").alias("_h"),
+    occ = occurrences.selectExpr(
+        "0 AS _kind", "field", "term", "doc_id", "pos",
+        "CAST(_dl AS INT) AS _dl", "xxhash64(field, term) AS _h",
     )
-    lens = lengths.select(F.lit(1).alias("_kind"), "field", "doc_id", "dl", "norm_dl")
+    lens = lengths.selectExpr("1 AS _kind", "field", "doc_id", "dl", "norm_dl")
     # nullable struct fields: the struct is null on the other rows
     fwd_type = StructType([StructField(f.name, f.dataType) for f in forward.schema])
     fwd = forward.select(
@@ -586,6 +630,21 @@ def _collect_build_rows(
         part(0, ["field", "term", "doc_id", "pos", "_dl", "_h"]),
         part(1, ["field", "doc_id", "dl", "norm_dl"]),
         pa.Table.from_struct_array(part(2, ["_fwd"]).column("_fwd")),
+    )
+
+
+def term_hashes(spark: SparkSession, pairs: pa.Table) -> np.ndarray:
+    """``xxhash64(field, term)`` of each row of ``pairs`` (columns field
+    and term), the hash every shard mapping starts from, computed by
+    Spark's own function over a local relation: the optimizer folds the
+    hash into the relation, so collecting it runs no job."""
+    if pairs.num_rows == 0:
+        return np.empty(0, np.int64)
+    frame = spark.createDataFrame(
+        pairs.select(["field", "term"]), "field string, term string"
+    )
+    return np.array(
+        [r[0] for r in frame.select(F.xxhash64("field", "term")).collect()], np.int64
     )
 
 
@@ -676,6 +735,7 @@ def build_index_store(
     occurrences: DataFrame | None = None,
     lengths: DataFrame | None = None,
     lineage: bool = True,
+    collected: tuple[pa.Table, pa.Table, pa.Table] | None = None,
 ) -> "PersistentIndex":
     """Build the persistent store: the four tables and meta.json. One
     build = one commit = one durable, fully queryable snapshot.
@@ -713,6 +773,11 @@ def build_index_store(
     lengths: field, doc_id, dl, norm_dl) — the generation-merge path
     re-encodes decoded postings WITHOUT re-tokenizing (Lucene's merge
     copies postings, it never re-analyzes: index/incremental.py).
+
+    ``collected``: the occurrence, length and forward rows of a
+    ``lineage=False`` build as the driver route's collect would give
+    them, when the caller read them itself (the merge feed of
+    MultiGenIndex.merge_rows); the build then runs no Spark job.
 
     ``lineage=False`` marks a build that is wiped on crash rather than
     resumed: it writes no shard lineage (a full re-read + hash + write
@@ -775,10 +840,12 @@ def build_index_store(
     }
     with stage(spark, "build"):
         if not lineage:
-            with stage(spark, "collect"):
-                rows = _collect_build_rows(
-                    occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
-                )
+            rows = collected
+            if rows is None:
+                with stage(spark, "collect"):
+                    rows = _collect_build_rows(
+                        occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
+                    )
             if rows is not None:
                 _build_on_driver(
                     spark, out_dir, *rows,
@@ -1269,7 +1336,9 @@ def decode_block_frame(
     quantized, raw dl otherwise), so scoring needs no lengths join.
 
     A plain JVM projection: ``posexplode`` the doc ids, then index the
-    parallel ``tfs``/``dls``/``positions`` lists at the same offset.
+    parallel ``tfs``/``dls``/``positions`` lists at the same offset,
+    written as two SQL projections: fewer py4j round trips than
+    building each Column in Python.
     Caller filters on ``term`` push below it into the parquet scan, and
     Catalyst drops every list column the query never reads (a term or
     boolean query scans no positions). ``fld`` None keeps the blocks'
@@ -1277,20 +1346,19 @@ def decode_block_frame(
     block columns carried onto each posting (the multi-generation
     reader's ``_gen`` tag)."""
     pt = list(passthrough)
-    i = F.col("_i")
-    cols = [
-        F.col("field") if fld is None else F.lit(fld).alias("field"),
+    field = "field" if fld is None else f"{sql_literal(fld)} AS field"
+    return blocks.selectExpr(
+        "field", "term", *pt, "tfs", "dls", "positions",
+        "posexplode(doc_ids) AS (_i, doc_id)",
+    ).selectExpr(
+        field,
         "term",
         *pt,
         "doc_id",
-        F.col("tfs")[i].cast("long").alias("tf"),
-        F.col("dls")[i].cast("long").alias("_bdl"),
-        F.col("positions")[i].alias("positions"),
-    ]
-    return blocks.select(
-        "field", "term", *pt, "tfs", "dls", "positions",
-        F.posexplode("doc_ids").alias("_i", "doc_id"),
-    ).select(*cols)
+        "CAST(tfs[_i] AS BIGINT) AS tf",
+        "CAST(dls[_i] AS BIGINT) AS _bdl",
+        "positions[_i] AS positions",
+    )
 
 
 # Session-scoped HANDLE cache (not a result cache): opening a store costs
@@ -1307,6 +1375,19 @@ _PINDEX_CACHE: dict[tuple, "PersistentIndex"] = {}
 _PINDEX_CACHE_CAP = 64
 
 
+_APP_IDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _application_id(spark: SparkSession) -> str:
+    """The Spark application's id, asked of the JVM once per context (a
+    py4j round trip per store opened otherwise)."""
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    return app
+
+
 def open_persistent_index(spark: SparkSession, out_dir: str) -> "PersistentIndex":
     out_dir = os.path.abspath(out_dir)
     try:
@@ -1317,7 +1398,7 @@ def open_persistent_index(spark: SparkSession, out_dir: str) -> "PersistentIndex
         return PersistentIndex(spark, out_dir)
     if "snapshot" not in meta:
         return PersistentIndex(spark, out_dir, meta)
-    key = (spark.sparkContext.applicationId, out_dir, meta["snapshot"])
+    key = (_application_id(spark), out_dir, meta["snapshot"])
     idx = _PINDEX_CACHE.get(key)
     if idx is None:
         while len(_PINDEX_CACHE) >= _PINDEX_CACHE_CAP:
@@ -1361,6 +1442,8 @@ class PersistentIndex:
         self._tables: dict[str, DataFrame] = {}
         # (field, term) -> (df, base_shard, n_salts) of present terms: see _term_meta
         self._meta_memo: dict[tuple[str, str], tuple] = {}
+        # table dir -> its parquet files: see table_files
+        self._files: dict[str, list[str]] = {}
 
     def _table(self, name: str) -> DataFrame:
         if name not in self._tables:
@@ -1460,6 +1543,21 @@ class PersistentIndex:
         ``(base_shard + s) % n_shards`` for s < n_salts."""
         n, meta = self.meta["n_shards"], self._term_meta(fld, terms)
         return sorted({(b + s) % n for _, b, salts in meta.values() for s in range(salts)})
+
+    def table_files(self, rel: str) -> list[str]:
+        """The parquet files of the store's dir ``rel`` (``forward``,
+        ``postings/shard=3``), listed once per handle: a snapshot's files
+        never change."""
+        if rel not in self._files:
+            self._files[rel] = parquet_files(os.path.join(self.out_dir, rel))
+        return self._files[rel]
+
+    def term_files(self, fld: str, terms: list[str]) -> list[str]:
+        """The postings files of the terms' shards (see term_shards)."""
+        return [
+            f for s in self.term_shards(fld, terms)
+            for f in self.table_files(f"postings/shard={s}")
+        ]
 
     def term_blocks(self, fld: str, terms: list[str]) -> DataFrame:
         """The raw blocks of ``terms`` in ``fld``, pruned to their shards

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meresco_lucene_spark.query.bm25 import bm25_score_expr, bm25_score_numpy
+from meresco_lucene_spark.query.executor import by_term_sql
 
 TOPK_SCHEMA = "doc_id long, score double"
 
@@ -99,23 +100,25 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 def scores_for_blocks(
     blocks: DataFrame, dfs: dict[str, int], params: WandParams
 ) -> DataFrame:
-    """Exact (doc_id, score) for every posting in the block frame; the
-    per-term df comes from the (broadcast-small) dfs dict, inlined as a
-    literal map."""
-    i = F.col("_i")
-    df_of = F.create_map(
-        *[c for t, d in dfs.items() for c in (F.lit(t), F.lit(float(d)))]
+    """Exact (doc_id, score) for every posting in the block frame. Each
+    term's df, and the field's n_docs and avgdl, are lookups by the
+    block's term projected below the score (executor._bm25_postings
+    explains why: numbers in the score would be code, compiled anew
+    for every query)."""
+    terms = list(dfs)
+    p = _exploded(blocks, "term", "tfs", "dls").selectExpr(
+        "doc_id",
+        "tfs[_i] AS _tf",
+        "dls[_i] AS _dl",
+        by_term_sql({t: float(dfs[t]) for t in terms}) + " AS _df",
+        by_term_sql({t: params.n_docs for t in terms}) + " AS _n",
+        by_term_sql({t: params.avgdl for t in terms}) + " AS _a",
     )
-    return _exploded(blocks, "term", "tfs", "dls").select(
+    return p.select(
         "doc_id",
         bm25_score_expr(
-            F.col("tfs")[i],
-            df_of[F.col("term")],
-            F.col("dls")[i],
-            params.n_docs,
-            params.avgdl,
-            params.k1,
-            params.b,
+            F.col("_tf"), F.col("_df"), F.col("_dl"), F.col("_n"), F.col("_a"),
+            params.k1, params.b,
         ).alias("score"),
     )
 
@@ -307,15 +310,17 @@ def or_topk(
     theta = doc_sums[k - 1] if len(doc_sums) >= k else -float("inf")
     total_max = sum(term_max.values())
 
-    surv = None
-    for t in terms:
-        bound_others = total_max - term_max[t]
-        c = (F.col("term") == t) & (
-            F.col("block_max_score") + F.lit(bound_others) >= F.lit(theta)
-        )
-        surv = c if surv is None else (surv | c)
+    # a block survives when its max plus the other terms' maxes reaches
+    # θ; both numbers come from one lookup by the block's term, so a new
+    # θ compiles no new class
+    surv = blocks
+    if len(doc_sums) >= k:
+        bound = by_term_sql({t: (total_max - term_max[t], theta) for t in terms})
+        surv = blocks.selectExpr("*", f"{bound} AS _w").filter(
+            "block_max_score + _w[0] >= _w[1]"
+        ).drop("_w")
     cand_pdf = (
-        decode_blocks(blocks.filter(surv))
+        decode_blocks(surv)
         .select("doc_id")
         .distinct()
         .limit(CANDIDATE_BROADCAST_CAP + 1)
@@ -326,7 +331,7 @@ def or_topk(
         cand_bc = spark.sparkContext.broadcast(cand_arr)
         scored = _candidate_scores(blocks, dfs, params, cand_bc)
     else:
-        candidates = decode_blocks(blocks.filter(surv)).select("doc_id").distinct()
+        candidates = decode_blocks(surv).select("doc_id").distinct()
         scored = scores_for_blocks(blocks, dfs, params).join(
             candidates, "doc_id", "left_semi"
         )

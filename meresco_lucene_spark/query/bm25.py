@@ -69,21 +69,22 @@ def quantize_dl(dl: np.ndarray) -> np.ndarray:
     return small_float_int4_decode(small_float_int4_encode(dl))
 
 
-def quantize_dl_expr(dl_col: Column) -> Column:
-    """JVM-twin of :func:`quantize_dl` (SmallFloat int4 round-trip) as a
-    pure Catalyst expression: bit length via length(bin(x)) is exact
-    (no floating log), so this matches the numpy version bit-for-bit.
+def quantize_dl_sql(dl: str) -> str:
+    """JVM-twin of :func:`quantize_dl` (SmallFloat int4 round-trip), as
+    the SQL text of an expression over the SQL expression ``dl``: bit
+    length via length(bin(x)) is exact (no floating log), so this
+    matches the numpy version bit-for-bit.
     quantized = ((dl >> shift) & 7 | 8) << shift, shift = bitlen - 4."""
-    # F.shiftleft/shiftright only take a literal shift — use call_function
-    # for the column-shift SQL variants.
-    shift = F.length(F.bin(dl_col)) - F.lit(4)
-    mantissa = (
-        F.call_function("shiftright", dl_col, shift)
-        .bitwiseAND(F.lit(7))
-        .bitwiseOR(F.lit(8))
+    shift = f"(length(bin({dl})) - 4)"
+    return (
+        f"CASE WHEN {dl} < 8 THEN {dl} "
+        f"ELSE shiftleft(((shiftright({dl}, {shift}) & 7) | 8), {shift}) END"
     )
-    high = F.call_function("shiftleft", mantissa, shift)
-    return F.when(dl_col < 8, dl_col).otherwise(high)
+
+
+def quantize_dl_expr(dl: str) -> Column:
+    """:func:`quantize_dl_sql` over the column named ``dl``."""
+    return F.expr(quantize_dl_sql(f"`{dl}`"))
 
 
 def idf_expr(df_col: Column, n_docs: Column | int) -> Column:
@@ -133,11 +134,20 @@ def bm25_score_numpy(
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
     boost: float = 1.0,
+    idf: np.ndarray | float | None = None,
 ) -> np.ndarray:
-    """Numpy twin of :func:`bm25_score_expr` for the block-max WAND path."""
-    idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+    """Numpy twin of :func:`bm25_score_expr`, in its operation order.
+
+    ``idf``: the terms' idf when the caller has it (the driver route of
+    query/driver.py takes it from the JVM's ``StrictMath.log``, which
+    Spark's ``log`` is; numpy's ``log`` differs from it in the last bit
+    for some arguments). ``b=0`` gives the omitted-norms form
+    ``tf / (tf + k1)`` bit for bit."""
+    if idf is None:
+        idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
     tfn = tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-    return boost * idf * tfn
+    score = idf * tfn
+    return score if boost == 1.0 else score * boost
 
 
 # ---------------------------------------------------------------------------
@@ -147,3 +157,8 @@ def bm25_score_numpy(
 
 def term_frequency_score_expr(tf_col: Column, boost: float = 1.0) -> Column:
     return F.least(tf_col.cast("double"), F.lit(1000.0)) / F.lit(1000.0) * F.lit(boost)
+
+
+def term_frequency_score_numpy(tf: np.ndarray, boost: float = 1.0) -> np.ndarray:
+    """Numpy twin of :func:`term_frequency_score_expr`."""
+    return np.minimum(tf, 1000.0) / 1000.0 * boost

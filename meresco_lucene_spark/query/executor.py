@@ -30,10 +30,25 @@ each recast as DataFrame ops:
 
 The per-slice SubCollector / complete() merge of the reference's
 SuperCollector framework (SuperCollector.java:38-53) is exactly Spark's
-partial aggregation; nothing imperative remains here — every function
-returns a lazy DataFrame and Catalyst does pushdown/broadcast/AQE.
-``search()`` runs one action for total + page, plus one for all facet
-dims when facets are requested.
+partial aggregation: the functions above ``search()`` return lazy
+DataFrames and Catalyst does pushdown/broadcast/AQE.
+
+``search()`` has two routes, chosen before any Spark work:
+
+  driver route  (query/driver.py) a term, boolean or phrase query (with
+                FILTER/MUST_NOT clauses, filter and exclude queries,
+                facets, sort keys, dedup and stored fields) whose
+                terms' summed df — and the doc count, when it reads the
+                forward table — fit ``store.DRIVER_QUERY_POSTINGS`` is
+                answered with pyarrow reads of the terms' shard files
+                and numpy BM25: no Spark job. Each term's idf is taken
+                from the JVM's ``StrictMath.log``, which Spark's ``log``
+                is, so a single-term score is bit-equal to this route's;
+  Spark route   everything else (prefix, wildcard, range, drilldown and
+                distance queries, key filters, ``score_adjust``, work
+                over the bound) runs one action for total + page,
+                tagged ``search:page``, plus one for all facet dims,
+                tagged ``search:facets``.
 
 ``index`` is a reader over an index store: a :class:`PersistentIndex`,
 or the multi-generation reader with the same interface
@@ -42,7 +57,6 @@ or the multi-generation reader with the same interface
 
 from __future__ import annotations
 
-import math
 import time
 from dataclasses import dataclass, field as dc_field, fields as dc_fields
 from typing import Any, Sequence
@@ -54,7 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from meresco_lucene_spark.columns import qcol
+from meresco_lucene_spark.columns import qcol, sql_literal
+from meresco_lucene_spark.query import driver
 
 if TYPE_CHECKING:  # avoid circular import (the store imports query.bm25)
     from meresco_lucene_spark.index.builder import FieldStats
@@ -66,6 +81,7 @@ from meresco_lucene_spark.query.bm25 import (
     term_frequency_score_expr,
 )
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
+from meresco_lucene_spark.session import stage
 
 # --------------------------------------------------------------------------- hits
 
@@ -170,9 +186,9 @@ def _bm25_postings(
     subexpressions by their hash, which a constant's value changes."""
     p = p.selectExpr(
         "*",
-        _by_term_sql({t: dfs.get(t, 0) for t in terms}) + " AS _df",
-        _by_term_sql({t: st.n_docs for t in terms}) + " AS _n",
-        _by_term_sql({t: st.avgdl for t in terms}) + " AS _a",
+        by_term_sql({t: dfs.get(t, 0) for t in terms}) + " AS _df",
+        by_term_sql({t: st.n_docs for t in terms}) + " AS _n",
+        by_term_sql({t: st.avgdl for t in terms}) + " AS _a",
     )
     tf, df, n = F.col("tf"), F.col("_df"), F.col("_n")
     if st.omit_norms:
@@ -196,28 +212,14 @@ def _by_term(values: dict[str, Any]) -> Column:
 
     The lookup is written as one SQL expression, one py4j call instead
     of about twenty for the Column-by-Column form; the map folds to the
-    same constant of the same types (see _sql_literal)."""
-    return F.expr(_by_term_sql(values))
+    same constant of the same types (see sql_literal)."""
+    return F.expr(by_term_sql(values))
 
 
-def _by_term_sql(values: dict[str, Any]) -> str:
+def by_term_sql(values: dict[str, Any]) -> str:
     """The SQL text of :func:`_by_term`."""
-    pairs = ", ".join(_sql_literal(x) for kv in values.items() for x in kv)
+    pairs = ", ".join(sql_literal(x) for kv in values.items() for x in kv)
     return f"element_at(map({pairs}), term)"
-
-
-def _sql_literal(value: str | int | float) -> str:
-    """``value`` as a SQL literal of the type ``F.lit`` gives it: a term
-    as the cast of its UTF-8 bytes (no quoting or escaping to get wrong),
-    an int as int or bigint by its range, a float as a double written in
-    its shortest round-trip form, so it parses back to the same bits."""
-    if isinstance(value, str):
-        return f"cast(X'{value.encode().hex()}' AS STRING)"
-    if isinstance(value, int) and not isinstance(value, bool):
-        return str(value)
-    if isinstance(value, float) and math.isfinite(value):
-        return f"{value!r}D"
-    raise TypeError(f"no SQL literal for {value!r}")
 
 
 def _multi_term_hits(
@@ -622,8 +624,10 @@ def search(
     match count; the returned page is hits[start:stop]. start defaults 0,
     stop 10 (_lucene.py:98-99).
 
-    One Spark action computes the total, the dedup totals and the page
-    (see ``collect_page``); requested facets add one more action for all
+    A request that fits the driver route (query/driver.py, see the
+    module docstring) is answered with no Spark job. Otherwise one Spark
+    action computes the total, the dedup totals and the page (see
+    ``collect_page``); requested facets add one more action for all
     their dims together (``drilldown_data``). Nothing is persisted; the
     totals run as a job of their own only for an empty page
     (stop <= start).
@@ -635,6 +639,28 @@ def search(
     for the whole call, ``times["searchTime"]`` for the page action and,
     with facets, ``times["facetTime"]`` for the facet action."""
     t_query = time.perf_counter()
+    if not key_filters and score_adjust is None:
+        found = driver.search(
+            index, query, filter_queries, exclude_queries, start, stop, sort_keys,
+            facets, dedup_field, dedup_sort_fields, stored_fields, t_query,
+        )
+        if found is not None:
+            return found
+    with stage(index.spark, "search"):
+        return _spark_search(
+            index, query, filter_queries, exclude_queries, key_filters, start, stop,
+            sort_keys, facets, dedup_field, dedup_sort_fields, stored_fields,
+            score_adjust, t_query,
+        )
+
+
+def _spark_search(
+    index, query, filter_queries, exclude_queries, key_filters, start, stop,
+    sort_keys, facets, dedup_field, dedup_sort_fields, stored_fields,
+    score_adjust, t_query,
+) -> LuceneResponse:
+    """search() on the Spark route; its jobs are tagged by operator
+    (``search:facets``, ``search:page``)."""
     h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters)
     if score_adjust is not None:
         h = score_adjust(h)
@@ -642,7 +668,8 @@ def search(
     # facets see all (pre-dedup) hits, like FacetSuperCollector, and need
     # only their doc ids: counted before the stored/sort-field join
     t_facet = time.perf_counter()
-    drilldown = drilldown_data(index, h, facets)
+    with stage(index.spark, "facets"):
+        drilldown = drilldown_data(index, h, facets)
     facet_ms = _ms_since(t_facet)
 
     needed = set(stored_fields)
@@ -692,7 +719,8 @@ def search(
 
     dupes = ["duplicateCount"] if dedup_field else []
     t_page = time.perf_counter()
-    totals, rows = collect_page(h, sort_exprs(sort_keys), start, stop, dupes)
+    with stage(index.spark, "page"):
+        totals, rows = collect_page(h, sort_exprs(sort_keys), start, stop, dupes)
     times = {"searchTime": _ms_since(t_page)}
     if facets:
         times["facetTime"] = facet_ms

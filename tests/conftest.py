@@ -33,3 +33,28 @@ def build_store(tmp_path_factory):
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
+
+
+@pytest.fixture()
+def spark_route(monkeypatch):
+    """Send every search() to the Spark route (a driver-route bound no
+    query fits)."""
+    from meresco_lucene_spark.index import store
+
+    monkeypatch.setattr(store, "DRIVER_QUERY_POSTINGS", -1)
+
+
+@pytest.fixture()
+def each_route(monkeypatch):
+    """``for route in each_route(): ...`` runs the loop body once per
+    route of search(): "driver" under the module's bound, then "spark"
+    with the Spark route forced."""
+    from meresco_lucene_spark.index import store
+
+    def routes():
+        for name, bound in (("driver", store.DRIVER_QUERY_POSTINGS), ("spark", -1)):
+            with monkeypatch.context() as m:
+                m.setattr(store, "DRIVER_QUERY_POSTINGS", bound)
+                yield name
+
+    return routes

@@ -163,7 +163,7 @@ MULTIGEN_OPEN_TERM_JOBS = 2
 ADD_DELETE_COMMIT_JOBS = 1
 
 
-def test_multigen_term_query_job_count(spark, indexes, no_handle_caches):
+def test_multigen_term_query_job_count(spark, indexes, no_handle_caches, spark_route):
     multi = indexes["multigen"]
     q = Q.term("text", "spark")
     search(multi, q)  # warm
@@ -257,20 +257,22 @@ def _recomputed(versions, terms):
     return scores, langs
 
 
-# Spark jobs of a LuceneCore executeQuery on a freshly opened reader
-# (4 cores, 4 shuffle partitions). Before one scan per table per query,
+# Spark jobs of a LuceneCore executeQuery on a freshly opened reader on
+# the Spark route (4 cores, 4 shuffle partitions). Before one scan per table per query,
 # at 2 / 4 / 6 generations: the OR 4 / 7 / 9 and the term query with a
 # lang facet 9 / 15 / 25. After, at every generation count: the OR is
 # the tombstone broadcast, the per-doc score sum's shuffle, the forward
 # broadcast of the identifier join and the page collect; the facet query
 # is the drilldown (tombstone and hit-set broadcasts, two shuffles, the
 # collect) and the page (tombstone and forward broadcasts, the collect).
+# On the driver route both run no job at any generation count.
 MULTIGEN_OR_JOBS = 4
 MULTIGEN_FACET_JOBS = 8
+MULTIGEN_DRIVER_JOBS = 0
 
 
 @pytest.mark.parametrize("n_gens", [2, 6])
-def test_multigen_query_jobs_do_not_grow_with_generations(spark, tmp_path, n_gens):
+def test_multigen_query_jobs_do_not_grow_with_generations(spark, tmp_path, n_gens, each_route):
     core, versions = _core_with_gens(spark, str(tmp_path), n_gens)
     live = [v for v in versions if v[3]]
     terms = ["rare", "table", "upserted1"]
@@ -279,18 +281,21 @@ def test_multigen_query_jobs_do_not_grow_with_generations(spark, tmp_path, n_gen
         (Q.term("text", "spark"), ["spark"],
          [{"fieldname": "lang", "maxTerms": 10}], MULTIGEN_FACET_JOBS),
     ]
-    for q, qterms, facets, pinned in cases:
-        core._reader = None  # a fresh snapshot, as after a commit
-        j0 = _jobs(spark)
-        resp = core.executeQuery(q, stop=1000, facets=facets)
-        assert _jobs(spark) - j0 == pinned, (n_gens, q.to_dict())
-        want, langs = _recomputed(versions, qterms)
-        assert resp.total == len(want) and len(want) > 0
-        got = {h.id: h.score for h in resp.hits}
-        assert got.keys() == want.keys()
-        for d, sc in want.items():
-            assert got[d] == pytest.approx(sc, rel=1e-12), d
-        if facets:
-            counts = {t["term"]: t["count"] for t in resp.drilldownData[0]["terms"]}
-            assert counts == dict(langs)
+    for route in each_route():
+        for q, qterms, facets, pinned in cases:
+            core._reader = None  # a fresh snapshot, as after a commit
+            j0 = _jobs(spark)
+            resp = core.executeQuery(q, stop=1000, facets=facets)
+            if route == "driver":
+                pinned = MULTIGEN_DRIVER_JOBS
+            assert _jobs(spark) - j0 == pinned, (route, n_gens, q.to_dict())
+            want, langs = _recomputed(versions, qterms)
+            assert resp.total == len(want) and len(want) > 0
+            got = {h.id: h.score for h in resp.hits}
+            assert got.keys() == want.keys()
+            for d, sc in want.items():
+                assert got[d] == pytest.approx(sc, rel=1e-12), (route, d)
+            if facets:
+                counts = {t["term"]: t["count"] for t in resp.drilldownData[0]["terms"]}
+                assert counts == dict(langs)
     assert len(live) < len(versions)

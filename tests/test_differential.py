@@ -1,7 +1,7 @@
 """Differential test: random (seeded) boolean queries over a random
 corpus, engine results vs a pure-Python BM25 evaluator — guards the
 boolean combiner (MUST/SHOULD/MUST_NOT/FILTER sums and gates) far beyond
-the handwritten fixtures."""
+the handwritten fixtures, on both routes of ``search()``."""
 
 import math
 import random
@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from meresco_lucene_spark.analysis.tokenizer import tokenize_text
-from meresco_lucene_spark.query.executor import hits
+from meresco_lucene_spark.query.executor import hits, search
 from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
@@ -121,13 +121,18 @@ def diff_idx(spark, tmp_path_factory, build_store):
 
 @pytest.mark.parametrize("path", ["mem", "disk"])
 @pytest.mark.parametrize("seed", range(12))
-def test_random_boolean_queries(diff_idx, seed, path):
+def test_random_boolean_queries(diff_idx, seed, path, each_route):
+    """The hit frame and ``search()`` on each of its routes agree with
+    the evaluator."""
     indexes, py = diff_idx
     ix = indexes[path]
     rng = random.Random(1000 + seed)
     q = _random_query(rng)
-    got = {r["doc_id"]: r["score"] for r in hits(ix, q).collect()}
     expect = py.evaluate(q)
-    assert set(got) == set(expect), f"doc set mismatch for {q.to_dict()}"
-    for d in expect:
-        assert abs(got[d] - expect[d]) < 1e-9, f"score mismatch doc {d} for {q.to_dict()}"
+    answers = [{r["doc_id"]: r["score"] for r in hits(ix, q).collect()}]
+    for _ in each_route():
+        answers.append({h.id: h.score for h in search(ix, q, stop=N_DOCS).hits})
+    for got in answers:
+        assert set(got) == set(expect), f"doc set mismatch for {q.to_dict()}"
+        for d in expect:
+            assert abs(got[d] - expect[d]) < 1e-9, f"score mismatch doc {d} for {q.to_dict()}"

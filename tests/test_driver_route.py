@@ -7,7 +7,8 @@ with the same ``_encode`` as the distributed route and writes the
 tables with pyarrow. Both routes build the same store, the bound
 decides the route, every driver-written table reads back under its
 recorded schema, a commit killed between two table writes leaves the
-previous snapshot, and every job of a commit carries a stage tag."""
+previous snapshot, merges write their tombstones on the driver, and
+every job of a commit carries a stage tag."""
 
 import datetime
 import decimal
@@ -219,6 +220,45 @@ def test_commit_killed_between_table_writes(spark, tmp_path, monkeypatch):
     after = _answers(inc.open())
     assert after["new"][0] == 20 and after["all"][0] == 39
     assert sorted(os.listdir(root)) == ["_config.json", "gen-000000", "gen-000001"]
+
+
+def _tombstone_ids(gen_dir):
+    return sorted(pq.read_table(os.path.join(gen_dir, "tombstones")).column("doc_id").to_pylist())
+
+
+def test_merges_write_tombstones_on_the_driver(spark, tmp_path, monkeypatch):
+    """A partial merge that fits the driver route runs no Spark job: its
+    feed (the suffix's live postings, lengths and forward rows) and its
+    tombstones (the suffix's live ids and its tombstones) are read and
+    written with pyarrow. A fold of delete-only generations runs no job
+    either. Both give the same merged store, tombstones and answers as
+    the distributed route with Spark-written tombstones."""
+    merged = {}
+    for route, bound in (("driver", store_mod.DRIVER_BUILD_ROWS), ("dist", 0)):
+        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", bound)
+        root = tmp_path / route
+        inc = IncrementalIndexStore(spark, str(root), n_shards=2, **CFG)
+        inc.commit_batch(_batch(spark, 0, 30))
+        inc.commit_batch(_batch(spark, 20, 26, tag=" upserted"), delete_ids=[3])
+        inc.commit_batch(_batch(spark, 40, 45, tag=" new"), delete_ids=[21, 5])
+        j0 = _jobs(spark)
+        gen = inc.partial_merge(1)
+        tags = _job_descriptions(spark, j0)
+        if route == "driver":
+            assert tags == [], tags
+        gen_dir = str(root / f"gen-{gen:06d}")
+        store = _store_logical_content(spark, os.path.join(gen_dir, "store"))
+        tombs = _tombstone_ids(gen_dir)
+        assert tombs == sorted({3, 5, 21} | set(range(20, 26)) | set(range(40, 45)))
+        d1, d2 = inc.delete([7]), inc.delete([8, 9])
+        j0 = _jobs(spark)
+        folded = inc._fold_tombstone_gens([d1, d2])
+        if route == "driver":
+            assert _jobs(spark) == j0
+        folded_tombs = _tombstone_ids(str(root / f"gen-{folded:06d}"))
+        assert folded_tombs == [7, 8, 9]
+        merged[route] = (store, tombs, folded_tombs, _answers(inc.open()))
+    assert merged["driver"] == merged["dist"]
 
 
 @pytest.mark.parametrize("route", ["driver", "distributed"])

@@ -682,11 +682,11 @@ def test_generation_tag_and_merge_feeds_under_a_gen_named_dir(spark, tmp_path):
     assert reader.field_stats("text").n_docs == len(live)
 
 
-def test_wide_scan_adds_no_listing_job(spark, tmp_path):
-    """A term query whose one postings scan spans more leaf dirs than
-    Spark's parallel-listing threshold lists them on the driver: it runs
-    as many jobs as a one-dir query, and the threshold is left as it
-    was."""
+def test_wide_scan_adds_no_listing_job(spark, tmp_path, spark_route):
+    """A Spark-route term query whose one postings scan spans more leaf
+    dirs than Spark's parallel-listing threshold lists them on the
+    driver: it runs as many jobs as a one-dir query, and the threshold
+    is left as it was."""
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     inc = IncrementalIndexStore(spark, str(tmp_path / "inc"), text_cols=["text"], n_shards=8)
     for g in range(5):

@@ -1,11 +1,13 @@
-"""``search()`` answers in one Spark action (plus one for facets).
+"""``search()`` answers on the driver with no Spark job when the query
+fits the driver route, else in one Spark action (plus one for facets).
 
-The total, the pre-dedup total and the page ride one observed collect;
-all facet dims share one aggregation. These tests pin the edge cases of
-that collect (an empty page runs only the totals), the facet helper
-against a per-dim recount, the Spark job counts of a search, the Java
-classes and py4j commands a warm search costs, and the response's
-timings."""
+On the Spark route the total, the pre-dedup total and the page ride one
+observed collect, and all facet dims share one aggregation. These tests
+run the edge cases of a search (an empty page still counts its totals)
+and the facet helper against a per-dim recount on both routes, and pin
+the Spark jobs of a search on each route, the stage tags of the Spark
+route's jobs, the Java classes and py4j commands a warm Spark-route
+search costs, and the response's timings."""
 
 import json
 from collections import Counter
@@ -14,6 +16,7 @@ import pandas as pd
 import pytest
 
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
+from meresco_lucene_spark.index import store as store_mod
 from meresco_lucene_spark.index.store import build_index_store
 from meresco_lucene_spark.query.executor import (
     LuceneResponse,
@@ -22,6 +25,7 @@ from meresco_lucene_spark.query.executor import (
     hits,
     search,
 )
+from meresco_lucene_spark.query import driver
 from meresco_lucene_spark.query.ir import MUST_NOT, SHOULD, Q
 from meresco_lucene_spark.session import session_defaults
 
@@ -79,9 +83,14 @@ def indexes(spark, tmp_path_factory):
     return {"store": store, "multigen": multi}
 
 
-@pytest.fixture(params=["store", "multigen"])
+@pytest.fixture(params=["store", "multigen", "store_spark_route", "multigen_spark_route"])
 def ix(request, indexes):
-    return indexes[request.param]
+    """Each reader, searched on its default route (the driver route, for
+    these small readers) and on the Spark route forced."""
+    reader, _, route = request.param.partition("_")
+    if route:
+        request.getfixturevalue("spark_route")
+    return indexes[reader]
 
 
 def _jobs(spark):
@@ -203,20 +212,23 @@ def test_drilldown_data_matches_per_dim_recount(ix):
 
 
 def test_facet_path_deeper_than_dim_raises(ix):
+    facet = {"fieldname": "lang", "path": ["py"]}
     with pytest.raises(ValueError, match="deeper than dim"):
-        drilldown_data(ix, hits(ix, Q.matchall()), [{"fieldname": "lang", "path": ["py"]}])
+        drilldown_data(ix, hits(ix, Q.matchall()), [facet])
+    with pytest.raises(ValueError, match="deeper than dim"):
+        search(ix, Q.term("text", "spark"), facets=[facet])
 
 
-# Spark jobs of one search() on the one-generation store, measured with
-# df read from the store's term dictionary (4 cores, 4 shuffle
-# partitions; with the term_stats broadcast join before it: 2, 7 and 5
-# for term, facets and dedup, 3 for a fused boolean and 5 for a phrase).
-# Under adaptive execution every shuffle stage and broadcast is a job of
-# its own: a term query is the observed page collect alone (df comes
-# from the store's term dictionary, no job); a fused AND/OR and a phrase
-# add the doc_id groupBy's shuffle stage; the facet action (semi-join,
-# groupBy, per-dim top-n window) and dedup's window add their shuffle
-# stages.
+# Spark jobs of one search() on the one-generation store on the Spark
+# route, measured with df read from the store's term dictionary (4
+# cores, 4 shuffle partitions; with the term_stats broadcast join before
+# it: 2, 7 and 5 for term, facets and dedup, 3 for a fused boolean and 5
+# for a phrase). Under adaptive execution every shuffle stage and
+# broadcast is a job of its own: a term query is the observed page
+# collect alone (df comes from the store's term dictionary, no job); a
+# fused AND/OR and a phrase add the doc_id groupBy's shuffle stage; the
+# facet action (semi-join, groupBy, per-dim top-n window) and dedup's
+# window add their shuffle stages.
 TERM_JOBS = 1
 FUSED_BOOL_JOBS = 2
 PHRASE_JOBS = 2
@@ -224,7 +236,7 @@ FACET_2DIM_JOBS = 5
 DEDUP_JOBS = 4
 
 
-def test_search_job_counts(spark, indexes):
+def test_search_job_counts(spark, indexes, spark_route):
     ix = indexes["store"]
     term = Q.term("text", "spark")
     calls = {
@@ -246,17 +258,165 @@ def test_search_job_counts(spark, indexes):
         assert _jobs(spark) - j0 <= bound, name
 
 
+# The same shapes on the driver route, where a search reads the terms'
+# blocks and the forward columns it needs with pyarrow: no Spark job, on
+# a fresh handle as on a warm one.
+DRIVER_SHAPES = {
+    "term": (Q.term("text", "spark"), {}),
+    "and": (Q.and_(Q.term("text", "spark"), Q.term("text", "table")), {}),
+    "or": (Q.or_(Q.term("text", "spark"), Q.term("text", "scan")), {}),
+    "phrase": (Q.phrase("text", "table", "scan"), {}),
+    "phrase_repeated_term": (Q.phrase("text", "scan", "spark", "scan"), {}),
+    "facet_2dim": (
+        Q.term("text", "spark"),
+        {"facets": [{"fieldname": "lang"}, {"fieldname": "repo"}]},
+    ),
+    "sort_page": (
+        Q.term("text", "spark"),
+        {"sort_keys": [{"sortBy": "stars", "sortDescending": True}], "start": 3, "stop": 8},
+    ),
+    "dedup": (Q.term("text", "spark"), {"dedup_field": "repo"}),
+}
+DRIVER_ROUTE_JOBS = 0
+
+
+@pytest.mark.parametrize("reader", ["store", "multigen"])
+def test_driver_route_runs_no_job(spark, indexes, reader, monkeypatch):
+    ix = indexes[reader]
+    for name, (q, kw) in DRIVER_SHAPES.items():
+        j0 = _jobs(spark)
+        got = search(ix, q, **kw)
+        assert _jobs(spark) - j0 == DRIVER_ROUTE_JOBS, name
+        assert got.queryTime is not None and "searchTime" in got.times, name
+        with monkeypatch.context() as m:
+            m.setattr(store_mod, "DRIVER_QUERY_POSTINGS", -1)
+            want = search(ix, q, **kw)
+        # equal answers: hits (scores within 1e-12), totals, facets, groups
+        assert (got.total, got.totalWithDuplicates, got.drilldownData) == (
+            want.total, want.totalWithDuplicates, want.drilldownData,
+        ), name
+        assert [(h.id, h.duplicateCount) for h in got.hits] == [
+            (h.id, h.duplicateCount) for h in want.hits
+        ], name
+        for a, b in zip(got.hits, want.hits):
+            assert a.score == pytest.approx(b.score, rel=1e-12), name
+        if q.type == "TermQuery":  # one term: bit-equal scores
+            assert [h.score for h in got.hits] == [h.score for h in want.hits], name
+    assert search(ix, Q.term("text", "spark")).total > 0
+    assert search(ix, DRIVER_SHAPES["and"][0]).total > 0
+    assert search(ix, DRIVER_SHAPES["phrase"][0]).total > 0
+
+
+def test_core_execute_query_with_stored_fields_runs_no_job(spark, tmp_path, each_route):
+    """LuceneCore.executeQuery over three generations (an upsert and a
+    delete among them) answers every driver shape with the page's
+    identifiers and stored fields and no Spark job, as the Spark route
+    answers it."""
+    from meresco_lucene_spark.core import LuceneCore
+
+    core = LuceneCore(spark, str(tmp_path), name="core", n_shards=2)
+    for lo, hi in ((0, 12), (8, 16)):
+        for i in range(lo, hi):
+            core.addDocument(
+                identifier=f"d{i}",
+                fields=[
+                    {"type": "TextField", "name": "text", "value": f"w{i % 3} spark w{i % 3} gen{lo}"},
+                    {"type": "StringField", "name": "repo", "value": f"r{i % 4}"},
+                    {"type": "FacetField", "name": "lang", "value": ["py", "go"][i % 2]},
+                    {"type": "LongField", "name": "stars", "value": i % 5},
+                ],
+            )
+        core.commit()
+    core.delete(identifier="d2")
+    core.commit()
+    assert len(core.reader().gens) == 3
+    spark_q, w0, w1 = Q.term("text", "spark"), Q.term("text", "w0"), Q.term("text", "w1")
+    shapes = {
+        "term": (spark_q, {}),
+        "and": (Q.and_(spark_q, w1), {}),
+        "or": (Q.or_(w0, Q.term("text", "gen8")), {}),
+        "phrase": (Q.phrase("text", "spark", "w0"), {}),
+        "phrase_repeated_term": (Q.phrase("text", "w1", "spark", "w1"), {}),
+        "facet_2dim": (spark_q, {"facets": [{"fieldname": "lang"}, {"fieldname": "repo"}]}),
+        "sort_page": (spark_q, {"sortKeys": [{"sortBy": "stars", "sortDescending": True}],
+                                "start": 2, "stop": 7}),
+        "dedup": (spark_q, {"dedupField": "repo"}),
+    }
+    answers = {}
+    for route in each_route():
+        for name, (q, kw) in shapes.items():
+            kw = {"storedFields": ["repo", "stars"], "stop": 20, **kw}
+            core._reader = None  # a fresh snapshot, as after a commit
+            j0 = _jobs(spark)
+            answers[route, name] = core.executeQuery(q, **kw)
+            if route == "driver":
+                assert _jobs(spark) - j0 == DRIVER_ROUTE_JOBS, name
+    for name in shapes:
+        assert answers["driver", name] == answers["spark", name], name
+        assert answers["driver", name].total > 0, name
+    term = answers["driver", "term"]
+    assert term.total == 15
+    assert {h.id: h.fields for h in term.hits} == {
+        f"d{i}": {"repo": f"r{i % 4}", "stars": i % 5} for i in range(16) if i != 2
+    }
+
+
+def test_over_bound_takes_the_spark_route(spark, indexes, monkeypatch):
+    """One posting over the bound sends a search to Spark, with the same
+    answer."""
+    ix = indexes["multigen"]
+    q = Q.or_(Q.term("text", "spark"), Q.term("text", "scan"))
+    kw = {"facets": [{"fieldname": "lang"}], "stop": 100}
+    n_postings = sum(ix.term_dfs("text", ["spark", "scan"]).values())
+    monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", n_postings)
+    j0 = _jobs(spark)
+    at_bound = search(ix, q, **kw)
+    assert _jobs(spark) == j0
+    monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", n_postings - 1)
+    over = search(ix, q, **kw)
+    assert _jobs(spark) > j0
+    assert over == at_bound
+
+
+def _job_descriptions(spark, since):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    out = []
+    for jid in range(since, sc.dagScheduler().numTotalJobs()):
+        d = sc.statusStore().job(jid).description()
+        out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+def test_spark_route_jobs_carry_search_tags(spark, indexes, spark_route):
+    """Every job of a Spark-route search() names its operator: the page
+    collect (search:page) and the facet action (search:facets)."""
+    ix = indexes["multigen"]
+    term = Q.term("text", "spark")
+    search(ix, term)  # warm
+    j0 = _jobs(spark)
+    search(ix, term)
+    assert set(_job_descriptions(spark, j0)) == {"search:page"}
+    j0 = _jobs(spark)
+    search(ix, term, facets=[{"fieldname": "lang"}, {"fieldname": "repo"}])
+    tags = _job_descriptions(spark, j0)
+    assert set(tags) == {"search:facets", "search:page"}, tags
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
 def _compiles(spark):
     """Java classes compiled by codegen so far in this JVM."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def test_new_terms_compile_no_classes(spark, indexes):
+def test_new_terms_compile_no_classes(spark, indexes, spark_route):
     """A query's df, MUST counts and boosts are map constants, not code:
-    after one warm search of a shape, the same shape over other terms
-    with other dfs reuses every compiled class (with literal df a term
-    search compiled 2 classes, a fused OR 2-4 and a phrase 2-3)."""
+    after one warm Spark-route search of a shape, the same shape over
+    other terms with other dfs reuses every compiled class (with literal
+    df a term search compiled 2 classes, a fused OR 2-4 and a phrase
+    2-3). The WAND top-k takes its df the same way (with a literal df
+    map, an OR top-k compiled 2 classes)."""
     ix = indexes["store"]
     dfs = ix.term_dfs("text", WORDS)
     pairs = {
@@ -274,9 +434,19 @@ def test_new_terms_compile_no_classes(spark, indexes):
         r = search(ix, other)
         assert r.total > 0, name
         assert _compiles(spark) - c0 == 0, name
+    topks = {
+        "term_topk": lambda ts: ix.term_topk("text", ts[0], 3),
+        "or_topk": lambda ts: ix.or_topk("text", ts, 3),
+        "and_topk": lambda ts: ix.and_topk("text", ts, 3),
+    }
+    for name, topk in topks.items():
+        topk(["spark", "scan"]).collect()
+        c0 = _compiles(spark)
+        assert topk(["table", "join"]).collect(), name
+        assert _compiles(spark) - c0 == 0, name
 
 
-def test_new_snapshot_compiles_no_classes(spark, tmp_path):
+def test_new_snapshot_compiles_no_classes(spark, tmp_path, spark_route):
     """A snapshot's n_docs and avgdl are map constants as well: after a
     commit, the same term+facet query and fused OR as before it reuse
     every compiled class (with literal n_docs and avgdl each compiled 2)."""
@@ -325,16 +495,19 @@ def test_get_spark_session_confs(spark):
         assert spark.conf.get(key) == session_defaults()[key], key
 
 
-# py4j commands of one warm term search on the store, not counting the
-# object-release messages py4j's finalizer sends whenever Python frees
-# JVM handles (their number depends on what the tests before freed):
-# 240, measured at 4 cores. With PySpark's per-Column call-site capture
-# on, a warm term search on the benchmark store made 682.
-TERM_PY4J_COMMANDS = 250
+# py4j commands of one warm Spark-route term search on the store, not
+# counting the object-release messages py4j's finalizer sends whenever
+# Python frees JVM handles (their number depends on what the tests
+# before freed): 182, measured at 4 cores, with the block decode written
+# as two SQL projections and the search:page/search:facets stage tags
+# (231 before both; 240 before that; with PySpark's per-Column
+# call-site capture on, a warm term search on the benchmark store made
+# 682).
+TERM_PY4J_COMMANDS = 190
 RELEASE = "m\nd\n"  # py4j protocol: memory command, delete subcommand
 
 
-def test_term_search_py4j_commands(spark, indexes, monkeypatch):
+def test_term_search_py4j_commands(spark, indexes, monkeypatch, spark_route):
     ix = indexes["store"]
     search(ix, Q.term("text", "spark"))
     client = spark.sparkContext._gateway._gateway_client
@@ -351,16 +524,49 @@ def test_term_search_py4j_commands(spark, indexes, monkeypatch):
     assert 0 < sent[0] <= TERM_PY4J_COMMANDS
 
 
-def test_search_reports_times(indexes):
-    """queryTime is the whole call, times holds the page (searchTime)
-    and facet (facetTime) actions, all whole ms, and both survive the
-    JSON round trip."""
+def test_fresh_snapshot_driver_search_calls_the_jvm_for_idf_only(spark, indexes, monkeypatch):
+    """A driver-route search on a freshly opened multi-generation reader
+    (a new snapshot, as after a commit) sends py4j nothing but one
+    ``StrictMath.log`` per idf it has not computed yet."""
+    from meresco_lucene_spark.index.incremental import IncrementalIndexStore
+
+    root = indexes["multigen"].root
+    search(IncrementalIndexStore(spark, root).open(), Q.term("text", "spark"))  # warm
+    monkeypatch.setattr(driver, "_IDF_MEMO", {})
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def recording(command, *args, **kwargs):
+        if not command.startswith(RELEASE):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", recording)
+    fresh = IncrementalIndexStore(spark, root).open()
     r = search(
-        indexes["store"], Q.term("text", "spark"), facets=[{"fieldname": "lang"}]
+        fresh,
+        Q.or_(Q.term("text", "spark"), Q.term("text", "scan")),
+        facets=[{"fieldname": "lang"}],
+        dedup_field="repo",
     )
-    assert set(r.times) == {"searchTime", "facetTime"}
-    for v in r.times.values():
-        assert isinstance(v, int) and 0 <= v <= r.queryTime
+    monkeypatch.undo()
+    assert r.total > 0
+    assert 0 < len(sent) <= 2
+    assert all("java.lang.StrictMath" in c and "\nlog\n" in c for c in sent), sent
+
+
+def test_search_reports_times(indexes, each_route):
+    """queryTime is the whole call, times holds the page (searchTime)
+    and facet (facetTime) actions, all whole ms, on either route, and
+    both survive the JSON round trip."""
+    for route in each_route():
+        r = search(
+            indexes["store"], Q.term("text", "spark"), facets=[{"fieldname": "lang"}]
+        )
+        assert set(r.times) == {"searchTime", "facetTime"}, route
+        for v in r.times.values():
+            assert isinstance(v, int) and 0 <= v <= r.queryTime, route
     back = LuceneResponse.fromJson(r.asJson())
     assert (back.queryTime, back.times) == (r.queryTime, r.times)
     assert json.loads(r.asJson())["times"] == r.times

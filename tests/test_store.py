@@ -162,6 +162,7 @@ def test_reopen_zero_retokenization(spark, stores, monkeypatch):
     from meresco_lucene_spark.analysis import tokenizer
 
     monkeypatch.setattr(tokenizer, "tokenize_expr", _boom)
+    monkeypatch.setattr(tokenizer, "tokenize_sql", _boom)
     monkeypatch.setattr(tokenizer, "tokenize_udf", _boom)
     fresh = PersistentIndex(spark, disk.out_dir)
     r = search(fresh, Q.term("text", "spark"), stop=3)

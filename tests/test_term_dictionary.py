@@ -1,10 +1,10 @@
 """Every exact-term scorer reads the index's term dictionary.
 
 ``term_dfs`` gives a term's df without a Spark job and ``term_postings`` reads
-only the term's shards. These tests check ``search()`` totals and scores
-against exhaustive scoring in Python on a 32-shard store with salted hot
-terms, and that a term's postings are read from its own ``shard=``
-directories only. They check that a multi-generation reader keeps
+only the term's shards. These tests check ``search()`` totals and scores,
+on both of its routes, against exhaustive scoring in Python on a 32-shard
+store with salted hot terms, and that a term's postings are read from its
+own ``shard=`` directories only. They check that a multi-generation reader keeps
 Lucene's df rule (dead docs count until a merge), and that a store
 rebuilt at the same path is never served from a stale handle."""
 
@@ -134,18 +134,21 @@ def _scanned_files(frame):
 
 
 @pytest.mark.parametrize("name", list(CASES))
-def test_scores_match_exhaustive_and_postings_read_only_term_shards(spark, corpus, name):
+def test_scores_match_exhaustive_and_postings_read_only_term_shards(
+    spark, corpus, name, each_route
+):
     store, q, (fld, terms) = CASES[name]
     ix = corpus[store]
     exact = corpus["exact_tf" if store == "tf" else "exact"].evaluate(q, store == "bm25q")
     if store == "bm25q":  # the rounded lengths change some scores
         assert exact != corpus["exact"].evaluate(q)
-    resp = search(ix, q, stop=10_000)
-    assert resp.total == len(exact)
-    got = {h.id: h.score for h in resp.hits}
-    assert got.keys() == exact.keys()
-    for d, s in exact.items():
-        assert got[d] == pytest.approx(s, rel=1e-12), d
+    for route in each_route():
+        resp = search(ix, q, stop=10_000)
+        assert resp.total == len(exact), route
+        got = {h.id: h.score for h in resp.hits}
+        assert got.keys() == exact.keys(), route
+        for d, s in exact.items():
+            assert got[d] == pytest.approx(s, rel=1e-12), (route, d)
 
     n_salts = {
         r["term"]: r["n_salts"]
@@ -166,6 +169,9 @@ def test_scores_match_exhaustive_and_postings_read_only_term_shards(spark, corpu
         ).select("shard").distinct().collect()
     }
     assert holding <= read <= _shards_of(spark, fld, terms, n_salts)
+    # the driver route reads the files of the same shards
+    listed = {int(re.search(r"/shard=(\d+)/", f).group(1)) for f in ix.term_files(fld, terms)}
+    assert holding <= listed <= _shards_of(spark, fld, terms, n_salts)
     assert ix.term_dfs(fld, terms) == {
         t: corpus["exact"].df(fld, t) for t in terms if t in n_salts
     }
@@ -234,7 +240,7 @@ def _reference_scores(ix, q):
     return {d: sum(m.get(d, 0.0) for _, m in parts) for d in docs}
 
 
-def _check_multigen(multi):
+def _check_multigen(multi, each_route):
     want_df = {r["term"]: r["df"] for r in multi.term_stats_for("text").collect()}
     assert multi.term_dfs("text", list(want_df) + ["nosuchterm"]) == want_df
     for q in MULTIGEN_QUERIES:
@@ -243,10 +249,15 @@ def _check_multigen(multi):
         assert got.keys() == want.keys(), q.to_dict()
         for d, s in want.items():
             assert got[d] == pytest.approx(s, rel=1e-12), (q.to_dict(), d)
-        assert search(multi, q).total == len(want)
+        for route in each_route():
+            resp = search(multi, q, stop=1000)
+            assert resp.total == len(want), route
+            assert {h.id for h in resp.hits} == want.keys(), (route, q.to_dict())
+            for h in resp.hits:
+                assert h.score == pytest.approx(want[h.id], rel=1e-12), (route, h.id)
 
 
-def test_multigen_scores_keep_dead_docs_in_df_until_merge(spark, tmp_path):
+def test_multigen_scores_keep_dead_docs_in_df_until_merge(spark, tmp_path, each_route):
     inc = IncrementalIndexStore(spark, str(tmp_path / "inc"), text_cols=["text"], n_shards=4)
     inc.commit_batch(spark.createDataFrame(_gen_docs(range(30), "ancient")))
     inc.commit_batch(spark.createDataFrame(_gen_docs(range(0, 30, 3), "fresh")))
@@ -255,14 +266,14 @@ def test_multigen_scores_keep_dead_docs_in_df_until_merge(spark, tmp_path):
     assert len(multi.gens) == 3
     # dead docs still count: "ancient" keeps its first-generation df
     assert multi.term_dfs("text", ["ancient", "fresh"]) == {"ancient": 30, "fresh": 10}
-    _check_multigen(multi)
+    _check_multigen(multi, each_route)
 
     inc.force_merge()
     merged = inc.open()
     assert len(merged.gens) == 1
     # after the merge, df counts live docs only
     assert merged.term_dfs("text", ["ancient", "fresh"]) == {"ancient": 17, "fresh": 10}
-    _check_multigen(merged)
+    _check_multigen(merged, each_route)
 
 
 # ------------------------------------------------------------ handle cache
@@ -313,10 +324,11 @@ def guard_readers(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("reader", ["store", "multigen"])
 @pytest.mark.parametrize("query", list(GUARD_QUERIES))
-def test_search_scans_no_field_lengths(guard_readers, reader, query, monkeypatch):
+def test_search_scans_no_field_lengths(guard_readers, reader, query, monkeypatch, spark_route):
     """Scoring reads each posting's document length off the posting: the
-    plan ``search()`` executes for a term, a fused OR and a phrase scans
-    postings files and no ``field_lengths`` file."""
+    plan a Spark-route ``search()`` executes for a term, a fused OR and a
+    phrase scans postings files and no ``field_lengths`` file. (The
+    driver route reads the postings files of the terms' shards only.)"""
     from meresco_lucene_spark.query import executor
 
     scanned = []

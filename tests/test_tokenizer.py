@@ -78,11 +78,10 @@ def test_quantize_expr_matches_numpy(spark):
     import pandas as pd
 
     from meresco_lucene_spark.query.bm25 import quantize_dl, quantize_dl_expr
-    from pyspark.sql import functions as F
 
     vals = list(range(0, 300)) + [1000, 4095, 4096, 65535, 10**6, 2**30]
     df = spark.createDataFrame(pd.DataFrame({"dl": vals}))
-    got = [r[0] for r in df.select(quantize_dl_expr(F.col("dl"))).collect()]
+    got = [r[0] for r in df.select(quantize_dl_expr("dl")).collect()]
     import numpy as np
 
     assert got == quantize_dl(np.array(vals)).tolist()
