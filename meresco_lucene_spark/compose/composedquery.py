@@ -40,6 +40,7 @@ from meresco_lucene_spark.query.executor import (
     search,
 )
 from meresco_lucene_spark.query.ir import Q
+from meresco_lucene_spark.session import stage
 
 if TYPE_CHECKING:
     from meresco_lucene_spark.index.store import PersistentIndex
@@ -370,6 +371,20 @@ def execute_composed(
     cq: ComposedQuery,
     export_key: str | None = None,
 ) -> LuceneResponse:
+    """Answer ``cq`` over ``cores`` (MultiLucene.java). Every Spark job it
+    starts is tagged ``composed:<operator>`` (session.stage): the result
+    core's ``search:page``/``search:facets``, the other cores' join
+    facets (``facets``) and the exported keys (``keys``)."""
+    with stage(cores[cq.result_from].spark, "composed"):
+        return _execute_composed(cores, cq, export_key)
+
+
+def _execute_composed(
+    cores: dict[str, "PersistentIndex"],
+    cq: ComposedQuery,
+    export_key: str | None,
+) -> LuceneResponse:
+    spark = cores[cq.result_from].spark
     result_core = cq.result_from
     result_idx = cores[result_core]
     other_cores = [c for c in cores if c != result_core and _core_used(cq, c)]
@@ -568,7 +583,8 @@ def execute_composed(
             fh = restricted
             for fq in extra_filters:
                 fh = fh.join(hits(other_idx, fq).select("doc_id"), "doc_id", "left_semi")
-            response.drilldownData.extend(drilldown_data(other_idx, fh, facet_list))
+            with stage(spark, "facets"):
+                response.drilldownData.extend(drilldown_data(other_idx, fh, facet_list))
         if export_key is not None:
             keys = (
                 result_idx.forward.join(all_hits.select("doc_id"), "doc_id", "left_semi")
@@ -576,7 +592,8 @@ def execute_composed(
                 .select(qcol(export_key).alias("key"))
                 .distinct()
             )
-            response.keys = sorted(r["key"] for r in keys.collect())
+            with stage(spark, "keys"):
+                response.keys = sorted(r["key"] for r in keys.collect())
     if cq.suggestion_request:
         # the reference forwards _suggestionRequest into the result
         # core's QueryData (ComposedQuery.java:107-108), so a composed

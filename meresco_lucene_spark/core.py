@@ -69,12 +69,11 @@ from meresco_lucene_spark.query.executor import (
     Hit,
     LuceneResponse,
     collect_page,
-    mlt_seed_doc,
     search,
     similar_documents_df,
 )
 from meresco_lucene_spark.query.ir import Q
-from meresco_lucene_spark.session import local_frame
+from meresco_lucene_spark.session import local_frame, stage
 
 _DELETED = object()
 
@@ -348,12 +347,13 @@ class LuceneCore:
         sim = similar_documents_df(
             reader, doc_id, field, max_freq=max_freq, k=None
         )
-        totals, rows = collect_page(
-            sim.join(reader.forward.select("doc_id", ID_FIELD), "doc_id"),
-            [F.col("shared_terms").desc(), F.col("doc_id").asc()],
-            start,
-            stop,
-        )
+        with stage(self.spark, "mlt:page"):
+            totals, rows = collect_page(
+                sim.join(reader.forward.select("doc_id", ID_FIELD), "doc_id"),
+                [F.col("shared_terms").desc(), F.col("doc_id").asc()],
+                start,
+                stop,
+            )
         hits_out = [
             Hit(id=r[ID_FIELD], score=float(r["shared_terms"])) for r in rows
         ]

@@ -329,8 +329,7 @@ class IncrementalIndexStore:
             try:
                 if df is not None:
                     # lineage=False: generation stores are wiped on crash,
-                    # never shard-resumed, so a small batch takes the
-                    # store's driver route
+                    # never shard-resumed, so they record no lineage
                     built = build_index_store(
                         df, os.path.join(gen_dir, "store"), id_col=id_col,
                         lineage=False, **self.build_kwargs,

@@ -31,12 +31,13 @@ store runs no schema-inference job.
 
 Two build routes, one encode (build_index_store). Both tokenize in the
 JVM (``occurrence_frames``) and cut blocks with the same ``_encode``.
-A build that is never resumed and whose tokenized rows fit
-``DRIVER_BUILD_ROWS`` — a small generation commit or merge — collects
-them in one bounded Spark job and is encoded and written on the driver
-with pyarrow, one file per table; every other build encodes in an
-``applyInArrow`` shard shuffle and writes with Spark. The two routes
-give the same store.
+Size decides the route: a build whose tokenized rows fit
+``DRIVER_BUILD_ROWS`` — a first build, a generation commit or a merge
+alike — collects them in one bounded Spark job and is encoded and
+written on the driver with pyarrow, one file per table; a larger build
+encodes in an ``applyInArrow`` shard shuffle and writes with Spark. The
+two routes give the same store. ``lineage`` only marks a build as
+resumable: the distributed route then records shard lineage.
 
 Sharding & skew: ``base_shard = xxhash64(field, term) % n_shards``
 (JVM-side, deterministic across sessions, so resume is safe). A term
@@ -47,12 +48,19 @@ swallows a whole hot posting list. term_stats records base_shard and
 n_salts, so every exact-term read — scoring and WAND alike — looks its
 terms up there and scans only their shards.
 
-Resume: each fully-written shard appends a lineage row whose
-content_xxh64_sum covers the shard's block content. On resume, shards
-present in lineage are kept; shard directories without a lineage row
-(crash mid-write) are deleted and re-encoded. Blocks are a pure
-function of the (field, term, doc)-sorted postings, so a resumed build
-is identical to an uninterrupted one.
+Crash safety: a build first removes the store's meta.json, then writes
+its tables, and publishes meta.json last, so a store whose build was
+interrupted refuses to open instead of serving an old snapshot's
+meta.json over mixed tables.
+
+Resume (distributed route): each fully-written shard appends a lineage
+row whose content_xxh64_sum covers the shard's block content. On
+resume, shards present in lineage are kept; shard directories without
+a lineage row (crash mid-write) are deleted and re-encoded. Blocks are
+a pure function of the (field, term, doc)-sorted postings, so a resumed
+build is identical to an uninterrupted one. A resume over a directory
+without lineage rows is routed by size like any build: under the bound
+it re-encodes from scratch on the driver, in seconds.
 
 The decisive design point is how :class:`PersistentIndex` exposes the
 blocks: ``postings_for(field)`` returns a LAZILY-DECODED DataFrame where
@@ -114,16 +122,18 @@ STORE_POSTINGS_SCHEMA = (
 # delta-encode worse than they dictionary-encode.)
 PARQUET_V2 = {"parquet.writer.version": "v2"}
 
-# A build whose occurrence count is at most this is SMALL (a batch
-# generation commit above all): salt_buckets=None disables hot-term
-# salting for it, and its term_stats cache is not materialized up front.
+# A build whose occurrence count is at most this is SMALL: salt_buckets=
+# None disables hot-term salting for it, and on the distributed route
+# (a build of 1M-2M occurrences, or a resumed one) its term_stats cache
+# is not materialized up front.
 SMALL_BUILD_OCC = 2_000_000
 
-# A build that is never resumed (lineage=False) collects its tokenized
-# rows to the driver in one Spark job, reading at most this many plus
-# one; when they fit, the driver encodes and writes the store (the
-# DRIVER route of build_index_store), else the build takes the
-# distributed route. Occurrences are nearly all of the rows. Measured
+# A build collects its tokenized rows to the driver in one Spark job,
+# reading at most this many plus one; when they fit, the driver encodes
+# and writes the store (the DRIVER route of build_index_store), else the
+# build takes the distributed route. An input whose row count the plan
+# gives without a job (build_input_rows) and that alone exceeds this
+# skips the collect. Occurrences are nearly all of the rows. Measured
 # on a 4-core host, local[2], code-corpus batches: the driver route
 # built 4.4k occurrences in 0.30 s against 1.41 s distributed, 187k in
 # 0.86 s against 1.59 s, 929k in 3.14 s against 4.43 s and 1.24M in
@@ -210,6 +220,45 @@ def block_columns(
         "dls": lists(pa.array(dls, pa.int32())),
         "positions": lists(positions),
     }
+
+
+def v2_encodings(tbl: pa.Table) -> dict:
+    """pyarrow write options that encode ``tbl``'s integer and string
+    columns as Spark's Parquet v2 writer does (PARQUET_V2):
+    dictionary-encoded when the dictionary pays off — its values plus
+    the bit-packed indices smaller than the plain values, and the
+    dictionary within parquet's 1 MiB page limit — else
+    DELTA_BINARY_PACKED (integers) or DELTA_BYTE_ARRAY (strings)."""
+    dictionary, encoding = [], {}
+
+    def leaves(path: str, arr):
+        if pa.types.is_list(arr.type):
+            yield from leaves(f"{path}.list.element", pc.list_flatten(arr))
+        else:
+            yield path, arr
+
+    def plain_bytes(values) -> int:
+        if pa.types.is_integer(values.type):
+            return len(values) * values.type.bit_width // 8
+        return (pc.sum(pc.binary_length(values)).as_py() or 0) + 4 * len(values)
+
+    for name in tbl.column_names:
+        for path, values in leaves(name, tbl.column(name).combine_chunks()):
+            if pa.types.is_integer(values.type):
+                fallback = "DELTA_BINARY_PACKED"
+            elif pa.types.is_string(values.type):
+                fallback = "DELTA_BYTE_ARRAY"
+            else:
+                dictionary.append(path)
+                continue
+            distinct = pc.unique(values)
+            dict_bytes = plain_bytes(distinct)
+            indices = math.ceil(len(values) * (len(distinct) - 1).bit_length() / 8)
+            if dict_bytes + indices < plain_bytes(values) and dict_bytes <= 1 << 20:
+                dictionary.append(path)
+            else:
+                encoding[path] = fallback
+    return {"use_dictionary": dictionary, "column_encoding": encoding}
 
 
 def schema_json(schema: StructType) -> dict:
@@ -572,16 +621,20 @@ def _field_params(field_stats_meta: dict) -> dict[str, tuple[int, float]]:
 
 def parquet_options(spark: SparkSession) -> dict:
     """pyarrow write options for the store's tables: the session's
-    parquet codec, and no serialized Arrow schema in the footer (Spark
-    reads the Parquet schema; the Arrow copy made a small generation's
-    files a sixth larger than Spark's)."""
+    parquet codec (zstd at parquet-mr's default level 3, where pyarrow's
+    is 1), and no serialized Arrow schema in the footer (Spark reads the
+    Parquet schema; the Arrow copy made a small generation's files a
+    sixth larger than Spark's)."""
     codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
-    return {
+    opts = {
         "compression": {"uncompressed": "none", "lz4raw": "lz4", "lz4_raw": "lz4"}.get(
             codec, codec
         ),
         "store_schema": False,
     }
+    if codec == "zstd":
+        opts["compression_level"] = 3
+    return opts
 
 
 # ------------------------------------------------------- driver route
@@ -631,6 +684,34 @@ def _collect_build_rows(
         part(1, ["field", "doc_id", "dl", "norm_dl"]),
         pa.Table.from_struct_array(part(2, ["_fwd"]).column("_fwd")),
     )
+
+
+def build_input_rows(df: DataFrame) -> int | None:
+    """The row count of a build's input when its plan gives it without a
+    Spark job, else None: the rows of a local relation, or the parquet
+    footers' row counts of a scan of local parquet files, under nothing
+    but projections and repartitions (which keep every row). A filter,
+    join or limit anywhere below the top makes the count unknown."""
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
+
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() in ("Project", "SubqueryAlias", "Repartition",
+                              "RepartitionByExpression"):
+        plan = plan.child()
+    name = plan.nodeName()
+    if name == "LocalRelation":
+        return int(plan.data().size())
+    if not (
+        name == "LogicalRelation"
+        and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        and plan.relation().fileFormat().toString() == "Parquet"
+    ):
+        return None
+    files = [urlparse(f) for f in df.inputFiles()]
+    if any(u.scheme != "file" for u in files):
+        return None
+    return sum(pq.read_metadata(url2pathname(u.path)).num_rows for u in files)
 
 
 def term_hashes(spark: SparkSession, pairs: pa.Table) -> np.ndarray:
@@ -740,33 +821,41 @@ def build_index_store(
     """Build the persistent store: the four tables and meta.json. One
     build = one commit = one durable, fully queryable snapshot.
 
-    Two routes, one encode. Both tokenize in the JVM with
-    ``occurrence_frames`` and cut blocks with the same :func:`_encode`;
-    they differ in where the encode runs and who writes the files:
+    Two routes, one encode, and size decides between them. Both
+    tokenize in the JVM with ``occurrence_frames`` and cut blocks with
+    the same :func:`_encode`; they differ in where the encode runs and
+    who writes the files:
 
-    * the DRIVER route: a build that is never resumed (``lineage=False``:
-      incremental generation commits and merges) collects its
-      occurrence, length and forward rows as Arrow in ONE bounded Spark
-      job; when they number at most ``DRIVER_BUILD_ROWS`` the driver
-      computes term_stats and the field stats from them, encodes each
-      shard and writes every table with pyarrow, one file per table, each
-      published by rename. A small commit is then one Spark job instead
-      of a dozen, each with its planning and file-commit overhead (the
-      reference flushes a small batch as one small segment,
-      Lucene.java:183-214).
-    * the DISTRIBUTED route, for every other build: one tokenize pass
+    * the DRIVER route, for every build whose rows fit: the build
+      collects its occurrence, length and forward rows as Arrow in ONE
+      bounded Spark job; when they number at most ``DRIVER_BUILD_ROWS``
+      the driver computes term_stats and the field stats from them,
+      encodes each shard and writes every table with pyarrow, one file
+      per table, each published by rename, meta.json last. A small
+      build is then one Spark job instead of a dozen, each with its
+      planning and file-commit overhead (the reference flushes a small
+      batch as one small segment, Lucene.java:183-214). An input known
+      to be over the bound before any job (build_input_rows) skips the
+      collect.
+    * the DISTRIBUTED route, for larger builds: one tokenize pass
       materialized to a parquet intermediate (no in-memory caching of
       the positions-heavy postings — disk-backed intermediates keep
       executor heaps flat), then the four parquet tables and one salted
       shard shuffle into an ``applyInArrow`` encode.
 
-    Resume (distributed route only): table stages skip on an existing
-    _SUCCESS marker; the sharded postings resume at shard granularity
-    via lineage rows — shards with a lineage row are kept, partial shard
-    dirs without one are wiped and re-encoded. Blocks are a pure
-    function of the (field, term, doc)-sorted postings, so a resumed
-    build is logically identical to an uninterrupted one (tested), and
-    so is a driver-route build of the same rows.
+    Either route first removes the store's meta.json, so an interrupted
+    build leaves a store that refuses to open.
+
+    Resume: ``resume=True`` over a directory that holds lineage rows
+    stays on the distributed route, where table stages skip on an
+    existing _SUCCESS marker and the sharded postings resume at shard
+    granularity via lineage rows — shards with a lineage row are kept,
+    partial shard dirs without one are wiped and re-encoded. Any other
+    resume is routed by size, so an interrupted driver-route build is
+    re-encoded from scratch. Blocks are a pure function of the (field,
+    term, doc)-sorted postings, so a resumed build is logically
+    identical to an uninterrupted one (tested), and so is a driver-route
+    build of the same rows.
 
     ``occurrences``/``lengths`` override the tokenize pass with
     precomputed frames (occurrences: field, term, doc_id, pos, _dl;
@@ -774,16 +863,16 @@ def build_index_store(
     re-encodes decoded postings WITHOUT re-tokenizing (Lucene's merge
     copies postings, it never re-analyzes: index/incremental.py).
 
-    ``collected``: the occurrence, length and forward rows of a
-    ``lineage=False`` build as the driver route's collect would give
-    them, when the caller read them itself (the merge feed of
-    MultiGenIndex.merge_rows); the build then runs no Spark job.
+    ``collected``: the occurrence, length and forward rows of the build
+    as the driver route's collect would give them, when the caller read
+    them itself (the merge feed of MultiGenIndex.merge_rows); the build
+    then runs no Spark job.
 
-    ``lineage=False`` marks a build that is wiped on crash rather than
-    resumed: it writes no shard lineage (a full re-read + hash + write
-    of the encoded postings that only resume needs), and it may take
-    the driver route; a later resume=True of such a store simply
-    re-encodes from scratch.
+    ``lineage`` only marks a build as resumable. ``lineage=False`` marks
+    one that is wiped on crash rather than resumed: on the distributed
+    route it writes no shard lineage (a full re-read + hash + write of
+    the encoded postings that only resume needs). The driver route
+    writes no lineage either way.
 
     Every Spark job of a build carries a ``build:<stage>`` description
     (session.stage), under its caller's stage if any."""
@@ -839,24 +928,28 @@ def build_index_store(
         "postings": schema_json(StructType.fromDDL(STORE_POSTINGS_SCHEMA)),
     }
     with stage(spark, "build"):
-        if not lineage:
-            rows = collected
-            if rows is None:
+        rows = collected
+        # a resume over lineage rows continues a distributed build shard
+        # by shard; every other build is routed by size
+        resumes_shards = resume and parquet_rows(os.path.join(out_dir, "lineage")) > 0
+        if rows is None and not resumes_shards:
+            known = build_input_rows(forward)
+            if known is None or known <= DRIVER_BUILD_ROWS:
                 with stage(spark, "collect"):
                     rows = _collect_build_rows(
                         occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
                     )
-            if rows is not None:
-                _build_on_driver(
-                    spark, out_dir, *rows,
-                    n_shards=n_shards,
-                    salt_buckets=salt_buckets,
-                    known_fields=known_fields,
-                    omit=omit,
-                    schemas=schemas,
-                    **settings,
-                )
-                return PersistentIndex(spark, out_dir)
+        if rows is not None:
+            _build_on_driver(
+                spark, out_dir, *rows,
+                n_shards=n_shards,
+                salt_buckets=salt_buckets,
+                known_fields=known_fields,
+                omit=omit,
+                schemas=schemas,
+                **settings,
+            )
+            return PersistentIndex(spark, out_dir)
         _build_distributed(
             spark, out_dir, occurrences_lazy, lengths_lazy, forward,
             known_fields=known_fields,
@@ -870,6 +963,18 @@ def build_index_store(
             **settings,
         )
     return PersistentIndex(spark, out_dir)
+
+
+def _withdraw_meta(out_dir: str) -> None:
+    """Remove the store's meta.json before a build touches any table:
+    meta.json is the commit marker, published last, so a store whose
+    build is interrupted refuses to open rather than pairing an older
+    snapshot's meta.json with half-replaced tables. Resume reads only
+    ``_build_config.json``, the ``_SUCCESS`` markers and lineage."""
+    try:
+        os.remove(os.path.join(out_dir, "meta.json"))
+    except FileNotFoundError:
+        pass
 
 
 def _store_meta(n_docs: int, field_stats: dict, n_shards: int, salt_buckets: int,
@@ -926,7 +1031,11 @@ def _build_on_driver(
     tstats = _driver_term_stats(occ, n_shards, salt_buckets, hot_threshold)
 
     opts = parquet_options(spark)
-    for t in ("forward", "field_lengths", "term_stats", "postings"):
+    _withdraw_meta(out_dir)
+    # the tables of an earlier build at this path, and what an
+    # interrupted distributed build left for its resume
+    for t in ("forward", "field_lengths", "term_stats", "postings", "lineage",
+              "_flat_postings"):
         shutil.rmtree(os.path.join(out_dir, t), ignore_errors=True)
     publish_parquet(fwd, os.path.join(out_dir, "forward"), **opts)
     publish_parquet(lens, os.path.join(out_dir, "field_lengths"), **opts)
@@ -939,10 +1048,12 @@ def _build_on_driver(
     )
     for s, shard_blocks in blocks:
         # the shard is the directory, as in a partitionBy("shard") write
+        shard_blocks = shard_blocks.drop_columns(["shard"])
         publish_parquet(
-            shard_blocks.drop_columns(["shard"]),
+            shard_blocks,
             os.path.join(post_dir, f"shard={s}"),
             data_page_version="2.0",
+            **v2_encodings(shard_blocks),
             **opts,
         )
     COMMITTER.publish_file(
@@ -984,6 +1095,7 @@ def _build_distributed(
 
     ok = False
     tstats_writer = tstats_cached = tstats_pool = None
+    _withdraw_meta(out_dir)
     try:
         # ONE tokenize+explode pass lands raw OCCURRENCE rows (field, term,
         # doc_id, pos) on disk — no aggregation at all between tokenize and

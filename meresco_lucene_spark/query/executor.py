@@ -850,12 +850,13 @@ def mlt_seed_doc(
         .filter((F.col("df") >= 2) & (F.col("df") <= max_freq * n))
         .select("term")
     )
-    row = (
-        index.postings_for(field)
-        .join(F.broadcast(rare), "term", "left_semi")
-        .agg(F.min("doc_id"))
-        .collect()[0]
-    )
+    with stage(index.spark, "mlt:seed"):
+        row = (
+            index.postings_for(field)
+            .join(F.broadcast(rare), "term", "left_semi")
+            .agg(F.min("doc_id"))
+            .collect()[0]
+        )
     return None if row[0] is None else int(row[0])
 
 

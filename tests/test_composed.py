@@ -8,6 +8,7 @@ carries the reference test name it mirrors.
 
 import pytest
 from pyspark.sql import types as T
+from test_driver_route import _job_descriptions, _jobs
 
 from meresco_lucene_spark.compose.composedquery import ComposedQuery, execute_composed
 from meresco_lucene_spark.compose.relational import RQ
@@ -695,3 +696,20 @@ def test_composed_query_suggestion_request(cores):
     assert cq2.suggestion_request == cq.suggestion_request
     r2 = execute_composed(cores, cq2)
     assert r2.suggestions == {"treu": ["true"]}
+
+
+def test_composed_jobs_carry_composed_tags(spark, cores, spark_route):
+    """Every Spark job of execute_composed names its operator under
+    ``composed``: the result core's page and facets (on the Spark route
+    of search()), the other core's join facets and the exported keys."""
+    cq = ComposedQuery("coreA", queries={"coreA": Q.term("Q", "true")})
+    cq.add_facet("coreA", {"fieldname": "cat_M"})
+    cq.add_facet("coreB", {"fieldname": "cat_N", "maxTerms": 10})
+    cq.add_match("coreA", "A", "coreB", "B")
+    j0 = _jobs(spark)
+    execute_composed(cores, cq, export_key="A")
+    tags = set(_job_descriptions(spark, j0))
+    assert {"composed:search:page", "composed:search:facets",
+            "composed:facets", "composed:keys"} <= tags, tags
+    assert all(t and t.startswith("composed:") for t in tags), tags
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

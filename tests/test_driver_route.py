@@ -1,14 +1,16 @@
-"""A small store build that is never resumed runs on the driver.
+"""A store build whose rows fit runs on the driver.
 
-``build_index_store(lineage=False)`` (generation commits and merges)
-collects the build's occurrence, length and forward rows in one bounded
-Spark job; when they fit ``DRIVER_BUILD_ROWS``, the driver encodes them
-with the same ``_encode`` as the distributed route and writes the
-tables with pyarrow. Both routes build the same store, the bound
-decides the route, every driver-written table reads back under its
-recorded schema, a commit killed between two table writes leaves the
-previous snapshot, merges write their tombstones on the driver, and
-every job of a commit carries a stage tag."""
+``build_index_store`` (first builds, generation commits and merges
+alike) collects the build's occurrence, length and forward rows in one
+bounded Spark job; when they fit ``DRIVER_BUILD_ROWS``, the driver
+encodes them with the same ``_encode`` as the distributed route and
+writes the tables with pyarrow. Both routes build the same store, with
+or without lineage and on a resume, the bound decides the route (an
+input known to be over it skips the collect), every driver-written
+table reads back under its recorded schema, a build or commit killed at
+any table write leaves no openable half-store, merges write their
+tombstones on the driver, and every job of a build or commit carries a
+stage tag."""
 
 import datetime
 import decimal
@@ -25,7 +27,11 @@ from meresco_lucene_spark.core import LuceneCore
 from meresco_lucene_spark.index import store as store_mod
 from meresco_lucene_spark.index.builder import occurrence_frames
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
-from meresco_lucene_spark.index.store import PersistentIndex, build_index_store
+from meresco_lucene_spark.index.store import (
+    PersistentIndex,
+    build_index_store,
+    open_persistent_index,
+)
 from meresco_lucene_spark.query.executor import search
 from meresco_lucene_spark.query.ir import Q
 
@@ -93,13 +99,26 @@ def _content(spark, out_dir):
     ids=["auto", "salted"],
 )
 def test_routes_build_equal_stores(spark, tmp_path, monkeypatch, settings):
+    """Both routes build the same store, whether the build is resumable
+    (``lineage=True``) or not; a resumable first build takes the driver
+    route and records no lineage, and a resume over a complete
+    driver-built store (no lineage rows) re-encodes it on the driver to
+    the same store."""
     df = _batch(spark)
     driver, dist = str(tmp_path / "driver"), str(tmp_path / "dist")
+    resumable, dist_resumable = str(tmp_path / "resumable"), str(tmp_path / "dist_resumable")
     j0 = _jobs(spark)
     build_index_store(df, driver, lineage=False, **CFG, **settings)
     assert _job_descriptions(spark, j0) == ["build:collect"]
-    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
-    build_index_store(df, dist, lineage=False, **CFG, **settings)
+    j0 = _jobs(spark)
+    build_index_store(df, resumable, lineage=True, **CFG, **settings)
+    assert _job_descriptions(spark, j0) == ["build:collect"]
+    assert not os.path.exists(os.path.join(resumable, "lineage"))
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
+        build_index_store(df, dist, lineage=False, **CFG, **settings)
+        build_index_store(df, dist_resumable, lineage=True, **CFG, **settings)
+    assert pq.read_table(os.path.join(dist_resumable, "lineage")).num_rows > 0
     got, want = _content(spark, driver), _content(spark, dist)
     assert _recorded_term_stats_matches_spark(dist)
     assert got[0] == want[0]
@@ -111,6 +130,136 @@ def test_routes_build_equal_stores(spark, tmp_path, monkeypatch, settings):
     # one file per table, published without Spark's markers
     for t in ("forward", "field_lengths", "term_stats"):
         assert [f.endswith(".parquet") for f in os.listdir(os.path.join(driver, t))] == [True]
+    assert _content(spark, resumable) == want
+    assert _content(spark, dist_resumable) == want
+    j0 = _jobs(spark)
+    build_index_store(df, resumable, resume=True, run_id="again", **CFG, **settings)
+    assert _job_descriptions(spark, j0) == ["build:collect"]
+    assert _content(spark, resumable) == want
+
+
+def test_known_input_over_bound_skips_the_collect(spark, tmp_path, monkeypatch):
+    """An input whose row count the plan gives without a job (a local
+    relation, or parquet footers under projections) and whose documents
+    alone exceed the bound goes straight to the distributed route: no
+    ``build:collect`` job runs. An input of unknown count (filtered)
+    still tries the collect."""
+    df = _batch(spark)
+    df.write.parquet(str(tmp_path / "input"))
+    parquet = spark.read.parquet(str(tmp_path / "input"))
+    j0 = _jobs(spark)
+    assert store_mod.build_input_rows(df) == 40
+    assert store_mod.build_input_rows(parquet.withColumnRenamed("doc_id", "id")) == 40
+    assert store_mod.build_input_rows(parquet.filter("doc_id < 30")) is None
+    assert _jobs(spark) == j0
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 39)
+    for name, frame in (("local", df), ("parquet", parquet)):
+        j0 = _jobs(spark)
+        build_index_store(frame, str(tmp_path / name), **CFG)
+        tags = _job_descriptions(spark, j0)
+        assert "build:collect" not in tags and "build:encode" in tags, (name, tags)
+    j0 = _jobs(spark)
+    build_index_store(parquet.filter("doc_id >= 0"), str(tmp_path / "filtered"), **CFG)
+    assert "build:collect" in _job_descriptions(spark, j0)
+    assert _content(spark, str(tmp_path / "local")) == _content(
+        spark, str(tmp_path / "parquet")
+    )
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_first_build_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
+    """The jobs of a resumable first build: the one bounded collect on
+    the driver route; on the distributed route one job per build stage
+    (the input's known row count skips the collect)."""
+    if route == "distributed":
+        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
+    j0 = _jobs(spark)
+    build_index_store(_batch(spark), str(tmp_path / "store"), **CFG)
+    tags = _job_descriptions(spark, j0)
+    if route == "driver":
+        assert tags == ["build:collect"]
+    else:
+        assert set(tags) == {
+            "build:occurrences",
+            "build:forward",
+            "build:field_lengths",
+            "build:term_stats",
+            "build:encode",
+        }, tags
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+# The driver route's publish points, in the order a build reaches them.
+PUBLISH_POINTS = ["forward", "field_lengths", "term_stats", "postings", "meta.json"]
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """What a reader sees of an uninterrupted build of ``_batch``."""
+    out = str(tmp_path_factory.mktemp("uninterrupted"))
+    build_index_store(_batch(spark), out, **CFG)
+    return _content(spark, out)
+
+
+@pytest.mark.parametrize("over", ["first", "rebuild"])
+@pytest.mark.parametrize("point", PUBLISH_POINTS)
+def test_driver_build_killed_at_each_publish(
+    spark, tmp_path, monkeypatch, uninterrupted, point, over
+):
+    """A driver-route build killed at any table publish, or at the
+    meta.json publish, leaves a store that refuses to open, whether it
+    was the first build at its path or a rebuild over an older store
+    (whose meta.json the build withdrew before touching a table). A
+    resume (after a first build) or a rebuild then gives the store of an
+    uninterrupted build."""
+    df = _batch(spark)
+    out = str(tmp_path / "store")
+    if over == "rebuild":
+        build_index_store(_batch(spark, 10, 50, tag=" old"), out, **CFG)
+        assert open_persistent_index(spark, out).n_docs == 40
+
+    def killed(*args, **kwargs):
+        raise OSError("killed")
+
+    real = store_mod.publish_parquet
+
+    def publish(tbl, table_dir, **kwargs):
+        name = os.path.basename(table_dir)
+        if point in (name, os.path.basename(os.path.dirname(table_dir))):
+            killed()
+        return real(tbl, table_dir, **kwargs)
+
+    with monkeypatch.context() as m:
+        if point == "meta.json":
+            m.setattr(store_mod.COMMITTER, "publish_file", killed)
+        else:
+            m.setattr(store_mod, "publish_parquet", publish)
+        with pytest.raises(OSError, match="killed"):
+            build_index_store(df, out, **CFG)
+    with pytest.raises(FileNotFoundError):
+        open_persistent_index(spark, out)
+    build_index_store(df, out, resume=over == "first", **CFG)
+    assert _content(spark, out) == uninterrupted
+
+
+def test_interrupted_distributed_rebuild_refuses_to_open(spark, tmp_path, monkeypatch):
+    """A distributed rebuild withdraws the older store's meta.json before
+    its first write, so one killed before its meta.json publish leaves a
+    store that refuses to open instead of the old meta.json over new
+    tables."""
+    out = str(tmp_path / "store")
+    build_index_store(_batch(spark, 0, 30), out, **CFG)
+
+    def killed(*args, **kwargs):
+        raise OSError("killed")
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
+        m.setattr(store_mod.COMMITTER, "publish_file", killed)
+        with pytest.raises(OSError, match="killed"):
+            build_index_store(_batch(spark, 10, 45, tag=" new"), out, **CFG)
+    with pytest.raises(FileNotFoundError):
+        open_persistent_index(spark, out)
 
 
 def test_merge_routes_build_equal_stores(spark, tmp_path, monkeypatch):
@@ -264,8 +413,10 @@ def test_merges_write_tombstones_on_the_driver(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize("route", ["driver", "distributed"])
 def test_commit_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
     """Every Spark job of an add+delete LuceneCore.commit names its stage:
-    the one bounded collect on the driver route; the build's stages and
-    the tombstone write on the distributed route."""
+    the one bounded collect on the driver route; the collect that
+    overflows, the build's stages and the tombstone write on the
+    distributed route (a bound the batch's one document fits, so the
+    collect is tried, and its rows do not)."""
     core = LuceneCore(spark, str(tmp_path), name="core", n_shards=2)
     core.addDocument({"text": "spark join", "lang": "py"}, identifier="a")
     core.addDocument({"text": "slow table", "lang": "go"}, identifier="b")
@@ -273,7 +424,7 @@ def test_commit_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
     core.addDocument({"text": "fast scan", "lang": "py"}, identifier="c")
     core.delete(identifier="a")
     if route == "distributed":
-        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
+        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 1)
     j0 = _jobs(spark)
     core.commit()
     tags = _job_descriptions(spark, j0)

@@ -14,8 +14,10 @@ import glob
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from test_driver_route import _job_descriptions
 
 from meresco_lucene_spark.core import LuceneCore
+from meresco_lucene_spark.index import store as store_mod
 from meresco_lucene_spark.index.builder import occurrence_frames
 from meresco_lucene_spark.index.incremental import IncrementalIndexStore
 from meresco_lucene_spark.index.store import build_index_store
@@ -76,7 +78,10 @@ def test_occurrence_frames_hand_computed(batch, dl_col):
     }
 
 
-def test_store_build_writes_one_lengths_file_per_input_partition(spark, tmp_path):
+def test_store_build_writes_one_lengths_file_per_input_partition(spark, tmp_path, monkeypatch):
+    """The distributed route writes the lengths table without a shuffle
+    (a bound of 0 keeps the build off the driver route)."""
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     pdf = pd.DataFrame(
         [(i, f"doc {i} text", ["py", "go"][i % 2], f"t{i % 3}") for i in range(40)],
         columns=["doc_id", "text", "lang", "tag"],
@@ -157,3 +162,4 @@ def test_similar_documents_hashes_identifier_without_a_job(spark, tmp_path):
     r = core.similarDocuments("id:1")
     assert "id:2" in [h.id for h in r.hits]
     assert _jobs(spark) - j0 <= SIMILAR_DOCUMENTS_JOBS
+    assert set(_job_descriptions(spark, j0)) == {"mlt:page"}

@@ -28,13 +28,17 @@ FIELD = "content"
 
 @pytest.fixture(scope="module")
 def seg(spark, tmp_path_factory):
+    """The distributed route's store, lineage included (a bound of 0
+    keeps the build off the driver route)."""
     out = str(tmp_path_factory.mktemp("segs") / "idx")
     corpus = synthesize_corpus(spark, N_DOCS, seed=42, partitions=4).persist()
     corpus.count()
-    ix = build_index_store(
-        corpus, out, text_cols=[FIELD], n_shards=N_SHARDS, salt_buckets=SALTS,
-        block_size=32,
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
+        ix = build_index_store(
+            corpus, out, text_cols=[FIELD], n_shards=N_SHARDS, salt_buckets=SALTS,
+            block_size=32,
+        )
     yield ix
     corpus.unpersist()
 
@@ -218,12 +222,14 @@ def logical_content(spark, out_dir):
     return sorted(tuple(r) for r in rows)
 
 
-def test_crash_resume_identical(spark, tmp_path):
-    """Kill-and-rerun (SURVEY §7.2 item 11). Lineage is written after
-    data, so a crash leaves a shard without its lineage row: shard 1 is
-    lost with its row (crash before lineage), shard 2 is partially
-    written with no row (crash mid-write). Resume must rebuild exactly
-    the missing shards and reproduce identical logical content."""
+def test_crash_resume_identical(spark, tmp_path, monkeypatch):
+    """Kill-and-rerun (SURVEY §7.2 item 11) on the distributed route.
+    Lineage is written after data, so a crash leaves a shard without its
+    lineage row: shard 1 is lost with its row (crash before lineage),
+    shard 2 is partially written with no row (crash mid-write). Resume
+    must rebuild exactly the missing shards and reproduce identical
+    logical content."""
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     corpus = synthesize_corpus(spark, 150, seed=9, partitions=2).persist()
     a_dir = str(tmp_path / "a")
     b_dir = str(tmp_path / "b")
@@ -255,9 +261,10 @@ def test_crash_resume_identical(spark, tmp_path):
     corpus.unpersist()
 
 
-def test_resume_noop_when_complete(spark, tmp_path):
-    """Resume over a complete build rebuilds nothing (lineage rows keep
-    their original run_id)."""
+def test_resume_noop_when_complete(spark, tmp_path, monkeypatch):
+    """Resume over a complete distributed build rebuilds nothing
+    (lineage rows keep their original run_id)."""
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     corpus = synthesize_corpus(spark, 60, seed=3, partitions=2)
     d = str(tmp_path / "c")
     kw = dict(text_cols=[FIELD], n_shards=2, salt_buckets=2)
@@ -272,7 +279,9 @@ def test_resume_noop_when_complete(spark, tmp_path):
 def test_lineage_observation_matches_readback(spark, tmp_path, monkeypatch):
     """Small builds compute lineage rows as write-riding Observation
     aggregates instead of a read-back job; the rows must be IDENTICAL
-    (schema and values) to the read-back aggregation they replace."""
+    (schema and values) to the read-back aggregation they replace. Both
+    builds take the distributed route, the one that records lineage."""
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     corpus = synthesize_corpus(spark, 80, seed=5, partitions=4)
     a = str(tmp_path / "obs")
     b = str(tmp_path / "readback")

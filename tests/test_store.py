@@ -319,17 +319,20 @@ def _store_logical_content(spark, out_dir):
     return sorted(tuple(r) for r in rows)
 
 
-def test_store_crash_resume_identical(spark, tmp_path):
+def test_store_crash_resume_identical(spark, tmp_path, monkeypatch):
     """Kill-and-rerun for the persistent store (same lineage contract as
-    segments): wipe one shard fully (data+lineage) and leave another
-    partially written with no lineage row; resume must re-encode exactly
-    the missing shards and reproduce identical logical content."""
+    segments) on the distributed route: wipe one shard fully
+    (data+lineage) and leave another partially written with no lineage
+    row; resume must re-encode exactly the missing shards and reproduce
+    identical logical content."""
     import glob
     import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F2
+
+    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
 
     pdf = pd.DataFrame(
         {

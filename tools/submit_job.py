@@ -97,13 +97,12 @@ def main() -> int:
         }
         sha_ok = got == expected
 
-        lineage = spark.read.parquet(f"{args.out}/lineage")
         print(
             json.dumps(
                 {
                     "n": args.n,
                     "seed": args.seed,
-                    "n_shards_built": lineage.select("shard").distinct().count(),
+                    "n_shards_built": idx.blocks.select("shard").distinct().count(),
                     "term": args.term,
                     "term_topk": term_top,
                     "or_terms": or_terms,
