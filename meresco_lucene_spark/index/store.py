@@ -131,16 +131,15 @@ SMALL_BUILD_OCC = 2_000_000
 # A build collects its tokenized rows to the driver in one Spark job,
 # reading at most this many plus one; when they fit, the driver encodes
 # and writes the store (the DRIVER route of build_index_store), else the
-# build takes the distributed route. An input whose row count the plan
-# gives without a job (build_input_rows) and that alone exceeds this
-# skips the collect. Occurrences are nearly all of the rows. Measured
-# on a 4-core host, local[2], code-corpus batches: the driver route
-# built 4.4k occurrences in 0.30 s against 1.41 s distributed, 187k in
-# 0.86 s against 1.59 s, 929k in 3.14 s against 4.43 s and 1.24M in
-# 5.9 s against 7.5 s (local[4]: 929k in 3.6 s against 4.2 s), so the
-# crossover lies above 1.2M; its driver process peaked at 435 MB RSS
-# at 929k. Over the bound a build pays for the failed collect (2.7 s
-# more at 1.24M), so the bound sits below the crossover, not at it.
+# build takes the distributed route. Occurrences are nearly all of the
+# rows. Measured on a 4-core host, local[2], code-corpus batches: the
+# driver route built 4.4k occurrences in 0.30 s against 1.41 s
+# distributed, 187k in 0.86 s against 1.59 s, 929k in 3.14 s against
+# 4.43 s and 1.24M in 5.9 s against 7.5 s (local[4]: 929k in 3.6 s
+# against 4.2 s), so the crossover lies above 1.2M; its driver process
+# peaked at 435 MB RSS at 929k. Over the bound a build pays for the
+# failed collect (2.7 s more at 1.24M), so the bound sits below the
+# crossover, not at it.
 DRIVER_BUILD_ROWS = 1_000_000
 
 # A search() whose terms' summed df is at most this — and the doc count
@@ -621,20 +620,16 @@ def _field_params(field_stats_meta: dict) -> dict[str, tuple[int, float]]:
 
 def parquet_options(spark: SparkSession) -> dict:
     """pyarrow write options for the store's tables: the session's
-    parquet codec (zstd at parquet-mr's default level 3, where pyarrow's
-    is 1), and no serialized Arrow schema in the footer (Spark reads the
-    Parquet schema; the Arrow copy made a small generation's files a
-    sixth larger than Spark's)."""
+    parquet codec, and no serialized Arrow schema in the footer (Spark
+    reads the Parquet schema; the Arrow copy made a small generation's
+    files a sixth larger than Spark's)."""
     codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
-    opts = {
+    return {
         "compression": {"uncompressed": "none", "lz4raw": "lz4", "lz4_raw": "lz4"}.get(
             codec, codec
         ),
         "store_schema": False,
     }
-    if codec == "zstd":
-        opts["compression_level"] = 3
-    return opts
 
 
 # ------------------------------------------------------- driver route
@@ -684,34 +679,6 @@ def _collect_build_rows(
         part(1, ["field", "doc_id", "dl", "norm_dl"]),
         pa.Table.from_struct_array(part(2, ["_fwd"]).column("_fwd")),
     )
-
-
-def build_input_rows(df: DataFrame) -> int | None:
-    """The row count of a build's input when its plan gives it without a
-    Spark job, else None: the rows of a local relation, or the parquet
-    footers' row counts of a scan of local parquet files, under nothing
-    but projections and repartitions (which keep every row). A filter,
-    join or limit anywhere below the top makes the count unknown."""
-    from urllib.parse import urlparse
-    from urllib.request import url2pathname
-
-    plan = df._jdf.queryExecution().analyzed()
-    while plan.nodeName() in ("Project", "SubqueryAlias", "Repartition",
-                              "RepartitionByExpression"):
-        plan = plan.child()
-    name = plan.nodeName()
-    if name == "LocalRelation":
-        return int(plan.data().size())
-    if not (
-        name == "LogicalRelation"
-        and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
-        and plan.relation().fileFormat().toString() == "Parquet"
-    ):
-        return None
-    files = [urlparse(f) for f in df.inputFiles()]
-    if any(u.scheme != "file" for u in files):
-        return None
-    return sum(pq.read_metadata(url2pathname(u.path)).num_rows for u in files)
 
 
 def term_hashes(spark: SparkSession, pairs: pa.Table) -> np.ndarray:
@@ -834,9 +801,9 @@ def build_index_store(
       per table, each published by rename, meta.json last. A small
       build is then one Spark job instead of a dozen, each with its
       planning and file-commit overhead (the reference flushes a small
-      batch as one small segment, Lucene.java:183-214). An input known
-      to be over the bound before any job (build_input_rows) skips the
-      collect.
+      batch as one small segment, Lucene.java:183-214). A build over
+      the bound pays for the collect that overflows before it goes
+      distributed.
     * the DISTRIBUTED route, for larger builds: one tokenize pass
       materialized to a parquet intermediate (no in-memory caching of
       the positions-heavy postings — disk-backed intermediates keep
@@ -933,12 +900,10 @@ def build_index_store(
         # by shard; every other build is routed by size
         resumes_shards = resume and parquet_rows(os.path.join(out_dir, "lineage")) > 0
         if rows is None and not resumes_shards:
-            known = build_input_rows(forward)
-            if known is None or known <= DRIVER_BUILD_ROWS:
-                with stage(spark, "collect"):
-                    rows = _collect_build_rows(
-                        occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
-                    )
+            with stage(spark, "collect"):
+                rows = _collect_build_rows(
+                    occurrences_lazy, lengths_lazy, forward, DRIVER_BUILD_ROWS
+                )
         if rows is not None:
             _build_on_driver(
                 spark, out_dir, *rows,

@@ -5,12 +5,11 @@ alike) collects the build's occurrence, length and forward rows in one
 bounded Spark job; when they fit ``DRIVER_BUILD_ROWS``, the driver
 encodes them with the same ``_encode`` as the distributed route and
 writes the tables with pyarrow. Both routes build the same store, with
-or without lineage and on a resume, the bound decides the route (an
-input known to be over it skips the collect), every driver-written
-table reads back under its recorded schema, a build or commit killed at
-any table write leaves no openable half-store, merges write their
-tombstones on the driver, and every job of a build or commit carries a
-stage tag."""
+or without lineage and on a resume, the bound decides the route, every
+driver-written table reads back under its recorded schema, a build or
+commit killed at any table write leaves no openable half-store, merges
+write their tombstones on the driver, and every job of a build or
+commit carries a stage tag."""
 
 import datetime
 import decimal
@@ -138,39 +137,11 @@ def test_routes_build_equal_stores(spark, tmp_path, monkeypatch, settings):
     assert _content(spark, resumable) == want
 
 
-def test_known_input_over_bound_skips_the_collect(spark, tmp_path, monkeypatch):
-    """An input whose row count the plan gives without a job (a local
-    relation, or parquet footers under projections) and whose documents
-    alone exceed the bound goes straight to the distributed route: no
-    ``build:collect`` job runs. An input of unknown count (filtered)
-    still tries the collect."""
-    df = _batch(spark)
-    df.write.parquet(str(tmp_path / "input"))
-    parquet = spark.read.parquet(str(tmp_path / "input"))
-    j0 = _jobs(spark)
-    assert store_mod.build_input_rows(df) == 40
-    assert store_mod.build_input_rows(parquet.withColumnRenamed("doc_id", "id")) == 40
-    assert store_mod.build_input_rows(parquet.filter("doc_id < 30")) is None
-    assert _jobs(spark) == j0
-    monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 39)
-    for name, frame in (("local", df), ("parquet", parquet)):
-        j0 = _jobs(spark)
-        build_index_store(frame, str(tmp_path / name), **CFG)
-        tags = _job_descriptions(spark, j0)
-        assert "build:collect" not in tags and "build:encode" in tags, (name, tags)
-    j0 = _jobs(spark)
-    build_index_store(parquet.filter("doc_id >= 0"), str(tmp_path / "filtered"), **CFG)
-    assert "build:collect" in _job_descriptions(spark, j0)
-    assert _content(spark, str(tmp_path / "local")) == _content(
-        spark, str(tmp_path / "parquet")
-    )
-
-
 @pytest.mark.parametrize("route", ["driver", "distributed"])
 def test_first_build_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
     """The jobs of a resumable first build: the one bounded collect on
-    the driver route; on the distributed route one job per build stage
-    (the input's known row count skips the collect)."""
+    the driver route; on the distributed route the collect that
+    overflows, then one job per build stage."""
     if route == "distributed":
         monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     j0 = _jobs(spark)
@@ -180,6 +151,7 @@ def test_first_build_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
         assert tags == ["build:collect"]
     else:
         assert set(tags) == {
+            "build:collect",
             "build:occurrences",
             "build:forward",
             "build:field_lengths",
@@ -413,10 +385,8 @@ def test_merges_write_tombstones_on_the_driver(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize("route", ["driver", "distributed"])
 def test_commit_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
     """Every Spark job of an add+delete LuceneCore.commit names its stage:
-    the one bounded collect on the driver route; the collect that
-    overflows, the build's stages and the tombstone write on the
-    distributed route (a bound the batch's one document fits, so the
-    collect is tried, and its rows do not)."""
+    the one bounded collect on the driver route; the build's stages and
+    the tombstone write on the distributed route."""
     core = LuceneCore(spark, str(tmp_path), name="core", n_shards=2)
     core.addDocument({"text": "spark join", "lang": "py"}, identifier="a")
     core.addDocument({"text": "slow table", "lang": "go"}, identifier="b")
@@ -424,7 +394,7 @@ def test_commit_jobs_carry_stage_tags(spark, tmp_path, monkeypatch, route):
     core.addDocument({"text": "fast scan", "lang": "py"}, identifier="c")
     core.delete(identifier="a")
     if route == "distributed":
-        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 1)
+        monkeypatch.setattr(store_mod, "DRIVER_BUILD_ROWS", 0)
     j0 = _jobs(spark)
     core.commit()
     tags = _job_descriptions(spark, j0)
