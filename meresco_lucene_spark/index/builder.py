@@ -20,8 +20,8 @@ precomputed at build time into ``field_lengths.norm_dl`` so query-time
 scoring is pure column arithmetic.
 
 The index itself (shard-partitioned Parquet list-column blocks that
-carry each posting's document length, block-max scores for WAND,
-lineage rows for resume) is ``index/store.py``, which builds from
+carry each posting's document length and positions, lineage rows for
+resume) is ``index/store.py``, which builds from
 :func:`occurrence_frames` and is what every query operator reads.
 
 Doc ids must be *stable* (a pure function of the input, never of

@@ -2,8 +2,8 @@
 
 The engine's one durable index: build once from the input rows, reopen
 in any session, query everything — term, boolean, phrase, prefix,
-facets, sort, dedup, composed queries and the block-max WAND top-k —
-with no re-tokenization. This reproduces the reference's durable
+facets, sort, dedup, composed queries and top-k — with no
+re-tokenization. This reproduces the reference's durable
 commit -> search contract (Lucene.java:920-945, refresh :899-907): one
 build = one commit = one queryable snapshot.
 
@@ -12,9 +12,9 @@ Layout under ``out_dir``:
   field_lengths/  (field, doc_id, dl, norm_dl)
   term_stats/     (field, term, df, cf, base_shard, n_salts)
   postings/       partitioned by shard:
-                  (field, term, block_id, doc_count, min_doc, max_doc,
-                   block_max_score, doc_ids array<bigint>, tfs array<int>,
-                   dls array<int>, positions array<array<int>>)
+                  (field, term, block_id, doc_count, doc_ids array<bigint>,
+                   tfs array<int>, dls array<int>,
+                   positions array<array<int>>)
   lineage/        (shard, n_terms, term_min, term_max, n_blocks,
                    n_postings, bytes, content_xxh64_sum, run_id)
   meta.json       {snapshot, n_docs, field_stats, facet_fields, k1, b,
@@ -43,10 +43,9 @@ Sharding & skew: ``base_shard = xxhash64(field, term) % n_shards``
 (JVM-side, deterministic across sessions, so resume is safe). A term
 whose df reaches ``hot_df_fraction * N`` is *salted*: its postings
 spread over ``salt_buckets`` consecutive shards (``(base_shard + doc_id
-% n_salts) % n_shards``), so no single encode task or WAND pool
-swallows a whole hot posting list. term_stats records base_shard and
-n_salts, so every exact-term read — scoring and WAND alike — looks its
-terms up there and scans only their shards.
+% n_salts) % n_shards``), so no single encode task swallows a whole
+hot posting list. term_stats records base_shard and n_salts, so every
+exact-term read looks its terms up there and scans only their shards.
 
 Crash safety: a build first removes the store's meta.json, then writes
 its tables, and publishes meta.json last, so a store whose build was
@@ -103,12 +102,11 @@ from meresco_lucene_spark.columns import qcol, sql_literal
 from meresco_lucene_spark.index import wand
 from meresco_lucene_spark.index.builder import FieldStats
 from meresco_lucene_spark.index.committer import COMMITTER
-from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT, bm25_score_numpy
+from meresco_lucene_spark.query.bm25 import B_DEFAULT, K1_DEFAULT
 from meresco_lucene_spark.session import in_stage, stage
 
 STORE_POSTINGS_SCHEMA = (
     "shard int, field string, term string, block_id int, doc_count int, "
-    "min_doc long, max_doc long, block_max_score double, "
     "doc_ids array<bigint>, tfs array<int>, dls array<int>, "
     "positions array<array<int>>"
 )
@@ -171,24 +169,18 @@ def value_changes(values: pa.Array) -> np.ndarray:
 
 
 def block_layout(
-    run_start: np.ndarray, hot_df: np.ndarray, block_size: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    run_start: np.ndarray, block_size: int
+) -> tuple[np.ndarray, np.ndarray]:
     """Cut term-sorted, doc-sorted postings into blocks.
 
-    ``run_start`` marks the first posting of each term run; ``hot_df``
-    is the broadcast df of salted hot terms (NaN elsewhere). A
-    non-salted term's postings all sit in one shard, so its df IS its
-    run length. Returns (block start indices, block_id per block, df per
-    posting)."""
+    ``run_start`` marks the first posting of each term run. Returns
+    (block start indices, block_id per block)."""
     n = len(run_start)
     run_ids = np.cumsum(run_start) - 1
     run_starts_idx = np.flatnonzero(run_start)
-    run_sizes = np.diff(np.append(run_starts_idx, n)).astype(np.float64)
-    hot_run = hot_df[run_starts_idx]
-    dfs = np.where(np.isnan(hot_run), run_sizes, hot_run)[run_ids]
     pos_in_run = np.arange(n) - run_starts_idx[run_ids]
     starts = np.flatnonzero(run_start | (pos_in_run % block_size == 0))
-    return starts, (pos_in_run // block_size)[starts].astype(np.int32), dfs
+    return starts, (pos_in_run // block_size)[starts].astype(np.int32)
 
 
 def block_columns(
@@ -196,24 +188,19 @@ def block_columns(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    scores: np.ndarray,
     positions: pa.Array,
 ) -> dict:
     """Per-block columns of the block format, the list columns built
     from offsets over the posting arrays (no per-posting Python);
     ``positions`` holds one position list per posting."""
-    n = len(doc_ids)
-    ends = np.append(starts[1:], n)
-    offsets = pa.array(np.append(starts, n).astype(np.int32))
+    bounds = np.append(starts, len(doc_ids))
+    offsets = pa.array(bounds.astype(np.int32))
 
     def lists(values):
         return pa.ListArray.from_arrays(offsets, values)
 
     return {
-        "doc_count": (ends - starts).astype(np.int32),
-        "min_doc": doc_ids[starts],
-        "max_doc": doc_ids[ends - 1],
-        "block_max_score": np.maximum.reduceat(scores, starts),
+        "doc_count": np.diff(bounds).astype(np.int32),
         "doc_ids": lists(pa.array(doc_ids, pa.int64())),
         "tfs": lists(pa.array(tfs, pa.int32())),
         "dls": lists(pa.array(dls, pa.int32())),
@@ -475,23 +462,15 @@ def write_lineage_rows(rows: list[tuple], lin_dir: str) -> None:
 # -------------------------------------------------------------- encode
 
 
-def _encode(
-    tbl: pa.Table,
-    shard: int,
-    field_params: dict[str, tuple[int, float]],
-    block_size: int,
-    k1: float,
-    b: float,
-) -> pa.Table:
-    """One shard's RAW OCCURRENCE rows (field, term, doc_id, pos, _dl,
-    _hot_df) -> its posting blocks (STORE_POSTINGS_SCHEMA), in
-    whole-shard Arrow/numpy passes: one sort and run-length pass derive
-    the postings (tf = occurrences per doc, the sorted position list =
-    the run's positions), then block boundaries and scores, and the list
-    columns are built from offsets — no per-posting or per-block Python.
-    ``field_params``: field -> (n_docs, avgdl) of the build. Both build
-    routes call it: per shard in an ``applyInArrow`` task, or per shard
-    on the driver."""
+def _encode(tbl: pa.Table, shard: int, block_size: int) -> pa.Table:
+    """One shard's RAW OCCURRENCE rows (field, term, doc_id, pos, _dl)
+    -> its posting blocks (STORE_POSTINGS_SCHEMA), in whole-shard
+    Arrow/numpy passes: one sort and run-length pass derive the postings
+    (tf = occurrences per doc, the sorted position list = the run's
+    positions), then block boundaries, and the list columns are built
+    from offsets — no per-posting or per-block Python. Both build routes
+    call it: per shard in an ``applyInArrow`` task, or per shard on the
+    driver."""
     tbl = tbl.take(
         pc.sort_indices(
             tbl,
@@ -517,20 +496,7 @@ def _encode(
     doc_ids = docs_o[p_idx]
     tfs = np.diff(p_bounds)
     dls = tbl.column("_dl").to_numpy()[p_idx]
-    hot_df = pc.fill_null(tbl.column("_hot_df"), np.nan).to_numpy()[p_idx]
-    starts, block_ids, dfs = block_layout(new_run[p_idx], hot_df, block_size)
-
-    # per-field BM25 bound per posting -> block max (used only by
-    # WAND-style pruning; harmless for TermFrequency similarity)
-    fields = fields_o.take(p_idx)
-    scores = np.zeros(len(p_idx), dtype=np.float64)
-    for f, (f_n, f_avgdl) in field_params.items():
-        m = pc.equal(fields, f).to_numpy(zero_copy_only=False)
-        if m.any():
-            scores[m] = bm25_score_numpy(
-                tfs[m].astype(float), dfs[m], dls[m].astype(float),
-                f_n, f_avgdl, k1, b,
-            )
+    starts, block_ids = block_layout(new_run[p_idx], block_size)
     positions = pa.ListArray.from_arrays(
         pa.array(p_bounds.astype(np.int32)),
         pa.array(tbl.column("pos").to_numpy(), pa.int32()),
@@ -538,10 +504,10 @@ def _encode(
     return pa.table(
         {
             "shard": np.full(len(starts), shard, dtype=np.int32),
-            "field": fields.take(starts),
+            "field": fields_o.take(p_idx[starts]),
             "term": terms_o.take(p_idx[starts]),
             "block_id": block_ids,
-            **block_columns(starts, doc_ids, tfs, dls, scores, positions),
+            **block_columns(starts, doc_ids, tfs, dls, positions),
         }
     )
 
@@ -608,13 +574,6 @@ def _field_stats_meta(stat_rows, omit: set[str]) -> dict:
             "omit_norms": r["field"] in omit,
         }
         for r in stat_rows
-    }
-
-
-def _field_params(field_stats_meta: dict) -> dict[str, tuple[int, float]]:
-    return {
-        f: (d["n_docs"], d["sum_dl"] / d["n_docs"] if d["n_docs"] else 1.0)
-        for f, d in field_stats_meta.items()
     }
 
 
@@ -723,39 +682,27 @@ def _driver_term_stats(
     return tstats.sort_by([("field", "ascending"), ("term", "ascending")])
 
 
-def _driver_postings(
-    occ: pa.Table,
-    tstats: pa.Table,
-    n_shards: int,
-    field_params: dict[str, tuple[int, float]],
-    block_size: int,
-    k1: float,
-    b: float,
-):
+def _driver_postings(occ: pa.Table, tstats: pa.Table, n_shards: int, block_size: int):
     """(shard, blocks) of the collected occurrences: each occurrence's
     shard computed as the distributed route's column expression
     computes it, then the shard's rows through :func:`_encode`."""
     hot = tstats.filter(pc.greater(tstats.column("n_salts"), 1))
     if hot.num_rows:
-        hot = hot.select(["field", "term", "df", "n_salts"]).rename_columns(
-            ["field", "term", "_hot_df", "_hot_salts"]
+        hot = hot.select(["field", "term", "n_salts"]).rename_columns(
+            ["field", "term", "_hot_salts"]
         )
         occ = occ.join(hot, ["field", "term"], join_type="left outer")
-        hot_df = occ.column("_hot_df").cast(pa.float64())
         salts = pc.fill_null(occ.column("_hot_salts"), 1).to_numpy()
     else:
-        hot_df = pa.nulls(occ.num_rows, pa.float64())
         salts = 1
     shard = (
         np.mod(occ.column("_h").to_numpy(), n_shards)
         + np.mod(occ.column("doc_id").to_numpy(), salts)
     ) % n_shards
-    occ = occ.select(["field", "term", "doc_id", "pos", "_dl"]).append_column(
-        "_hot_df", hot_df
-    )
+    occ = occ.select(["field", "term", "doc_id", "pos", "_dl"])
     for s in np.unique(shard):
         rows = occ.filter(pa.array(shard == s))
-        yield int(s), _encode(rows, int(s), field_params, block_size, k1, b)
+        yield int(s), _encode(rows, int(s), block_size)
 
 
 # -------------------------------------------------------------------- build
@@ -1007,10 +954,7 @@ def _build_on_driver(
     publish_parquet(tstats, os.path.join(out_dir, "term_stats"), **opts)
     post_dir = os.path.join(out_dir, "postings")
     os.makedirs(post_dir)
-    blocks = _driver_postings(
-        occ, tstats, n_shards, _field_params(field_stats),
-        settings["block_size"], settings["k1"], settings["b"],
-    )
+    blocks = _driver_postings(occ, tstats, n_shards, settings["block_size"])
     for s, shard_blocks in blocks:
         # the shard is the directory, as in a partitionBy("shard") write
         shard_blocks = shard_blocks.drop_columns(["shard"])
@@ -1050,7 +994,7 @@ def _build_distributed(
 
     from pyspark import StorageLevel
 
-    block_size, k1, b = settings["block_size"], settings["k1"], settings["b"]
+    block_size = settings["block_size"]
     flat_dir = os.path.join(out_dir, "_flat_postings")
     post_dir = os.path.join(out_dir, "postings")
     lin_dir = os.path.join(out_dir, "lineage")
@@ -1202,28 +1146,23 @@ def _build_distributed(
             )
             tstats_src = tstats_cached
 
-        # The encode needs per-term facts (base_shard, n_salts, df) but
-        # joining the full term_stats frame for them shuffled every
-        # occurrence row by (field, term) — a second corpus-scale
-        # exchange (guide §2.4). base_shard is a pure hash (column
-        # expression); only the few HOT terms (broadcast-small by
+        # The shard of an occurrence needs its term's base_shard and
+        # n_salts, but joining the full term_stats frame for them
+        # shuffled every occurrence row by (field, term) — a second
+        # corpus-scale exchange (guide §2.4). base_shard is a pure hash
+        # (column expression); only the few HOT terms (broadcast-small by
         # construction: at most ~sum_dl/(hot_df_fraction*n_docs) of
-        # them) carry their df and salt count via a broadcast left
-        # join; a non-salted (field, term)'s occurrences all land in
-        # ONE shard, so its true df is its in-task posting-run length.
-        # With salting disabled (small builds) the encode reads nothing
-        # from term_stats at all and runs concurrent with its write.
+        # them) carry their salt count via a broadcast left join. With
+        # salting disabled (small builds) the encode reads nothing from
+        # term_stats at all and runs concurrent with its write.
         if salt_buckets > 1:
             hot = tstats_src.filter(F.col("n_salts") > 1).select(
-                "field",
-                "term",
-                F.col("df").cast("double").alias("_hot_df"),
-                F.col("n_salts").alias("_hot_salts"),
+                "field", "term", F.col("n_salts").alias("_hot_salts")
             )
             flat = flat_postings.join(F.broadcast(hot), ["field", "term"], "left")
             n_salts_c = F.coalesce(F.col("_hot_salts"), F.lit(1))
         else:
-            flat = flat_postings.withColumn("_hot_df", F.lit(None).cast("double"))
+            flat = flat_postings
             n_salts_c = F.lit(1)
         flat = flat.withColumn(
             "shard",
@@ -1280,7 +1219,6 @@ def _build_distributed(
                     .collect()
                 )
         field_stats = _field_stats_meta(stat_rows, omit)
-        field_params = _field_params(field_stats)
 
         if remaining:
             # dispersed shard exchange + projection before it: see
@@ -1295,7 +1233,6 @@ def _build_distributed(
                     "doc_id",
                     "pos",
                     F.col("_dl").cast("int").alias("_dl"),
-                    "_hot_df",
                 )
                 .repartition(
                     shard_dispersion_partitions(
@@ -1307,9 +1244,7 @@ def _build_distributed(
                 # (key, pyarrow.Table) -> pyarrow.Table, left unannotated:
                 # applyInArrow picks its calling mode from type hints
                 .applyInArrow(
-                    lambda key, tbl: _encode(
-                        tbl, key[0].as_py(), field_params, block_size, k1, b
-                    ),
+                    lambda key, tbl: _encode(tbl, key[0].as_py(), block_size),
                     schema=STORE_POSTINGS_SCHEMA,
                 )
             )
@@ -1573,10 +1508,10 @@ class PersistentIndex:
 
     # ------------------------------------------------- term dictionary
     # Every exact-term read goes through the handle's term dictionary:
-    # the scorers of query/executor.py take df from term_dfs (a map
-    # constant in the plan) and read term_postings, and the WAND top-k below prunes the same
-    # way (index/wand.py; rank- and score-identical to exhaustive scoring,
-    # tested in test_store.py and test_segments.py).
+    # the Spark route's scorers (query/executor.py) take df from
+    # term_dfs (a map constant in the plan) and read term_postings; the
+    # driver route (query/driver.py) takes df the same way and reads the
+    # terms' shard files from term_files.
 
     def _term_meta(self, fld: str, terms: list[str]) -> dict[str, tuple]:
         """term -> (df, base_shard, n_salts) for the terms of ``terms``
@@ -1646,27 +1581,14 @@ class PersistentIndex:
             & F.col("term").isin(list(self.term_dfs(fld, terms)))
         )
 
-    def _topk(self, fld: str, terms: list[str], k: int, multi) -> DataFrame:
-        """Top-k over the blocks of the present ``terms``: ``multi``
-        (wand.or_topk or wand.and_topk) for two or more terms, else the
-        single-term path (empty when no term is present)."""
-        st = self.field_stats(fld)
-        params = wand.WandParams(st.n_docs, st.avgdl, self.k1, self.b)
-        blocks = self.term_blocks(fld, terms)
-        dfs = self.term_dfs(fld, terms)
-        if len(dfs) <= 1:
-            df_t = next(iter(dfs.values()), None)
-            return wand.term_topk(self.spark, blocks, df_t, params, k)
-        return multi(self.spark, blocks, dfs, params, k)
+    # ------------------------------------------------- top-k
+    # one search() each (index/wand.py)
 
     def term_topk(self, fld: str, term: str, k: int = 10) -> DataFrame:
-        return self.or_topk(fld, [term], k)
+        return wand.term_topk(self, fld, term, k)
 
     def or_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        return self._topk(fld, terms, k, wand.or_topk)
+        return wand.or_topk(self, fld, terms, k)
 
     def and_topk(self, fld: str, terms: list[str], k: int = 10) -> DataFrame:
-        if len(self.term_dfs(fld, terms)) < len(set(terms)):
-            # a missing term: no conjunction
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return self._topk(fld, terms, k, wand.and_topk)
+        return wand.and_topk(self, fld, terms, k)

@@ -1,410 +1,37 @@
-"""Block-max WAND top-k over the posting blocks of the persistent store
-(store.py; ``PersistentIndex.term_topk``/``or_topk``/``and_topk``).
+"""BM25 top-k over one field of a store, as a (doc_id, score) frame:
+``PersistentIndex.term_topk``/``or_topk``/``and_topk`` (store.py).
 
-All functions operate on a BLOCK FRAME: a DataFrame with at least
-(term, shard, min_doc, max_doc, block_max_score, doc_ids, tfs, dls) —
-the store's block format (native Parquet list columns), where
-each block carries its own dl list so scoring needs no side lookup (no
-docs-table broadcast at any scale). Exhaustive decode and scoring are
-JVM expressions (``posexplode`` + ``bm25_score_expr``); only the pruning
-passes (per-(term, shard) WAND pools, the candidate rescore) run in
-pandas, reading the block arrays directly.
-
-The distributed block-max WAND adaptation (docstrings on or_topk):
-postings of different terms live in different partitions, so Lucene's
-document-at-a-time pointer walk doesn't apply; instead a pooled
-per-(term, shard) WAND pass bounds θ, block-level bounds prune, and
-survivors are re-scored exactly. Every path is rank- AND score-identical
-to exhaustive scoring (property-tested in tests/test_segments.py and
-tests/test_store.py).
-
-Hot-term safety: the pool groups by (term, shard), NOT term alone. The
-build salts hot terms across ``salt_buckets`` consecutive shards
-(see the store.py docstring) precisely so no task swallows a hot
-posting list; pooling per (term, shard) preserves that: each task sees
-at most one salt-shard of one term, and the driver-side θ phase merges
-the per-shard pools (a doc's postings for a term live in exactly ONE
-salt shard — shard = base + doc_id % n_salts — so per-doc sums over
-pooled rows never double-count). Inside a pool, block score arrays are accumulated and
-compressed with a vectorized numpy lexsort top-k — no per-posting Python
-loop.
+Each is one ``search()`` (query/executor.py) over a TermQuery, or over a
+SHOULD or MUST BooleanQuery of the distinct terms, with ``stop=k``: the
+driver route answers it with no Spark job when the terms' postings fit
+``DRIVER_QUERY_POSTINGS``, the Spark route's exhaustive scorer
+otherwise. The hits come in (score desc, doc_id asc) order, as a local
+relation.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from pyspark.sql import DataFrame
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from meresco_lucene_spark.query.bm25 import bm25_score_expr, bm25_score_numpy
-from meresco_lucene_spark.query.executor import by_term_sql
-
-TOPK_SCHEMA = "doc_id long, score double"
-
-# or_topk collects the candidate doc-id set to the driver (sorted numpy
-# array, broadcast) to prune the exact rescore by block doc-range overlap.
-# Above this cap it falls back to the full-scan semi-join (correct, just
-# un-pruned). 2M int64 ids = 16 MB broadcast — safe for any driver.
-CANDIDATE_BROADCAST_CAP = 2_000_000
-
-# Below this many TOTAL postings (sum of the query terms' df), OR/AND
-# top-k skip the multi-job WAND pipeline (pool -> θ -> candidates ->
-# rescore) and run ONE exhaustive decode-score-aggregate job: decoding
-# a couple of million postings is millisecond-scale numpy work spread
-# over the cluster, while each extra job is a full driver round-trip.
-# Rank/score-identical by construction (exhaustive IS the oracle
-# definition); WAND pruning still kicks in for the hot posting lists
-# where it matters. Scale-adaptive (driven by df, not core count).
-EXHAUSTIVE_CAP = 2_000_000
+from meresco_lucene_spark.query import executor
+from meresco_lucene_spark.query.ir import Q
+from meresco_lucene_spark.session import local_frame
 
 
-@dataclass(frozen=True)
-class WandParams:
-    n_docs: int
-    avgdl: float
-    k1: float
-    b: float
-
-
-def _empty(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], TOPK_SCHEMA)
-
-
-def _topk_compress(
-    scores: np.ndarray, docs: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k by (-score, doc_id) — the exact tie order of the collectors.
-    Returns arrays sorted in that order (so scores[k-1] is the threshold)."""
-    order = np.lexsort((docs, -scores))
-    if len(order) > k:
-        order = order[:k]
-    return scores[order], docs[order]
-
-
-def _exploded(blocks: DataFrame, *cols: str) -> DataFrame:
-    """One row per posting: ``posexplode`` of the doc ids, carrying the
-    block columns ``cols`` (index them at ``_i``)."""
-    return blocks.select(*cols, F.posexplode("doc_ids").alias("_i", "doc_id"))
-
-
-def decode_blocks(blocks: DataFrame) -> DataFrame:
-    """Blocks -> (doc_id, tf) rows, a JVM projection."""
-    return _exploded(blocks, "tfs").select(
-        "doc_id", F.col("tfs")[F.col("_i")].cast("long").alias("tf")
+def _topk(index, q: Q, k: int) -> DataFrame:
+    hits = executor.search(index, q, stop=k).hits
+    return local_frame(
+        index.spark, [(h.id, h.score) for h in hits], "doc_id long, score double"
     )
 
 
-def scores_for_blocks(
-    blocks: DataFrame, dfs: dict[str, int], params: WandParams
-) -> DataFrame:
-    """Exact (doc_id, score) for every posting in the block frame. Each
-    term's df, and the field's n_docs and avgdl, are lookups by the
-    block's term projected below the score (executor._bm25_postings
-    explains why: numbers in the score would be code, compiled anew
-    for every query)."""
-    terms = list(dfs)
-    p = _exploded(blocks, "term", "tfs", "dls").selectExpr(
-        "doc_id",
-        "tfs[_i] AS _tf",
-        "dls[_i] AS _dl",
-        by_term_sql({t: float(dfs[t]) for t in terms}) + " AS _df",
-        by_term_sql({t: params.n_docs for t in terms}) + " AS _n",
-        by_term_sql({t: params.avgdl for t in terms}) + " AS _a",
-    )
-    return p.select(
-        "doc_id",
-        bm25_score_expr(
-            F.col("_tf"), F.col("_df"), F.col("_dl"), F.col("_n"), F.col("_a"),
-            params.k1, params.b,
-        ).alias("score"),
-    )
+def term_topk(index, fld: str, term: str, k: int = 10) -> DataFrame:
+    return _topk(index, Q.term(fld, term), k)
 
 
-def _candidate_scores(
-    blocks: DataFrame,
-    dfs: dict[str, int],
-    params: WandParams,
-    cand_bc,
-) -> DataFrame:
-    """Exact (doc_id, score) restricted to a broadcast sorted candidate-id
-    array: blocks whose [min_doc, max_doc] contains no candidate are
-    skipped WITHOUT decoding (the θ-pruning payoff the full-scan rescore
-    was missing), and decoded postings are intersected against the
-    candidates before they ever hit the shuffle."""
-    n, avgdl, k1, b = params.n_docs, params.avgdl, params.k1, params.b
-
-    def _score(it):
-        cands = cand_bc.value  # sorted int64
-        for pdf in it:
-            docs_out, score_out = [], []
-            for row in pdf.itertuples(index=False):
-                lo = np.searchsorted(cands, row.min_doc, side="left")
-                hi = np.searchsorted(cands, row.max_doc, side="right")
-                if lo >= hi:
-                    continue
-                doc_ids = row.doc_ids
-                sub = cands[lo:hi]
-                idx = np.searchsorted(sub, doc_ids)
-                idx[idx >= len(sub)] = len(sub) - 1
-                mask = sub[idx] == doc_ids
-                if not mask.any():
-                    continue
-                scores = bm25_score_numpy(
-                    row.tfs[mask].astype(float),
-                    float(dfs[row.term]),
-                    row.dls[mask].astype(float),
-                    n,
-                    avgdl,
-                    k1,
-                    b,
-                )
-                docs_out.append(doc_ids[mask])
-                score_out.append(scores)
-            if docs_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_out),
-                        "score": np.concatenate(score_out),
-                    }
-                )
-
-    return blocks.select(
-        "term", "min_doc", "max_doc", "doc_ids", "tfs", "dls"
-    ).mapInPandas(_score, schema=TOPK_SCHEMA)
+def or_topk(index, fld: str, terms: list[str], k: int = 10) -> DataFrame:
+    return _topk(index, Q.or_(*[Q.term(fld, t) for t in dict.fromkeys(terms)]), k)
 
 
-def _wand_pool_fn(dfs: dict[str, int], params: WandParams, k: int):
-    """Per-(term, shard) WAND top-k inside one pandas group: blocks
-    visited in descending block_max_score order; decoding stops when the
-    bound can't beat the running k-th score — rank-identical to
-    exhaustive scoring because block_max_score is an exact per-block
-    bound. Also emits the group's exact max block score for the θ phase
-    (the driver maxes it across shards into the term's true max).
-
-    The running top-k is kept as numpy arrays compressed with
-    _topk_compress after each decoded block — vectorized, no per-posting
-    Python loop (VERDICT r2 'What's wrong' #1/#2)."""
-    n, avgdl, k1, b = params.n_docs, params.avgdl, params.k1, params.b
-
-    def _pool(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        term = key[0]
-        df_t = float(dfs[term])
-        pdf = pdf.sort_values("block_max_score", ascending=False)
-        tmax = float(pdf["block_max_score"].iloc[0]) if len(pdf) else 0.0
-        acc_s: list[np.ndarray] = []
-        acc_d: list[np.ndarray] = []
-        pending = 0
-        threshold = -np.inf
-        have_k = False
-        for row in pdf.itertuples(index=False):
-            if have_k and row.block_max_score < threshold:
-                break
-            scores = bm25_score_numpy(
-                row.tfs.astype(float), df_t, row.dls.astype(float), n, avgdl, k1, b
-            )
-            acc_s.append(scores)
-            acc_d.append(row.doc_ids)
-            pending += len(scores)
-            if pending >= k:
-                s, d = _topk_compress(np.concatenate(acc_s), np.concatenate(acc_d), k)
-                acc_s, acc_d = [s], [d]
-                pending = len(s)
-                if len(s) >= k:
-                    have_k = True
-                    threshold = float(s[-1])
-        if acc_s:
-            s, d = _topk_compress(np.concatenate(acc_s), np.concatenate(acc_d), k)
-        else:
-            s = np.empty(0, dtype=float)
-            d = np.empty(0, dtype=np.int64)
-        return pd.DataFrame(
-            {"term": term, "doc_id": d, "score": s, "term_max": tmax}
-        )
-
-    return _pool
-
-
-def term_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    df_t: int | None,
-    params: WandParams,
-    k: int = 10,
-) -> DataFrame:
-    """Single-term exact BM25 top-k with block-max WAND pruning.
-
-    Pools per (term, shard) so a hot salted term never collapses into one
-    task; the union of shard-local top-ks contains the global top-k
-    because each shard's pool is exact over its own postings."""
-    if df_t is None:
-        return _empty(spark)
-
-    def _one(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _wand_pool_fn({key[0]: df_t}, params, k)(key, pdf)
-        return out[["doc_id", "score"]]
-
-    grouped = blocks.select(
-        "term", "shard", "block_max_score", "doc_ids", "tfs", "dls"
-    ).groupBy("term", "shard").applyInPandas(_one, schema=TOPK_SCHEMA)
-    return grouped.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def or_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    dfs: dict[str, int],
-    params: WandParams,
-    k: int = 10,
-) -> DataFrame:
-    """Exact disjunctive (SHOULD) BM25 top-k with block-max pruning.
-
-      1. ONE job runs the per-(term, shard) WAND top-k for all terms at
-         once (groupBy(term, shard).applyInPandas) and returns each
-         group's exact max block score alongside; the driver maxes those
-         into per-term maxes. Salted hot terms stay spread across their
-         salt shards — no task receives more than one shard of a term.
-      2. θ = k-th largest PER-DOC SUM of the collected single-term
-         scores — each collected score is exact and a doc's sum over its
-         pool entries lower-bounds its true total (a term's postings for
-         one doc live in exactly one salt shard, so no double count), so
-         θ lower-bounds the true k-th total;
-      3. a block of term t survives iff block_max + Σ_{u≠t} term_max[u]
-         >= θ — any doc whose blocks are all pruned has total < θ, so
-         candidates ⊇ the true top-k;
-      4. candidates are re-scored EXACTLY — but only blocks whose
-         [min_doc, max_doc] range intersects a candidate id are decoded
-         (sorted-array broadcast + searchsorted), so the θ pruning pays
-         off on the rescore scan too. Above CANDIDATE_BROADCAST_CAP ids
-         the rescore falls back to the full-scan semi-join.
-
-    Job count is O(1) in the number of terms."""
-    terms = list(dfs)
-    if not terms:
-        return _empty(spark)
-    if sum(dfs.values()) <= EXHAUSTIVE_CAP:
-        # small total posting volume: one exhaustive job beats three
-        # pruned ones (see EXHAUSTIVE_CAP)
-        return (
-            scores_for_blocks(blocks, dfs, params)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
-    pooled = blocks.select(
-        "term", "shard", "block_max_score", "doc_ids", "tfs", "dls"
-    ).groupBy("term", "shard").applyInPandas(
-        _wand_pool_fn(dfs, params, k),
-        schema="term string, doc_id long, score double, term_max double",
-    ).collect()
-
-    term_max = {t: 0.0 for t in terms}
-    per_doc: dict[int, float] = {}
-    for r in pooled:
-        term_max[r["term"]] = max(term_max[r["term"]], r["term_max"])
-        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0.0) + r["score"]
-    doc_sums = sorted(per_doc.values(), reverse=True)
-    theta = doc_sums[k - 1] if len(doc_sums) >= k else -float("inf")
-    total_max = sum(term_max.values())
-
-    # a block survives when its max plus the other terms' maxes reaches
-    # θ; both numbers come from one lookup by the block's term, so a new
-    # θ compiles no new class
-    surv = blocks
-    if len(doc_sums) >= k:
-        bound = by_term_sql({t: (total_max - term_max[t], theta) for t in terms})
-        surv = blocks.selectExpr("*", f"{bound} AS _w").filter(
-            "block_max_score + _w[0] >= _w[1]"
-        ).drop("_w")
-    cand_pdf = (
-        decode_blocks(surv)
-        .select("doc_id")
-        .distinct()
-        .limit(CANDIDATE_BROADCAST_CAP + 1)
-        .toPandas()
-    )
-    if len(cand_pdf) <= CANDIDATE_BROADCAST_CAP:
-        cand_arr = np.sort(cand_pdf["doc_id"].to_numpy(dtype=np.int64))
-        cand_bc = spark.sparkContext.broadcast(cand_arr)
-        scored = _candidate_scores(blocks, dfs, params, cand_bc)
-    else:
-        candidates = decode_blocks(surv).select("doc_id").distinct()
-        scored = scores_for_blocks(blocks, dfs, params).join(
-            candidates, "doc_id", "left_semi"
-        )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.sum("score").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def and_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    dfs: dict[str, int],
-    params: WandParams,
-    k: int = 10,
-) -> DataFrame:
-    """Exact conjunctive (MUST) BM25 top-k: candidates driven by the
-    rarest term's postings (smallest df — the classic leapfrog), the
-    other terms semi-join down, score = Σ per-term BM25.
-
-    The exact rescore takes the same candidate-pruned path as or_topk:
-    candidates are bounded by the RAREST term's df, so they normally fit
-    the broadcast cap and the rescore decodes only blocks whose
-    [min_doc, max_doc] range intersects a candidate (sorted-array
-    broadcast + searchsorted) — a conjunction of two common terms no
-    longer decodes every block of both. Above the cap it falls back to
-    the full-scan semi-join (correct, just un-pruned)."""
-    terms = list(dfs)
-    if not terms:
-        return _empty(spark)
-    if sum(dfs.values()) <= EXHAUSTIVE_CAP:
-        # one exhaustive job: a doc matches the conjunction iff it has a
-        # posting for every term (exactly one posting per (term, doc)),
-        # so the per-doc posting count gates the sum (see EXHAUSTIVE_CAP)
-        return (
-            scores_for_blocks(blocks, dfs, params)
-            .groupBy("doc_id")
-            .agg(
-                F.sum("score").alias("score"),
-                F.count(F.lit(1)).alias("_nt"),
-            )
-            .filter(F.col("_nt") == len(terms))
-            .select("doc_id", "score")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
-    order = sorted(terms, key=lambda t: dfs[t])
-    candidates = decode_blocks(blocks.filter(F.col("term") == order[0])).select(
-        "doc_id"
-    )
-    for t in order[1:]:
-        candidates = candidates.join(
-            decode_blocks(blocks.filter(F.col("term") == t)).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-    # candidate ids are unique by construction: a doc's postings for a
-    # term live in exactly one (shard, block), so the rarest term's
-    # decode emits each doc once and semi-joins preserve that
-    cand_pdf = candidates.limit(CANDIDATE_BROADCAST_CAP + 1).toPandas()
-    if len(cand_pdf) <= CANDIDATE_BROADCAST_CAP:
-        cand_arr = np.sort(cand_pdf["doc_id"].to_numpy(dtype=np.int64))
-        cand_bc = spark.sparkContext.broadcast(cand_arr)
-        scored = _candidate_scores(blocks, dfs, params, cand_bc)
-    else:
-        scored = scores_for_blocks(blocks, dfs, params).join(
-            candidates, "doc_id", "left_semi"
-        )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.sum("score").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+def and_topk(index, fld: str, terms: list[str], k: int = 10) -> DataFrame:
+    return _topk(index, Q.and_(*[Q.term(fld, t) for t in dict.fromkeys(terms)]), k)

@@ -660,7 +660,8 @@ def _spark_search(
     score_adjust, t_query,
 ) -> LuceneResponse:
     """search() on the Spark route; its jobs are tagged by operator
-    (``search:facets``, ``search:page``)."""
+    (``search:facets``, ``search:page``, and ``search:total`` for the
+    totals-only action of an empty page)."""
     h = scored_hits_df(index, query, filter_queries, exclude_queries, key_filters)
     if score_adjust is not None:
         h = score_adjust(h)
@@ -719,7 +720,7 @@ def _spark_search(
 
     dupes = ["duplicateCount"] if dedup_field else []
     t_page = time.perf_counter()
-    with stage(index.spark, "page"):
+    with stage(index.spark, "page" if stop > start else "total"):
         totals, rows = collect_page(h, sort_exprs(sort_keys), start, stop, dupes)
     times = {"searchTime": _ms_since(t_page)}
     if facets:

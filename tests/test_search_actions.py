@@ -390,7 +390,8 @@ def _job_descriptions(spark, since):
 
 def test_spark_route_jobs_carry_search_tags(spark, indexes, spark_route):
     """Every job of a Spark-route search() names its operator: the page
-    collect (search:page) and the facet action (search:facets)."""
+    collect (search:page), the totals-only action of an empty page
+    (search:total) and the facet action (search:facets)."""
     ix = indexes["multigen"]
     term = Q.term("text", "spark")
     search(ix, term)  # warm
@@ -401,6 +402,9 @@ def test_spark_route_jobs_carry_search_tags(spark, indexes, spark_route):
     search(ix, term, facets=[{"fieldname": "lang"}, {"fieldname": "repo"}])
     tags = _job_descriptions(spark, j0)
     assert set(tags) == {"search:facets", "search:page"}, tags
+    j0 = _jobs(spark)
+    assert search(ix, term, stop=0).total > 0
+    assert set(_job_descriptions(spark, j0)) == {"search:total"}
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
 
 
@@ -415,8 +419,7 @@ def test_new_terms_compile_no_classes(spark, indexes, spark_route):
     after one warm Spark-route search of a shape, the same shape over
     other terms with other dfs reuses every compiled class (with literal
     df a term search compiled 2 classes, a fused OR 2-4 and a phrase
-    2-3). The WAND top-k takes its df the same way (with a literal df
-    map, an OR top-k compiled 2 classes)."""
+    2-3). The top-k calls are search()es and reuse the same classes."""
     ix = indexes["store"]
     dfs = ix.term_dfs("text", WORDS)
     pairs = {

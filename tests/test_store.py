@@ -179,16 +179,14 @@ def _assert_topk(rows, exact, q, k):
         assert s == pytest.approx(w, rel=1e-12)
 
 
-@pytest.mark.parametrize("force_wand", [False, True])
-def test_store_wand_rank_identity(stores, force_wand, monkeypatch):
-    """The store's block-max WAND fast path (term/or/and_topk) must be
-    rank- AND score-identical to the exact executor evaluation — on both
-    the small-set exhaustive shortcut and (force_wand) the pruned
-    pool/θ/candidate pipeline."""
-    if force_wand:
-        import meresco_lucene_spark.index.wand as wand
-
-        monkeypatch.setattr(wand, "EXHAUSTIVE_CAP", 0)
+@pytest.mark.parametrize("spark_route", [False, True])
+def test_store_wand_rank_identity(stores, spark_route, monkeypatch):
+    """The store's top-k (term/or/and_topk) must be rank- AND
+    score-identical to the exact executor evaluation, on the driver
+    route and (spark_route) on the Spark route that answers a top-k
+    whose postings exceed DRIVER_QUERY_POSTINGS."""
+    if spark_route:
+        monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", -1)
     exact, disk = stores
     for term in ("spark", "fast", "unique_term", "nosuchterm"):
         rows = disk.term_topk("text", term, 4).collect()
@@ -208,9 +206,9 @@ def _jobs(spark):
 
 def test_wand_term_meta_memo(spark, stores, monkeypatch):
     """A handle looks each present (field, term) up in term_stats once,
-    on the driver without a Spark job: a repeated term_topk runs only
-    its 2 top-k jobs, a batch of terms is one read of the missing ones, a
-    term absent from one field is not taken as present because another
+    on the driver without a Spark job: a repeated term_topk runs no Spark
+    job (the driver route answers it), a batch of terms is one read of
+    the missing ones, a term absent from one field is not taken as present because another
     field has it, and absent terms are not kept (the memo is bounded by
     the term dictionary)."""
     _, disk = stores
@@ -218,8 +216,10 @@ def test_wand_term_meta_memo(spark, stores, monkeypatch):
     read_table = store_mod.pq.read_table
 
     def recording_read(path, **kw):
-        (_, _, fld), (_, _, terms) = kw["filters"]
-        reads.append((fld, list(terms)))
+        # the driver route reads postings files through the same module
+        if str(path).endswith("term_stats"):
+            (_, _, fld), (_, _, terms) = kw["filters"]
+            reads.append((fld, list(terms)))
         return read_table(path, **kw)
 
     monkeypatch.setattr(store_mod.pq, "read_table", recording_read)
@@ -227,7 +227,7 @@ def test_wand_term_meta_memo(spark, stores, monkeypatch):
     first = ix.term_topk("text", "spark", 4).collect()
     j0 = _jobs(spark)
     assert ix.term_topk("text", "spark", 4).collect() == first
-    assert _jobs(spark) - j0 == 2
+    assert _jobs(spark) - j0 == 0
     assert reads == [("text", ["spark"])]
 
     j0 = _jobs(spark)
