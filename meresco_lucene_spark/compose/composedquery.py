@@ -19,9 +19,16 @@ per segment, first-nonzero on merge, ScoreSuperCollector.java:66-93);
 we define it as max(score) per key — deterministic, and identical on
 the reference's fixtures where rank-core keys are unique.
 
-All key frames are tiny relative to the corpus ("bitsets" in the
-reference) -> every key join is broadcast; Catalyst turns the chains
-into broadcast semi/anti joins with no extra shuffles.
+Key filters (steps 1, 2 and 4) take two forms. The other cores' core,
+filter and exclude filter queries are :class:`KeyFilter` records, which
+search() answers on its driver route with pyarrow when the cores fit its
+bounds (query/driver.py: the other core's hits give a key set, and the
+result hits are masked by it, as the reference's key bitset does), and
+on its Spark route as semi/anti joins of ``collect_keys`` frames.
+Unites and relational filters are key frames and always take the Spark
+route, as do rank queries, join sort, join facets and exported keys.
+Key frames are small relative to the corpus ("bitsets" in the
+reference), so adaptive execution broadcasts them.
 """
 
 from __future__ import annotations
@@ -34,7 +41,9 @@ from pyspark.sql import functions as F
 
 from meresco_lucene_spark.columns import qcol
 from meresco_lucene_spark.query.executor import (
+    KeyFilter,
     LuceneResponse,
+    collect_keys,
     drilldown_data,
     hits,
     search,
@@ -354,18 +363,6 @@ class _WithForward:
         return getattr(self._index, name)
 
 
-def collect_keys(index: "PersistentIndex", query: Q | None, key_field: str) -> DataFrame:
-    """KeySuperCollector (search/join/KeySuperCollector.java:35-62): the
-    distinct key set of docs matching the query."""
-    h = hits(index, query or Q.matchall()).select("doc_id")
-    return (
-        index.forward.join(h, "doc_id", "left_semi")
-        .filter(qcol(key_field).isNotNull())
-        .select(qcol(key_field).alias("key"))
-        .distinct()
-    )
-
-
 def execute_composed(
     cores: dict[str, "PersistentIndex"],
     cq: ComposedQuery,
@@ -390,7 +387,9 @@ def _execute_composed(
     other_cores = [c for c in cores if c != result_core and _core_used(cq, c)]
 
     # ---- 1. filterKeys (MultiLucene.java:195-233) -----------------------
-    key_filters: list[tuple[DataFrame, str, bool]] = []
+    # other-core queries are KeyFilter records, which the driver route of
+    # search() can answer; unites and relational filters are key frames
+    key_filters: list[KeyFilter | tuple[DataFrame, str, bool]] = []
     unite_sets: dict[str, DataFrame] = {}
     if cq.relational_filter is not None:
         from meresco_lucene_spark.compose.relational import RQ
@@ -422,21 +421,25 @@ def _execute_composed(
             result_plain_filters.extend(qs)
             continue
         for fq in qs:
-            collected = collect_keys(cores[core], fq, cq.key_name(core, result_core))
-            key_filters.append((collected, cq.key_name(result_core, core), False))
+            key_filters.append(KeyFilter(
+                cores[core], fq, cq.key_name(core, result_core), cq.key_name(result_core, core)
+            ))
 
     # ---- 2. coreQueries (MultiLucene.java:279-290) ----------------------
     for core in other_cores:
         q = _query_with_drilldowns(cq, core)
         if q is not None:
-            collected = collect_keys(cores[core], q, cq.key_name(core, result_core))
-            key_filters.append((collected, cq.key_name(result_core, core), False))
+            key_filters.append(KeyFilter(
+                cores[core], q, cq.key_name(core, result_core), cq.key_name(result_core, core)
+            ))
 
     # ---- 4. excludeFilterKeys (MultiLucene.java:235-252) ----------------
     for core, qs in cq.exclude_filter_queries.items():
         for eq in qs:
-            collected = collect_keys(cores[core], eq, cq.key_name(core, result_core))
-            key_filters.append((collected, cq.key_name(result_core, core), True))
+            key_filters.append(KeyFilter(
+                cores[core], eq, cq.key_name(core, result_core), cq.key_name(result_core, core),
+                inverted=True,
+            ))
 
     # ---- 3. rank queries -> blended scoring -----------------------------
     score_adjust = None

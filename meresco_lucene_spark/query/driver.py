@@ -7,26 +7,46 @@ postings. The handle's term dictionary gives every query term's df and
 shards on the driver before any of that, so the route is chosen for
 free, from facts the handle already holds:
 
-- the query's shape: TermQuery, PhraseQuery, MatchAllDocsQuery and
-  BooleanQuery over those (MUST counts, FILTER, MUST_NOT), in the query
-  and in the filter and exclude queries; facets, sort keys, dedup and
-  stored fields of plain column types; no key filters, no score hook;
-- Σdf of the query's terms, summed over the generations of a
-  multi-generation reader (dead docs included, so it bounds the
-  postings read);
-- the doc count, which bounds every forward-table read, and the
-  tombstone row count of a multi-generation reader (parquet footers).
+- the query's shape: TermQuery, PhraseQuery, PrefixQuery,
+  MatchAllDocsQuery and BooleanQuery over those (MUST counts, FILTER,
+  MUST_NOT), in the query and in the filter and exclude queries;
+  facets, sort keys, dedup and stored fields of plain column types;
+  composed key filters (``executor.KeyFilter``) whose other-core query
+  has the same shapes and whose two key columns have one string or
+  integer type; no score hook;
+- for a prefix, each generation's term_stats row count (parquet
+  footers), which bounds the dictionary scan that expands it;
+- Σdf of the query's terms, prefix expansions included, summed over
+  the generations of a multi-generation reader (dead docs included, so
+  it bounds the postings read), and the same for the other core of
+  each key filter;
+- the doc count, which bounds every forward-table read (the result
+  core's, and each key filter's other core, whose key column is read
+  for its hits), and the tombstone row count of a multi-generation
+  reader (parquet footers).
 
 When each fits ``DRIVER_QUERY_POSTINGS`` (index/store.py, next to the
 build's ``DRIVER_BUILD_ROWS``, with its measured crossover ladder) the
-route reads the terms'
-blocks from their ``shard=`` files only, flattens the list columns and
-scores them with ``bm25_score_numpy``, summing per doc in query order;
-it reads ``positions`` only for a phrase. Facets, sort keys and dedup
-read only their forward columns, and stored fields are read for the
+route reads the terms' blocks from their ``shard=`` files only, flattens
+the list columns and scores them with ``bm25_score_numpy``, summing per
+doc in query order; it reads ``positions`` only for a phrase. A prefix
+expands by a pyarrow ``starts_with`` filter over each generation's
+term_stats (``PersistentIndex.prefix_terms``) and scores its terms'
+distinct live docs with the constant ``boost``, as Lucene's
+constant-score rewrite does. A key filter evaluates the other core's
+query the same way, reads that core's key column for the hits, drops
+null keys and duplicates, and keeps the result hits whose key is in the
+set (``inverted``: not in it, a null key included, as the Spark route's
+anti-join keeps it). Facets, sort keys, dedup and key filters read only
+their forward columns, in one read, and stored fields are read for the
 page's rows only. A multi-generation reader keeps a row of generation g
 when no tombstone of a later generation holds its id, as the Spark
 route's anti-join does.
+
+A WildcardQuery stays on the Spark route: its pattern becomes a Java
+regex (``rlike``), whose ``.`` matches no carriage return (U+000D), NEL
+(U+0085), line separator (U+2028) or paragraph separator (U+2029), and
+RE2's ``.`` (pyarrow's regex engine) matches all four.
 
 Score identity: the Spark route's ``log`` is ``java.lang.StrictMath.log``,
 and numpy's ``log`` differs from it in the last bit for about a third of
@@ -234,10 +254,11 @@ def _read_postings(
 # ------------------------------------------------------------------ shapes
 
 
-def _walk(q: Q, terms: dict[str, dict[str, bool]]) -> bool:
+def _walk(q: Q, terms: dict[str, dict[str, bool]], prefixes: set[tuple[str, str]]) -> bool:
     """Whether ``q`` has a driver form; collects its (field -> term ->
-    positions needed) into ``terms`` and says whether it needs every
-    live doc id (match-all, or a boolean with FILTER clauses only)."""
+    positions needed) into ``terms`` and its (field, prefix) pairs into
+    ``prefixes``, and says whether it needs every live doc id
+    (match-all, or a boolean with FILTER clauses only)."""
     t = q.type
     if t == "TermQuery":
         terms.setdefault(q.field, {}).setdefault(q.value, False)
@@ -248,15 +269,71 @@ def _walk(q: Q, terms: dict[str, dict[str, bool]]) -> bool:
         for term in q.terms:
             f[term] = f.get(term, False) or phrase
         return False
+    if t == "PrefixQuery":
+        prefixes.add((q.field, q.value))
+        return False
     if t == "MatchAllDocsQuery":
         return True
     if t == "BooleanQuery":
         all_docs = False
         for _, c in q.clauses:
-            all_docs |= _walk(c, terms)
+            all_docs |= _walk(c, terms, prefixes)
         occs = {occ for occ, _ in q.clauses}
         return all_docs or (FILTER in occs and not occs & {MUST, SHOULD})
     raise SparkRoute(t)
+
+
+@dataclass
+class _Reads:
+    """What the route reads of one reader for a set of queries: field ->
+    term -> positions needed (prefix expansions included), each (field,
+    prefix)'s expanded terms, and whether every live doc id is needed."""
+
+    segs: _Segments
+    terms: dict[str, dict[str, bool]]
+    expansions: dict[tuple[str, str], list[str]]
+    needs_all: bool
+
+    def postings(self) -> dict[tuple[str, str], _Postings]:
+        out = {}
+        for fld, ts in self.terms.items():
+            got = _read_postings(self.segs, fld, list(ts), any(ts.values()))
+            out.update({(fld, t): p for t, p in got.items()})
+        return out
+
+
+def _plan(index, queries: Sequence[Q], bound: int) -> _Reads:
+    """The reads of ``queries`` over ``index``, each bound checked before
+    the read it bounds: the term_stats row count of every generation
+    before a prefix expands, then the Σdf of every term, expansions
+    included, and a multi-generation reader's tombstone count."""
+    segs = _Segments(index)
+    if not isinstance(segs.types.get("doc_id"), LongType):
+        raise SparkRoute("doc_id")
+    terms: dict[str, dict[str, bool]] = {}
+    prefixes: set[tuple[str, str]] = set()
+    needs_all = False
+    for q in queries:
+        needs_all |= _walk(q, terms, prefixes)
+    expansions: dict[tuple[str, str], list[str]] = {}
+    if prefixes:
+        if any(s.table_rows("term_stats") > bound for _, s in segs.stores):
+            raise SparkRoute("term_stats")
+        for fld, prefix in sorted(prefixes):
+            got = sorted({t for _, s in segs.stores for t in s.prefix_terms(fld, prefix)})
+            expansions[(fld, prefix)] = got
+            f = terms.setdefault(fld, {})
+            for t in got:
+                f.setdefault(t, False)
+    n_postings = sum(
+        sum(index.term_dfs(fld, list(ts)).values()) for fld, ts in terms.items()
+    )
+    if n_postings > bound:
+        raise SparkRoute("postings")
+    if segs.multi is not None and segs.multi._tomb_dirs:
+        if segs.multi.tombstone_rows() > bound:
+            raise SparkRoute("tombstones")
+    return _Reads(segs, terms, expansions, needs_all)
 
 
 # --------------------------------------------------------------- evaluation
@@ -266,9 +343,10 @@ class _Eval:
     """Scored hits of supported queries as (doc ids ascending, scores),
     mirroring query/executor.py's frames clause for clause."""
 
-    def __init__(self, index, postings: dict, all_docs):
+    def __init__(self, index, reads: _Reads, all_docs):
         self.index = index
-        self.postings = postings  # (field, term) -> _Postings
+        self.postings = reads.postings()  # (field, term) -> _Postings
+        self.expansions = reads.expansions  # (field, prefix) -> terms
         self.all_docs = all_docs  # () -> live doc ids, ascending
 
     def _idf(self, n_docs: int, df: int) -> float:
@@ -301,6 +379,14 @@ class _Eval:
             if len(q.terms) == 1:
                 return _sorted(*self._term_scores(q.field, q.terms[0], q.boost))
             return self._phrase(q)
+        if t == "PrefixQuery":
+            # constant score over the union of the expanded terms'
+            # postings (_multi_term_hits)
+            docs = np.unique(np.concatenate([
+                np.empty(0, np.int64),
+                *(self.postings[(q.field, term)].docs for term in self.expansions[(q.field, q.value)]),
+            ]))
+            return docs, np.full(len(docs), 1.0 * q.boost)
         return self._bool(q)
 
     def _bool(self, q: Q) -> tuple[np.ndarray, np.ndarray]:
@@ -509,6 +595,7 @@ def search(
     query: Q | None,
     filter_queries: Sequence[Q],
     exclude_queries: Sequence[Q],
+    key_filters: Sequence,
     start: int,
     stop: int,
     sort_keys: Sequence[dict] | None,
@@ -521,63 +608,67 @@ def search(
     """The LuceneResponse of ``executor.search`` (started at ``t_query``,
     a ``time.perf_counter()``) computed on the driver, or None when the
     request does not fit the route (see the module docstring); every
-    bound is checked before the read it bounds."""
+    bound is checked before the read it bounds. ``key_filters`` are
+    ``executor.KeyFilter`` records."""
+    from meresco_lucene_spark.index.store import DRIVER_QUERY_POSTINGS as bound
+
     try:
-        segs = _Segments(index)
-        if not isinstance(segs.types.get("doc_id"), LongType):
-            raise SparkRoute("doc_id")
-        queries = [query or Q.matchall(), *filter_queries, *exclude_queries]
-        terms: dict[str, dict[str, bool]] = {}
-        needs_all = False
-        for q in queries:
-            needs_all |= _walk(q, terms)
+        reads = _plan(index, [query or Q.matchall(), *filter_queries, *exclude_queries], bound)
+        segs = reads.segs
         facet_cols = [
             c for f in facets for c in index.facet_fields.get(f["fieldname"], [f["fieldname"]])
         ]
         sort_cols = [sk["sortBy"] for sk in sort_keys or [] if sk["sortBy"] != "score"]
         dedup_cols = [dedup_field, *(sk["sortBy"] for sk in dedup_sort_fields)] if dedup_field else []
-        for c in facet_cols + ([dedup_field] if dedup_field else []):
+        key_cols = [kf.result_key for kf in key_filters]
+        for c in facet_cols + ([dedup_field] if dedup_field else []) + key_cols:
             if not isinstance(segs.types.get(c), KEY_TYPES):
                 raise SparkRoute(c)
         for c in sort_cols + dedup_cols + list(stored_fields):
             if not isinstance(segs.types.get(c), PLAIN_TYPES) or c in ("doc_id", "score", "duplicateCount"):
                 raise SparkRoute(c)
-    except SparkRoute:
-        return None
-    from meresco_lucene_spark.index.store import DRIVER_QUERY_POSTINGS as bound
-
-    n_postings = sum(
-        sum(index.term_dfs(fld, list(ts)).values()) for fld, ts in terms.items()
-    )
-    analytic = list(dict.fromkeys(facet_cols + sort_cols + dedup_cols))
-    reads_forward = needs_all or bool(analytic) or bool(stored_fields)
-    if n_postings > bound or (reads_forward and index.n_docs > bound):
-        return None
-    if segs.multi is not None and segs.multi._tomb_dirs:
-        if segs.multi.tombstone_rows() > bound:
-            return None
-    try:
+        analytic = list(dict.fromkeys(facet_cols + sort_cols + dedup_cols + key_cols))
+        if (reads.needs_all or analytic or stored_fields) and index.n_docs > bound:
+            raise SparkRoute("forward")
+        keyed = []
+        for kf in key_filters:
+            other = _plan(kf.index, [kf.query or Q.matchall()], bound)
+            # Spark's join coerces differing key types; is_in does not
+            if other.segs.types.get(kf.other_key) != segs.types[kf.result_key]:
+                raise SparkRoute("key type")
+            # the other core's key column, read for its hits
+            if kf.index.n_docs > bound:
+                raise SparkRoute("forward")
+            keyed.append((kf, other))
         return _answer(
-            index, segs, terms, needs_all, analytic, query, filter_queries,
-            exclude_queries, start, stop, sort_keys, facets, dedup_field,
-            dedup_sort_fields, stored_fields, t_query,
+            index, reads, keyed, analytic, query, filter_queries, exclude_queries,
+            start, stop, sort_keys, facets, dedup_field, dedup_sort_fields,
+            stored_fields, t_query,
         )
     except SparkRoute:
         return None
 
 
+def _key_set(kf, reads: _Reads) -> pa.Array:
+    """KeySuperCollector on the driver (executor.collect_keys): the
+    distinct non-null keys of the docs of ``kf.index`` that match
+    ``kf.query``, read from the hits' forward rows only."""
+    segs = reads.segs
+    ev = _Eval(kf.index, reads, lambda: segs.forward([]).column("doc_id").to_numpy())
+    docs, _ = ev.hits(kf.query or Q.matchall())
+    keys = segs.forward([kf.other_key], docs).column(kf.other_key)
+    return pc.unique(keys.drop_null())
+
+
 def _answer(
-    index, segs, terms, needs_all, analytic, query, filter_queries, exclude_queries,
+    index, reads, keyed, analytic, query, filter_queries, exclude_queries,
     start, stop, sort_keys, facets, dedup_field, dedup_sort_fields, stored_fields,
     t_query,
 ):
     # the response types live in the module that calls this one
     from meresco_lucene_spark.query.executor import Hit, LuceneResponse, _ms_since
 
-    postings = {}
-    for fld, ts in terms.items():
-        got = _read_postings(segs, fld, list(ts), any(ts.values()))
-        postings.update({(fld, t): p for t, p in got.items()})
+    segs = reads.segs
     fwd_memo: list[pa.Table] = []
 
     def analytic_fwd() -> pa.Table:
@@ -585,10 +676,7 @@ def _answer(
             fwd_memo.append(segs.forward(analytic))
         return fwd_memo[0]
 
-    ev = _Eval(
-        index, postings,
-        lambda: analytic_fwd().column("doc_id").to_numpy(),
-    )
+    ev = _Eval(index, reads, lambda: analytic_fwd().column("doc_id").to_numpy())
     docs, score = ev.hits(query or Q.matchall())
     for fq in filter_queries:
         keep = np.isin(docs, ev.hits(fq)[0])
@@ -606,6 +694,16 @@ def _answer(
         i = np.minimum(np.searchsorted(fdocs, docs), max(len(fdocs) - 1, 0))
         found = (fdocs[i] == docs) if len(fdocs) else np.zeros(len(docs), bool)
         hit_fwd = fwd.take(pa.array(i, mask=~found))
+        # key filters (KeyFilter.java): a null key is in no key set, so a
+        # semi-join drops its doc and an anti-join keeps it
+        for kf, other in keyed:
+            keys = _key_set(kf, other)
+            try:
+                inside = pc.is_in(hit_fwd.column(kf.result_key), value_set=keys)
+            except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError) as e:
+                raise SparkRoute("key type") from e
+            keep = inside.to_numpy() != kf.inverted
+            docs, score, hit_fwd = docs[keep], score[keep], hit_fwd.filter(pa.array(keep))
         cols = {c: hit_fwd.column(c).combine_chunks() for c in analytic}
 
     t_facet = time.perf_counter()

@@ -35,20 +35,24 @@ DataFrames and Catalyst does pushdown/broadcast/AQE.
 
 ``search()`` has two routes, chosen before any Spark work:
 
-  driver route  (query/driver.py) a term, boolean or phrase query (with
-                FILTER/MUST_NOT clauses, filter and exclude queries,
-                facets, sort keys, dedup and stored fields) whose
-                terms' summed df — and the doc count, when it reads the
-                forward table — fit ``store.DRIVER_QUERY_POSTINGS`` is
-                answered with pyarrow reads of the terms' shard files
+  driver route  (query/driver.py) a term, boolean, phrase or prefix
+                query (with FILTER/MUST_NOT clauses, filter and exclude
+                queries, facets, sort keys, dedup, stored fields and
+                composed key filters given as :class:`KeyFilter`
+                records) whose terms' summed df — prefix expansions
+                included, the dictionary scan of a prefix bounded by
+                term_stats' row count, and the doc count, when it reads
+                the forward table — fit ``store.DRIVER_QUERY_POSTINGS``
+                is answered with pyarrow reads of the terms' shard files
                 and numpy BM25: no Spark job. Each term's idf is taken
                 from the JVM's ``StrictMath.log``, which Spark's ``log``
                 is, so a single-term score is bit-equal to this route's;
-  Spark route   everything else (prefix, wildcard, range, drilldown and
-                distance queries, key filters, ``score_adjust``, work
-                over the bound) runs one action for total + page,
-                tagged ``search:page``, plus one for all facet dims,
-                tagged ``search:facets``.
+  Spark route   everything else (wildcard, range, drilldown and distance
+                queries, key filters given as key frames — unites and
+                relational filters — or over mismatched key types,
+                ``score_adjust``, work over the bound) runs one action
+                for total + page, tagged ``search:page``, plus one for
+                all facet dims, tagged ``search:facets``.
 
 ``index`` is a reader over an index store: a :class:`PersistentIndex`,
 or the multi-generation reader with the same interface
@@ -571,18 +575,47 @@ def sort_exprs(sort_keys: Sequence[dict] | None) -> list[Column]:
     return out
 
 
+def collect_keys(index: PersistentIndex, query: Q | None, key_field: str) -> DataFrame:
+    """KeySuperCollector (search/join/KeySuperCollector.java:35-62): the
+    distinct key set of docs matching the query."""
+    h = hits(index, query or Q.matchall()).select("doc_id")
+    return (
+        index.forward.join(h, "doc_id", "left_semi")
+        .filter(qcol(key_field).isNotNull())
+        .select(qcol(key_field).alias("key"))
+        .distinct()
+    )
+
+
+@dataclass(frozen=True)
+class KeyFilter:
+    """A composed query's filter of the result core by another core's
+    hits (queries/KeyFilter.java:46-124): result docs whose
+    ``result_key`` is among the ``other_key`` values of the docs of
+    ``index`` that match ``query`` (``inverted``: whose key is not). The
+    driver route evaluates it with pyarrow; the Spark route joins its
+    ``collect_keys`` frame (scored_hits_df)."""
+
+    index: PersistentIndex
+    query: Q | None
+    other_key: str
+    result_key: str
+    inverted: bool = False
+
+
 def scored_hits_df(
     index: PersistentIndex,
     query: Q | None = None,
     filter_queries: Sequence[Q] = (),
     exclude_queries: Sequence[Q] = (),
-    key_filters: Sequence[tuple[DataFrame, str, bool]] = (),
+    key_filters: Sequence[KeyFilter | tuple[DataFrame, str, bool]] = (),
 ) -> DataFrame:
     """Hit frame after filters/excludes/key-set joins.
 
-    key_filters: (keys_df with single column key, key_field_in_forward,
-    inverted) triples — the composed-query KeyFilter (queries/KeyFilter.java:46-124):
-    semi-join normally, anti-join when inverted."""
+    key_filters: :class:`KeyFilter` records, or (keys_df with single
+    column key, key_field_in_forward, inverted) triples — the
+    composed-query KeyFilter (queries/KeyFilter.java:46-124): semi-join
+    normally, anti-join when inverted."""
     h = hits(index, query or Q.matchall())
     for fq in filter_queries:
         h = h.join(hits(index, fq).select("doc_id"), "doc_id", "left_semi")
@@ -590,7 +623,10 @@ def scored_hits_df(
         h = h.join(hits(index, eq).select("doc_id"), "doc_id", "left_anti")
     if key_filters:
         fwd = index.forward
-        for keys_df, key_field, inverted in key_filters:
+        for kf in key_filters:
+            if isinstance(kf, KeyFilter):
+                kf = collect_keys(kf.index, kf.query, kf.other_key), kf.result_key, kf.inverted
+            keys_df, key_field, inverted = kf
             key_col = keys_df.columns[0]
             doc_keys = fwd.select("doc_id", F.col(key_field).alias("_k")).filter(
                 F.col(key_field).isNotNull()
@@ -608,7 +644,7 @@ def search(
     query: Q | None = None,
     filter_queries: Sequence[Q] = (),
     exclude_queries: Sequence[Q] = (),
-    key_filters: Sequence[tuple[DataFrame, str, bool]] = (),
+    key_filters: Sequence[KeyFilter | tuple[DataFrame, str, bool]] = (),
     start: int = 0,
     stop: int = 10,
     sort_keys: Sequence[dict] | None = None,
@@ -639,10 +675,10 @@ def search(
     for the whole call, ``times["searchTime"]`` for the page action and,
     with facets, ``times["facetTime"]`` for the facet action."""
     t_query = time.perf_counter()
-    if not key_filters and score_adjust is None:
+    if score_adjust is None and all(isinstance(kf, KeyFilter) for kf in key_filters):
         found = driver.search(
-            index, query, filter_queries, exclude_queries, start, stop, sort_keys,
-            facets, dedup_field, dedup_sort_fields, stored_fields, t_query,
+            index, query, filter_queries, exclude_queries, key_filters, start, stop,
+            sort_keys, facets, dedup_field, dedup_sort_fields, stored_fields, t_query,
         )
         if found is not None:
             return found

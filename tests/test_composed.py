@@ -4,7 +4,14 @@
 Three cores joined by integer key doc-values; coreC uses
 TermFrequencySimilarity (MultiLuceneTest.java:72). Every assertion below
 carries the reference test name it mirrors.
+
+Each test that takes ``cores`` runs twice: on search()'s default route
+(the driver route answers the other-core key filters of these small
+cores) and again, with unchanged assertions, in ``TestOnSparkRoute``
+with every search() sent to the Spark route.
 """
+
+import inspect
 
 import pytest
 from pyspark.sql import types as T
@@ -57,7 +64,7 @@ def _schema(spec):
 
 
 @pytest.fixture(scope="module")
-def cores(spark, build_store):
+def built_cores(spark, build_store):
     lng, s = T.LongType(), T.StringType()
     a = spark.createDataFrame(
         A_ROWS,
@@ -88,6 +95,12 @@ def cores(spark, build_store):
         similarity="TermFrequency",
     )
     return {"coreA": core_a, "coreB": core_b, "coreC": core_c}
+
+
+@pytest.fixture()
+def cores(built_cores):
+    """The three cores, searched on the default route."""
+    return built_cores
 
 
 def ids(cores, cq, response=None, **kw):
@@ -713,3 +726,103 @@ def test_composed_jobs_carry_composed_tags(spark, cores, spark_route):
             "composed:facets", "composed:keys"} <= tags, tags
     assert all(t and t.startswith("composed:") for t in tags), tags
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+def test_exclude_filter_keeps_null_keys(cores):
+    """An exclude filter keeps the result docs that have no key: no key
+    set holds a null (the anti-join of the Spark route)."""
+    cq = ComposedQuery("coreA")
+    cq.add_exclude_filter_query("coreC", Q.term("R", "true"))
+    cq.add_match("coreA", "C", "coreC", "C2")
+    r, got = ids(cores, cq)
+    # coreC R=true has C2=12: only A-MU (C=12) goes; six docs have no C
+    assert r.total == 7
+    assert set(got) == {"A", "A-U", "A-Q", "A-QU", "A-M", "A-MQ", "A-MQU"}
+
+
+def test_empty_key_set(cores):
+    """An other-core query with no hits filters every result doc out;
+    as an exclude filter it removes none."""
+    cq = ComposedQuery("coreA")
+    cq.set_core_query("coreB", Q.term("N", "no_such_value"))
+    cq.add_match("coreA", "A", "coreB", "B")
+    r, got = ids(cores, cq)
+    assert (r.total, got) == (0, [])
+    cq = ComposedQuery("coreA")
+    cq.add_exclude_filter_query("coreB", Q.prefix("N", "no_such"))
+    cq.add_match("coreA", "A", "coreB", "B")
+    r, got = ids(cores, cq)
+    assert r.total == 8
+
+
+@pytest.fixture(scope="module")
+def string_key_core(spark, build_store):
+    """A core whose key K holds coreA's integer keys as strings."""
+    df = spark.createDataFrame(
+        [(0, "5", "yes"), (1, "7", "yes"), (2, "8", "no")],
+        "doc_id long, K string, F string",
+    )
+    return build_store(df, id_col="doc_id", keyword_cols=["F"])
+
+
+def test_mismatched_key_types_fall_back(spark, cores, string_key_core):
+    """String keys of another core filter integer keys of the result
+    core as Spark's join coerces them; the driver route has no such
+    coercion and leaves the query to the Spark route."""
+    cq = ComposedQuery("coreA")
+    cq.set_core_query("coreS", Q.term("F", "yes"))
+    cq.add_match("coreA", "A", "coreS", "K")
+    j0 = _jobs(spark)
+    r, got = ids({**cores, "coreS": string_key_core}, cq)
+    assert _jobs(spark) > j0
+    assert r.total == 2 and set(got) == {"A-M", "A-MQ"}
+
+
+def test_other_core_drilldown_falls_back(spark, cores):
+    """An other core's drilldown query (a DrillDown clause, which has no
+    driver form) is answered on the Spark route."""
+    cq = ComposedQuery("coreA")
+    cq.set_core_query("coreB", Q.term("O", "true"))
+    cq.add_drilldown_query("coreB", "cat_N", ["true"])
+    cq.add_match("coreA", "A", "coreB", "B")
+    j0 = _jobs(spark)
+    r, got = ids(cores, cq)
+    assert _jobs(spark) > j0
+    # coreB N=true and O=true: keys 5, 7 and 9
+    assert r.total == 2 and set(got) == {"A-M", "A-MQ"}
+
+
+def test_key_filters_run_no_job(spark, built_cores):
+    """Other-core core queries, filter queries and exclude filter queries
+    (terms, prefixes, match-all) over small cores are answered on the
+    driver route: no Spark job."""
+    cq = ComposedQuery("coreA", queries={"coreA": Q.prefix("M", "t")})
+    cq.set_core_query("coreB", Q.term("N", "true"))
+    cq.add_filter_query("coreC", Q.matchall())
+    cq.add_exclude_filter_query("coreB", Q.term("T", "C"))
+    cq.add_facet("coreA", {"fieldname": "cat_Q"})
+    cq.add_match("coreA", "A", "coreB", "B")
+    cq.add_match("coreA", "C", "coreC", "C2")
+    j0 = _jobs(spark)
+    r, got = ids(built_cores, cq)
+    assert _jobs(spark) == j0
+    # M=true, a B key with N=true (5 to 9) but not T=C (7), a C key in
+    # coreC (12)
+    assert r.total == 1 and got == ["A-MU"]
+    assert r.drilldownData == [{"fieldname": "cat_Q", "terms": [{"term": "false", "count": 1}]}]
+
+
+class TestOnSparkRoute:
+    """Every test above that takes ``cores`` (and does not force the
+    Spark route itself), with every search() on the Spark route."""
+
+    @pytest.fixture()
+    def cores(self, built_cores, spark_route):
+        return built_cores
+
+
+for _name, _test in list(globals().items()):
+    if _name.startswith("test_"):
+        _params = inspect.signature(_test).parameters
+        if "cores" in _params and "spark_route" not in _params:
+            setattr(TestOnSparkRoute, _name, staticmethod(_test))
