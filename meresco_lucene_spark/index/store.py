@@ -1456,8 +1456,6 @@ class PersistentIndex:
         self._meta_memo: dict[tuple[str, str], tuple] = {}
         # table dir -> its parquet files: see table_files
         self._files: dict[str, list[str]] = {}
-        # table dir -> its row count: see table_rows
-        self._rows: dict[str, int] = {}
 
     def _table(self, name: str) -> DataFrame:
         if name not in self._tables:
@@ -1530,42 +1528,18 @@ class PersistentIndex:
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if (fld, t) not in self._meta_memo]
         if missing:
-            self._read_term_meta(fld, [("field", "==", fld), ("term", "in", missing)])
+            found = pq.read_table(
+                os.path.join(self.out_dir, "term_stats"),
+                columns=["term", "df", "base_shard", "n_salts"],
+                filters=[("field", "==", fld), ("term", "in", missing)],
+            ).to_pydict()
+            for t, df, base, salts in zip(
+                found["term"], found["df"], found["base_shard"], found["n_salts"]
+            ):
+                self._meta_memo[(fld, t)] = (int(df), int(base), int(salts))
         return {
             t: self._meta_memo[(fld, t)] for t in terms if (fld, t) in self._meta_memo
         }
-
-    def _read_term_meta(self, fld: str, filters) -> list[str]:
-        """The terms of the term_stats rows of ``fld`` that ``filters``
-        keep, read with pyarrow; their (df, base_shard, n_salts) enter
-        the memo."""
-        found = pq.read_table(
-            os.path.join(self.out_dir, "term_stats"),
-            columns=["term", "df", "base_shard", "n_salts"],
-            filters=filters,
-        ).to_pydict()
-        for t, df, base, salts in zip(
-            found["term"], found["df"], found["base_shard"], found["n_salts"]
-        ):
-            self._meta_memo[(fld, t)] = (int(df), int(base), int(salts))
-        return found["term"]
-
-    def prefix_terms(self, fld: str, prefix: str) -> list[str]:
-        """The terms of ``fld`` that start with ``prefix`` (by UTF-8
-        bytes, as Spark's ``startsWith``), ascending: a dictionary scan
-        of term_stats on the driver, which the caller bounds by
-        ``table_rows("term_stats")``. The terms enter the memo, so their
-        ``term_dfs`` and ``term_files`` read nothing more."""
-        return sorted(self._read_term_meta(
-            fld, (pc.field("field") == fld) & pc.starts_with(pc.field("term"), prefix)
-        ))
-
-    def table_rows(self, rel: str) -> int:
-        """The row count of the store's table ``rel`` (parquet footers),
-        read once per handle."""
-        if rel not in self._rows:
-            self._rows[rel] = parquet_rows(os.path.join(self.out_dir, rel))
-        return self._rows[rel]
 
     def term_dfs(self, fld: str, terms: list[str]) -> dict[str, int]:
         """term -> df for the terms of ``terms`` present in ``fld``."""

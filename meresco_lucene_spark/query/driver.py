@@ -7,19 +7,16 @@ postings. The handle's term dictionary gives every query term's df and
 shards on the driver before any of that, so the route is chosen for
 free, from facts the handle already holds:
 
-- the query's shape: TermQuery, PhraseQuery, PrefixQuery,
-  MatchAllDocsQuery and BooleanQuery over those (MUST counts, FILTER,
-  MUST_NOT), in the query and in the filter and exclude queries;
-  facets, sort keys, dedup and stored fields of plain column types;
-  composed key filters (``executor.KeyFilter``) whose other-core query
-  has the same shapes and whose two key columns have one string or
-  integer type; no score hook;
-- for a prefix, each generation's term_stats row count (parquet
-  footers), which bounds the dictionary scan that expands it;
-- Σdf of the query's terms, prefix expansions included, summed over
-  the generations of a multi-generation reader (dead docs included, so
-  it bounds the postings read), and the same for the other core of
-  each key filter;
+- the query's shape: TermQuery, PhraseQuery, MatchAllDocsQuery and
+  BooleanQuery over those (MUST counts, FILTER, MUST_NOT), in the query
+  and in the filter and exclude queries; facets, sort keys, dedup and
+  stored fields of plain column types; composed key filters
+  (``executor.KeyFilter``) whose other-core query has the same shapes
+  and whose two key columns have one string or integer type; no score
+  hook;
+- Σdf of the query's terms, summed over the generations of a
+  multi-generation reader (dead docs included, so it bounds the
+  postings read), and the same for the other core of each key filter;
 - the doc count, which bounds every forward-table read (the result
   core's, and each key filter's other core, whose key column is read
   for its hits), and the tombstone row count of a multi-generation
@@ -29,24 +26,21 @@ When each fits ``DRIVER_QUERY_POSTINGS`` (index/store.py, next to the
 build's ``DRIVER_BUILD_ROWS``, with its measured crossover ladder) the
 route reads the terms' blocks from their ``shard=`` files only, flattens
 the list columns and scores them with ``bm25_score_numpy``, summing per
-doc in query order; it reads ``positions`` only for a phrase. A prefix
-expands by a pyarrow ``starts_with`` filter over each generation's
-term_stats (``PersistentIndex.prefix_terms``) and scores its terms'
-distinct live docs with the constant ``boost``, as Lucene's
-constant-score rewrite does. A key filter evaluates the other core's
-query the same way, reads that core's key column for the hits, drops
-null keys and duplicates, and keeps the result hits whose key is in the
-set (``inverted``: not in it, a null key included, as the Spark route's
-anti-join keeps it). Facets, sort keys, dedup and key filters read only
-their forward columns, in one read, and stored fields are read for the
-page's rows only. A multi-generation reader keeps a row of generation g
-when no tombstone of a later generation holds its id, as the Spark
-route's anti-join does.
+doc in query order; it reads ``positions`` only for a phrase. A key
+filter evaluates the other core's query the same way, reads that core's
+key column for the hits, drops null keys and duplicates, and keeps the
+result hits whose key is in the set (``inverted``: not in it, a null key
+included, as the Spark route's anti-join keeps it). Facets, sort keys,
+dedup and key filters read only their forward columns, in one read, and
+stored fields are read for the page's rows only. A multi-generation
+reader keeps a row of generation g when no tombstone of a later
+generation holds its id, as the Spark route's anti-join does.
 
-A WildcardQuery stays on the Spark route: its pattern becomes a Java
-regex (``rlike``), whose ``.`` matches no carriage return (U+000D), NEL
-(U+0085), line separator (U+2028) or paragraph separator (U+2029), and
-RE2's ``.`` (pyarrow's regex engine) matches all four.
+Prefix and wildcard queries stay on the Spark route. A WildcardQuery's
+pattern becomes a Java regex (``rlike``), whose ``.`` matches no
+carriage return (U+000D), NEL (U+0085), line separator (U+2028) or
+paragraph separator (U+2029), and RE2's ``.`` (pyarrow's regex engine)
+matches all four, so pyarrow cannot expand it as Spark does.
 
 Score identity: the Spark route's ``log`` is ``java.lang.StrictMath.log``,
 and numpy's ``log`` differs from it in the last bit for about a third of
@@ -254,11 +248,10 @@ def _read_postings(
 # ------------------------------------------------------------------ shapes
 
 
-def _walk(q: Q, terms: dict[str, dict[str, bool]], prefixes: set[tuple[str, str]]) -> bool:
+def _walk(q: Q, terms: dict[str, dict[str, bool]]) -> bool:
     """Whether ``q`` has a driver form; collects its (field -> term ->
-    positions needed) into ``terms`` and its (field, prefix) pairs into
-    ``prefixes``, and says whether it needs every live doc id
-    (match-all, or a boolean with FILTER clauses only)."""
+    positions needed) into ``terms`` and says whether it needs every
+    live doc id (match-all, or a boolean with FILTER clauses only)."""
     t = q.type
     if t == "TermQuery":
         terms.setdefault(q.field, {}).setdefault(q.value, False)
@@ -269,15 +262,12 @@ def _walk(q: Q, terms: dict[str, dict[str, bool]], prefixes: set[tuple[str, str]
         for term in q.terms:
             f[term] = f.get(term, False) or phrase
         return False
-    if t == "PrefixQuery":
-        prefixes.add((q.field, q.value))
-        return False
     if t == "MatchAllDocsQuery":
         return True
     if t == "BooleanQuery":
         all_docs = False
         for _, c in q.clauses:
-            all_docs |= _walk(c, terms, prefixes)
+            all_docs |= _walk(c, terms)
         occs = {occ for occ, _ in q.clauses}
         return all_docs or (FILTER in occs and not occs & {MUST, SHOULD})
     raise SparkRoute(t)
@@ -286,12 +276,10 @@ def _walk(q: Q, terms: dict[str, dict[str, bool]], prefixes: set[tuple[str, str]
 @dataclass
 class _Reads:
     """What the route reads of one reader for a set of queries: field ->
-    term -> positions needed (prefix expansions included), each (field,
-    prefix)'s expanded terms, and whether every live doc id is needed."""
+    term -> positions needed, and whether every live doc id is needed."""
 
     segs: _Segments
     terms: dict[str, dict[str, bool]]
-    expansions: dict[tuple[str, str], list[str]]
     needs_all: bool
 
     def postings(self) -> dict[tuple[str, str], _Postings]:
@@ -304,27 +292,15 @@ class _Reads:
 
 def _plan(index, queries: Sequence[Q], bound: int) -> _Reads:
     """The reads of ``queries`` over ``index``, each bound checked before
-    the read it bounds: the term_stats row count of every generation
-    before a prefix expands, then the Σdf of every term, expansions
-    included, and a multi-generation reader's tombstone count."""
+    the read it bounds: the Σdf of every term and a multi-generation
+    reader's tombstone count."""
     segs = _Segments(index)
     if not isinstance(segs.types.get("doc_id"), LongType):
         raise SparkRoute("doc_id")
     terms: dict[str, dict[str, bool]] = {}
-    prefixes: set[tuple[str, str]] = set()
     needs_all = False
     for q in queries:
-        needs_all |= _walk(q, terms, prefixes)
-    expansions: dict[tuple[str, str], list[str]] = {}
-    if prefixes:
-        if any(s.table_rows("term_stats") > bound for _, s in segs.stores):
-            raise SparkRoute("term_stats")
-        for fld, prefix in sorted(prefixes):
-            got = sorted({t for _, s in segs.stores for t in s.prefix_terms(fld, prefix)})
-            expansions[(fld, prefix)] = got
-            f = terms.setdefault(fld, {})
-            for t in got:
-                f.setdefault(t, False)
+        needs_all |= _walk(q, terms)
     n_postings = sum(
         sum(index.term_dfs(fld, list(ts)).values()) for fld, ts in terms.items()
     )
@@ -333,7 +309,7 @@ def _plan(index, queries: Sequence[Q], bound: int) -> _Reads:
     if segs.multi is not None and segs.multi._tomb_dirs:
         if segs.multi.tombstone_rows() > bound:
             raise SparkRoute("tombstones")
-    return _Reads(segs, terms, expansions, needs_all)
+    return _Reads(segs, terms, needs_all)
 
 
 # --------------------------------------------------------------- evaluation
@@ -346,7 +322,6 @@ class _Eval:
     def __init__(self, index, reads: _Reads, all_docs):
         self.index = index
         self.postings = reads.postings()  # (field, term) -> _Postings
-        self.expansions = reads.expansions  # (field, prefix) -> terms
         self.all_docs = all_docs  # () -> live doc ids, ascending
 
     def _idf(self, n_docs: int, df: int) -> float:
@@ -379,14 +354,6 @@ class _Eval:
             if len(q.terms) == 1:
                 return _sorted(*self._term_scores(q.field, q.terms[0], q.boost))
             return self._phrase(q)
-        if t == "PrefixQuery":
-            # constant score over the union of the expanded terms'
-            # postings (_multi_term_hits)
-            docs = np.unique(np.concatenate([
-                np.empty(0, np.int64),
-                *(self.postings[(q.field, term)].docs for term in self.expansions[(q.field, q.value)]),
-            ]))
-            return docs, np.full(len(docs), 1.0 * q.boost)
         return self._bool(q)
 
     def _bool(self, q: Q) -> tuple[np.ndarray, np.ndarray]:

@@ -35,24 +35,22 @@ DataFrames and Catalyst does pushdown/broadcast/AQE.
 
 ``search()`` has two routes, chosen before any Spark work:
 
-  driver route  (query/driver.py) a term, boolean, phrase or prefix
-                query (with FILTER/MUST_NOT clauses, filter and exclude
-                queries, facets, sort keys, dedup, stored fields and
-                composed key filters given as :class:`KeyFilter`
-                records) whose terms' summed df — prefix expansions
-                included, the dictionary scan of a prefix bounded by
-                term_stats' row count, and the doc count, when it reads
-                the forward table — fit ``store.DRIVER_QUERY_POSTINGS``
-                is answered with pyarrow reads of the terms' shard files
+  driver route  (query/driver.py) a term, boolean or phrase query (with
+                FILTER/MUST_NOT clauses, filter and exclude queries,
+                facets, sort keys, dedup, stored fields and composed
+                key filters given as :class:`KeyFilter` records) whose
+                terms' summed df — and the doc count, when it reads the
+                forward table — fit ``store.DRIVER_QUERY_POSTINGS`` is
+                answered with pyarrow reads of the terms' shard files
                 and numpy BM25: no Spark job. Each term's idf is taken
                 from the JVM's ``StrictMath.log``, which Spark's ``log``
                 is, so a single-term score is bit-equal to this route's;
-  Spark route   everything else (wildcard, range, drilldown and distance
-                queries, key filters given as key frames — unites and
-                relational filters — or over mismatched key types,
-                ``score_adjust``, work over the bound) runs one action
-                for total + page, tagged ``search:page``, plus one for
-                all facet dims, tagged ``search:facets``.
+  Spark route   everything else (prefix, wildcard, range, drilldown and
+                distance queries, key filters given as key frames —
+                unites and relational filters — or over mismatched key
+                types, ``score_adjust``, work over the bound) runs one
+                action for total + page, tagged ``search:page``, plus
+                one for all facet dims, tagged ``search:facets``.
 
 ``index`` is a reader over an index store: a :class:`PersistentIndex`,
 or the multi-generation reader with the same interface

@@ -5,13 +5,12 @@ Three cores joined by integer key doc-values; coreC uses
 TermFrequencySimilarity (MultiLuceneTest.java:72). Every assertion below
 carries the reference test name it mirrors.
 
-Each test that takes ``cores`` runs twice: on search()'s default route
+Each test that takes ``cores`` runs here on search()'s default route
 (the driver route answers the other-core key filters of these small
-cores) and again, with unchanged assertions, in ``TestOnSparkRoute``
-with every search() sent to the Spark route.
+cores), and again, with unchanged assertions, in
+test_composed_spark_route.py with every search() sent to the Spark
+route.
 """
-
-import inspect
 
 import pytest
 from pyspark.sql import types as T
@@ -749,7 +748,7 @@ def test_empty_key_set(cores):
     r, got = ids(cores, cq)
     assert (r.total, got) == (0, [])
     cq = ComposedQuery("coreA")
-    cq.add_exclude_filter_query("coreB", Q.prefix("N", "no_such"))
+    cq.add_exclude_filter_query("coreB", Q.term("N", "no_such_value"))
     cq.add_match("coreA", "A", "coreB", "B")
     r, got = ids(cores, cq)
     assert r.total == 8
@@ -794,9 +793,9 @@ def test_other_core_drilldown_falls_back(spark, cores):
 
 def test_key_filters_run_no_job(spark, built_cores):
     """Other-core core queries, filter queries and exclude filter queries
-    (terms, prefixes, match-all) over small cores are answered on the
-    driver route: no Spark job."""
-    cq = ComposedQuery("coreA", queries={"coreA": Q.prefix("M", "t")})
+    (terms and match-all) over small cores are answered on the driver
+    route: no Spark job."""
+    cq = ComposedQuery("coreA", queries={"coreA": Q.term("M", "true")})
     cq.set_core_query("coreB", Q.term("N", "true"))
     cq.add_filter_query("coreC", Q.matchall())
     cq.add_exclude_filter_query("coreB", Q.term("T", "C"))
@@ -810,19 +809,3 @@ def test_key_filters_run_no_job(spark, built_cores):
     # coreC (12)
     assert r.total == 1 and got == ["A-MU"]
     assert r.drilldownData == [{"fieldname": "cat_Q", "terms": [{"term": "false", "count": 1}]}]
-
-
-class TestOnSparkRoute:
-    """Every test above that takes ``cores`` (and does not force the
-    Spark route itself), with every search() on the Spark route."""
-
-    @pytest.fixture()
-    def cores(self, built_cores, spark_route):
-        return built_cores
-
-
-for _name, _test in list(globals().items()):
-    if _name.startswith("test_"):
-        _params = inspect.signature(_test).parameters
-        if "cores" in _params and "spark_route" not in _params:
-            setattr(TestOnSparkRoute, _name, staticmethod(_test))

@@ -27,7 +27,7 @@ from meresco_lucene_spark.query.executor import (
 )
 from meresco_lucene_spark.query import driver
 from meresco_lucene_spark.compose.composedquery import ComposedQuery, execute_composed
-from meresco_lucene_spark.query.ir import FILTER, MUST, MUST_NOT, SHOULD, Q
+from meresco_lucene_spark.query.ir import MUST_NOT, SHOULD, Q
 from meresco_lucene_spark.session import session_defaults
 
 LANGS = ["py", "go", "java", None]
@@ -283,8 +283,6 @@ DRIVER_SHAPES = {
         {"sort_keys": [{"sortBy": "stars", "sortDescending": True}], "start": 3, "stop": 8},
     ),
     "dedup": (Q.term("text", "spark"), {"dedup_field": "repo"}),
-    "prefix": (Q.prefix("text", "s"), {}),
-    "prefix_in_bool": (Q.and_(Q.term("text", "table"), Q.prefix("text", "sc")), {}),
 }
 DRIVER_ROUTE_JOBS = 0
 
@@ -323,7 +321,6 @@ def test_driver_route_runs_no_job(spark, indexes, reader, monkeypatch):
     assert search(ix, Q.term("text", "spark")).total > 0
     assert search(ix, DRIVER_SHAPES["and"][0]).total > 0
     assert search(ix, DRIVER_SHAPES["phrase"][0]).total > 0
-    assert search(ix, DRIVER_SHAPES["prefix_in_bool"][0]).total > 0
     j0 = _jobs(spark)
     got = _composed(indexes, reader)
     assert _jobs(spark) - j0 == DRIVER_ROUTE_JOBS
@@ -332,38 +329,6 @@ def test_driver_route_runs_no_job(spark, indexes, reader, monkeypatch):
         want = _composed(indexes, reader)
     assert got.total > 0
     assert got == want
-
-
-PREFIX_QUERIES = {
-    "alone": Q.prefix("text", "s"),
-    "boosted": Q.prefix("text", "sl", boost=2.5),
-    "no_match": Q.prefix("text", "zz"),
-    "must": Q.and_(Q.prefix("text", "s"), Q.term("text", "table")),
-    "filter": Q.boolean((MUST, Q.term("text", "join")), (FILTER, Q.prefix("text", "ra"))),
-    "must_not": Q.boolean((SHOULD, Q.term("text", "table")), (MUST_NOT, Q.prefix("text", "sc"))),
-}
-
-
-@pytest.mark.parametrize("reader", ["store", "multigen"])
-def test_prefix_on_both_routes(spark, indexes, reader, each_route):
-    """A prefix query, alone or as a clause, gives the same total, page
-    and scores on both routes; the driver route runs no Spark job."""
-    ix = indexes[reader]
-    got = {}
-    for route in each_route():
-        for name, q in PREFIX_QUERIES.items():
-            j0 = _jobs(spark)
-            got[route, name] = search(ix, q, start=2, stop=30)
-            if route == "driver":
-                assert _jobs(spark) - j0 == DRIVER_ROUTE_JOBS, name
-    for name in PREFIX_QUERIES:
-        a, b = got["driver", name], got["spark", name]
-        assert a.total == b.total, name
-        assert [h.id for h in a.hits] == [h.id for h in b.hits], name
-        for x, y in zip(a.hits, b.hits):
-            assert x.score == pytest.approx(y.score, rel=1e-12), name
-        assert (a.total > 0) == (name != "no_match"), name
-    assert {h.score for h in got["driver", "boosted"].hits} == {2.5}
 
 
 def test_core_execute_query_with_stored_fields_runs_no_job(spark, tmp_path, each_route):
@@ -421,45 +386,36 @@ def test_core_execute_query_with_stored_fields_runs_no_job(spark, tmp_path, each
 
 
 def test_over_bound_takes_the_spark_route(spark, indexes, monkeypatch):
-    """One posting over the bound sends a search to Spark, with the same
-    answer."""
+    """One posting, or one doc whose forward row is read, over the bound
+    sends a search to Spark, with the same answer."""
     ix = indexes["multigen"]
     q = Q.or_(Q.term("text", "spark"), Q.term("text", "scan"))
-    kw = {"facets": [{"fieldname": "lang"}], "stop": 100}
     n_postings = sum(ix.term_dfs("text", ["spark", "scan"]).values())
-    monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", n_postings)
-    j0 = _jobs(spark)
-    at_bound = search(ix, q, **kw)
-    assert _jobs(spark) == j0
-    monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", n_postings - 1)
-    over = search(ix, q, **kw)
-    assert _jobs(spark) > j0
-    assert over == at_bound
+    _assert_bound_decides(
+        spark, lambda: search(ix, q, facets=[{"fieldname": "lang"}], stop=100),
+        n_postings, monkeypatch,
+    )
 
-    # a prefix: the Σdf of its expansion, summed over the generations
-    stores = ix.stores.values()
-    expansion = sorted({t for s in stores for t in s.prefix_terms("text", "s")})
-    n_postings = sum(ix.term_dfs("text", expansion).values())
-    rows = max(s.table_rows("term_stats") for s in stores)
-    assert len(expansion) == 3 and rows <= n_postings
-    _assert_bound_decides(spark, ix, Q.prefix("text", "s"), n_postings, monkeypatch)
-
-    # a dictionary of more rows than the bound is not scanned on the
-    # driver, however few postings the prefix has
-    assert sum(ix.term_dfs("text", ["upserted"]).values()) < rows
-    _assert_bound_decides(spark, ix, Q.prefix("text", "up"), rows, monkeypatch)
+    # a composed query reads the result core's key column: its doc count
+    # bounds the query more tightly than the postings of either core
+    assert ix.n_docs > max(
+        sum(ix.term_dfs("text", ["spark"]).values()),
+        indexes["repos"].n_docs,
+        sum(indexes["repos"].term_dfs("license", ["mit"]).values()),
+    )
+    _assert_bound_decides(spark, lambda: _composed(indexes, "multigen"), ix.n_docs, monkeypatch)
 
 
-def _assert_bound_decides(spark, ix, q, bound, monkeypatch):
-    """``q`` runs no Spark job under ``bound`` and some under
+def _assert_bound_decides(spark, run, bound, monkeypatch):
+    """``run()`` runs no Spark job under ``bound`` and some under
     ``bound - 1``, with the same answer."""
     monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", bound)
     j0 = _jobs(spark)
-    at_bound = search(ix, q, stop=100)
+    at_bound = run()
     assert _jobs(spark) == j0
     assert at_bound.total > 0
     monkeypatch.setattr(store_mod, "DRIVER_QUERY_POSTINGS", bound - 1)
-    over = search(ix, q, stop=100)
+    over = run()
     assert _jobs(spark) > j0
     assert over == at_bound
 
